@@ -16,7 +16,7 @@ final class CorpusDedup(spark: SparkSession, scale: Scale, seed: Long,
 
   /** Window of the span remover, in tokens (the planted span is 20). */
   private val SpanK = 10
-  private val WarmUpPasses = 2
+  private val WarmUpPasses = 3
 
   private var planted: Gen.Corpus = _
   private var docs: DataFrame = _
@@ -109,31 +109,50 @@ final class CorpusDedup(spark: SparkSession, scale: Scale, seed: Long,
 }
 
 object CorpusDedup {
+  /** Least share of the planted near-duplicate pairs that must share a
+    * canonical document. MinHash-LSH (32 minhashes in 8 bands of 4) finds
+    * a pair of jaccard J with probability 1 - (1 - J^4)^8 only: at the
+    * planted pairs' J of 0.8-0.9 it misses one pair in 70 to 5000; one
+    * seed in sixteen tried missed one of its ~120 planted pairs. */
+  val NearDupRecallFloor = 0.95
+
   /** Names of the failed checks: every planted exact copy is dropped
-    * (keep = 0), every planted near-duplicate pair shares a canonical
-    * document, and the planted span is cut from every document carrying it
-    * but one. */
+    * (keep = 0); at least [[NearDupRecallFloor]] of the planted
+    * near-duplicate pairs share a canonical document; no document is
+    * merged into a canonical document of another planted group; and the
+    * planted span is cut from every document carrying it but one. */
   def check(c: Gen.Corpus, flags: Array[Row], removed: Array[Row],
       injectFault: Boolean): Seq[String] = {
     val keep = flags.iterator.map(r => r.getLong(0) -> r.getInt(2)).toMap
     val canon = flags.iterator.map(r => r.getLong(0) -> r.getLong(1)).toMap
     val cut = removed.iterator.map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val group = plantedGroup(c)
     val exactOk = c.exactCopies.forall { case (_, copy) =>
       keep.get(copy).contains(if (injectFault) 1 else 0) }
-    val nearOk = c.nearDups.forall { case (a, b) =>
+    val found = c.nearDups.count { case (a, b) =>
       canon.contains(a) && canon.get(a) == canon.get(b) }
+    val nearOk = found >= NearDupRecallFloor * c.nearDups.length
+    val mergesOk = canon.forall { case (d, k) => group(d) == group(k) }
     val spanOk = c.spanDocs.nonEmpty && c.spanDocs.sorted.tail.forall(d =>
       cut.get(d).exists(_ >= 20))
     Seq("exact_copies_dropped" -> exactOk, "near_dups_found" -> nearOk,
-      "span_removed" -> spanOk).collect { case (n, false) => n }
+      "no_false_merges" -> mergesOk, "span_removed" -> spanOk)
+      .collect { case (n, false) => n }
+  }
+
+  /** The planted group of each document: the original it was copied or
+    * near-duplicated from, else itself. */
+  def plantedGroup(c: Gen.Corpus): Long => Long = {
+    val group = scala.collection.mutable.Map.empty[Long, Long]
+    def root(x: Long): Long = group.get(x).map(root).getOrElse(x)
+    (c.exactCopies ++ c.nearDups).foreach { case (o, d) => group(d) = root(o) }
+    root
   }
 
   /** Pairwise F1 of the near-dup clusters against the planted groups
     * (an original with its exact copies and near-duplicates). */
   def pairwiseF1(c: Gen.Corpus, flags: Array[Row]): Double = {
-    val group = scala.collection.mutable.Map.empty[Long, Long]
-    def root(x: Long): Long = group.get(x).map(root).getOrElse(x)
-    (c.exactCopies ++ c.nearDups).foreach { case (o, d) => group(d) = root(o) }
+    val root = plantedGroup(c)
     def choose2(n: Long) = n * (n - 1) / 2
     val assign = flags.map(r => (r.getLong(0), r.getLong(1)))
     val predicted = assign.groupBy(_._2).valuesIterator.map(g => choose2(g.length)).sum

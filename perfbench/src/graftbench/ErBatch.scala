@@ -17,9 +17,12 @@ final class ErBatch(spark: SparkSession, scale: Scale, seed: Long,
   /** Match probability at which pairs join a cluster. */
   private val Threshold = 0.95
   /** Pairwise F1 of the clusters against the planted entities must reach
-    * this; with the generator's typo and null rates it lands near 0.85. */
+    * this; with the generator's typo and null rates it lands near 0.8. */
   private val F1Floor = 0.7
-  private val WarmUpJobs = 6
+  /** Each job runs ~40 Spark jobs, so the driver-side planning and
+    * scheduling code the JIT compiles gets hot per job, not per row, and
+    * job latency keeps falling for the first ~10 jobs. */
+  private val WarmUpJobs = 8
 
   private var people: Gen.People = _
   private var records: DataFrame = _

@@ -85,7 +85,7 @@ final case class Scale(name: String, persons: Int, serveCorpus: Int,
     servePool: Int, docs: Int)
 
 object Scale {
-  val full = Scale("full", persons = 10000, serveCorpus = 8000, servePool = 500,
+  val full = Scale("full", persons = 40000, serveCorpus = 8000, servePool = 500,
     docs = 4000)
   val tiny = Scale("tiny", persons = 3000, serveCorpus = 3000, servePool = 200,
     docs = 1500)
