@@ -175,8 +175,9 @@ class Linker(val inputs: Seq[(String, DataFrame)], initialSettings: LinkSettings
     * pairs-to-records joins (see `pairsFromIdsTwoFrames`' scaladoc — the
     * 100M+-pairs-from-modest-records regime where the pair frame must
     * never shuffle). Decided from the INPUT relations' optimizer stats
-    * (file sources report real bytes; x4 for parquet-compressed ->
-    * unsafe-row expansion, the same factor the CC loop uses) against
+    * (file sources report real bytes, times
+    * `ComparisonVectors.RecordsBroadcastExpansion` for parquet-compressed
+    * -> unsafe-row expansion) against
     * `spark.graft.recordsBroadcastBytes` (default 256MB of expanded
     * rows — comfortably inside a production executor; billions-of-records
     * inputs blow past it and keep the sort-merge plan). Unknown stats

@@ -31,8 +31,7 @@ object ClusteringOps {
       maxRounds: Int = 10,
       smallGraphThreshold: Long = -1L)
       : DataFrame = {
-    val smallGate = ConnectedComponents.resolveSmallGate(
-      edges.sparkSession, smallGraphThreshold)
+    val smallGate = ConnectedComponents.resolveSmallGate(smallGraphThreshold)
     var remaining = edges.select(col(srcCol).as("a"), col(dstCol).as("b"),
       col(probCol).as("p")).filter(col("a") =!= col("b")).breakLineage()
     // adaptive small-input fast path (same strategy pick as CC);
@@ -180,8 +179,7 @@ object ClusteringOps {
       tiesMethod: String = "lowest_id",
       smallGraphThreshold: Long = -1L)
       : DataFrame = {
-    val smallGate = ConnectedComponents.resolveSmallGate(
-      edges.sparkSession, smallGraphThreshold)
+    val smallGate = ConnectedComponents.resolveSmallGate(smallGraphThreshold)
     require(Seq("lowest_id", "drop").contains(tiesMethod),
       "ties_method must be one of 'drop', or 'lowest_id'")
     // materialise the caller's edge pipeline ONCE before tie handling:
@@ -210,17 +208,10 @@ object ClusteringOps {
         nodeDatasets.schema("node_id"))
       .forall(_.dataType == org.apache.spark.sql.types.LongType) &&
       e0raw.schema("p").dataType == org.apache.spark.sql.types.DoubleType
-    // per-phase wall timers (SPARK_GRAFT_O2O_VERBOSE=1), same profiling
-    // aid as the CC loop's [cc] lines
-    val verbose = sys.env.get("SPARK_GRAFT_O2O_VERBOSE").contains("1")
-    val t0 = System.nanoTime()
-    def mark(phase: String): Unit = if (verbose) System.err.println(
-      f"[o2o]   $phase: ${(System.nanoTime() - t0) / 1e9}%.2fs")
     val probedEdges = if (longIds) e0raw.count() else -1L
     if (longIds && probedEdges <= smallGate)
       return driverOneToOneConstrained(e0raw, nodeDatasets,
         duplicateFreeDatasets, tiesMethod, maxRounds)
-    mark("gate probe")
     // Count-based broadcast decision for frames sized BY the edge count
     // (the tie-kept combos, the rank-1 self-join side): the gate probe
     // already paid for an exact count, and the loop's checkpoints carry
@@ -244,7 +235,6 @@ object ClusteringOps {
         val (d, iv) = dropTies(e0raw, nodeDatasets, isDupFreeCol,
           pairsBroadcastOk)
         graft.operators.Materialise.releaseConsumed(e0raw)
-        mark("dropTies")
         (d, iv)
       case _ =>
         // round-1 invalid pairs (endpoints sharing a duplicate-free
@@ -308,7 +298,6 @@ object ClusteringOps {
           .groupBy(col("m.rep").as("r"))
           .agg(collect_set(col("d.source_dataset")).as("ds"))
           .breakLineage(eager = true)
-        mark("clusterSets init")
       }
       // Round 1: single-node clusters — the constraint is exactly "the
       // endpoints share no duplicate-free dataset", a pair-level lookup
@@ -352,11 +341,8 @@ object ClusteringOps {
       // rewrite re-reads it); on the final round its one consumer is the
       // persisted rank frame, which materialises it exactly once anyway
       val valid =
-        if (round < maxRounds) {
-          val v = validPlan.breakLineageSpilled(eager = true)
-          mark(s"round $round valid")
-          v
-        } else validPlan
+        if (round < maxRounds) validPlan.breakLineageSpilled(eager = true)
+        else validPlan
       // symmetric via one explode: a union would evaluate the input
       // twice. Round 1 explodes the FLAGGED frame (bad rows ride along
       // so their nodes reach the universe); later rounds the valid one.
@@ -416,7 +402,6 @@ object ClusteringOps {
       val anyMerge = mergeCount > 0
       val mergesJ =
         if (mergeCount * 48L <= bcastLimit) broadcast(merges) else merges
-      mark(s"round $round merges")
       // round 1's valid frame (eager or via the persisted rank frame) has
       // consumed the invalid-pair table by now; under "lowest_id" it is a
       // lazy plan and this is a no-op
@@ -449,14 +434,12 @@ object ClusteringOps {
             coalesce(col("g.ka"), col("m.rep")).as("rep"))
         if (finalRound) {
           membership = upd
-          mark(s"round $round membership (streaming)")
         } else {
         val prevMembership = membership
         membership = upd.breakLineageSpilled(eager = true)
         if (round == 1) graft.operators.Materialise.releaseConsumed(best)
         else graft.operators.Materialise.releaseConsumed(prevMembership)
         membershipMaterialised = true
-        mark(s"round $round membership")
         // the continuing loop's candidate state rolls forward; on the
         // final round the merge lands in the output membership alone.
         // clusterSets is null until its deferred round-2 init — which

@@ -42,9 +42,8 @@ object ConnectedComponents {
     * union-find structures — an order of magnitude more than the raw
     * longs), so the default never collects more than ~1/8 of
     * `Runtime.maxMemory`. A 1 GB driver auto-shrinks to ~0.9M edges; this
-    * ceiling only applies on heaps above ~9.6 GB. An explicit
-    * `spark.graft.cc.smallGraphThreshold` (or caller argument) is taken
-    * as-is — the operator trusts a human-set gate. */
+    * ceiling only applies on heaps above ~9.6 GB. An explicit caller
+    * argument is taken as-is — the operator trusts a human-set gate. */
   val SmallGraphEdgeThreshold: Long = 8000000L
 
   /** Retained driver bytes per collected symmetric edge (measured order:
@@ -57,13 +56,14 @@ object ConnectedComponents {
 
   /** Shared gate resolution for every driver-collect fast path (CC and
     * the one-to-one clustering loops): explicit caller argument (>= 0)
-    * wins, then the `spark.graft.cc.smallGraphThreshold` session conf,
-    * then the heap-clamped default. */
-  def resolveSmallGate(spark: org.apache.spark.sql.SparkSession,
-      explicit: Long): Long =
-    if (explicit >= 0) explicit
-    else spark.conf.getOption("spark.graft.cc.smallGraphThreshold")
-      .map(_.toLong).getOrElse(adaptiveSmallGraphGate)
+    * wins, else the heap-clamped default. */
+  def resolveSmallGate(explicit: Long): Long =
+    if (explicit >= 0) explicit else adaptiveSmallGraphGate
+
+  /** Node-frame size at or below which a closing pointer jump's lookup is
+    * semi-reduced by a broadcast key-set and itself broadcast (see the
+    * jump loop in [[run]]). */
+  val BroadcastJumpNodes: Long = 1000000L
 
   /**
    * @param edges frame with two node-id columns (self-loops and duplicates ok)
@@ -83,9 +83,8 @@ object ConnectedComponents {
       eager: Boolean = false,
       smallGraphThreshold: Long = -1L,
       assumeDistinctPairs: Boolean = false): DataFrame = {
-    // gate override: spark.graft.cc.smallGraphThreshold (edges); callers
-    // passing an explicit threshold keep it
-    val smallGate = resolveSmallGate(edges.sparkSession, smallGraphThreshold)
+    // callers passing an explicit threshold (edges) keep it
+    val smallGate = resolveSmallGate(smallGraphThreshold)
 
     // Already-materialised input (checkpoint/local relation, optionally
     // under cheap Project/Filter — the shape every caller that pre-persists
@@ -181,12 +180,7 @@ object ConnectedComponents {
     var neighbours =
       bl(if (assumeDistinctPairs) keyed else keyed.dropDuplicates(), eager)
 
-    val symT0 = System.nanoTime()
     val edgeCount = neighbours.count()
-    if (sys.env.get("SPARK_GRAFT_CC_VERBOSE").contains("1"))
-      System.err.println(f"[cc]   symmetric+dedupe+count: " +
-        f"${(System.nanoTime() - symT0) / 1e9}%.2fs ($edgeCount edges) " +
-        f"@${System.currentTimeMillis() % 1000000}")
     if (edgeCount <= smallGate) {
       val solved = driverUnionFind(neighbours)
       // the collect fully consumed the symmetric frame; the output is a
@@ -213,7 +207,6 @@ object ConnectedComponents {
     // contraction; the reference's loop
     // (`connected_components.py:121-335`) is the fixpoint shape this
     // replaces.
-    val verbose = sys.env.get("SPARK_GRAFT_CC_VERBOSE").contains("1")
     // exact post-count spill decision (~48B per symmetric row of two
     // longs in block storage): catches huge CHECKPOINT-fed inputs whose
     // stats were implausible (a multi-threshold re-solve at scale). The
@@ -226,10 +219,6 @@ object ConnectedComponents {
       graft.operators.Materialise.releaseConsumed(neighbours)
       neighbours = offHeap
     }
-    if (verbose && spillFrames) System.err.println(
-      s"[cc]   level frames DISK_ONLY ($edgeCount symmetric rows vs " +
-        s"storage cap $spillCapBytes bytes)")
-    val levelT0 = System.nanoTime()
     // rep := min(self, neighbours). The rep pointers form a FOREST (each
     // pointer strictly decreases the id, so no cycles); roots are local
     // minima.
@@ -298,9 +287,6 @@ object ConnectedComponents {
     // Measured on the forced-distributed 150k-node sf0.1 graph: the
     // ungated round-trips were ~2 extra jobs per jump, 707 vs 241 tasks
     // for the same solve, ~+2.5s of pure per-jump fixed cost.
-    val broadcastJumpNodes = edges.sparkSession.conf
-      .getOption("spark.graft.cc.broadcastJumpNodes").map(_.toLong)
-      .getOrElse(1000000L)
     val settledSlices = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var active: DataFrame = reps0
     // rows entering the next jump: movers under the split (counted on the
@@ -331,7 +317,7 @@ object ConnectedComponents {
       val lookupAll = pointerTable.select(col("node_id").as("rep_node"),
         col("representative").as("rep_rep"))
       val lookup =
-        if (splitJumps && activeCount >= 0 && activeCount <= broadcastJumpNodes)
+        if (splitJumps && activeCount >= 0 && activeCount <= BroadcastJumpNodes)
           broadcast(lookupAll.join(
             broadcast(active.select(col("representative").as("rep_key"))
               .distinct()),
@@ -382,9 +368,6 @@ object ConnectedComponents {
       if (jumps == 1) reps0.unpersist()
       else graft.operators.Materialise.releaseConsumed(prevActive)
       lastMovers = movers
-      if (verbose) System.err.println(
-        f"[cc]   jump $jumps%d (moving=$movers%d) " +
-          f"${(System.nanoTime() - levelT0) / 1e9}%.2fs")
     }
     if (jumping)
       // the loop exited at the cap, not at fixpoint: pointers are still
@@ -400,8 +383,6 @@ object ConnectedComponents {
     // the cap case throws above). whole-frame path: settledSlices stays
     // empty and reps == active.
     val reps: DataFrame = pointerTable
-    if (verbose) System.err.println(
-      f"[cc]   reps closed ${(System.nanoTime() - levelT0) / 1e9}%.2fs")
 
     // Rep-level edges: endpoints mapped through reps, intra-cluster edges
     // dropped. Each UNDIRECTED edge is processed once (node_id < neighbour
@@ -432,10 +413,6 @@ object ConnectedComponents {
     // through neighbours); without this a long-lived cluster session
     // accumulates one ~2x-edge-list copy per solve per level
     graft.operators.Materialise.releaseConsumed(neighbours)
-    if (verbose) System.err.println(
-      f"[cc] level: $edgeCount edges propagated+contracted in " +
-        f"${(System.nanoTime() - levelT0) / 1e9}%.2fs " +
-        f"(empty=$contractedEmpty) @${System.currentTimeMillis() % 1000000}")
     val out =
       if (maxIterations <= 1) reps // safety valve, mirrors the old loop cap
       else if (contractedEmpty) reps
@@ -446,8 +423,6 @@ object ConnectedComponents {
       else {
         val sub = run(contracted, "rep_l", "rep_r", maxIterations - 1,
           eager, smallGraphThreshold)
-        if (verbose) System.err.println(
-          f"[cc] sub returned @${System.currentTimeMillis() % 1000000}")
         // compose: final label = sub-solution of the node's rep; reps with
         // no cross-cluster edge never reach the contracted graph and keep
         // their (already canonical) label. The compose is MATERIALISED

@@ -52,20 +52,6 @@ object DistributedBridges {
   private def freshen(df: DataFrame): DataFrame =
     df.select(df.columns.map(c => col(c).as(c)).toIndexedSeq: _*)
 
-  /** Per-phase wall timers (`SPARK_GRAFT_BRIDGE_VERBOSE=1`). Marking a
-    * phase EAGERLY counts its frame, so phase costs stop hiding in the
-    * final action — verbose mode trades extra jobs for attribution and
-    * must stay off in production runs. */
-  private val verbose = sys.env.get("SPARK_GRAFT_BRIDGE_VERBOSE").contains("1")
-  private def mark(t0: Long, phase: String)(df: DataFrame): DataFrame = {
-    if (verbose) {
-      val n = df.count()
-      System.err.println(f"[bridge]   $phase: " +
-        f"${(System.nanoTime() - t0) / 1e9}%.2fs (rows=$n%d)")
-    }
-    df
-  }
-
   /** BFS spanning forest shared by [[bridges]] and [[articulationPoints]].
     * @param checked the checkpointed input projection `in` rebuilds from —
     *                carried so node-only callers can release its blocks
@@ -175,13 +161,6 @@ object DistributedBridges {
     Forest(checked, in, pairs, visited, depth, levels.toSeq)
   }
 
-  private def forestTimed(edges: DataFrame, srcCol: String, dstCol: String,
-      maxRounds: Int, t0: Long): Forest = {
-    val f = buildForest(edges, srcCol, dstCol, maxRounds)
-    mark(t0, s"forest (depth=${f.depth})")(f.visited)
-    f
-  }
-
   /**
    * @param edges frame with columns (cluster_id, srcCol, dstCol); every
    *              cluster must be connected (the contract of CC output)
@@ -189,8 +168,7 @@ object DistributedBridges {
    */
   def bridges(edges: DataFrame, srcCol: String = "unique_id_l",
       dstCol: String = "unique_id_r", maxRounds: Int = 300): DataFrame = {
-    val t0 = System.nanoTime()
-    val forest = forestTimed(edges, srcCol, dstCol, maxRounds, t0)
+    val forest = buildForest(edges, srcCol, dstCol, maxRounds)
     val in = forest.in
     val pairs = forest.pairs
     val visited = forest.visited
@@ -214,12 +192,12 @@ object DistributedBridges {
       .filter(col("mult") > 1)
       .select(col("cluster_id"), col("u"), col("v"),
         xxhash64(col("u"), col("v"), lit(1L)).as("lbl"))
-    val phi = mark(t0, "phi (non-tree xor)")(nonTree.unionByName(dupTree)
+    val phi = nonTree.unionByName(dupTree)
       .select(col("cluster_id"), explode(array(
         struct(col("u").as("node"), col("lbl")),
         struct(col("v").as("node"), col("lbl")))).as("e"))
       .select(col("cluster_id"), col("e.node"), col("e.lbl"))
-      .groupBy("cluster_id", "node").agg(bit_xor(col("lbl")).as("val")))
+      .groupBy("cluster_id", "node").agg(bit_xor(col("lbl")).as("val"))
 
     // ---- phase 3: subtree XOR by depth peeling ------------------------
     // byDepth(d) = nodes at depth d with running value; folding level d
@@ -258,10 +236,9 @@ object DistributedBridges {
       if (d % peelCadence == 0) byDepth(d - 1) = byDepth(d - 1).breakLineage()
       d -= 1
     }
-    val sub = mark(t0, "subtree xor fold")(
-      byDepth.values.reduce(_.unionByName(_))
-        .select(col("cluster_id"), col("node").as("child"),
-          col("val").as("subtree_xor")))
+    val sub = byDepth.values.reduce(_.unionByName(_))
+      .select(col("cluster_id"), col("node").as("child"),
+        col("val").as("subtree_xor"))
 
     // ---- verdicts per undirected pair, re-attached to input edges ------
     val treeVerdict = tree.alias("t")
@@ -369,8 +346,7 @@ object DistributedBridges {
     require(!(materialise && nodeOnly),
       "nodeOnly is the solo articulation cadence; fused callers use " +
         "materialise")
-    val t0 = System.nanoTime()
-    val forest = forestTimed(edges, srcCol, dstCol, maxRounds, t0)
+    val forest = buildForest(edges, srcCol, dstCol, maxRounds)
     val in = forest.in
     val pairs = forest.pairs
     // materialise mode = eager stage-by-stage checkpoints + immediate
@@ -446,9 +422,9 @@ object DistributedBridges {
       if (d % peelCadence == 0) byDepthNd(d - 1) = byDepthNd(d - 1).breakLineage()
       d -= 1
     }
-    val nd = mark(t0, "nd fold")(ck(byDepthNd.values.reduce(_.unionByName(_))
+    val nd = ck(byDepthNd.values.reduce(_.unionByName(_))
       .select(col("cluster_id"), col("node"), col("parent"), col("depth"),
-        col("nd"))))
+        col("nd")))
 
     // ---- fold 2 (top-down): preorder numbers, children in id order ---
     // offset(c) = total subtree size of smaller-id siblings
@@ -456,9 +432,9 @@ object DistributedBridges {
       .rowsBetween(Window.unboundedPreceding, -1)
     // materialised once: every depth round of the top-down fold filters
     // this frame, and the window would otherwise recompute per round
-    val kids = mark(t0, "sibling-offset window")(
+    val kids =
       ck(nd.filter(col("parent").isNotNull)
-        .withColumn("offset", coalesce(sum(col("nd")).over(sibW), lit(0L)))))
+        .withColumn("offset", coalesce(sum(col("nd")).over(sibW), lit(0L))))
     val preByDepth = scala.collection.mutable.Map[Int, DataFrame](
       0 -> freshen(nd.filter(col("depth") === 0)
         .select(col("cluster_id"), col("node"), lit(0L).as("pre"))))
@@ -474,8 +450,7 @@ object DistributedBridges {
       if (d % peelCadence == 0) preByDepth(d) = preByDepth(d).breakLineage()
       d += 1
     }
-    val pre = mark(t0, "preorder fold")(
-      ck(preByDepth.values.map(freshen).reduce(_.unionByName(_))))
+    val pre = ck(preByDepth.values.map(freshen).reduce(_.unionByName(_)))
     // the sibling-offset frame's only consumers are the preorder fold
     // rounds, all materialised by the eager pre checkpoint above
     releaseIfEager(kids)
@@ -523,9 +498,9 @@ object DistributedBridges {
     val lowHighRaw = byDepthLh.values.reduce(_.unionByName(_))
       .select(col("cluster_id"), col("node"), col("parent"), col("pre"),
         col("nd"), col("low"), col("high"))
-    val lowHigh = mark(t0, "low/high fold")(
+    val lowHigh =
       if (materialise) lowHighRaw.breakLineageSpilled(eager = true)
-      else lowHighRaw)
+      else lowHighRaw
     // lhInit's consumers are the byDepthLh filters, all folded into the
     // eager lowHigh checkpoint above — in FUSED mode only. nodeOnly keeps
     // lowHigh a lazy view (single consumer: rule B), so lhInit must live
@@ -552,18 +527,18 @@ object DistributedBridges {
     // each (child, parent) tree pair once, and a tree pair can never also
     // be non-tree — so no undirected aux pair appears twice and the CC
     // solve's symmetric dedupe aggregate is provably redundant
-    val auxComp = mark(t0, "aux-graph CC")(
+    val auxComp =
       ConnectedComponents.run(auxEdges, "s", "t", assumeDistinctPairs = true)
-        .select(col("node_id").as("aux_id"), col("cluster_id").as("comp")))
+        .select(col("node_id").as("aux_id"), col("cluster_id").as("comp"))
 
     // parent-edge component per non-root node; aux-isolated nodes keep
     // their own id as a singleton component
-    val comp = mark(t0, "parent-edge components")(
+    val comp =
       ck(visited.filter(col("parent").isNotNull)
         .withColumn("aux_id", xxhash64(col("cluster_id"), col("node")))
         .join(auxComp, Seq("aux_id"), "left")
         .select(col("cluster_id"), col("node"), col("parent"), col("depth"),
-          coalesce(col("comp"), col("aux_id")).as("comp"))))
+          coalesce(col("comp"), col("aux_id")).as("comp")))
     // the aux component solve's output is folded into the eager comp
     // checkpoint — its blocks (and the CC solve's internal state) die
     // here, and so do nd/pre: their remaining consumer (the parent-

@@ -109,8 +109,9 @@ object BlockingAdvisor {
     (0 until m).filterNot(s.contains).map(j => 1L << (m - 1 - j)).sum
 
   // Expand-stage codegen budget, calibrated on Spark 4.1 ExpandExec
-  // (graft.tools.ExpandCodegenProbe): the generated expand_doConsume
-  // bytecode is ~ sets * (14*(cols+1) + 30) for string keys. Two cliffs:
+  // (BlockingAdvisorSpec pins the max-arity method size): the generated
+  // expand_doConsume bytecode is ~ sets * (14*(cols+1) + 30) for string
+  // keys. Two cliffs:
   // janino rejects methods > 64KB outright (24 cols / 300 sets fails,
   // ERROR + silent interpreted fallback), and HotSpot never JIT-compiles
   // methods past ~8000 bytecodes (-XX:HugeMethodLimit), so even a

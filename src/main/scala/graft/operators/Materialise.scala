@@ -133,8 +133,8 @@ object Materialise {
     * The default (local)checkpoint storage level is MEMORY_AND_DISK with
     * deserialized = true: every cached row is a live UnsafeRow object plus
     * its backing byte[] — a 35M-row frame is ~70M old-generation objects
-    * the collector re-walks on every cycle. Measured on this box
-    * (TaskCostProbe, 32 threads, 20 GB heap): ONE sort-merge join of two
+    * the collector re-walks on every cycle. Measured in one local JVM
+    * (32 task threads, 20 GB heap): ONE sort-merge join of two
     * such 35M-row checkpoints spends 762 task-seconds in GC and 42 s wall;
     * the same join over MEMORY_AND_DISK_SER blocks (a handful of byte
     * chunks per block) takes 9.4 s wall / 136 s GC, and over DISK_ONLY

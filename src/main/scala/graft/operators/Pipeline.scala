@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.GraftSqlBridge
@@ -96,17 +96,6 @@ object Blocking {
     }.distinct
   }
 
-  /** Whether a rule has at least one equi-join predicate Spark can hash on.
-    * Mirrors the reference's cartesian-warning analysis
-    * (`blocking.py:238-296`). */
-  def hasEquiKey(rule: BlockingRule): Boolean = rule match {
-    case BlockOnRule(exprs, _, _) => exprs.nonEmpty
-    case AndRule(parts) => parts.exists(hasEquiKey)
-    case OrRule(_) => false
-    case NotRule(_) => false
-    case CustomBlockingRule(sql, _) => sql.contains("=") && !sql.contains("<>")
-  }
-
   /** The uid column used for pair ordering / join keys: composite for
     * multi-frame link types (`blocking.py:698-744`). */
   def joinKeyCol(settings: LinkSettings): Column = settings.linkType match {
@@ -126,6 +115,29 @@ object Blocking {
     }
   }
 
+  /** Shared prelude of the blocked-pair entry points: registers the kernel
+    * functions custom rules may reference by SQL name (idempotent, for
+    * Linker-less callers), defaults an empty rule list to `1=1`, and
+    * builds the projection that narrows a side to `__join_key` plus the
+    * columns the rules need. Narrowing also widens before the self-join:
+    * pair expansion is quadratic per block and must not run on a tiny
+    * scan's task count (no-op at scale). */
+  private def rulesAndNarrow(spark: SparkSession, settings: LinkSettings)
+      : (Seq[BlockingRule], DataFrame => DataFrame) = {
+    graft.functions.funcs.registerAll(spark)
+    val rules = if (settings.blockingRules.nonEmpty) settings.blockingRules
+      else Seq(CustomBlockingRule("1=1"))
+    val neededCols = (rules.flatMap(ruleColumns) ++
+      (settings.linkType match {
+        case LinkType.DedupeOnly => Seq.empty
+        case _ => Seq(settings.sourceDatasetColumn)
+      })).distinct
+    def narrow(df: DataFrame) = Repartition.ensureMinParallel(df.select(
+      (joinKeyCol(settings).as("__join_key") +:
+        neededCols.filter(df.columns.contains).map(col)): _*))
+    (rules, narrow)
+  }
+
   /**
    * Generate blocked id pairs from the concat frame.
    *
@@ -139,23 +151,7 @@ object Blocking {
    */
   def blockedIdPairs(concat: DataFrame, settings: LinkSettings,
       twoFrames: Option[(DataFrame, DataFrame)] = None): DataFrame = {
-    // custom rules may reference kernel functions by SQL name; register
-    // for Linker-less callers (idempotent)
-    graft.functions.funcs.registerAll(concat.sparkSession)
-    val rules = if (settings.blockingRules.nonEmpty) settings.blockingRules
-      else Seq(CustomBlockingRule("1=1"))
-    val neededCols = (rules.flatMap(ruleColumns) ++
-      (settings.linkType match {
-        case LinkType.DedupeOnly => Seq.empty
-        case _ => Seq(settings.sourceDatasetColumn)
-      })).distinct
-
-    // widen before the self-join: pair expansion is quadratic per block and
-    // must not run on a tiny scan's task count (no-op at scale)
-    def narrow(df: DataFrame) = Repartition.ensureMinParallel(df.select(
-      (joinKeyCol(settings).as("__join_key") +:
-        neededCols.filter(df.columns.contains).map(col)): _*))
-
+    val (rules, narrow) = rulesAndNarrow(concat.sparkSession, settings)
     (settings.linkType, twoFrames) match {
       case (LinkType.LinkOnly, Some((left, right))) =>
         pairsUnderRules(narrow(left), narrow(right), rules, None)
@@ -173,17 +169,7 @@ object Blocking {
     * lands in exactly one (left-chunk, right-chunk) combination. */
   def blockedIdPairsBetween(left: DataFrame, right: DataFrame,
       settings: LinkSettings): DataFrame = {
-    graft.functions.funcs.registerAll(left.sparkSession)
-    val rules = if (settings.blockingRules.nonEmpty) settings.blockingRules
-      else Seq(CustomBlockingRule("1=1"))
-    val neededCols = (rules.flatMap(ruleColumns) ++
-      (settings.linkType match {
-        case LinkType.DedupeOnly => Seq.empty
-        case _ => Seq(settings.sourceDatasetColumn)
-      })).distinct
-    def narrow(df: DataFrame) = Repartition.ensureMinParallel(df.select(
-      (joinKeyCol(settings).as("__join_key") +:
-        neededCols.filter(df.columns.contains).map(col)): _*))
+    val (rules, narrow) = rulesAndNarrow(left.sparkSession, settings)
     pairsUnderRules(narrow(left), narrow(right), rules,
       Some(linkTypeFilter(settings)))
   }
@@ -390,16 +376,20 @@ object ComparisonVectors {
       pairsFromIds(idPairs, concatWithTf, settings, broadcastRecords),
       settings)
 
+  /** Parquet-compressed -> unsafe-row expansion factor applied to
+    * optimizer stats by [[recordsBroadcastOk]]. */
+  val RecordsBroadcastExpansion: Int = 4
+
   /** The shared SIZE decision behind `broadcastRecords` (see
     * [[pairsFromIdsTwoFrames]]): whether a record frame's expanded rows
     * fit `spark.graft.recordsBroadcastBytes` (default 256MB). Optimizer
-    * stats are multiplied by `spark.graft.recordsBroadcastExpansion`
-    * (default 4) for the parquet-compressed -> unsafe-row expansion —
-    * string-heavy inputs that compress well past 4x should raise the
-    * factor (or lower the byte ceiling), because an UNDERestimate here
-    * does not merely slow the join down: it drives a driver collect and
-    * one hashed relation per executor past their memory budgets (OOM,
-    * not a plan regression). Callers should measure the RAW input
+    * stats are multiplied by [[RecordsBroadcastExpansion]] for the
+    * parquet-compressed -> unsafe-row expansion — string-heavy inputs
+    * that compress well past 4x should lower the byte ceiling, because
+    * an UNDERestimate here does not merely slow the join down: it drives
+    * a driver collect and one hashed relation per executor past their
+    * memory budgets (OOM, not a plan regression). Callers should measure
+    * the RAW input
     * relation (file sources report real bytes) —
     * persisted/checkpointed frames estimate unknown-HIGH and correctly
     * decline, so a sampled/filtered derivative is covered by measuring
@@ -411,13 +401,12 @@ object ComparisonVectors {
     * usual `concat` callers keep `sides = 1` — concat IS the union of
     * every broadcast side, so it already measures the combined total. */
   def recordsBroadcastOk(records: DataFrame, sides: Int = 1): Boolean = {
-    val conf = records.sparkSession.conf
-    val limit = conf.getOption("spark.graft.recordsBroadcastBytes")
+    val limit = records.sparkSession.conf
+      .getOption("spark.graft.recordsBroadcastBytes")
       .map(_.toLong).getOrElse(256L << 20) / math.max(1, sides)
-    val expansion = conf.getOption("spark.graft.recordsBroadcastExpansion")
-      .map(_.toInt).getOrElse(4)
     val est =
-      try records.queryExecution.optimizedPlan.stats.sizeInBytes * expansion
+      try records.queryExecution.optimizedPlan.stats.sizeInBytes *
+        RecordsBroadcastExpansion
       catch { case _: Exception => BigInt(Long.MaxValue) }
     est <= limit
   }

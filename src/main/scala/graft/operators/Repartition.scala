@@ -72,12 +72,9 @@ object Repartition {
     math.max(numPartitions(df, role), sizeFloor)
   }
 
-  /** Round-robin repartition to the sized role target. */
-  def sized(df: DataFrame, role: Role, estimatedBytes: BigInt): DataFrame =
-    df.repartition(numPartitionsSized(df, role, estimatedBytes))
-
-  /** [[sized]] for a frame whose leaves are ALREADY materialised
-    * (checkpoint / parallelized output): when the role target only
+  /** Resize to the sized role target ([[numPartitionsSized]]) a frame
+    * whose leaves are ALREADY materialised (checkpoint / parallelized
+    * output): when the role target only
     * SHRINKS the partition count, a `coalesce` gets the same modest
     * file/partition count through a narrow dependency — no shuffle of
     * the full frame (a 15M-row labelling paid an 864MB round-robin

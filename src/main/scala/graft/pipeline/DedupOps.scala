@@ -188,6 +188,45 @@ object DedupOps {
         shiftright(sig, b * 16).bitwiseAND(lit(0xFFFFL)).as(valName))
     }: _*)
 
+  /** Shingle -> signature -> band prep shared by the MinHash-LSH dedupe
+    * operators. Returns the checkpointed `(id, toks)` shingle sets and the
+    * banded `(id, n, band, band_hash)` frame built from the same scan.
+    *
+    * Char shingles, not word tokens: small-vocabulary corpora make word
+    * sets near-identical across documents, which melts LSH buckets into
+    * one giant quadratic bucket; shingles keep signatures diverse.
+    * Shingle sets travel as SORTED HASHED longs, not strings (smaller
+    * rows, linear-merge intersection; jaccard over 64-bit hashes equals
+    * true jaccard up to ~1e-19 collision probability), and come from ONE
+    * fused text pass with the signature (bit-identical to the separate
+    * hashed_shingles / minhash_sig kernels).
+    * One checkpointed scan feeds both phases — the banded frame carries
+    * ONLY scalars (id, band, hash), never the shingle arrays: exploding
+    * the arrays x(bands) through the bucket shuffle would move 8x the
+    * bytes of the whole corpus. Candidates dedupe as scalar pairs, then
+    * two id-keyed joins fetch the shingle sets once for verification.
+    * Set-size `n` travels with the band rows (one extra int per scalar
+    * row) to power an EXACT prune inside the bucket join: J(A,B) >= t
+    * forces |A intersect B| >= t*|A union B| >= t*max(|A|,|B|), and the
+    * intersection is at most min(|A|,|B|) — so min >= t*max or the pair
+    * can never verify. Pruning there (before the distinct and before any
+    * shingle array is fetched) cuts both the candidate-dedupe shuffle and
+    * the verification joins with zero false negatives. */
+  private def minhashBands(df: DataFrame, idCol: String, textCol: String,
+      k: Int, rowsPerBand: Int, shingleQ: Int): (DataFrame, DataFrame) = {
+    val base = widened(df, Seq(col(idCol).as("id"), col(textCol).as("__text")))
+      .select(col("id"),
+        graft.functions.funcs.shingles_minhash(col("__text"), shingleQ, k).as("sm"))
+      .select(col("id"), col("sm.toks").as("toks"), col("sm.sig").as("sig"))
+      .filter(size(col("toks")) > 0)
+      .breakLineage()
+    val banded = base
+      .select(col("id"), size(col("toks")).as("n"),
+        explode(lshBands(col("sig"), k, rowsPerBand)).as("b"))
+      .select(col("id"), col("n"), col("b.band"), col("b.band_hash"))
+    (base.select(col("id"), col("toks")), banded)
+  }
+
   /**
    * MinHash-LSH near-duplicate candidate pairs, verified with true token
    * Jaccard. Scale shape: explode to (band, band_hash) — the shuffle key —
@@ -196,38 +235,8 @@ object DedupOps {
   def minhashDedupPairs(df: DataFrame, idCol: String, textCol: String,
       k: Int = 32, rowsPerBand: Int = 4, threshold: Double = 0.7,
       shingleQ: Int = 8): DataFrame = {
-    // char shingles, not word tokens: small-vocabulary corpora make word
-    // sets near-identical across documents, which melts LSH buckets into
-    // one giant quadratic bucket; shingles keep signatures diverse.
-    // Signature is a single-pass native expression (shingle + hash + k
-    // min-slots in one scan of the text).
-    // Shingle sets travel as SORTED HASHED longs, not strings (smaller
-    // rows, linear-merge intersection; jaccard over 64-bit hashes equals
-    // true jaccard up to ~1e-19 collision probability).
-    // One checkpointed scan feeds both phases — the banded frame carries
-    // ONLY scalars (id, band, hash), never the shingle arrays: exploding
-    // the arrays x(bands) through the bucket shuffle would move 8x the
-    // bytes of the whole corpus. Candidates dedupe as scalar pairs, then
-    // two id-keyed joins fetch the shingle sets once for verification.
-    val raw = widened(df, Seq(col(idCol).as("id"), col(textCol).as("__text")))
-    // shingle set + signature from ONE fused text pass (bit-identical to
-    // the separate hashed_shingles / minhash_sig kernels)
-    val base = raw.select(col("id"),
-        graft.functions.funcs.shingles_minhash(col("__text"), shingleQ, k).as("sm"))
-      .select(col("id"), col("sm.toks").as("toks"), col("sm.sig").as("sig"))
-      .filter(size(col("toks")) > 0)
-      .breakLineage()
-    // Set-size travels with the band rows (one extra int per scalar row)
-    // to power an EXACT prune inside the bucket join: J(A,B) >= t forces
-    // |A intersect B| >= t*|A union B| >= t*max(|A|,|B|), and the
-    // intersection is at most min(|A|,|B|) — so min >= t*max or the pair
-    // can never verify. Pruning here (before the distinct and before any
-    // shingle array is fetched) cuts both the candidate-dedupe shuffle
-    // and the verification joins with zero false negatives.
-    val banded = base
-      .select(col("id"), size(col("toks")).as("n"),
-        explode(lshBands(col("sig"), k, rowsPerBand)).as("b"))
-      .select(col("id"), col("n"), col("b.band"), col("b.band_hash"))
+    val (toks, banded) = minhashBands(df, idCol, textCol, k, rowsPerBand,
+      shingleQ)
     val cands = banded.alias("l").join(banded.alias("r"),
         col("l.band") === col("r.band") &&
         col("l.band_hash") === col("r.band_hash") &&
@@ -235,7 +244,6 @@ object DedupOps {
         sizeRatioOk(col("l.n"), col("r.n"), threshold))
       .select(col("l.id").as("id_l"), col("r.id").as("id_r"))
       .distinct()
-    val toks = base.select(col("id"), col("toks"))
     val jac = graft.functions.funcs
       .jaccard_sorted_longs(col("lt.toks"), col("rt.toks"))
     cands.join(toks.alias("lt"), col("id_l") === col("lt.id"))
@@ -259,22 +267,11 @@ object DedupOps {
   def minhashNearDuplicates(corpus: DataFrame, probe: DataFrame,
       idCol: String, textCol: String, k: Int = 32, rowsPerBand: Int = 4,
       threshold: Double = 0.7, shingleQ: Int = 8): DataFrame = {
-    def prep(df: DataFrame): (DataFrame, DataFrame) = {
-      val base = widened(df, Seq(col(idCol).as("id"), col(textCol).as("__text")))
-        .select(col("id"),
-          graft.functions.funcs.shingles_minhash(col("__text"), shingleQ, k).as("sm"))
-        .select(col("id"), col("sm.toks").as("toks"), col("sm.sig").as("sig"))
-        .filter(size(col("toks")) > 0)
-        .breakLineage()
-      val banded = base
-        .select(col("id"), size(col("toks")).as("n"),
-          explode(lshBands(col("sig"), k, rowsPerBand)).as("b"))
-        .select(col("id"), col("n"), col("b.band"), col("b.band_hash"))
-      (base.select(col("id"), col("toks")), banded)
-    }
+    def prep(df: DataFrame) =
+      minhashBands(df, idCol, textCol, k, rowsPerBand, shingleQ)
     val (corpusToks, corpusBands) = prep(corpus)
     val (probeToks, probeBands) = prep(probe)
-    // exact set-size prune (see minhashDedupPairs): min >= t*max or the
+    // exact set-size prune (see minhashBands): min >= t*max or the
     // jaccard can never reach the threshold
     val cands = probeBands.alias("p").join(corpusBands.alias("c"),
         col("p.band") === col("c.band") &&
@@ -306,9 +303,16 @@ object DedupOps {
    */
   def dedupeByMinhash(df: DataFrame, idCol: String, textCol: String,
       k: Int = 32, rowsPerBand: Int = 4, threshold: Double = 0.7,
-      shingleQ: Int = 8): DataFrame = {
-    val pairs = minhashDedupPairs(df, idCol, textCol, k, rowsPerBand,
-      threshold, shingleQ)
+      shingleQ: Int = 8): DataFrame =
+    canonicalKeep(df, idCol, minhashDedupPairs(df, idCol, textCol, k,
+      rowsPerBand, threshold, shingleQ))
+
+  /** CC closure over `(id_l, id_r)` near-dup pairs -> `(doc_id,
+    * canonical_id, keep)` for every document of `df`: canonical = min id
+    * of the near-dup cluster (itself for singletons), keep = 1 on the
+    * canonical document. */
+  private def canonicalKeep(df: DataFrame, idCol: String, pairs: DataFrame)
+      : DataFrame = {
     val cc = graft.clustering.ConnectedComponents.run(pairs, "id_l", "id_r")
     df.select(col(idCol).as("doc_id"))
       .join(cc.withColumnRenamed("node_id", "doc_id"), Seq("doc_id"), "left")
@@ -323,17 +327,9 @@ object DedupOps {
     * flag per near-dup cluster. */
   def dedupeBySimhash(df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3, shingleQ: Int = 8,
-      blockKeys: Seq[Column] = Nil): DataFrame = {
-    val pairs = simhashDedupPairs(df, idCol, textCol, maxHamming, shingleQ,
-      blockKeys)
-    val cc = graft.clustering.ConnectedComponents.run(pairs, "id_l", "id_r")
-    df.select(col(idCol).as("doc_id"))
-      .join(cc.withColumnRenamed("node_id", "doc_id"), Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("cluster_id"), col("doc_id")).as("canonical_id"))
-      .withColumn("keep",
-        (col("doc_id") === col("canonical_id")).cast("int"))
-  }
+      blockKeys: Seq[Column] = Nil): DataFrame =
+    canonicalKeep(df, idCol, simhashDedupPairs(df, idCol, textCol,
+      maxHamming, shingleQ, blockKeys))
 
   // ------------------------------------------------------------- simhash
 
