@@ -1166,8 +1166,8 @@ object SparkEntry {
     // (`edge_metrics.py:28-60`): even custkeys build triangles (3 nodes,
     // under the cap -> task-side Tarjan, no edge is a bridge), odd
     // custkeys build a 5-node star whose first two rays are closed by a
-    // cross edge (over the cap -> the fully distributed BFS +
-    // cycle-space-XOR path: the cross edge exercises non-tree coverage,
+    // cross edge (over the cap -> the fully distributed BFS forest +
+    // preorder-interval path: the cross edge exercises non-tree coverage,
     // rays 3 and 4 are true bridges; star shape keeps BFS at one round).
     // The constructed family keeps the truth closed-form so DuckDB can
     // oracle it in plain SQL while the engine runs the real

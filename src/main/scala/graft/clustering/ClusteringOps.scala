@@ -985,262 +985,58 @@ object ClusteringOps {
   /**
    * Bridge edges (`edge_metrics.py:28-60`): an edge is a bridge when its
    * removal disconnects the cluster. The reference shells out to igraph on
-   * the driver (optional dependency, no size guard); here each cluster's
-   * edges are processed as ONE TASK-SIDE unit (a per-cluster linear-time
-   * DFS inside flatMap — parallel across clusters, never a driver
-   * collect), guarded by `maxClusterSize` so a mega-cluster cannot OOM a
-   * task.
+   * the driver (optional dependency, no size guard); here this is the edge
+   * grain of [[graphMetrics]], projected from its `stacked` frame so a
+   * solo call streams the one task-side Tarjan pass. Clusters up to
+   * `maxClusterSize` are solved as ONE TASK-SIDE unit each (parallel
+   * across clusters, never a driver collect).
    *
    * A cluster above the cap is never silently dropped: by default the
    * call FAILS with the offending cluster ids/sizes; with
    * `skipOversize = true` its edges are kept with `is_bridge = NULL`
    * (explicitly unknown); with `distributeOversize = true` (wins over
    * `skipOversize`) oversized clusters are solved exactly by the fully
-   * distributed [[DistributedBridges]] cycle-space algorithm, so there is
-   * no size ceiling at all — small clusters still take the cheaper
-   * task-side Tarjan.
+   * distributed [[DistributedBridges.graphEdgeNodeMetrics]] pass, so there
+   * is no size ceiling at all.
+   *
+   * @return one row per input edge: (cluster_id, srcCol, dstCol, is_bridge)
    */
   def edgeBridges(clusters: DataFrame, edges: DataFrame,
       srcCol: String = "unique_id_l", dstCol: String = "unique_id_r",
       maxClusterSize: Int = 10000, skipOversize: Boolean = false,
-      distributeOversize: Boolean = false): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val withCluster = edges.alias("e")
-      .join(clusters.alias("c"), col(s"e.$srcCol") === col("c.node_id"))
-      .select(col("c.cluster_id").as("cluster_id"),
-        col(s"e.$srcCol").cast("long").as("a"), col(s"e.$dstCol").cast("long").as("b"))
-    // checkpointed: the guard probe, the small-cluster semi-join and the
-    // oversize branch all read this |clusters|-sized aggregate — without
-    // the lineage break each consumer would recompute the full upstream
-    // clusters pipeline
-    val sizes = clusters.groupBy("cluster_id").agg(count(lit(1)).as("n"))
-      .breakLineage()
-    val oversizedIds = sizes.filter(col("n") > maxClusterSize)
-    if (!skipOversize && !distributeOversize) {
-      // |clusters|-sized aggregate, limit-pruned: the guard costs one scan
-      // of the (small) cluster-assignment frame, not of the edges
-      val oversized = oversizedIds.orderBy(desc("n")).limit(5).collect()
-      if (oversized.nonEmpty) {
-        val desc = oversized.map(r => s"${r.get(0)} (${r.get(1)} nodes)")
-          .mkString(", ")
-        throw new IllegalArgumentException(
-          s"edgeBridges: cluster(s) exceed maxClusterSize=$maxClusterSize: " +
-            s"$desc. Pass distributeOversize=true to solve them exactly " +
-            "with the distributed algorithm (no size ceiling), raise " +
-            "maxClusterSize (per-task memory permitting), or pass " +
-            "skipOversize=true to keep their edges with is_bridge=NULL.")
-      }
-    }
-    val small = withCluster.join(sizes.filter(col("n") <= maxClusterSize),
-      Seq("cluster_id"), "left_semi")
-    val perCluster = small.groupBy("cluster_id")
-      .agg(collect_list(struct(col("a"), col("b"))).as("es"))
-    val bridged = perCluster.flatMap { row =>
-      val cid = row.get(0)
-      val es = row.getSeq[org.apache.spark.sql.Row](1)
-        .map(r => (r.getLong(0), r.getLong(1)))
-      val bridges = findBridges(es)
-      es.map { case (a, b) =>
-        (cid.toString, a, b,
-          Option(bridges.contains((a, b)) || bridges.contains((b, a))))
-      }
-    }.toDF("cluster_id", srcCol, dstCol, "is_bridge")
-    if (distributeOversize) {
-      // the iterative BFS below runs jobs at plan-construction time, so
-      // skip it entirely when nothing is oversized (one cheap probe of the
-      // |clusters|-sized aggregate, same cost class as the error branch)
-      if (oversizedIds.limit(1).collect().isEmpty) return bridged
-      val big = withCluster.join(oversizedIds, Seq("cluster_id"), "left_semi")
-        .select(col("cluster_id"), col("a").as(srcCol), col("b").as(dstCol))
-      // rebuild from the RDD before the union: both branches inherit
-      // semi-join constraints that reference pruned attributes (the
-      // clusters/sizes lineage), which trips Catalyst's Union constraint
-      // rewrite — a plain localCheckpoint keeps those originConstraints.
-      // The frame is output-sized, so the rebuild is cheap.
-      val distributed = DistributedBridges.bridges(big, srcCol, dstCol)
-        .select(col("cluster_id").cast("string"), col(srcCol), col(dstCol),
-          col("is_bridge").cast("boolean"))
-      val clean = spark.createDataFrame(distributed.rdd, distributed.schema)
-      bridged.unionByName(clean)
-    } else if (skipOversize) bridged.unionByName(withCluster
-      .join(oversizedIds, Seq("cluster_id"), "left_semi")
-      .select(col("cluster_id").cast("string"), col("a").as(srcCol),
-        col("b").as(dstCol), lit(null).cast("boolean").as("is_bridge")))
-    else bridged
-  }
-
-  /** Tarjan DFS bridge finding over an undirected edge list (driver-side). */
-  def findBridges(edges: Seq[(Long, Long)]): Set[(Long, Long)] = {
-    val adj = scala.collection.mutable.Map.empty[Long, List[(Long, Int)]]
-    edges.zipWithIndex.foreach { case ((a, b), i) =>
-      adj(a) = (b, i) :: adj.getOrElse(a, Nil)
-      adj(b) = (a, i) :: adj.getOrElse(b, Nil)
-    }
-    val disc = scala.collection.mutable.Map.empty[Long, Int]
-    val low = scala.collection.mutable.Map.empty[Long, Int]
-    val out = scala.collection.mutable.Set.empty[(Long, Long)]
-    var timer = 0
-    // iterative DFS (avoid stack overflow on long paths)
-    adj.keys.foreach { root =>
-      if (!disc.contains(root)) {
-        val stack = scala.collection.mutable.Stack[(Long, Int, List[(Long, Int)])]()
-        disc(root) = timer; low(root) = timer; timer += 1
-        stack.push((root, -1, adj(root)))
-        while (stack.nonEmpty) {
-          val (v, pe, rest) = stack.pop()
-          rest match {
-            case (w, ei) :: tail =>
-              stack.push((v, pe, tail))
-              if (!disc.contains(w)) {
-                disc(w) = timer; low(w) = timer; timer += 1
-                stack.push((w, ei, adj(w)))
-              } else if (ei != pe) {
-                low(v) = math.min(low(v), disc(w))
-              }
-            case Nil =>
-              if (stack.nonEmpty) {
-                val (p, ppe, prest) = stack.top
-                low(p) = math.min(low(p), low(v))
-                if (low(v) > disc(p)) out += ((p, v))
-              }
-          }
-        }
-      }
-    }
-    out.toSet
-  }
+      distributeOversize: Boolean = false): DataFrame =
+    edgeGrain(stackedMetrics(clusters, edges, srcCol, dstCol,
+      maxClusterSize, skipOversize, distributeOversize, "edgeBridges",
+      " (per-task memory permitting), or pass skipOversize=true to keep " +
+        "their edges with is_bridge=NULL."), srcCol, dstCol)
 
   /**
    * Articulation (cut) vertices per cluster — the vertex analogue of
    * [[edgeBridges]], matching what igraph's `articulation_points` gives
    * reference users next to bridges (`edge_metrics.py:28-60`,
-   * `graph_metrics.py:116-170`). Same size-adaptive shape: clusters up to
-   * `maxClusterSize` run a task-side linear-time Tarjan inside flatMap
-   * (parallel across clusters, no driver collect); above it the call
-   * fails loudly, keeps nodes with NULL (`skipOversize`), or solves
-   * exactly with the fully distributed Tarjan–Vishkin pass in
-   * [[DistributedBridges.articulationPoints]] (`distributeOversize`, no
-   * size ceiling).
+   * `graph_metrics.py:116-170`). The node grain of [[graphMetrics]], with
+   * the same size gate and oversize contract as [[edgeBridges]]
+   * (`skipOversize` keeps nodes with NULL).
    *
    * @return one row per clustered node: (cluster_id, node_id, is_articulation)
    */
   def articulationPoints(clusters: DataFrame, edges: DataFrame,
       srcCol: String = "unique_id_l", dstCol: String = "unique_id_r",
       maxClusterSize: Int = 10000, skipOversize: Boolean = false,
-      distributeOversize: Boolean = false): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val withCluster = edges.alias("e")
-      .join(clusters.alias("c"), col(s"e.$srcCol") === col("c.node_id"))
-      .select(col("c.cluster_id").as("cluster_id"),
-        col(s"e.$srcCol").cast("long").as("a"), col(s"e.$dstCol").cast("long").as("b"))
-    val sizes = clusters.groupBy("cluster_id").agg(count(lit(1)).as("n"))
-      .breakLineage()
-    val oversizedIds = sizes.filter(col("n") > maxClusterSize)
-    if (!skipOversize && !distributeOversize) {
-      val oversized = oversizedIds.orderBy(desc("n")).limit(5).collect()
-      if (oversized.nonEmpty) {
-        val desc = oversized.map(r => s"${r.get(0)} (${r.get(1)} nodes)")
-          .mkString(", ")
-        throw new IllegalArgumentException(
-          s"articulationPoints: cluster(s) exceed maxClusterSize=" +
-            s"$maxClusterSize: $desc. Pass distributeOversize=true to solve " +
-            "them exactly with the distributed algorithm (no size ceiling), " +
-            "raise maxClusterSize, or pass skipOversize=true to keep their " +
-            "nodes with is_articulation=NULL.")
-      }
-    }
-    val small = withCluster.join(sizes.filter(col("n") <= maxClusterSize),
-      Seq("cluster_id"), "left_semi")
-    val perCluster = small.groupBy("cluster_id")
-      .agg(collect_list(struct(col("a"), col("b"))).as("es"))
-    val flagged = perCluster.flatMap { row =>
-      val cid = row.get(0)
-      val es = row.getSeq[org.apache.spark.sql.Row](1)
-        .map(r => (r.getLong(0), r.getLong(1)))
-      val cuts = findArticulationPoints(es)
-      val nodes = es.flatMap(e => Seq(e._1, e._2)).distinct
-      nodes.map(n => (cid.toString, n, Option(cuts.contains(n))))
-    }.toDF("cluster_id", "node_id", "is_articulation")
-    if (distributeOversize) {
-      if (oversizedIds.limit(1).collect().isEmpty) return flagged
-      val big = withCluster.join(oversizedIds, Seq("cluster_id"), "left_semi")
-        .select(col("cluster_id"), col("a").as(srcCol), col("b").as(dstCol))
-      val distributed = DistributedBridges
-        .articulationPoints(big, srcCol, dstCol)
-        .select(col("cluster_id").cast("string"), col("node").as("node_id"),
-          col("is_articulation").cast("boolean"))
-      // rebuild from the RDD before the union (same Catalyst
-      // originConstraints hazard as edgeBridges)
-      val clean = spark.createDataFrame(distributed.rdd, distributed.schema)
-      flagged.unionByName(clean)
-    } else if (skipOversize) flagged.unionByName(withCluster
-      .join(oversizedIds, Seq("cluster_id"), "left_semi")
-      .select(col("cluster_id").cast("string"),
-        explode(array(col("a"), col("b"))).as("node_id"))
-      .distinct()
-      .select(col("cluster_id"), col("node_id"),
-        lit(null).cast("boolean").as("is_articulation")))
-    else flagged
-  }
+      distributeOversize: Boolean = false): DataFrame =
+    nodeGrain(stackedMetrics(clusters, edges, srcCol, dstCol,
+      maxClusterSize, skipOversize, distributeOversize, "articulationPoints",
+      ", or pass skipOversize=true to keep their nodes with " +
+        "is_articulation=NULL."))
 
-  /** Tarjan DFS articulation points over an undirected edge list
-    * (task-side). Parallel edges and self-loops never change vertex
-    * connectivity, so the input is deduped up front. */
-  def findArticulationPoints(edges: Seq[(Long, Long)]): Set[Long] = {
-    val uniq = edges.map { case (a, b) => (math.min(a, b), math.max(a, b)) }
-      .distinct.filter { case (a, b) => a != b }
-    val adj = scala.collection.mutable.Map.empty[Long, List[(Long, Int)]]
-    uniq.zipWithIndex.foreach { case ((a, b), i) =>
-      adj(a) = (b, i) :: adj.getOrElse(a, Nil)
-      adj(b) = (a, i) :: adj.getOrElse(b, Nil)
-    }
-    val disc = scala.collection.mutable.Map.empty[Long, Int]
-    val low = scala.collection.mutable.Map.empty[Long, Int]
-    val rootChildren = scala.collection.mutable.Map.empty[Long, Int]
-    val out = scala.collection.mutable.Set.empty[Long]
-    var timer = 0
-    adj.keys.foreach { root =>
-      if (!disc.contains(root)) {
-        val stack = scala.collection.mutable.Stack[(Long, Int, List[(Long, Int)])]()
-        disc(root) = timer; low(root) = timer; timer += 1
-        stack.push((root, -1, adj(root)))
-        while (stack.nonEmpty) {
-          val (v, pe, rest) = stack.pop()
-          rest match {
-            case (w, ei) :: tail =>
-              stack.push((v, pe, tail))
-              if (!disc.contains(w)) {
-                disc(w) = timer; low(w) = timer; timer += 1
-                stack.push((w, ei, adj(w)))
-              } else if (ei != pe) {
-                low(v) = math.min(low(v), disc(w))
-              }
-            case Nil =>
-              if (stack.nonEmpty) {
-                val (p, ppe, _) = stack.top
-                low(p) = math.min(low(p), low(v))
-                if (ppe == -1) rootChildren(p) = rootChildren.getOrElse(p, 0) + 1
-                else if (low(v) >= disc(p)) out += p
-              }
-          }
-        }
-        if (rootChildren.getOrElse(root, 0) >= 2) out += root
-      }
-    }
-    out.toSet
-  }
-
-  /** BOTH task-side verdicts from ONE Tarjan DFS — the fused pass's
-    * local analogue of the shared distributed scaffold. Bridge and cut
-    * detection read the same low-link values, so running
-    * [[findBridges]] and [[findArticulationPoints]] separately walks
-    * the identical DFS tree twice. Works on the raw multigraph:
-    * a parallel copy of a tree edge is a back edge that sets
-    * low(child) = disc(parent), which correctly kills the bridge and
-    * leaves the cut test's low >= disc unchanged (removing the parent
-    * still strands the subtree — both copies pass through it);
+  /** Bridges and articulation points of an undirected edge list from ONE
+    * iterative Tarjan DFS (task-side, one cluster at a time): both tests
+    * read the same low-link values. Bridges come back as DFS tree pairs
+    * (parent, child), so callers look them up in both orientations.
+    * Works on the raw multigraph: a parallel copy of a tree edge is a
+    * back edge that sets low(child) = disc(parent), which correctly kills
+    * the bridge and leaves the cut test's low >= disc unchanged (removing
+    * the parent still strands the subtree — both copies pass through it);
     * self-loops only ever relax low(v) with disc(v), a no-op for both.
     */
   def findBridgesAndCuts(edges: Seq[(Long, Long)])
@@ -1303,136 +1099,135 @@ object ClusteringOps {
   /**
    * BOTH graph-metric families in one pass — the reference reports them
    * together (`edge_metrics.py:28-60` + `graph_metrics.py:116-170` feed
-   * one `compute_graph_metrics` result), and computing them separately
-   * duplicates 55-65% of the work: the task-side path re-collects every
-   * cluster's edge list, the distributed path rebuilds the same BFS
-   * forest, folds and aux graph.
+   * one `compute_graph_metrics` result). [[edgeBridges]] and
+   * [[articulationPoints]] are single-grain projections of this pass.
    *
-   * Shared here: the cluster-tagged edge frame, the size aggregate, the
-   * per-cluster edge-list aggregate (checkpointed once, consumed by both
-   * task-side Tarjan passes), and — for oversized clusters — ONE
-   * [[DistributedBridges.graphEdgeNodeMetrics]] scaffold (one forest,
-   * one fold set; its interval bridge test is exact, with no XOR
-   * collision term). Same oversize contract as [[edgeBridges]] /
-   * [[articulationPoints]]: fail loudly by default, NULL verdicts with
-   * `skipOversize`, exact distributed solve with `distributeOversize`.
+   * Shared: the cluster-tagged edge frame, the size aggregate, ONE
+   * per-cluster edge-list aggregate feeding ONE task-side Tarjan DFS per
+   * cluster ([[findBridgesAndCuts]]), and — for oversized clusters — ONE
+   * exact [[DistributedBridges.graphEdgeNodeMetrics]] scaffold (one
+   * forest, one fold set). Oversize contract: fail loudly by default,
+   * NULL verdicts with `skipOversize`, exact distributed solve with
+   * `distributeOversize`.
    */
   def graphMetrics(clusters: DataFrame, edges: DataFrame,
       srcCol: String = "unique_id_l", dstCol: String = "unique_id_r",
       maxClusterSize: Int = 10000, skipOversize: Boolean = false,
       distributeOversize: Boolean = false): GraphMetrics = {
+    val stacked = stackedMetrics(clusters, edges, srcCol, dstCol,
+      maxClusterSize, skipOversize, distributeOversize, "graphMetrics",
+      ", or pass skipOversize=true to keep their edges/nodes with NULL " +
+        "verdicts.")
+    // the single-grain views go through a spilled checkpoint so callers
+    // touching BOTH frames don't recompute the shared pass
+    val ck = stacked.breakLineageSpilled()
+    GraphMetrics(edgeGrain(ck, srcCol, dstCol), nodeGrain(ck), stacked)
+  }
+
+  private def edgeGrain(stacked: DataFrame, srcCol: String,
+      dstCol: String): DataFrame =
+    stacked.filter(col("grain") === "edge").select(col("cluster_id"),
+      col("id_a").as(srcCol), col("id_b").as(dstCol),
+      col("verdict").as("is_bridge"))
+
+  private def nodeGrain(stacked: DataFrame): DataFrame =
+    stacked.filter(col("grain") === "node").select(col("cluster_id"),
+      col("id_a").as("node_id"), col("verdict").as("is_articulation"))
+
+  /** The `stacked` frame of [[graphMetrics]]; `caller` and `remedy` (the
+    * oversize error's tail after "raise maxClusterSize") let each public
+    * entry point keep its own error text. */
+  private def stackedMetrics(clusters: DataFrame, edges: DataFrame,
+      srcCol: String, dstCol: String, maxClusterSize: Int,
+      skipOversize: Boolean, distributeOversize: Boolean, caller: String,
+      remedy: String): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    // lazy like the solo entry points: its two consumers are one
-    // aggregate and one semi-join — recomputing the tag join is cheaper
-    // than holding an edge-frame block set through the whole fused plan
+    // lazy: its consumers are one aggregate and one semi-join per branch —
+    // recomputing the tag join is cheaper than holding an edge-frame block
+    // set through the whole plan
     val withCluster = edges.alias("e")
       .join(clusters.alias("c"), col(s"e.$srcCol") === col("c.node_id"))
       .select(col("c.cluster_id").as("cluster_id"),
         col(s"e.$srcCol").cast("long").as("a"),
         col(s"e.$dstCol").cast("long").as("b"))
+    // checkpointed: the guard probe, the small-cluster semi-join and the
+    // oversize branch all read this |clusters|-sized aggregate
     val sizes = clusters.groupBy("cluster_id").agg(count(lit(1)).as("n"))
       .breakLineage()
     val oversizedIds = sizes.filter(col("n") > maxClusterSize)
     if (!skipOversize && !distributeOversize) {
+      // limit-pruned: the guard costs one scan of the (small)
+      // cluster-assignment frame, not of the edges
       val oversized = oversizedIds.orderBy(desc("n")).limit(5).collect()
       if (oversized.nonEmpty) {
         val desc = oversized.map(r => s"${r.get(0)} (${r.get(1)} nodes)")
           .mkString(", ")
         throw new IllegalArgumentException(
-          s"graphMetrics: cluster(s) exceed maxClusterSize=$maxClusterSize: " +
+          s"$caller: cluster(s) exceed maxClusterSize=$maxClusterSize: " +
             s"$desc. Pass distributeOversize=true to solve them exactly " +
             "with the distributed algorithm (no size ceiling), raise " +
-            "maxClusterSize, or pass skipOversize=true to keep their " +
-            "edges/nodes with NULL verdicts.")
+            "maxClusterSize" + remedy)
       }
     }
-    // ONE per-cluster edge-list aggregate feeds both Tarjan passes —
-    // checkpointed because each flatMap is a separate consumer, and
-    // DISK_ONLY because its blocks stay alive through the whole fused
-    // plan (both flatMaps sit in the final action) while the distributed
-    // oversize branch is building its own scaffold on the heap
-    val perCluster = withCluster
+    // ONE flatMap, ONE DFS per cluster, emitting both grains. Deliberately
+    // LAZY and un-checkpointed (as is its single input, the per-cluster
+    // edge-list aggregate): the stacked consumer evaluates it exactly
+    // once, streaming rows straight into its action (a checkpoint here was
+    // measured a net LOSS at sf10 — writing + twice reading 120M verdict
+    // rows costs more than the DFS it saves on small clusters).
+    val combinedRaw = withCluster
       .join(sizes.filter(col("n") <= maxClusterSize), Seq("cluster_id"),
         "left_semi")
       .groupBy("cluster_id")
       .agg(collect_list(struct(col("a"), col("b"))).as("es"))
-      .breakLineageSpilled()
-    // ONE flatMap, ONE DFS per cluster, emitting both grains — two
-    // separate flatMaps would re-read every edge list and re-walk the
-    // identical DFS tree. Deliberately LAZY and un-checkpointed: the
-    // stacked consumer evaluates it exactly once, streaming rows
-    // straight into its action (a checkpoint here was measured a net
-    // LOSS at sf10 — writing + twice reading 120M verdict rows costs
-    // more than the DFS it saves on small clusters).
-    val combinedRaw = perCluster.flatMap { row =>
-      val cid = row.get(0).toString
-      val es = row.getSeq[org.apache.spark.sql.Row](1)
-        .map(r => (r.getLong(0), r.getLong(1)))
-      val (bridges, cuts) = findBridgesAndCuts(es)
-      val edgeRows = es.map { case (a, b) =>
-        (cid, "edge", a, Option(b),
-          Option(bridges.contains((a, b)) || bridges.contains((b, a))))
-      }
-      val nodeRows = es.flatMap(e => Seq(e._1, e._2)).distinct
-        .map(n => (cid, "node", n, None: Option[Long], Option(cuts.contains(n))))
-      edgeRows ++ nodeRows
-    }.toDF("cluster_id", "grain", "id_a", "id_b", "verdict")
-    // the single-grain views go through a spilled checkpoint so callers
-    // touching BOTH frames don't recompute the shared pass
-    val combinedCk = combinedRaw.breakLineageSpilled()
-    val bridged = combinedCk.filter(col("grain") === "edge")
-      .select(col("cluster_id"), col("id_a").as(srcCol),
-        col("id_b").as(dstCol), col("verdict").as("is_bridge"))
-    val flagged = combinedCk.filter(col("grain") === "node")
-      .select(col("cluster_id"), col("id_a").as("node_id"),
-        col("verdict").as("is_articulation"))
-    // reshape a single-grain frame into the stacked schema
-    def stackEdges(df: DataFrame): DataFrame = df.select(col("cluster_id"),
-      lit("edge").as("grain"), col(srcCol).cast("long").as("id_a"),
-      col(dstCol).cast("long").as("id_b"), col("is_bridge").as("verdict"))
-    def stackNodes(df: DataFrame): DataFrame = df.select(col("cluster_id"),
-      lit("node").as("grain"), col("node_id").cast("long").as("id_a"),
-      lit(null).cast("long").as("id_b"), col("is_articulation").as("verdict"))
-    if (distributeOversize) {
-      if (oversizedIds.limit(1).collect().isEmpty)
-        return GraphMetrics(bridged, flagged, combinedRaw)
-      val big = withCluster.join(oversizedIds, Seq("cluster_id"), "left_semi")
-        .select(col("cluster_id"), col("a").as(srcCol), col("b").as(dstCol))
+      .flatMap { row =>
+        val cid = row.get(0).toString
+        val es = row.getSeq[org.apache.spark.sql.Row](1)
+          .map(r => (r.getLong(0), r.getLong(1)))
+        val (bridges, cuts) = findBridgesAndCuts(es)
+        val edgeRows = es.map { case (a, b) =>
+          (cid, "edge", a, Option(b),
+            Option(bridges.contains((a, b)) || bridges.contains((b, a))))
+        }
+        val nodeRows = es.flatMap(e => Seq(e._1, e._2)).distinct.map(n =>
+          (cid, "node", n, None: Option[Long], Option(cuts.contains(n))))
+        edgeRows ++ nodeRows
+      }.toDF("cluster_id", "grain", "id_a", "id_b", "verdict")
+    // oversize rows in the stacked schema, from (cluster_id, a, b) edge
+    // and (cluster_id, node) node frames
+    def stackEdges(df: DataFrame, verdict: Column) = df.select(
+      col("cluster_id").cast("string"), lit("edge").as("grain"),
+      col("a").as("id_a"), col("b").as("id_b"), verdict.as("verdict"))
+    def stackNodes(df: DataFrame, verdict: Column) = df.select(
+      col("cluster_id").cast("string"), lit("node").as("grain"),
+      col("node").as("id_a"), lit(null).cast("long").as("id_b"),
+      verdict.as("verdict"))
+    val big = withCluster.join(oversizedIds, Seq("cluster_id"), "left_semi")
+    if (!skipOversize && !distributeOversize) combinedRaw
+    else if (!distributeOversize) {
+      val unknown = lit(null).cast("boolean")
+      combinedRaw.unionByName(stackEdges(big, unknown))
+        .unionByName(stackNodes(big.select(col("cluster_id"),
+          explode(array(col("a"), col("b"))).as("node")).distinct(), unknown))
+    }
+    // the iterative BFS below runs jobs at plan-construction time, so skip
+    // it entirely when nothing is oversized (one cheap probe of the
+    // |clusters|-sized aggregate, same cost class as the error branch)
+    else if (oversizedIds.limit(1).collect().isEmpty) combinedRaw
+    else {
       val (dBridges, dArtic) =
-        DistributedBridges.graphEdgeNodeMetrics(big, srcCol, dstCol,
-          materialise = true)
-      // rebuild from the RDD before the unions (the Catalyst
-      // originConstraints hazard documented on edgeBridges)
-      val cleanB = {
-        val d = dBridges.select(col("cluster_id").cast("string"),
-          col(srcCol), col(dstCol), col("is_bridge").cast("boolean"))
-        spark.createDataFrame(d.rdd, d.schema)
-      }
-      val cleanA = {
-        val d = dArtic.select(col("cluster_id").cast("string"),
-          col("node").as("node_id"), col("is_articulation").cast("boolean"))
-        spark.createDataFrame(d.rdd, d.schema)
-      }
-      GraphMetrics(bridged.unionByName(cleanB), flagged.unionByName(cleanA),
-        combinedRaw.unionByName(stackEdges(cleanB))
-          .unionByName(stackNodes(cleanA)))
-    } else if (skipOversize) {
-      val bigEdges = withCluster
-        .join(oversizedIds, Seq("cluster_id"), "left_semi")
-      val nullB = bigEdges
-        .select(col("cluster_id").cast("string"), col("a").as(srcCol),
-          col("b").as(dstCol), lit(null).cast("boolean").as("is_bridge"))
-      val nullA = bigEdges
-        .select(col("cluster_id").cast("string"),
-          explode(array(col("a"), col("b"))).as("node_id"))
-        .distinct()
-        .select(col("cluster_id"), col("node_id"),
-          lit(null).cast("boolean").as("is_articulation"))
-      GraphMetrics(bridged.unionByName(nullB), flagged.unionByName(nullA),
-        combinedRaw.unionByName(stackEdges(nullB))
-          .unionByName(stackNodes(nullA)))
-    } else GraphMetrics(bridged, flagged, combinedRaw)
+        DistributedBridges.graphEdgeNodeMetrics(big, "a", "b")
+      // rebuild from the RDD before the union: the distributed frames
+      // inherit semi-join constraints that reference pruned attributes
+      // (the clusters/sizes lineage), which trips Catalyst's Union
+      // constraint rewrite — a plain checkpoint keeps those
+      // originConstraints. Both frames are output-sized.
+      def clean(d: DataFrame) = spark.createDataFrame(d.rdd, d.schema)
+      combinedRaw
+        .unionByName(clean(stackEdges(dBridges, col("is_bridge"))))
+        .unionByName(clean(stackNodes(dArtic, col("is_articulation"))))
+    }
   }
 
   /**

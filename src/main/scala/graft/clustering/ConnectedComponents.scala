@@ -260,8 +260,10 @@ object ConnectedComponents {
     // The split pays its per-jump fixed costs (an extra job + fresh
     // codegen for the persist/split plans) only when the node frames are
     // big enough for write-volume savings to dominate — below the 8M-edge
-    // line (a regime reachable only by forcing the driver gate off) the
-    // simple whole-frame jump loop is ~2x faster wall.
+    // line the simple whole-frame jump loop is ~2x faster wall. That
+    // regime is reached whenever the graph exceeds the driver gate, which
+    // is heap-clamped (about 1.8M edges on a 2 GB driver) or lowered by
+    // an explicit `smallGraphThreshold`.
     val splitJumps = edgeCount > SmallGraphEdgeThreshold
     // LATE-JUMP BROADCAST: a jump is a left join of `active` (shrinking
     // geometrically under the split) against the full pointer table —

@@ -3,40 +3,43 @@ package graft.clustering
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.operators.Materialise.Ops
+import graft.operators.Materialise.{Ops, releaseConsumed}
 
 /**
- * Fully distributed bridge finding — the scale path for clusters too large
- * for the per-task Tarjan in [[ClusteringOps.edgeBridges]] (reference
- * `edge_metrics.py:28-60` shells out to igraph on the driver and has no
- * story for graphs that do not fit one machine).
+ * Fully distributed bridges AND articulation (cut) vertices — the scale
+ * path for clusters too large for the per-task Tarjan in
+ * [[ClusteringOps.graphMetrics]] (the reference's igraph driver path,
+ * `edge_metrics.py:28-60` / `graph_metrics.py:116-170`, has no story for
+ * graphs that do not fit one machine). Both verdicts come from one
+ * scaffold:
  *
- * Algorithm (cycle-space sampling, after Pritchard "Fast distributed
- * computation of cut vertices and bridges", with deterministic hash labels
- * instead of random bits):
- *
- *  1. Root a BFS spanning tree per cluster at the cluster's min node id
- *     (deterministic: each newly reached node takes its smallest frontier
- *     neighbour as parent). Rounds = cluster diameter.
- *  2. Every non-tree edge {u,v} gets a 64-bit label `xxhash64(u,v)`; its
- *     fundamental cycle covers exactly the tree path u..v. A tree edge is a
- *     bridge iff NO non-tree edge covers it.
- *  3. XOR trick: give both endpoints of each non-tree edge the edge's
- *     label; a node's potential is the XOR of its incident non-tree labels.
- *     For tree edge (parent p, child c), the XOR of potentials over
- *     subtree(c) equals the XOR of labels of non-tree edges with exactly
- *     ONE endpoint inside the subtree — precisely the covering edges. The
- *     edge is a bridge iff that XOR is 0: exact when the covering set is
- *     empty, wrong only when a non-empty label set XORs to zero
- *     (probability 2^-64 per tree edge — negligible and deterministic).
- *  4. Subtree XOR by depth peeling: levels fold bottom-up, each level
- *     XOR-aggregated into its parents; each level is touched twice in
- *     total, so the whole fold is O(V) work across `maxDepth` rounds.
- *
- * Parallel (duplicate) input edges make each other non-bridges: a second
- * copy of a tree pair is injected as one pseudo non-tree edge (distinct
- * hash salt) so the covered test fires; duplicate non-tree copies are
- * harmless (coverage is a set property).
+ *  1. BFS spanning forest: each cluster is rooted at its min node id and
+ *     every newly reached node takes its smallest frontier neighbour as
+ *     parent (deterministic). Rounds = cluster diameter.
+ *  2. Preorder intervals by depth peeling: subtree sizes nd fold
+ *     bottom-up, preorder numbers (children in id order) fold top-down,
+ *     and low/high — the min/max preorder over a subtree's nodes and
+ *     their non-tree neighbours — fold bottom-up. Each fold touches every
+ *     level twice, so it is O(V) work across `depth` rounds.
+ *  3. Bridges: tree edge (p, c) is covered by a non-tree edge iff
+ *     `low(c) < pre(c) OR high(c) >= pre(c) + nd(c)` (some non-tree edge
+ *     leaves subtree(c)); it is a bridge iff uncovered and not doubled
+ *     (`mult = 1` — a parallel copy is its own 2-cycle). Exact: no
+ *     hashing, no false-bridge probability. Non-tree edges never bridge.
+ *  4. Articulation points: Tarjan–Vishkin biconnectivity (1985), which
+ *     works on an ARBITRARY rooted spanning tree, so the BFS forest
+ *     serves. Aux graph over tree edges (each identified with its child):
+ *     rule A links the tree edges of the endpoints of every non-tree edge
+ *     (in a BFS tree every non-tree edge joins unrelated nodes); rule B
+ *     links (v, c) to (p(v), v) iff some non-tree edge leaves subtree(c)
+ *     to strictly outside subtree(v) — `low(c) < pre(v)` or
+ *     `high(c) >= pre(v) + nd(v)`. Biconnected components are the aux
+ *     graph's connected components ([[ConnectedComponents]]); a non-root
+ *     v is a cut vertex iff a child edge lies in a different component
+ *     than v's parent edge, the root iff its child edges span more than
+ *     one component. Aux node ids are `xxhash64(cluster_id, node)`: a
+ *     collision would merge two aux components (wrongly clearing a cut
+ *     vertex), probability ~2^-64 per node pair.
  *
  * Everything shuffles on (cluster_id, node): no step ever materialises a
  * cluster on one machine, so the only scale limits are the usual shuffle
@@ -52,18 +55,15 @@ object DistributedBridges {
   private def freshen(df: DataFrame): DataFrame =
     df.select(df.columns.map(c => col(c).as(c)).toIndexedSeq: _*)
 
-  /** BFS spanning forest shared by [[bridges]] and [[articulationPoints]].
-    * @param checked the checkpointed input projection `in` rebuilds from —
-    *                carried so node-only callers can release its blocks
-    *                (they never evaluate `in`)
+  /** BFS spanning forest of [[graphEdgeNodeMetrics]].
     * @param in      (cluster_id, a, b) original edges, lineage-free
     * @param pairs   (cluster_id, u, v, mult) distinct undirected pairs
     * @param visited (cluster_id, node, parent, depth) one row per node;
     *                parent null at the root (= min node id of the cluster)
-    * @param depth   max BFS depth reached */
-  private case class Forest(checked: DataFrame, in: DataFrame,
-      pairs: DataFrame, visited: DataFrame, depth: Int,
-      levels: Seq[DataFrame])
+    * @param depth   max BFS depth reached
+    * @param levels  the per-depth checkpoints `visited` is a union of */
+  private case class Forest(in: DataFrame, pairs: DataFrame,
+      visited: DataFrame, depth: Int, levels: Seq[DataFrame])
 
   private def buildForest(edges: DataFrame, srcCol: String, dstCol: String,
       maxRounds: Int): Forest = {
@@ -155,240 +155,44 @@ object DistributedBridges {
     }
     val visited = levels.map(freshen).reduce(_.unionByName(_))
     // nodes' consumers (the roots checkpoint and the termination counts)
-    // have all materialised during the BFS above — drop its blocks now in
-    // every mode instead of carrying a full node frame to the query's end
-    graft.operators.Materialise.releaseConsumed(nodes)
-    Forest(checked, in, pairs, visited, depth, levels.toSeq)
+    // have all materialised during the BFS above — drop its blocks now
+    // instead of carrying a full node frame to the query's end
+    releaseConsumed(nodes)
+    Forest(in, pairs, visited, depth, levels.toSeq)
   }
 
   /**
-   * @param edges frame with columns (cluster_id, srcCol, dstCol); every
-   *              cluster must be connected (the contract of CC output)
-   * @return one row per input edge: (cluster_id, srcCol, dstCol, is_bridge)
-   */
-  def bridges(edges: DataFrame, srcCol: String = "unique_id_l",
-      dstCol: String = "unique_id_r", maxRounds: Int = 300): DataFrame = {
-    val forest = buildForest(edges, srcCol, dstCol, maxRounds)
-    val in = forest.in
-    val pairs = forest.pairs
-    val visited = forest.visited
-    val depth = forest.depth
-
-    // tree edges as undirected pairs, keyed by their CHILD node (no
-    // checkpoint: visited is a union of materialised level RDDs)
-    val tree = visited.filter(col("parent").isNotNull)
-      .select(col("cluster_id"), col("node").as("child"),
-        col("parent"), col("depth"),
-        least(col("node"), col("parent")).as("u"),
-        greatest(col("node"), col("parent")).as("v"))
-    val treeKeys = tree.select(col("cluster_id"), col("u"), col("v"))
-
-    // ---- phase 2: labels on non-tree edges (+ pseudo edges for dup
-    // copies of tree pairs) --------------------------------------------
-    val nonTree = pairs.join(treeKeys, Seq("cluster_id", "u", "v"), "left_anti")
-      .select(col("cluster_id"), col("u"), col("v"),
-        xxhash64(col("u"), col("v")).as("lbl"))
-    val dupTree = pairs.join(treeKeys, Seq("cluster_id", "u", "v"), "left_semi")
-      .filter(col("mult") > 1)
-      .select(col("cluster_id"), col("u"), col("v"),
-        xxhash64(col("u"), col("v"), lit(1L)).as("lbl"))
-    val phi = nonTree.unionByName(dupTree)
-      .select(col("cluster_id"), explode(array(
-        struct(col("u").as("node"), col("lbl")),
-        struct(col("v").as("node"), col("lbl")))).as("e"))
-      .select(col("cluster_id"), col("e.node"), col("e.lbl"))
-      .groupBy("cluster_id", "node").agg(bit_xor(col("lbl")).as("val"))
-
-    // ---- phase 3: subtree XOR by depth peeling ------------------------
-    // byDepth(d) = nodes at depth d with running value; folding level d
-    // into d-1 touches only those two levels, so total fold work is O(V).
-    // checkpoint only when the fold has many consumers: each byDepth(d)
-    // filter re-reads this frame, so at depth > 4 a materialisation pays
-    // for itself; below that the join over already-cached inputs is
-    // cheaper to recompute than to checkpoint (one fewer Spark job)
-    val withPhiRaw = visited.alias("t")
-      .join(phi.alias("p"), Seq("cluster_id", "node"), "left")
-      .select(col("cluster_id"), col("node"), col("parent"), col("depth"),
-        coalesce(col("val"), lit(0L)).as("val"))
-    val withPhi =
-      if (depth > 4) withPhiRaw.breakLineage() else withPhiRaw
-    val byDepth = scala.collection.mutable.Map[Int, DataFrame]()
-    (0 to depth).foreach(d =>
-      byDepth(d) = freshen(withPhi.filter(col("depth") === d)))
-    // lineage-break cadence auto-sized from the MEASURED depth: the fold
-    // chains one join per level, so deep graphs (long chains/cycles) would
-    // either pay a checkpoint job every 8 levels (depth/8 extra jobs) or
-    // grow unboundedly tall plans. Capping the break count at ~12 keeps
-    // the job overhead flat for any diameter while plans stay at most
-    // `cadence` joins tall between breaks.
-    val peelCadence = math.max(8, math.ceil(depth / 12.0).toInt)
-    var d = depth
-    while (d >= 1) {
-      val folded = byDepth(d).groupBy(col("cluster_id"),
-          col("parent").as("node")).agg(bit_xor(col("val")).as("up"))
-      byDepth(d - 1) = byDepth(d - 1).alias("l")
-        .join(folded.alias("f"), Seq("cluster_id", "node"), "left")
-        .select(col("cluster_id").as("cluster_id"), col("node").as("node"),
-          col("parent").as("parent"), col("depth").as("depth"),
-          (col("val").bitwiseXOR(coalesce(col("up"), lit(0L)))).as("val"))
-      // each level is join-updated once, but its lineage hangs off the
-      // level below it; cut the chain periodically so plans stay shallow
-      if (d % peelCadence == 0) byDepth(d - 1) = byDepth(d - 1).breakLineage()
-      d -= 1
-    }
-    val sub = byDepth.values.reduce(_.unionByName(_))
-      .select(col("cluster_id"), col("node").as("child"),
-        col("val").as("subtree_xor"))
-
-    // ---- verdicts per undirected pair, re-attached to input edges ------
-    val treeVerdict = tree.alias("t")
-      .join(sub.alias("s"), Seq("cluster_id", "child"))
-      .select(col("cluster_id"), col("u"), col("v"),
-        (col("subtree_xor") === 0L).as("is_bridge"))
-    val verdicts = freshen(treeVerdict).unionByName(
-        nonTree.select(col("cluster_id").as("cluster_id"), col("u").as("u"),
-          col("v").as("v"), lit(false).as("is_bridge")))
-    in.alias("i")
-      .join(verdicts.alias("vd"),
-        col("i.cluster_id") === col("vd.cluster_id") &&
-          least(col("i.a"), col("i.b")) === col("vd.u") &&
-          greatest(col("i.a"), col("i.b")) === col("vd.v"), "left")
-      .select(col("i.cluster_id").as("cluster_id"),
-        col("i.a").as(srcCol), col("i.b").as(dstCol),
-        coalesce(col("is_bridge"), lit(false)).as("is_bridge"))
-  }
-
-  /**
-   * Fully distributed articulation (cut) vertices — the scale companion to
-   * [[bridges]] for graphs too large for the per-task Tarjan in
-   * [[ClusteringOps.articulationPoints]] (the reference's igraph driver
-   * path, `graph_metrics.py:116-170` / `edge_metrics.py:28-60`, has no
-   * distributed story at all).
+   * Both graph-metric verdicts from ONE spanning forest and fold set (see
+   * the object doc): bridges at edge grain, articulation points at node
+   * grain. The reference reports them as one family (`edge_metrics.py:
+   * 28-60`, `graph_metrics.py:116-170`).
    *
-   * Algorithm: Tarjan–Vishkin biconnectivity (1985) over the same BFS
-   * spanning forest as [[bridges]] — chosen precisely because it works on
-   * an ARBITRARY rooted spanning tree (its original point was avoiding
-   * DFS, which doesn't parallelise). Aux graph over tree edges (each
-   * identified with its child endpoint):
-   *
-   *  - rule A: each non-tree edge {x,y} with x,y unrelated links tree
-   *    edges (p(x),x)—(p(y),y). In a BFS tree non-tree edges connect
-   *    nodes whose depths differ by at most one, so EVERY non-tree edge
-   *    is an unrelated pair (a depth-1 difference with ancestry would be
-   *    the tree edge itself; duplicate copies of tree pairs form 2-cycles
-   *    that link nothing and are excluded).
-   *  - rule B: tree edge (v,c) links to (p(v),v) iff some non-tree edge
-   *    leaves subtree(c) to strictly outside subtree(v) — tested exactly
-   *    with preorder intervals: low(c) < pre(v) or high(c) >= pre(v)+nd(v).
-   *
-   * Biconnected components = connected components of the aux graph; a
-   * non-root v is a cut vertex iff some child edge lies in a different
-   * component than v's parent edge, and the root iff its child edges span
-   * more than one component.
-   *
-   * nd (subtree size) folds bottom-up, preorder numbers fold top-down,
-   * low/high fold bottom-up — each by the same depth-peeling as the XOR
-   * fold in [[bridges]] (O(V) work per fold across `depth` rounds), and
-   * the aux component solve reuses [[ConnectedComponents]] (driver
-   * union-find below its small-graph gate, distributed loop above). Aux
-   * node ids are `xxhash64(cluster_id, node)` — a collision would merge
-   * two aux components (wrongly clearing a cut vertex), probability
-   * ~2^-64 per node pair: the same accepted risk class as the
-   * cycle-space XOR in [[bridges]]. All shuffles key on
-   * (cluster_id, node): no cluster ever materialises on one machine.
+   * Every scaffold frame is checkpointed EAGERLY and DISK_ONLY, and each
+   * is released as soon as its last consumer has materialised: a caller
+   * reading both verdict frames would otherwise hold the whole scaffold
+   * live to its final action (at sf10, ~8 frames of 35M+ rows held
+   * on-heap cost 500s of task GC, 36% of the run time). Both outputs are
+   * themselves eager spilled checkpoints, so the caller receives two
+   * self-contained frames.
    *
    * @param edges (cluster_id, srcCol, dstCol); clusters must be connected
-   * @return one row per node: (cluster_id, node, is_articulation)
-   */
-  def articulationPoints(edges: DataFrame, srcCol: String = "unique_id_l",
-      dstCol: String = "unique_id_r", maxRounds: Int = 300): DataFrame =
-    graphEdgeNodeMetrics(edges, srcCol, dstCol, maxRounds,
-      nodeOnly = true)._2
-
-  /**
-   * BOTH graph-metric verdicts from ONE spanning forest: bridges (edge
-   * grain) and articulation points (node grain). The reference exposes
-   * them as one family (`edge_metrics.py:28-60`, `graph_metrics.py:
-   * 116-170`); computing them separately rebuilds the same BFS forest,
-   * folds and aux graph twice — 55-65% duplicated work per the committed
-   * r12 phase breakdown.
-   *
-   * The articulation pipeline already folds everything a bridge verdict
-   * needs: with preorder intervals, tree edge (p, c) is covered by some
-   * non-tree edge iff `low(c) < pre(c) OR high(c) >= pre(c) + nd(c)`
-   * (a non-tree edge leaves subtree(c) — exactly "one endpoint inside"),
-   * so `is_bridge = NOT covered AND mult = 1` (a duplicated tree pair is
-   * its own 2-cycle). That makes the combined pass cost the articulation
-   * pass plus three small verdict-grain joins — no second forest, no XOR
-   * fold, and EXACT (the standalone [[bridges]] XOR keeps a 2^-64
-   * false-bridge probability; the interval test has none). Standalone
-   * [[bridges]] deliberately keeps the XOR path: alone it needs one fold
-   * instead of the three the interval test rides on.
-   *
-   * @return (edge frame (cluster_id, srcCol, dstCol, is_bridge),
-   *          node frame (cluster_id, node, is_articulation))
+   *              (the contract of CC output)
+   * @return (edge frame (cluster_id, srcCol, dstCol, is_bridge) with one
+   *          row per input edge, node frame (cluster_id, node,
+   *          is_articulation))
    */
   def graphEdgeNodeMetrics(edges: DataFrame, srcCol: String = "unique_id_l",
-      dstCol: String = "unique_id_r", maxRounds: Int = 300,
-      materialise: Boolean = false, nodeOnly: Boolean = false)
+      dstCol: String = "unique_id_r", maxRounds: Int = 300)
       : (DataFrame, DataFrame) = {
-    // nodeOnly = the articulation-only delegation: the bridge verdict
-    // branch is never built (the edge frame of the returned pair is null)
-    // and the scaffold runs EAGER ON-HEAP checkpoints with immediate
-    // release of each consumed frame. Rationale (r15 scaling data): the
-    // lazy solo cadence holds EVERY scaffold frame's blocks live until
-    // the caller's final action — at sf10/32 cores ~10 frames of 35M+
-    // deserialized rows fill the heap and the query spends 40% of task
-    // time in GC (435s vs 5.4s at 8 cores, identical plans). Eager +
-    // release caps the live set at the frames a stage actually reads.
-    // DISK_ONLY stays the FUSED mode's trade: a solo blanket spill was
-    // tried and reverted with numbers (serde ≈ the GC it saved).
-    require(!(materialise && nodeOnly),
-      "nodeOnly is the solo articulation cadence; fused callers use " +
-        "materialise")
     val forest = buildForest(edges, srcCol, dstCol, maxRounds)
     val in = forest.in
     val pairs = forest.pairs
-    // materialise mode = eager stage-by-stage checkpoints + immediate
-    // release of every consumed block set: a caller evaluating BOTH
-    // verdict frames in one plan would otherwise hold the whole scaffold
-    // live to the final action (at sf10 the fused query spent ~50% of
-    // task time in GC before this discipline). The checkpoints also go
-    // DISK_ONLY in this mode: ~8 scaffold frames of 35M+ rows held
-    // on-heap are old-generation garbage every GC cycle re-walks
-    // (measured at sf10: 500s task GC, 36% of the fused run time);
-    // spilled, the heap holds only the frames being computed. The
-    // single-verdict delegation keeps the old lazy ON-HEAP cadence:
-    // eager scheduling costs a solo run ~5-8% for no benefit, and a
-    // blanket solo spill was TRIED and REVERTED with numbers — on a
-    // clean box it traded ~100s of solo GC for an equal serde bill
-    // (q_bridges cpu 360 -> 445s, q_articulation 504 -> 679s, wall flat
-    // to slightly worse). Only the both-verdicts caller holds enough
-    // frames at once for off-heap to win.
-    def ck(df: DataFrame): DataFrame =
-      if (materialise) df.breakLineageSpilled(eager = true)
-      else if (nodeOnly) df.breakLineage(eager = true)
-      else df.breakLineage()
+    def ck(df: DataFrame): DataFrame = df.breakLineageSpilled(eager = true)
     // lazy variant for frames whose first consumer is itself checkpointed
-    // (they compute exactly once either way — only the block home differs).
-    // nodeOnly keeps these EAGER too: the release cadence below needs each
-    // frame's materialisation pinned to a known point, not to whichever
-    // downstream job first touches it.
-    def ckLazy(df: DataFrame): DataFrame =
-      if (materialise) df.breakLineageSpilled()
-      else if (nodeOnly) df.breakLineage(eager = true)
-      else df.breakLineage()
-    def releaseIfEager(df: DataFrame): Unit =
-      if (materialise || nodeOnly)
-        graft.operators.Materialise.releaseConsumed(df)
+    // (they compute exactly once either way — only the block home differs)
+    def ckLazy(df: DataFrame): DataFrame = df.breakLineageSpilled()
     val visited = ck(forest.visited)
-    if (materialise || nodeOnly) {
-      forest.levels.foreach(graft.operators.Materialise.releaseConsumed)
-      // nodeOnly never evaluates the bridge branch, so the checkpointed
-      // input projection (consumed into `pairs` during the BFS) is dead
-      if (nodeOnly)
-        graft.operators.Materialise.releaseConsumed(forest.checked)
-    }
+    forest.levels.foreach(releaseConsumed)
     val depth = forest.depth
     val peelCadence = math.max(8, math.ceil(depth / 12.0).toInt)
 
@@ -402,9 +206,6 @@ object DistributedBridges {
     val nonTree = ckLazy(pairs
       .join(treeKeys, Seq("cluster_id", "u", "v"), "left_anti")
       .select(col("cluster_id"), col("u"), col("v")))
-    // nodeOnly: pairs' last consumer was the (eager) nonTree checkpoint —
-    // the bridge branch's mult join never runs
-    if (nodeOnly) graft.operators.Materialise.releaseConsumed(pairs)
 
     // ---- fold 1 (bottom-up): subtree sizes nd ------------------------
     val byDepthNd = scala.collection.mutable.Map[Int, DataFrame]()
@@ -453,7 +254,7 @@ object DistributedBridges {
     val pre = ck(preByDepth.values.map(freshen).reduce(_.unionByName(_)))
     // the sibling-offset frame's only consumers are the preorder fold
     // rounds, all materialised by the eager pre checkpoint above
-    releaseIfEager(kids)
+    releaseConsumed(kids)
 
     // ---- fold 3 (bottom-up): low/high of non-tree-neighbour preorders -
     val ntAdj = nonTree.select(col("cluster_id"), explode(array(
@@ -465,8 +266,7 @@ object DistributedBridges {
       .groupBy("cluster_id", "node")
       .agg(min(col("nbr_pre")).as("nt_min"), max(col("nbr_pre")).as("nt_max"))
     // pre/nd ride along as constant per-row columns: the bridge interval
-    // test then needs NO re-join with the pre/nd frames (the delegation
-    // path never reads them, and Catalyst prunes them out of its fold)
+    // test then needs NO re-join with the pre/nd frames
     val lhInit = ckLazy(nd.join(pre, Seq("cluster_id", "node"))
       .join(ntAdj, Seq("cluster_id", "node"), "left")
       .select(col("cluster_id"), col("node"), col("parent"), col("depth"),
@@ -492,20 +292,14 @@ object DistributedBridges {
       if (d % peelCadence == 0) byDepthLh(d - 1) = byDepthLh(d - 1).breakLineage()
       d -= 1
     }
-    // checkpointed in materialise mode: BOTH verdicts then read this fold
-    // (rule B below, the bridge interval test at the end); single-verdict
-    // delegation has one consumer and keeps the plain plan
-    val lowHighRaw = byDepthLh.values.reduce(_.unionByName(_))
+    // checkpointed: BOTH verdicts read this fold (rule B below, the
+    // bridge interval test at the end)
+    val lowHigh = ck(byDepthLh.values.reduce(_.unionByName(_))
       .select(col("cluster_id"), col("node"), col("parent"), col("pre"),
-        col("nd"), col("low"), col("high"))
-    val lowHigh =
-      if (materialise) lowHighRaw.breakLineageSpilled(eager = true)
-      else lowHighRaw
+        col("nd"), col("low"), col("high")))
     // lhInit's consumers are the byDepthLh filters, all folded into the
-    // eager lowHigh checkpoint above — in FUSED mode only. nodeOnly keeps
-    // lowHigh a lazy view (single consumer: rule B), so lhInit must live
-    // until the comp checkpoint below has materialised through it.
-    if (materialise) graft.operators.Materialise.releaseConsumed(lhInit)
+    // eager lowHigh checkpoint above
+    releaseConsumed(lhInit)
 
     // ---- aux graph links + component solve ---------------------------
     // rule B needs the PARENT's preorder interval next to each child
@@ -545,18 +339,7 @@ object DistributedBridges {
     // interval join feeding rule B) is inside that checkpoint, and the
     // bridge interval test reads pre/nd as columns carried on lowHigh,
     // never these frames
-    releaseIfEager(auxComp)
-    releaseIfEager(nd)
-    releaseIfEager(pre)
-    // nodeOnly: rule B (through the lazy lowHigh view over lhInit) and
-    // rule A (nonTree) were both consumed into the aux CC solve, whose
-    // labelling is folded into the eager comp checkpoint above — from here
-    // the only live scaffold frames are visited and comp, exactly what the
-    // articulation verdict reads
-    if (nodeOnly) {
-      graft.operators.Materialise.releaseConsumed(lhInit)
-      graft.operators.Materialise.releaseConsumed(nonTree)
-    }
+    Seq(auxComp, nd, pre).foreach(releaseConsumed)
 
     // ---- verdicts ----------------------------------------------------
     val childComps = comp.select(col("cluster_id"),
@@ -582,16 +365,11 @@ object DistributedBridges {
           col("min_child_comp") =!= col("max_child_comp"))
         .otherwise(col("any_foreign") === 1).as("is_articulation"))
 
-    // nodeOnly: the bridge branch is never built — its inputs (pairs,
-    // lowHigh/lhInit, nonTree, in) are already released above
-    if (nodeOnly) return (null, articulation)
-
     // ---- bridge verdicts from the SAME folds -------------------------
     // tree edge keyed by child c: covered iff some non-tree edge leaves
     // subtree(c) (low/high outside [pre(c), pre(c)+nd(c))); a duplicated
     // tree pair (mult > 1) is a 2-cycle covering itself. All three joins
-    // are verdict-grain over checkpointed frames — lazy, so callers that
-    // only consume the articulation frame pay nothing for this branch.
+    // are verdict-grain over checkpointed frames.
     val treeIv = lowHigh.filter(col("parent").isNotNull)
       .select(col("cluster_id"),
         least(col("node"), col("parent")).as("u"),
@@ -615,24 +393,14 @@ object DistributedBridges {
         col("i.a").as(srcCol), col("i.b").as(dstCol),
         coalesce(col("is_bridge"), lit(false)).as("is_bridge"))
 
-    if (!materialise) (bridgesDf, articulation)
-    else {
-      // callers that consume BOTH verdict frames in one downstream plan
-      // (the fused graph-metrics surface) would otherwise keep every
-      // scaffold checkpoint alive until that plan's final action — at
-      // sf10 the fused query spent ~50% of task time in GC that way.
-      // Flatten both outputs eagerly, RELEASING each verdict's scaffold
-      // inputs as soon as that verdict lands (the bridge side consumes
-      // lowHigh/nonTree/pairs/in; the node side only visited/comp): the
-      // caller receives two self-contained frames and the peak live
-      // block set never exceeds one verdict's inputs.
-      val bOut = bridgesDf.breakLineageSpilled(eager = true)
-      Seq(lowHigh, nonTree, pairs, in)
-        .foreach(graft.operators.Materialise.releaseConsumed)
-      val aOut = articulation.breakLineageSpilled(eager = true)
-      Seq(visited, comp)
-        .foreach(graft.operators.Materialise.releaseConsumed)
-      (bOut, aOut)
-    }
+    // flatten both outputs eagerly, RELEASING each verdict's scaffold
+    // inputs as soon as that verdict lands (the bridge side consumes
+    // lowHigh/nonTree/pairs/in; the node side only visited/comp): the
+    // peak live block set never exceeds one verdict's inputs
+    val bOut = ck(bridgesDf)
+    Seq(lowHigh, nonTree, pairs, in).foreach(releaseConsumed)
+    val aOut = ck(articulation)
+    Seq(visited, comp).foreach(releaseConsumed)
+    (bOut, aOut)
   }
 }

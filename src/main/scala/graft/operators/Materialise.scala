@@ -127,40 +127,28 @@ object Materialise {
       case other => withPolicy(df, other, eager)
     }
 
-  /** Break lineage with the frame's blocks kept ON-HEAP but SERIALIZED
-    * (MEMORY_AND_DISK_SER).
-    *
-    * The default (local)checkpoint storage level is MEMORY_AND_DISK with
-    * deserialized = true: every cached row is a live UnsafeRow object plus
-    * its backing byte[] — a 35M-row frame is ~70M old-generation objects
-    * the collector re-walks on every cycle. Measured in one local JVM
-    * (32 task threads, 20 GB heap): ONE sort-merge join of two
-    * such 35M-row checkpoints spends 762 task-seconds in GC and 42 s wall;
-    * the same join over MEMORY_AND_DISK_SER blocks (a handful of byte
-    * chunks per block) takes 9.4 s wall / 136 s GC, and over DISK_ONLY
-    * 6.1 s / 28 s. The serialized levels pay a per-read deserialisation
-    * (~6 CPU-s per full read of a 35M-row frame) — cheap next to the GC
-    * bill whenever the frame is LARGE and the pipeline keeps allocating
-    * while it is resident. Use for big scaffold/loop frames; small frames
-    * and pure re-scan sources keep the deserialized default (re-reads of
-    * deserialized blocks are the one shape that is cheapest as objects).
-    * Policies that are already serialized on their own medium (checkpoint,
-    * parquet) keep their normal behaviour. */
-  def serialised(df: DataFrame, eager: Boolean): DataFrame =
-    policy(df.sparkSession) match {
-      case LocalCheckpointPolicy =>
-        org.apache.spark.sql.GraftSqlBridge.freshStats(
-          df.localCheckpoint(eager, StorageLevel.MEMORY_AND_DISK_SER))
-      case PersistPolicy =>
-        val out = df.persist(StorageLevel.MEMORY_AND_DISK_SER)
-        if (eager) out.count()
-        out
-      case other => withPolicy(df, other, eager)
-    }
-
   // parquet-policy scratch files this JVM wrote, releasable individually
   private val matPaths =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  /** The plan node holding `df`'s materialisation: its optimized plan
+    * stripped of Project/Filter views and of the role repartition that
+    * run()-style outputs wrap their materialised frame in (the exchange
+    * is a pure view over the stored blocks or files). */
+  private def materialisedLeaf(df: DataFrame)
+      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan,
+      Project, Repartition, RepartitionByExpression}
+    @annotation.tailrec
+    def strip(p: LogicalPlan): LogicalPlan = p match {
+      case pr: Project => strip(pr.child)
+      case f: Filter => strip(f.child)
+      case r: Repartition => strip(r.child)
+      case r: RepartitionByExpression => strip(r.child)
+      case other => other
+    }
+    strip(df.queryExecution.optimizedPlan)
+  }
 
   /** Reclaim a PARQUET-policy frame's scratch directory NOW instead of at
     * JVM exit. ONLY for frames the caller can prove dead — an iterative
@@ -175,20 +163,8 @@ object Materialise {
     * cluster-default parquet policy accumulates one full frame copy per
     * iteration in the scratch dir. */
   def release(df: DataFrame): Unit = {
-    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan,
-      Project, Repartition, RepartitionByExpression}
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    @annotation.tailrec
-    def strip(p: LogicalPlan): LogicalPlan = p match {
-      case pr: Project => strip(pr.child)
-      case f: Filter => strip(f.child)
-      // run()-style outputs wrap their materialised frame in a role
-      // repartition; the exchange is a pure view over the scratch files
-      case r: Repartition => strip(r.child)
-      case r: RepartitionByExpression => strip(r.child)
-      case other => other
-    }
-    strip(df.queryExecution.optimizedPlan) match {
+    materialisedLeaf(df) match {
       case rel: LogicalRelation => rel.relation match {
         case fs: HadoopFsRelation =>
           fs.location.rootPaths.map(_.toString).foreach { p =>
@@ -224,17 +200,7 @@ object Materialise {
   def releaseConsumed(df: DataFrame): Unit = {
     release(df)
     rddUnpersistWarnSilenced
-    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan,
-      Project, Repartition, RepartitionByExpression}
-    @annotation.tailrec
-    def strip(p: LogicalPlan): LogicalPlan = p match {
-      case pr: Project => strip(pr.child)
-      case f: Filter => strip(f.child)
-      case r: Repartition => strip(r.child)
-      case r: RepartitionByExpression => strip(r.child)
-      case other => other
-    }
-    strip(df.queryExecution.optimizedPlan) match {
+    materialisedLeaf(df) match {
       case l: org.apache.spark.sql.execution.LogicalRDD =>
         l.rdd.unpersist(blocking = false): Unit
       case _ =>
@@ -379,9 +345,5 @@ object Materialise {
     /** [[Materialise.spilled]] — lineage break whose blocks stay off-heap. */
     def breakLineageSpilled(eager: Boolean = false): DataFrame =
       Materialise.spilled(df, eager)
-    /** [[Materialise.serialised]] — lineage break whose blocks stay on-heap
-      * but serialized (GC-cheap for large frames). */
-    def breakLineageSer(eager: Boolean = false): DataFrame =
-      Materialise.serialised(df, eager)
   }
 }

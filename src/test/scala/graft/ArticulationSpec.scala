@@ -1,37 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.clustering.{ClusteringOps, ConnectedComponents, DistributedBridges}
+import graft.clustering.{ClusteringOps, ConnectedComponents}
 
 /** Articulation (cut) vertices: task-side Tarjan and the distributed
   * Tarjan–Vishkin pass, both verified against an independent brute-force
-  * oracle (remove each vertex, count components). */
+  * oracle ([[GraphOracle]]: remove each vertex, count components). */
 class ArticulationSpec extends SparkSpec {
   import spark.implicits._
-
-  /** Brute force: v is an articulation point iff removing it increases the
-    * number of connected components among the remaining vertices. */
-  private def bruteForce(edges: Seq[(Long, Long)]): Set[Long] = {
-    val uniq = edges.map { case (a, b) => (math.min(a, b), math.max(a, b)) }
-      .distinct.filter { case (a, b) => a != b }
-    val nodes = uniq.flatMap(e => Seq(e._1, e._2)).distinct
-    def componentCount(vs: Seq[Long], es: Seq[(Long, Long)]): Int = {
-      val parent = scala.collection.mutable.Map(vs.map(v => v -> v): _*)
-      def find(x: Long): Long = {
-        var r = x
-        while (parent(r) != r) r = parent(r)
-        r
-      }
-      es.foreach { case (a, b) => parent(find(a)) = find(b) }
-      vs.map(find).distinct.size
-    }
-    val base = componentCount(nodes, uniq)
-    nodes.filter { v =>
-      val rest = nodes.filterNot(_ == v)
-      val es = uniq.filter(e => e._1 != v && e._2 != v)
-      componentCount(rest, es) > base  // v's removal split something
-    }.toSet
-  }
 
   private def collectFlags(df: org.apache.spark.sql.DataFrame): Map[Long, Boolean] =
     df.collect().map(r => r.getAs[Long]("node_id") ->
@@ -50,8 +26,8 @@ class ArticulationSpec extends SparkSpec {
       (10L, 13L),                                          // pendant off cycle
       (40L, 41L), (40L, 42L), (40L, 43L)                   // star
     )
-    val expected = bruteForce(edges)
-    assert(ClusteringOps.findArticulationPoints(edges) == expected)
+    val expected = GraphOracle.articulationPoints(edges)
+    assert(ClusteringOps.findBridgesAndCuts(edges)._2 == expected)
     // the classics, by hand: path interiors, barbell joints, star centre,
     // cycle node carrying the pendant
     assert(expected == Set(2L, 3L, 22L, 23L, 10L, 40L))
@@ -65,8 +41,8 @@ class ArticulationSpec extends SparkSpec {
       val m = n + rng.nextInt(2 * n)
       val raw = Seq.fill(m)((rng.nextInt(n).toLong, rng.nextInt(n).toLong))
         .filter { case (a, b) => a != b }
-      val expected = bruteForce(raw)
-      assert(ClusteringOps.findArticulationPoints(raw) == expected,
+      val expected = GraphOracle.articulationPoints(raw)
+      assert(ClusteringOps.findBridgesAndCuts(raw)._2 == expected,
         s"trial $trial task-side diverged")
       val edges = raw.toDF("unique_id_l", "unique_id_r")
       val clusters = ConnectedComponents.run(edges)
@@ -90,7 +66,7 @@ class ArticulationSpec extends SparkSpec {
     val clusters = ConnectedComponents.run(edges)
     val dist = collectFlags(ClusteringOps.articulationPoints(clusters, edges,
       maxClusterSize = 10, distributeOversize = true))
-    assert(dist.filter(_._2).keySet == bruteForce(raw))
+    assert(dist.filter(_._2).keySet == GraphOracle.articulationPoints(raw))
     // cross-check against the bridge machinery on the same forest: every
     // endpoint of a bridge with another incident edge must be a cut vertex
     val bridgeEnds = ClusteringOps.edgeBridges(clusters, edges,

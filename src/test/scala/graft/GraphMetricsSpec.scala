@@ -4,12 +4,11 @@ import org.apache.spark.sql.functions._
 import graft.clustering.{ClusteringOps, ConnectedComponents, DistributedBridges}
 
 /** The fused bridges+articulation pass: one scaffold, both verdicts.
-  * Verified against the standalone entry points (which are themselves
-  * brute-force-verified in ArticulationSpec / ClusteringSpec) and against
-  * closed-form shapes — on BOTH physical paths. The distributed fused
-  * bridge verdict uses the preorder-interval test rather than the
-  * standalone XOR, so the parity check here is a genuine cross-algorithm
-  * oracle, not a replay. */
+  * Verified on BOTH physical paths against the brute-force oracles in
+  * [[GraphOracle]] (delete the element, recount components) and against
+  * closed-form shapes. [[ClusteringOps.edgeBridges]] and
+  * [[ClusteringOps.articulationPoints]] are projections of this pass, so
+  * they are checked against the oracles too, never against each other. */
 class GraphMetricsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -21,8 +20,11 @@ class GraphMetricsSpec extends SparkSpec {
     df.collect().map(r => r.getAs[Long]("node_id") ->
       r.getAs[Boolean]("is_articulation")).toMap
 
-  test("findBridgesAndCuts: one-DFS verdicts match the standalone finders " +
-      "on random multigraphs (parallel edges + self-loops)") {
+  private def undirected(e: (Long, Long)) =
+    (math.min(e._1, e._2), math.max(e._1, e._2))
+
+  test("findBridgesAndCuts: one-DFS verdicts match brute force on random " +
+      "multigraphs (parallel edges + self-loops)") {
     val rng = new scala.util.Random(431)
     (1 to 200).foreach { trial =>
       val n = 2 + rng.nextInt(14)
@@ -30,36 +32,34 @@ class GraphMetricsSpec extends SparkSpec {
       // raw multigraph: duplicates and self-loops stay in
       val es = Seq.fill(m)((rng.nextInt(n).toLong, rng.nextInt(n).toLong))
       val (bs, cs) = ClusteringOps.findBridgesAndCuts(es)
-      val soloB = ClusteringOps.findBridges(es)
-      val soloC = ClusteringOps.findArticulationPoints(es)
       // bridge sets are emitted as DFS tree pairs — compare undirected
-      def undir(s: Set[(Long, Long)]) =
-        s.map { case (a, b) => (math.min(a, b), math.max(a, b)) }
-      assert(undir(bs) == undir(soloB), s"trial $trial bridges: $es")
-      assert(cs == soloC, s"trial $trial cuts: $es")
+      assert(bs.map(undirected) == GraphOracle.bridges(es),
+        s"trial $trial bridges: $es")
+      assert(cs == GraphOracle.articulationPoints(es), s"trial $trial cuts: $es")
     }
   }
 
-  test("fused pass matches the standalone entry points on random graphs, " +
-      "both physical paths") {
+  test("fused pass and its single-grain projections match brute force on " +
+      "random graphs, both physical paths") {
     val rng = new scala.util.Random(137)
     (1 to 3).foreach { trial =>
       val n = 20 + rng.nextInt(30)
       val m = n + rng.nextInt(2 * n)
       val raw = Seq.fill(m)((rng.nextInt(n).toLong, rng.nextInt(n).toLong))
         .filter { case (a, b) => a != b }
+      val bruteB = GraphOracle.bridges(raw)
+      val bruteA = GraphOracle.articulationPoints(raw)
+      val wantB = raw.map(e => e -> bruteB.contains(undirected(e))).toMap
+      val wantA = raw.flatMap(e => Seq(e._1, e._2))
+        .map(v => v -> bruteA.contains(v)).toMap
       val edges = raw.toDF("unique_id_l", "unique_id_r")
       val clusters = ConnectedComponents.run(edges)
       for (cap <- Seq(1, 10000)) { // 1 = all distributed, 10000 = all task-side
         val gm = ClusteringOps.graphMetrics(clusters, edges,
           maxClusterSize = cap, distributeOversize = true)
-        val soloB = bridgeMap(ClusteringOps.edgeBridges(clusters, edges,
-          maxClusterSize = cap, distributeOversize = true))
-        val soloA = cutMap(ClusteringOps.articulationPoints(clusters, edges,
-          maxClusterSize = cap, distributeOversize = true))
-        assert(bridgeMap(gm.bridges) == soloB,
+        assert(bridgeMap(gm.bridges) == wantB,
           s"trial $trial cap=$cap bridge verdicts diverged")
-        assert(cutMap(gm.articulation) == soloA,
+        assert(cutMap(gm.articulation) == wantA,
           s"trial $trial cap=$cap articulation verdicts diverged")
         // the stacked frame is the exact union of the two grains
         val st = gm.stacked.collect()
@@ -67,9 +67,14 @@ class GraphMetricsSpec extends SparkSpec {
           .map(r => (r.getLong(2), r.getLong(3)) -> r.getBoolean(4)).toMap
         val stA = st.filter(_.getString(1) == "node")
           .map(r => r.getLong(2) -> r.getBoolean(4)).toMap
-        assert(stB == soloB,
-          s"trial $trial cap=$cap stacked edge grain diverged")
-        assert(stA == soloA, s"trial $trial cap=$cap stacked node grain diverged")
+        assert(stB == wantB, s"trial $trial cap=$cap stacked edge grain diverged")
+        assert(stA == wantA, s"trial $trial cap=$cap stacked node grain diverged")
+        assert(bridgeMap(ClusteringOps.edgeBridges(clusters, edges,
+          maxClusterSize = cap, distributeOversize = true)) == wantB,
+          s"trial $trial cap=$cap edgeBridges diverged")
+        assert(cutMap(ClusteringOps.articulationPoints(clusters, edges,
+          maxClusterSize = cap, distributeOversize = true)) == wantA,
+          s"trial $trial cap=$cap articulationPoints diverged")
       }
     }
   }
@@ -93,18 +98,17 @@ class GraphMetricsSpec extends SparkSpec {
   }
 
   test("DistributedBridges.graphEdgeNodeMetrics interval-bridge test " +
-      "agrees with the XOR path on a deep mixed graph") {
+      "agrees with task-side findBridgesAndCuts on a deep mixed graph") {
     val ring = (0 until 40).map(i => (i.toLong, ((i + 1) % 40).toLong))
     val chain = (100 until 130).map(i => (i.toLong, (i + 1).toLong))
     val connector = Seq((0L, 100L))
     val raw = ring ++ chain ++ connector
     val edges = raw.toDF("unique_id_l", "unique_id_r")
       .withColumn("cluster_id", lit(0L))
-    val (fusedB, _) = DistributedBridges.graphEdgeNodeMetrics(edges)
-    val xorB = DistributedBridges.bridges(edges)
-    assert(bridgeMap(fusedB) == bridgeMap(xorB))
+    val b = bridgeMap(DistributedBridges.graphEdgeNodeMetrics(edges)._1)
+    val tarjan = ClusteringOps.findBridgesAndCuts(raw)._1.map(undirected)
+    assert(b == raw.map(e => e -> tarjan.contains(undirected(e))).toMap)
     // closed form: the chain and the connector bridge, the ring does not
-    val b = bridgeMap(fusedB)
     assert(b((0L, 100L)) && b((100L, 101L)) && !b((0L, 1L)))
   }
 

@@ -12,10 +12,10 @@ class Ops2Spec extends SparkSpec {
 
   test("findBridges: triangle with tail") {
     val edges = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L))
-    assert(ClusteringOps.findBridges(edges) == Set((3L, 4L)))
+    assert(ClusteringOps.findBridgesAndCuts(edges)._1 == Set((3L, 4L)))
     // path graph: every edge is a bridge
     val path = Seq((1L, 2L), (2L, 3L), (3L, 4L))
-    assert(ClusteringOps.findBridges(path).size == 3)
+    assert(ClusteringOps.findBridgesAndCuts(path)._1.size == 3)
   }
 
   test("edgeBridges end to end") {
@@ -54,7 +54,7 @@ class Ops2Spec extends SparkSpec {
     assert(got((12L, 13L)).contains(true) && got((10L, 11L)).contains(false))
   }
 
-  test("edgeBridges distributeOversize: distributed cycle-space verdicts " +
+  test("edgeBridges distributeOversize: distributed interval verdicts " +
       "equal task-side Tarjan on adversarial shapes") {
     // path (all bridges), cycle (none), barbell (two triangles joined by
     // one bridge), parallel edge (covers itself), self-loop, pendant off a
