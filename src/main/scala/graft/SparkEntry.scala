@@ -1371,15 +1371,15 @@ object SparkEntry {
     // patterns -> E-step pattern probabilities -> M-step m/u shares + λ
     // (`expectation_maximisation.py:225-311`). The oracle re-derives the
     // entire iteration in SQL from the same literal init params, so the
-    // engine's driver-side emCore math is cross-checked end to end; a
+    // engine's EM fold (Training.emPass) is cross-checked end to end; a
     // level no pattern observed records the 1e-6 unobserved sentinel.
     "q_em_mstep" -> ((s, dir) => emMstep(s, dir)),
 
     // the SAME one-iteration M-step forced through the DISTRIBUTED path
-    // (pattern cap 1 -> Training.emCoreDistributed): the codegen'd E-step
-    // column + single global aggregate per iteration sits under the same
-    // DuckDB replay as the driver path — both must round to identical
-    // 9-decimal parameters
+    // (pattern cap 1): the same fold runs per partition of the persisted
+    // pattern frame and its sums are tree-reduced, one job per iteration,
+    // under the same DuckDB replay as the driver path — both must round to
+    // identical 9-decimal parameters
     "q_em_mstep_dist" -> ((s, dir) => {
       s.conf.set("spark.graft.em.maxPatterns", "1")
       try emMstep(s, dir)
@@ -1835,8 +1835,9 @@ object SparkEntry {
       |SELECT n.node_id, coalesce(m.ka, n.node_id) AS cluster_id
       |FROM nodes n LEFT JOIN merges m ON n.node_id = m.kb""".stripMargin
 
-  /** Shared by q_em_mstep (driver path) and q_em_mstep_dist (forced
-    * distributed M-step) — identical semantics, one replay. */
+  /** Shared by q_em_mstep (patterns folded on the driver) and
+    * q_em_mstep_dist (the same fold per partition, forced by a pattern cap
+    * of 1) — identical semantics, one replay. */
   private lazy val emMstepOracleSql: String =
     s"""WITH pr AS (
          |  SELECT l.c_custkey AS uid_l, r.c_custkey AS uid_r
@@ -1885,7 +1886,7 @@ object SparkEntry {
   /** q_em_train's oracle: `iterations` complete E/M rounds unrolled as
     * chained CTEs. Each round scores the (once-computed) agreement
     * patterns from the PREVIOUS round's parameter table (par{k-1} /
-    * lam{k-1}), then re-estimates. Faithful to the engine's emCore:
+    * lam{k-1}), then re-estimates. Faithful to the engine's EM fold:
     * a gamma of -1 contributes factor 1.0 (the LEFT JOIN misses),
     * observed factors are floored at 1e-32 (ProbFloor), a level that
     * never appears in any pattern re-estimates internally to 0.0 but is

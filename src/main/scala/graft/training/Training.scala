@@ -1,6 +1,6 @@
 package graft.training
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model._
 import graft.operators._
@@ -22,11 +22,14 @@ import graft.pipeline.TextOps
  *
  * Scale design: the cluster only ever computes comparison-vector COUNTS
  * (`groupBy(gammas).count` — the agreement-pattern rewrite from
- * `expectation_maximisation.py:28-42`); the EM loop itself runs on the
- * driver over those few hundred patterns, so iterations cost zero Spark
- * jobs. The reference re-runs a SQL E-step per iteration; on Spark that
- * would be 25 scans — collecting patterns once is strictly better and
- * numerically identical.
+ * `expectation_maximisation.py:28-42`). EM's per-iteration work is one
+ * fold over those patterns ([[emPass]]: E-step scores plus the M-step's
+ * sufficient statistics). Up to `spark.graft.em.maxPatterns` patterns it
+ * runs on the driver over the collected patterns, so iterations cost zero
+ * Spark jobs; above the cap the same fold runs inside each partition of
+ * the persisted pattern frame and the statistics are tree-reduced — one
+ * job per iteration. The reference re-runs a SQL E-step per iteration;
+ * folding patterns is numerically the same.
  */
 object Training {
 
@@ -39,8 +42,7 @@ object Training {
    * Estimate u probabilities: sample records deterministically, take the
    * cartesian self-join (random pairs are assumed non-matches), and set
    * each level's u to its share of non-null gammas.
-   */
-  /**
+   *
    * @param numChunks   the sampled cartesian is processed in hash chunks of
    *                    the right side (`estimate_u.py:443-517`)
    * @param minObsPerLevel stop consuming chunks once every active level has
@@ -105,48 +107,72 @@ object Training {
       sessionDesc = "estimate u by random sampling")
   }
 
-  /** groupBy each comparison's gamma column -> Map(comparison ->
-    * Map(gamma -> count)). One aggregation per comparison over one cached
-    * cv frame. */
+  /** Map(comparison -> Map(gamma -> count)) over one comparison-vector
+    * frame, from ONE aggregate: every pair stacks a (comparison index,
+    * gamma) row per comparison and the stack is grouped once, so the
+    * output is bounded by the total level count. */
   private def gammaCounts(cv: DataFrame, settings: LinkSettings)
       : Map[String, Map[Int, Long]] = {
-    val cached = cv.persist()
-    try {
-      settings.comparisons.map { c =>
-        val rows = cached.groupBy(col(c.gammaColumnName)).count().collect()
-        c.outputColumnName -> rows.map(r => r.getInt(0) -> r.getLong(1)).toMap
-      }.toMap
-    } finally { cached.unpersist() }
+    val cg = explode(array(settings.comparisons.zipWithIndex.map { case (c, i) =>
+      struct(lit(i).as("c"), col(c.gammaColumnName).as("g")) }: _*))
+    val byIdx = cv.select(cg.as("cg")).groupBy(col("cg.c"), col("cg.g")).count()
+      .collect().groupBy(_.getInt(0))
+    settings.comparisons.zipWithIndex.map { case (c, i) =>
+      c.outputColumnName -> byIdx.getOrElse(i, Array.empty)
+        .map(r => r.getInt(1) -> r.getLong(2)).toMap
+    }.toMap
   }
 
   /** Record per-level probabilities (share of non-null gammas) as a
-    * training session for m or u; the live value becomes the median across
-    * all recorded sessions (`comparison_level.py:355-399`,
-    * `linker.py:459-467`). */
+    * training session for m or u. */
   private def applyLevelProbabilities(settings: LinkSettings,
       counts: Map[String, Map[Int, Long]], setM: Boolean,
-      sessionDesc: String): LinkSettings = {
-    val updated = settings.comparisons.map { c =>
+      sessionDesc: String): LinkSettings =
+    recordSession(settings, sessionDesc, settings.comparisons.map { c =>
       val byGamma = counts.getOrElse(c.outputColumnName, Map.empty)
       val totalObs = byGamma.collect { case (g, n) if g >= 0 => n }.sum.toDouble
-      val newLevels = c.levels.map { lv =>
-        if (lv.isNull) lv
-        else {
-          val gv = c.activeLevelsWithGamma.collectFirst {
-            case (l2, g) if l2 == lv => g }.get
-          // a level with zero observations records an UNOBSERVED session:
-          // the sentinel must not enter the cross-session median
-          val obs = totalObs > 0 && byGamma.getOrElse(gv, 0L) > 0
-          val share =
-            if (obs) byGamma(gv) / totalObs else Model.UnobservedSentinel
-          if (setM) lv.addTrainedM(share, sessionDesc, observed = obs)
-          else lv.addTrainedU(share, sessionDesc, observed = obs)
+      val share: Int => Double = g => byGamma(g) / totalObs
+      c.outputColumnName -> TrainedLevels(
+        g => totalObs > 0 && byGamma.getOrElse(g, 0L) > 0,
+        m = if (setM) Some(share) else None,
+        u = if (setM) None else Some(share))
+    }.toMap)
+
+  /** One session's trained values for one comparison: per gamma whether the
+    * session observed the level, and the m and/or u it trained (None = that
+    * family was not trained and records nothing). */
+  private case class TrainedLevels(observed: Int => Boolean,
+      m: Option[Int => Double], u: Option[Int => Double])
+
+  /** Write one training session back into the settings: every non-null
+    * level of a comparison named in `trained` records the session's value;
+    * the live value becomes the median across all recorded sessions
+    * (`comparison_level.py:355-399`, `linker.py:459-467`), so a later
+    * session refines, never overwrites. A level the session never observed
+    * records the unobserved sentinel with observed = false, which keeps it
+    * out of the median (LEVEL_NOT_OBSERVED_TEXT,
+    * `em_training_session.py:336-353`). */
+  private def recordSession(settings: LinkSettings, sessionDesc: String,
+      trained: Map[String, TrainedLevels]): LinkSettings =
+    settings.copy(comparisons = settings.comparisons.map { c =>
+      trained.get(c.outputColumnName).fold(c) { t =>
+        mapActiveLevels(c) { (lv, g) =>
+          val obs = t.observed(g)
+          def value(f: Int => Double) =
+            if (obs) f(g) else Model.UnobservedSentinel
+          val withM = t.m.fold(lv)(f =>
+            lv.addTrainedM(value(f), sessionDesc, observed = obs))
+          t.u.fold(withM)(f =>
+            withM.addTrainedU(value(f), sessionDesc, observed = obs))
         }
       }
-      c.copy(levels = newLevels)
-    }
-    settings.copy(comparisons = updated)
-  }
+    })
+
+  /** `c` with `f(level, gamma)` applied to each of its non-null levels. */
+  private def mapActiveLevels(c: Comparison)(
+      f: (ComparisonLevel, Int) => ComparisonLevel): Comparison =
+    c.copy(levels = c.levels.map(lv => if (lv.isNull) lv else f(lv,
+      c.activeLevelsWithGamma.collectFirst { case (l2, g) if l2 == lv => g }.get)))
 
   /**
    * Estimate m probabilities from a ground-truth label column: pairs
@@ -222,16 +248,10 @@ object Training {
       val ms = (0 until n).map(g => math.pow(2.0, targetWeight(g) / 2))
       val us = (0 until n).map(g => math.pow(2.0, -targetWeight(g) / 2))
       val (mSum, uSum) = (ms.sum, us.sum)
-      val newLevels = c.levels.map { lv =>
-        if (lv.isNull) lv
-        else {
-          val g = c.activeLevelsWithGamma.collectFirst {
-            case (l2, gg) if l2 == lv => gg }.get
-          val withM = if (lv.m.isDefined) lv else lv.withM(ms(g) / mSum)
-          if (withM.u.isDefined) withM else withM.withU(us(g) / uSum)
-        }
+      mapActiveLevels(c) { (lv, g) =>
+        val withM = if (lv.m.isDefined) lv else lv.withM(ms(g) / mSum)
+        if (withM.u.isDefined) withM else withM.withU(us(g) / uSum)
       }
-      c.copy(levels = newLevels)
     }
     settings.copy(comparisons = updated)
   }
@@ -267,219 +287,176 @@ object Training {
       mHistory: Seq[Array[Map[Int, Double]]] = Nil,
       uHistory: Seq[Array[Map[Int, Double]]] = Nil)
 
+  /** M-step sufficient statistics of one E-step pass: per (comparison,
+    * gamma) the p·n and (1-p)·n numerators and the observed pair count, per
+    * comparison the denominators over non-null gammas, Σp·n and Σn. A gamma
+    * at or past `width(i)` (no parameter of its own) enters the
+    * denominators only. Additive, so per-partition passes merge by summing. */
+  private final class EMStats(width: Array[Int]) extends Serializable {
+    val mNum, uNum = width.map(w => new Array[Double](w))
+    val observed = width.map(w => new Array[Long](w))
+    val mDen, uDen = new Array[Double](width.length)
+    var pn = 0.0
+    var n = 0L
+
+    def merge(o: EMStats): EMStats = {
+      for (i <- width.indices; g <- 0 until width(i)) {
+        mNum(i)(g) += o.mNum(i)(g); uNum(i)(g) += o.uNum(i)(g)
+        observed(i)(g) += o.observed(i)(g)
+      }
+      for (i <- width.indices) { mDen(i) += o.mDen(i); uDen(i) += o.uDen(i) }
+      pn += o.pn; n += o.n
+      this
+    }
+
+    /** Re-estimated shares over the gammas of `keys`; a comparison with no
+      * weight at all gets the unobserved sentinel. */
+    def shares(num: Array[Array[Double]], den: Array[Double],
+        keys: Array[Map[Int, Double]]): Array[Map[Int, Double]] =
+      Array.tabulate(width.length)(i => keys(i).keys.map(g => g -> (
+        if (den(i) == 0) Model.UnobservedSentinel
+        else if (g < 0 || g >= width(i)) 0.0
+        else math.max(num(i)(g) / den(i), 0.0))).toMap)
+  }
+
   /**
-   * The EM fixed-point iteration over agreement patterns (pure driver math;
-   * semantics of `expectation_maximisation.py:225-311`):
-   * E-step p(pattern) = λ·Πm / (λ·Πm + (1-λ)·Πu) with null gammas (-1)
-   * contributing factor 1; M-step re-estimates each level's share weighted
-   * by p (m) / 1-p (u), and λ as the weighted match fraction. Convergence =
-   * max |param change| < tolerance (`settings.py:116-122`).
+   * EM's per-iteration work, written once (`expectation_maximisation.py:
+   * 45-118`): the E-step scores each pattern p = λ·Πm / (λ·Πm + (1-λ)·Πu),
+   * a null gamma (-1) contributing factor 1, every factor floored at
+   * [[Model.ProbFloor]] and an unknown gamma read as the unobserved
+   * sentinel; each active TF comparison then multiplies the match odds by
+   * 2^(w·(log2 u_level - log2 tf)) with the CURRENT u of the level (the
+   * reference re-predicts per iteration). Sums the M-step statistics in
+   * pattern order.
    */
+  private def emPass(patterns: Iterator[Pattern], m: Array[Map[Int, Double]],
+      u: Array[Map[Int, Double]], lambda: Double, tfSpecs: Seq[TfSpec])
+      : EMStats = {
+    def floored(t: Map[Int, Double], g: Int) =
+      math.max(t.getOrElse(g, Model.UnobservedSentinel), Model.ProbFloor)
+    val stats = new EMStats(Array.tabulate(m.length)(i =>
+      (m(i).keys ++ u(i).keys).foldLeft(-1)(math.max) + 1))
+    patterns.foreach { p =>
+      var pm = lambda
+      var pu = 1 - lambda
+      for (i <- p.gammas.indices if p.gammas(i) >= 0) {
+        pm *= floored(m(i), p.gammas(i))
+        pu *= floored(u(i), p.gammas(i))
+      }
+      for (j <- tfSpecs.indices if j < p.tfTerms.length && !p.tfTerms(j).isNaN) {
+        val (i, t) = (tfSpecs(j).activeIdx, p.tfTerms(j))
+        tfSpecs(j).weightByGamma.get(p.gammas(i)).foreach { w =>
+          val log2u = math.log(floored(u(i), p.gammas(i))) / math.log(2.0)
+          pm *= math.pow(2.0, w * (log2u - t))
+        }
+      }
+      val prob = pm / (pm + pu)
+      val (wm, wu) = (prob * p.count, (1 - prob) * p.count)
+      for (i <- p.gammas.indices if p.gammas(i) >= 0) {
+        val g = p.gammas(i)
+        stats.mDen(i) += wm
+        stats.uDen(i) += wu
+        if (g < stats.mNum(i).length) {
+          stats.mNum(i)(g) += wm
+          stats.uNum(i)(g) += wu
+          stats.observed(i)(g) += p.count
+        }
+      }
+      stats.pn += wm
+      stats.n += p.count
+    }
+    stats
+  }
+
+  /**
+   * The EM fixed-point loop (`expectation_maximisation.py:225-311`): each
+   * iteration runs `pass` under the current parameters, re-estimates m
+   * (weights p·n), u (weights (1-p)·n) and λ (Σp·n / Σn) from its
+   * statistics unless fixed, and stops at the first iteration whose max
+   * |param change| over m, u and λ is below `tolerance`
+   * (`settings.py:116-122`). Returns the converged state and the last
+   * pass's statistics (one extra pass when no iteration ran).
+   */
+  private def emLoop(
+      pass: (Array[Map[Int, Double]], Array[Map[Int, Double]], Double) => EMStats,
+      mInit: Array[Map[Int, Double]], uInit: Array[Map[Int, Double]],
+      lambdaInit: Double, fixU: Boolean, maxIterations: Int, tolerance: Double,
+      fixM: Boolean, fixLambda: Boolean): (EMCore, EMStats) = {
+    val nComp = mInit.length
+    var (m, u, lambda) = (mInit, uInit, lambdaInit)
+    val history = scala.collection.mutable.ArrayBuffer.empty[Double]
+    val lambdaHistory = scala.collection.mutable.ArrayBuffer(lambdaInit)
+    val mHistory = scala.collection.mutable.ArrayBuffer(mInit)
+    val uHistory = scala.collection.mutable.ArrayBuffer(uInit)
+    var last: EMStats = null
+    var converged = false
+    while (history.size < maxIterations && !converged) {
+      last = pass(m, u, lambda)
+      val newM = if (fixM) m else last.shares(last.mNum, last.mDen, m)
+      val newU = if (fixU) u else last.shares(last.uNum, last.uDen, u)
+      val newLambda = if (fixLambda) lambda else last.pn / last.n.toDouble
+      val deltas =
+        (for (i <- 0 until nComp; g <- m(i).keys)
+          yield math.abs(newM(i)(g) - m(i)(g))) ++
+        (for (i <- 0 until nComp; g <- u(i).keys)
+          yield math.abs(newU(i)(g) - u(i)(g))) :+
+        math.abs(newLambda - lambda)
+      val maxDelta = deltas.max
+      history += maxDelta
+      m = newM; u = newU; lambda = newLambda
+      lambdaHistory += lambda
+      mHistory += m
+      uHistory += u
+      converged = maxDelta < tolerance
+    }
+    if (last == null) last = pass(m, u, lambda)
+    (EMCore(m, u, lambda, history.size, converged, history.toSeq,
+      lambdaHistory.toSeq, mHistory.toSeq, uHistory.toSeq), last)
+  }
+
+  /** EM over patterns held on the driver (pure driver math, zero Spark
+    * jobs): [[emLoop]] folding [[emPass]] over `patterns`. */
   def emCore(patterns: Seq[Pattern], mInit: Array[Map[Int, Double]],
       uInit: Array[Map[Int, Double]], lambdaInit: Double, fixU: Boolean,
       maxIterations: Int, tolerance: Double,
       tfSpecs: Seq[TfSpec] = Nil, fixM: Boolean = false,
-      fixLambda: Boolean = false): EMCore = {
-    val nComp = mInit.length
-    var m = mInit
-    var u = uInit
-    var lambda = lambdaInit
-    val history = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val lambdaHistory = scala.collection.mutable.ArrayBuffer(lambdaInit)
-    val mHistory = scala.collection.mutable.ArrayBuffer(mInit)
-    val uHistory = scala.collection.mutable.ArrayBuffer(uInit)
-    var iter = 0
-    var converged = false
-    while (iter < maxIterations && !converged) {
-      iter += 1
-      val scored = patterns.map { p =>
-        var pm = lambda
-        var pu = 1 - lambda
-        var i = 0
-        while (i < p.gammas.length) {
-          val g = p.gammas(i)
-          if (g >= 0) {
-            pm *= math.max(m(i).getOrElse(g, Model.UnobservedSentinel), Model.ProbFloor)
-            pu *= math.max(u(i).getOrElse(g, Model.UnobservedSentinel), Model.ProbFloor)
-          }
-          i += 1
-        }
-        // TF adjustment multiplies the match odds, recomputed from the
-        // CURRENT u of the level (reference re-predicts per iteration):
-        // adj = w * (log2(u_level) - log2(tf_effective))
-        var j = 0
-        while (j < tfSpecs.size) {
-          val spec = tfSpecs(j)
-          val g = p.gammas(spec.activeIdx)
-          if (j < p.tfTerms.length && !p.tfTerms(j).isNaN &&
-              spec.weightByGamma.contains(g)) {
-            val uCur = math.max(
-              u(spec.activeIdx).getOrElse(g, Model.UnobservedSentinel),
-              Model.ProbFloor)
-            val adj = spec.weightByGamma(g) *
-              (math.log(uCur) / math.log(2.0) - p.tfTerms(j))
-            pm *= math.pow(2.0, adj)
-          }
-          j += 1
-        }
-        (p, pm / (pm + pu))
-      }
-      def reestimate(weight: (Double, Long) => Double, init: Array[Map[Int, Double]]) =
-        Array.tabulate(nComp) { i =>
-          val byGamma = scala.collection.mutable.Map.empty[Int, Double]
-          var denom = 0.0
-          scored.foreach { case (p, prob) =>
-            val g = p.gammas(i)
-            if (g >= 0) {
-              val w = weight(prob, p.count)
-              byGamma(g) = byGamma.getOrElse(g, 0.0) + w
-              denom += w
-            }
-          }
-          init(i).keys.map(g => g -> (if (denom == 0) Model.UnobservedSentinel
-            else math.max(byGamma.getOrElse(g, 0.0) / denom, 0.0))).toMap
-        }
-      val newM = if (fixM) m else reestimate((p, n) => p * n, m)
-      val newU = if (fixU) u else reestimate((p, n) => (1 - p) * n, u)
-      val totalN = patterns.map(_.count).sum.toDouble
-      val newLambda =
-        if (fixLambda) lambda
-        else scored.map { case (p, prob) => prob * p.count }.sum / totalN
-      val deltas =
-        (for (i <- 0 until nComp; g <- m(i).keys)
-          yield math.abs(newM(i)(g) - m(i)(g))) ++
-        (for (i <- 0 until nComp; g <- u(i).keys)
-          yield math.abs(newU(i)(g) - u(i)(g))) :+
-        math.abs(newLambda - lambda)
-      val maxDelta = deltas.max
-      history += maxDelta
-      m = newM; u = newU; lambda = newLambda
-      lambdaHistory += lambda
-      mHistory += m
-      uHistory += u
-      if (maxDelta < tolerance) converged = true
-    }
-    EMCore(m, u, lambda, iter, converged, history.toSeq,
-      lambdaHistory.toSeq, mHistory.toSeq, uHistory.toSeq)
-  }
+      fixLambda: Boolean = false): EMCore =
+    emLoop((m, u, lam) => emPass(patterns.iterator, m, u, lam, tfSpecs),
+      mInit, uInit, lambdaInit, fixU, maxIterations, tolerance, fixM,
+      fixLambda)._1
 
   /**
-   * The same EM fixed-point as [[emCore]], but with the E-step and M-step
-   * executed ON THE CLUSTER over a persisted agreement-pattern frame, so
-   * training survives a TF vocabulary too large to collect (the pattern
-   * count is bounded by the TF column's cardinality, which at 100 TB can
-   * be hundreds of millions). Per iteration: ONE Spark job evaluates the
-   * E-step probability as a codegen'd column expression (chained `when`
-   * lookups over the current driver-side m/u tables — no UDF) and reduces
-   * every per-level numerator/denominator plus λ in a single global
-   * aggregate; only that one row is collected. Arithmetic mirrors
-   * [[emCore]] term for term (same floors, sentinel defaults, TF
-   * recombination with the iteration's current u), so both paths converge
-   * to identical parameters up to float summation order.
-   *
-   * @param patternDf persisted frame with the gamma columns, the
-   *                  `__tft{j}` TF-term columns and a `n` pair count
+   * EM over a persisted agreement-pattern frame: `nGammas` int gamma
+   * columns, then one double TF-term column per `tfSpecs` entry (null
+   * reads as NaN), then the long pair count. Up to `maxPatterns` patterns
+   * the frame is collected and folded on the driver; above it (a TF
+   * vocabulary too large to collect) [[emPass]] runs inside each partition
+   * and the statistics are tree-reduced, one Spark job per iteration, so
+   * only per-level sums reach the driver. Returns the converged state and
+   * the observed pair count per (comparison, gamma).
    */
-  def emCoreDistributed(patternDf: DataFrame, gammaColNames: Seq[String],
-      tfColNames: Seq[String], mInit: Array[Map[Int, Double]],
+  private[graft] def emOverPatterns(patternDf: DataFrame, nGammas: Int,
+      tfSpecs: Seq[TfSpec], mInit: Array[Map[Int, Double]],
       uInit: Array[Map[Int, Double]], lambdaInit: Double, fixU: Boolean,
-      maxIterations: Int, tolerance: Double, tfSpecs: Seq[TfSpec] = Nil,
-      fixM: Boolean = false, fixLambda: Boolean = false): EMCore = {
-    import org.apache.spark.sql.Column
-    val nComp = mInit.length
-    var m = mInit
-    var u = uInit
-    var lambda = lambdaInit
-    val history = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val lambdaHistory = scala.collection.mutable.ArrayBuffer(lambdaInit)
-    val mHistory = scala.collection.mutable.ArrayBuffer(mInit)
-    val uHistory = scala.collection.mutable.ArrayBuffer(uInit)
-    var iter = 0
-    var converged = false
-    while (iter < maxIterations && !converged) {
-      iter += 1
-      // E-step column: p = pm / (pm + pu), factors in the same order as
-      // emCore (gamma lookups first, then TF adjustments)
-      def lookup(g: Column, tbl: Map[Int, Double]): Column = {
-        val default = lit(math.max(Model.UnobservedSentinel, Model.ProbFloor))
-        tbl.toSeq.sortBy(_._1).foldLeft(default: Column) {
-          case (acc, (k, v)) =>
-            when(g === lit(k), lit(math.max(v, Model.ProbFloor))).otherwise(acc)
-        }
+      maxIterations: Int, tolerance: Double, fixM: Boolean, fixLambda: Boolean,
+      maxPatterns: Long): (EMCore, Array[Array[Long]]) = {
+    val nTf = tfSpecs.size
+    val toPattern = (r: Row) => Pattern(Array.tabulate(nGammas)(r.getInt),
+      r.getLong(nGammas + nTf),
+      Array.tabulate(nTf)(j =>
+        if (r.isNullAt(nGammas + j)) Double.NaN else r.getDouble(nGammas + j)))
+    val pass: (Array[Map[Int, Double]], Array[Map[Int, Double]], Double) => EMStats =
+      if (patternDf.count() <= maxPatterns) {
+        val local = patternDf.collect().map(toPattern).toSeq
+        (m, u, lam) => emPass(local.iterator, m, u, lam, tfSpecs)
+      } else {
+        val rows = patternDf.rdd.map(toPattern)
+        (m, u, lam) => rows.mapPartitions(it =>
+          Iterator(emPass(it, m, u, lam, tfSpecs))).treeReduce(_ merge _)
       }
-      var pm: Column = lit(lambda)
-      var pu: Column = lit(1 - lambda)
-      for (i <- 0 until nComp) {
-        val g = col(gammaColNames(i))
-        pm = pm * when(g >= 0, lookup(g, m(i))).otherwise(lit(1.0))
-        pu = pu * when(g >= 0, lookup(g, u(i))).otherwise(lit(1.0))
-      }
-      for (j <- tfSpecs.indices) {
-        val spec = tfSpecs(j)
-        val g = col(gammaColNames(spec.activeIdx))
-        val tft = col(tfColNames(j))
-        val adj = spec.weightByGamma.toSeq.sortBy(_._1)
-          .foldLeft(lit(1.0): Column) { case (acc, (gv, w)) =>
-            val uCur = math.max(
-              u(spec.activeIdx).getOrElse(gv, Model.UnobservedSentinel),
-              Model.ProbFloor)
-            val log2u = math.log(uCur) / math.log(2.0)
-            when(g === lit(gv) && !isnan(tft),
-              pow(lit(2.0), lit(w) * (lit(log2u) - tft))).otherwise(acc)
-          }
-        pm = pm * adj
-      }
-      val p = pm / (pm + pu)
-      val nCol = col("n").cast("double")
-      // one global aggregate: λ numerator, total n, and for every
-      // comparison the per-gamma numerators plus the g>=0 denominators
-      val aggs = scala.collection.mutable.ArrayBuffer[Column](
-        sum(col("__p") * nCol).as("__pn"), sum(nCol).as("__tot"))
-      for (i <- 0 until nComp) {
-        val g = col(gammaColNames(i))
-        aggs += sum(when(g >= 0, col("__p") * nCol).otherwise(lit(0.0)))
-          .as(s"__md_$i")
-        aggs += sum(when(g >= 0, (lit(1.0) - col("__p")) * nCol)
-          .otherwise(lit(0.0))).as(s"__ud_$i")
-        for (gv <- m(i).keys.toSeq.sorted) {
-          aggs += sum(when(g === lit(gv), col("__p") * nCol)
-            .otherwise(lit(0.0))).as(s"__mn_${i}_$gv")
-          aggs += sum(when(g === lit(gv), (lit(1.0) - col("__p")) * nCol)
-            .otherwise(lit(0.0))).as(s"__un_${i}_$gv")
-        }
-      }
-      val row = patternDf.withColumn("__p", p)
-        .agg(aggs.head, aggs.tail.toSeq: _*).collect()(0)
-      def d(name: String): Double =
-        if (row.isNullAt(row.fieldIndex(name))) 0.0
-        else row.getDouble(row.fieldIndex(name))
-      val newM = if (fixM) m else Array.tabulate(nComp) { i =>
-        val denom = d(s"__md_$i")
-        m(i).keys.map(g => g -> (if (denom == 0) Model.UnobservedSentinel
-          else math.max(d(s"__mn_${i}_$g") / denom, 0.0))).toMap
-      }
-      val newU = if (fixU) u else Array.tabulate(nComp) { i =>
-        val denom = d(s"__ud_$i")
-        u(i).keys.map(g => g -> (if (denom == 0) Model.UnobservedSentinel
-          else math.max(d(s"__un_${i}_$g") / denom, 0.0))).toMap
-      }
-      val newLambda = if (fixLambda) lambda else d("__pn") / d("__tot")
-      val deltas =
-        (for (i <- 0 until nComp; g <- m(i).keys)
-          yield math.abs(newM(i)(g) - m(i)(g))) ++
-        (for (i <- 0 until nComp; g <- u(i).keys)
-          yield math.abs(newU(i)(g) - u(i)(g))) :+
-        math.abs(newLambda - lambda)
-      val maxDelta = deltas.max
-      history += maxDelta
-      m = newM; u = newU; lambda = newLambda
-      lambdaHistory += lambda
-      mHistory += m
-      uHistory += u
-      if (maxDelta < tolerance) converged = true
-    }
-    EMCore(m, u, lambda, iter, converged, history.toSeq,
-      lambdaHistory.toSeq, mHistory.toSeq, uHistory.toSeq)
+    val (core, last) = emLoop(pass, mInit, uInit, lambdaInit, fixU,
+      maxIterations, tolerance, fixM, fixLambda)
+    (core, last.observed)
   }
 
   /** Result of one EM training session.
@@ -562,37 +539,23 @@ object Training {
     // comparison's log2(tf) term, so patterns stay a groupBy shrink
     // (cardinality bounded by TF vocabulary) and the E-step can recombine
     // the term with the iteration's current u — never a per-pair pull.
-    val gammaCols = active.map(_.gammaColumnName)
     val tfComparisons =
       if (withTermFrequencies)
         active.zipWithIndex.filter(_._1.hasTfLevels)
       else Nil
     val tfSpecs = tfComparisons.map { case (c, i) =>
       TfSpec(i, c.tfWeightsByGamma) }
-    val keyCols = gammaCols.map(col) ++
+    val keyCols = active.map(c => col(c.gammaColumnName)) ++
       tfComparisons.zipWithIndex.map { case ((c, _), j) =>
         c.tfTermColumn.as(s"__tft$j") }
-    val tfColNames = tfComparisons.indices.map(j => s"__tft$j")
     val patternDf = cv.groupBy(keyCols: _*)
       .agg(count(lit(1)).as("n")).persist()
     // the pattern count is bounded by gamma-combination x TF-vocabulary
     // cardinality; at 100 TB a high-cardinality TF column can push it past
     // what the driver can hold, so above the cap the EM loop runs
-    // distributed and only per-level aggregates ever reach the driver
-    val spark = cv.sparkSession
-    val maxPatterns =
-      spark.conf.get("spark.graft.em.maxPatterns", "2000000").toLong
-    val nPatterns = patternDf.count()
-    val collectPatterns = nPatterns <= maxPatterns
-    val patterns: Array[Pattern] =
-      if (collectPatterns)
-        patternDf.collect().map { r =>
-          Pattern(gammaCols.indices.map(i => r.getInt(i)).toArray,
-            r.getLong(keyCols.size),
-            tfComparisons.indices.map(j =>
-              r.getDouble(gammaCols.size + j)).toArray)
-        }
-      else Array.empty
+    // distributed and only per-level sums ever reach the driver
+    val maxPatterns = cv.sparkSession.conf
+      .get("spark.graft.em.maxPatterns", "2000000").toLong
 
     // driver-side parameter tables
     val mInit = active.map { c =>
@@ -609,72 +572,25 @@ object Training {
     val lambdaInit = math.min(math.max(
       odds2prob(prob2odds(settings.probabilityTwoRandomRecordsMatch) * blockingBf),
       1e-8), 1 - 1e-8)
-    val core =
-      try {
-        if (collectPatterns)
-          emCore(patterns.toSeq, mInit, uInit, lambdaInit, fixU,
-            maxIterations, tolerance, tfSpecs, fixM, fixLambda)
-        else
-          emCoreDistributed(patternDf, gammaCols, tfColNames, mInit, uInit,
-            lambdaInit, fixU, maxIterations, tolerance, tfSpecs, fixM, fixLambda)
-      } catch {
-        case e: Throwable => patternDf.unpersist(); throw e
-      }
-    val (m, u, lambda) = (core.m, core.u, core.lambda)
-    val (iter, converged, history) = (core.iterations, core.converged, core.history)
+    val (core, observed) =
+      try emOverPatterns(patternDf, active.size, tfSpecs, mInit, uInit,
+        lambdaInit, fixU, maxIterations, tolerance, fixM, fixLambda, maxPatterns)
+      finally patternDf.unpersist()
 
-    // merge trained params back into the full settings: each session is
-    // RECORDED and the live value becomes the median across sessions
-    // (`linker.py:459-467`) — a second EM session refines, never overwrites
-    val sessionDesc = s"EM, blocked on ${trainingRule.describe}"
-    // gammas this session actually saw: levels absent from every agreement
-    // pattern record an observed=false session (excluded from the median),
-    // mirroring LEVEL_NOT_OBSERVED_TEXT (`em_training_session.py:336-353`)
-    val seenGammas: Array[Set[Int]] =
-      if (collectPatterns)
-        Array.tabulate(active.size) { i =>
-          patterns.iterator.filter(p => p.count > 0 && p.gammas(i) >= 0)
-            .map(_.gammas(i)).toSet
-        }
-      else {
-        // one tiny aggregate: the distinct non-null gammas each active
-        // comparison actually saw (collect_set skips nulls from the when)
-        val row = patternDf.where(col("n") > 0)
-          .agg(collect_set(when(col(gammaCols.head) >= 0,
-              col(gammaCols.head))).as("s0"),
-            gammaCols.toIndexedSeq.zipWithIndex.drop(1).map { case (g, i) =>
-              collect_set(when(col(g) >= 0, col(g))).as(s"s$i") }: _*)
-          .collect()(0)
-        Array.tabulate(active.size)(i => row.getSeq[Int](i).toSet)
-      }
-    patternDf.unpersist()
-    val trainedComparisons = settings.comparisons.map { c =>
-      active.indexWhere(_.outputColumnName == c.outputColumnName) match {
-        case -1 => c
-        case i =>
-          val newLevels = c.levels.map { lv =>
-            if (lv.isNull) lv
-            else {
-              val g = c.activeLevelsWithGamma.collectFirst {
-                case (l2, gg) if l2 == lv => gg }.get
-              val obs = seenGammas(i).contains(g)
-              val mv = if (obs) m(i)(g) else Model.UnobservedSentinel
-              val uv = if (obs) u(i)(g) else Model.UnobservedSentinel
-              // a FIXED parameter family records no trained session —
-              // fixed values feeding the cross-session median would skew
-              // it toward the initial guess (`fix_m_probabilities` /
-              // `fix_u_probabilities`, training.py:235-237)
-              val withM =
-                if (fixM) lv else lv.addTrainedM(mv, sessionDesc, observed = obs)
-              if (fixU) withM else withM.addTrainedU(uv, sessionDesc, observed = obs)
-            }
-          }
-          c.copy(levels = newLevels)
-      }
-    }
-    val lambdaGlobal = odds2prob(prob2odds(lambda) / blockingBf)
-    EMResult(settings.copy(comparisons = trainedComparisons), iter, converged,
-      history.toSeq, lambda, lambdaGlobal, deactivated.map(_.outputColumnName),
+    // a FIXED parameter family records no trained session — fixed values
+    // feeding the cross-session median would skew it toward the initial
+    // guess (`fix_m_probabilities` / `fix_u_probabilities`,
+    // training.py:235-237)
+    val trained = recordSession(settings,
+      s"EM, blocked on ${trainingRule.describe}",
+      active.zipWithIndex.map { case (c, i) =>
+        c.outputColumnName -> TrainedLevels(g => observed(i)(g) > 0,
+          m = if (fixM) None else Some(core.m(i)),
+          u = if (fixU) None else Some(core.u(i)))
+      }.toMap)
+    val lambdaGlobal = odds2prob(prob2odds(core.lambda) / blockingBf)
+    EMResult(trained, core.iterations, core.converged, core.history,
+      core.lambda, lambdaGlobal, deactivated.map(_.outputColumnName),
       core.lambdaHistory, core.mHistory, core.uHistory,
       active.map(_.outputColumnName))
   }

@@ -33,6 +33,130 @@ class TrainingSpec extends SparkSpec {
     assert(math.abs(core.m(1)(1) - 0.8) < 1e-2, s"m1=${core.m(1)(1)}")
   }
 
+  // Independent planted-model oracle: pair gamma patterns drawn in plain
+  // Scala from KNOWN m, u and λ — 3 comparisons with 3-4 levels, 5% null
+  // gammas (-1) per comparison — so EM is checked against the truth it
+  // was generated from, not against a second copy of its own arithmetic.
+  private val plantedM = Array(Map(0 -> 0.05, 1 -> 0.15, 2 -> 0.8),
+    Map(0 -> 0.1, 1 -> 0.1, 2 -> 0.2, 3 -> 0.6),
+    Map(0 -> 0.15, 1 -> 0.25, 2 -> 0.6))
+  private val plantedU = Array(Map(0 -> 0.7, 1 -> 0.25, 2 -> 0.05),
+    Map(0 -> 0.6, 1 -> 0.25, 2 -> 0.1, 3 -> 0.05),
+    Map(0 -> 0.8, 1 -> 0.15, 2 -> 0.05))
+  private val plantedLambda = 0.25
+  private def plantedPatterns(nPairs: Int, seed: Long): Seq[Pattern] = {
+    val rnd = new java.util.Random(seed)
+    def draw(dist: Map[Int, Double]): Int = {
+      val x = rnd.nextDouble()
+      val levels = dist.toSeq.sortBy(_._1)
+      levels.scanLeft(0.0)(_ + _._2).tail.zip(levels)
+        .collectFirst { case (cum, (g, _)) if x < cum => g }
+        .getOrElse(levels.last._1)
+    }
+    val counts = scala.collection.mutable.Map.empty[Seq[Int], Long]
+    for (_ <- 0 until nPairs) {
+      val params = if (rnd.nextDouble() < plantedLambda) plantedM else plantedU
+      val gammas = params.toSeq.map(d => if (rnd.nextDouble() < 0.05) -1 else draw(d))
+      counts(gammas) = counts.getOrElse(gammas, 0L) + 1
+    }
+    counts.toSeq.sortBy(_._1.mkString(",")).map { case (g, n) =>
+      Pattern(g.toArray, n) }
+  }
+  // init away from the truth: similar levels favoured by m, disfavoured by u
+  private val plantedMInit = plantedM.map(d =>
+    d.keys.map(g => g -> (g + 1.0) / d.keys.map(_ + 1.0).sum).toMap)
+  private val plantedUInit = plantedU.map(d =>
+    d.keys.map(g => g -> (d.size - g.toDouble) / d.keys.map(d.size - _.toDouble).sum).toMap)
+
+  test("EM recovers a planted model's m and λ within 0.01, with u fixed " +
+      "and with u free") {
+    val patterns = plantedPatterns(200000, seed = 11L)
+    for (fixU <- Seq(true, false)) {
+      val core = Training.emCore(patterns, plantedMInit,
+        if (fixU) plantedU else plantedUInit, 0.1, fixU = fixU,
+        maxIterations = 2000, tolerance = 1e-9)
+      assert(core.converged, s"fixU=$fixU")
+      assert(math.abs(core.lambda - plantedLambda) < 0.01,
+        s"fixU=$fixU λ=${core.lambda}")
+      for (i <- plantedM.indices; (g, v) <- plantedM(i)) {
+        assert(math.abs(core.m(i)(g) - v) < 0.01,
+          s"fixU=$fixU m($i)($g)=${core.m(i)(g)} vs $v")
+        if (!fixU) assert(math.abs(core.u(i)(g) - plantedU(i)(g)) < 0.01,
+          s"u($i)($g)=${core.u(i)(g)} vs ${plantedU(i)(g)}")
+      }
+      if (fixU) assert(core.u.toSeq == plantedU.toSeq)
+    }
+  }
+
+  test("EM's driver fold and distributed fold agree per parameter per " +
+      "iteration on a planted model (TF terms and null terms included)") {
+    val patterns = plantedPatterns(50000, seed = 12L)
+    // a TF term on comparison 0's exact level; one pattern's term is null
+    val tfSpecs = Seq(Training.TfSpec(0, Map(2 -> 1.0)))
+    val rows = patterns.zipWithIndex.map { case (p, k) =>
+      val term: java.lang.Double =
+        if (p.gammas(0) != 2) Double.NaN
+        else if (k == 0 || p.gammas(1) == 3) null
+        else math.log(0.01 * (1 + k % 5)) / math.log(2.0)
+      (p.gammas(0), p.gammas(1), p.gammas(2), term, p.count)
+    }
+    val df = rows.toDF("g0", "g1", "g2", "t0", "n").repartition(4).persist()
+    def fit(maxPatterns: Long) = Training.emOverPatterns(df, 3, tfSpecs,
+      plantedMInit, plantedUInit, 0.1, fixU = false, maxIterations = 15,
+      tolerance = 0.0, fixM = false, fixLambda = false, maxPatterns)
+    val (driver, driverObs) = fit(Long.MaxValue)
+    val (dist, distObs) = fit(0L)
+    df.unpersist()
+    assert(driver.iterations == 15 && dist.iterations == 15)
+    driver.lambdaHistory.zip(dist.lambdaHistory).foreach { case (a, b) =>
+      assert(math.abs(a - b) <= 1e-10, s"λ $a vs $b") }
+    for ((hd, hs, what) <- Seq((driver.mHistory, dist.mHistory, "m"),
+        (driver.uHistory, dist.uHistory, "u"));
+        ((a, b), it) <- hd.zip(hs).zipWithIndex; i <- a.indices) {
+      assert(a(i).keySet == b(i).keySet)
+      a(i).foreach { case (g, v) =>
+        assert(math.abs(v - b(i)(g)) <= 1e-10,
+          s"$what iter $it comparison $i gamma $g: $v vs ${b(i)(g)}") }
+    }
+    // observed pair counts per (comparison, gamma), counted independently
+    val expected = Array.tabulate(3)(i => Array.tabulate(plantedM(i).size)(g =>
+      patterns.filter(_.gammas(i) == g).map(_.count).sum))
+    assert(driverObs.map(_.toSeq).toSeq == expected.map(_.toSeq).toSeq)
+    assert(distObs.map(_.toSeq).toSeq == expected.map(_.toSeq).toSeq)
+  }
+
+  test("EM stops at the first iteration whose max |Δparam| over m, u and λ " +
+      "is below the tolerance (settings.py:116-122)") {
+    val patterns = plantedPatterns(20000, seed = 13L)
+    val tol = 1e-6
+    // all families free, then λ alone (m and u fixed): each family's
+    // change must count towards the stopping rule
+    for (fixed <- Seq(false, true)) {
+      def run(maxIterations: Int) = Training.emCore(patterns, plantedMInit,
+        plantedUInit, 0.1, fixU = fixed, maxIterations, tol, fixM = fixed)
+      val core = run(1000)
+      // each recorded delta is the max |change| between consecutive
+      // parameter sets of the trajectories
+      val recomputed = (0 until core.iterations).map { k =>
+        val dm = for (i <- plantedM.indices; (g, v) <- core.mHistory(k)(i))
+          yield math.abs(core.mHistory(k + 1)(i)(g) - v)
+        val du = for (i <- plantedU.indices; (g, v) <- core.uHistory(k)(i))
+          yield math.abs(core.uHistory(k + 1)(i)(g) - v)
+        (dm ++ du :+ math.abs(core.lambdaHistory(k + 1) - core.lambdaHistory(k))).max
+      }
+      assert(core.history == recomputed, s"fixed=$fixed")
+      assert(core.converged && core.iterations == core.history.size)
+      assert(core.iterations > 1 && core.history.last < tol, s"fixed=$fixed")
+      assert(core.history.init.forall(_ >= tol),
+        s"an earlier iteration was already below $tol: ${core.history}")
+      assert(core.mHistory.size == core.iterations + 1)
+      // one iteration short of that point: the cap stops it, unconverged
+      val capped = run(core.iterations - 1)
+      assert(!capped.converged && capped.iterations == core.iterations - 1)
+      assert(capped.history == core.history.init)
+    }
+  }
+
   def people = Seq(
     // pairs (2k, 2k+1) are duplicates sharing surname + dob + email
     (0L, "John", "Smith", "1990-01-01", "js@x.com"),

@@ -6,7 +6,10 @@ Usage: oracle_check.py <sf_dir> <verify_out_dir>
 Loads each parquet table from sf_dir into DuckDB by name, runs every entry
 in <out>/oracle_sql.json, and compares against the Spark-written parquet in
 <out>/<query>/ : column names (sorted), row count, and multiset of rows
-(values stringified, floats rounded to 9dp).
+(values stringified, floats rounded to 9dp). A query named in
+oracle_sql.json without an output directory (it threw in Verify, which
+deletes a query's output before running it) is a failure. Exits non-zero
+on any failure.
 """
 import json, os, sys
 import duckdb
@@ -67,17 +70,16 @@ def main(sf_dir, out_dir):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
     failures = 0
-    for name in sorted(os.listdir(out_dir)):
+    for name in sorted(oracle):
         qdir = os.path.join(out_dir, name)
         if not os.path.isdir(qdir):
+            print(f"  X {name}: no output (the query failed in Verify)")
+            failures += 1
             continue
         tbl = pq.read_table(qdir)
         spark_cols = sorted(tbl.column_names)
         spark_rows = [tuple(r[c] for c in tbl.column_names)
                       for r in tbl.to_pylist()]
-        if name not in oracle:
-            print(f"  ~ {name}: no oracle (rows-only) rows={len(spark_rows)}")
-            continue
         try:
             duck_tbl = con.execute(oracle[name]).arrow()
             duck_cols = duck_tbl.column_names
