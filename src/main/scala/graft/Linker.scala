@@ -171,19 +171,12 @@ class Linker(val inputs: Seq[(String, DataFrame)], initialSettings: LinkSettings
     Blocking.blockedIdPairs(concat, effective, twoFrames)
   }
 
-  /** Whether the record frame is small enough to BROADCAST into the
-    * pairs-to-records joins (see `pairsFromIdsTwoFrames`' scaladoc — the
-    * 100M+-pairs-from-modest-records regime where the pair frame must
-    * never shuffle). Decided from the INPUT relations' optimizer stats
-    * (file sources report real bytes, times
-    * `ComparisonVectors.RecordsBroadcastExpansion` for parquet-compressed
-    * -> unsafe-row expansion) against
-    * `spark.graft.recordsBroadcastBytes` (default 256MB of expanded
-    * rows — comfortably inside a production executor; billions-of-records
-    * inputs blow past it and keep the sort-merge plan). Unknown stats
-    * (Long.MaxValue default estimates) never broadcast. */
+  /** Whether the record frame BROADCASTS into the pairs-to-records joins
+    * (the 100M+-pairs-from-modest-records regime, where the pair frame must
+    * never shuffle), decided by [[graft.operators.Decide.broadcastByStats]]
+    * on the INPUT relation's optimizer stats. */
   private lazy val broadcastRecordsOk: Boolean =
-    ComparisonVectors.recordsBroadcastOk(concat)
+    Decide.broadcastByStats("linker.records", concat)
 
   /** Comparison-vector frame for the model's blocking rules — or for a
     * registered/pre-computed blocked-pairs table when one exists
@@ -488,7 +481,7 @@ class Linker(val inputs: Seq[(String, DataFrame)], initialSettings: LinkSettings
     val pairsDf = ComparisonVectors.pairsFromIdsTwoFrames(
       idPairs, concatWithTf, newWithTf, settings,
       broadcastRecords = broadcastRecordsOk &&
-        ComparisonVectors.recordsBroadcastOk(newRecords))
+        Decide.broadcastByStats("find_matches.new_records", newRecords))
     Predict.score(ComparisonVectors.addGammas(pairsDf, settings), settings,
       None, thresholdMatchProbability)
   }
@@ -794,7 +787,8 @@ class Linker(val inputs: Seq[(String, DataFrame)], initialSettings: LinkSettings
     val concat2 = VerticalConcat(records, s2)
     val idPairs = Blocking.blockedIdPairs(concat2, s2)
     val cv = ComparisonVectors.compute(idPairs, withRequiredTf(concat2, s2), s2,
-      broadcastRecords = ComparisonVectors.recordsBroadcastOk(concat2))
+      broadcastRecords =
+        Decide.broadcastByStats("predict_within.records", concat2))
     Predict.score(cv, s2, thresholdMatchWeight, thresholdMatchProbability)
   }
 
@@ -839,8 +833,9 @@ class Linker(val inputs: Seq[(String, DataFrame)], initialSettings: LinkSettings
       extraFilter)
     val pairsDf = ComparisonVectors.pairsFromIdsTwoFrames(idPairs,
       withRequiredTf(lc, s2), withRequiredTf(rc, s2), s2,
-      broadcastRecords = ComparisonVectors.recordsBroadcastOk(lc, sides = 2) &&
-        ComparisonVectors.recordsBroadcastOk(rc, sides = 2))
+      broadcastRecords =
+        Decide.broadcastByStats("predict_between.left", lc, sides = 2) &&
+        Decide.broadcastByStats("predict_between.right", rc, sides = 2))
     Predict.score(ComparisonVectors.addGammas(pairsDf, s2), s2,
       thresholdMatchWeight, thresholdMatchProbability)
   }

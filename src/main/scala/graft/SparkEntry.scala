@@ -1375,16 +1375,14 @@ object SparkEntry {
     // level no pattern observed records the 1e-6 unobserved sentinel.
     "q_em_mstep" -> ((s, dir) => emMstep(s, dir)),
 
-    // the SAME one-iteration M-step forced through the DISTRIBUTED path
-    // (pattern cap 1): the same fold runs per partition of the persisted
-    // pattern frame and its sums are tree-reduced, one job per iteration,
-    // under the same DuckDB replay as the driver path — both must round to
-    // identical 9-decimal parameters
-    "q_em_mstep_dist" -> ((s, dir) => {
-      s.conf.set("spark.graft.em.maxPatterns", "1")
-      try emMstep(s, dir)
-      finally s.conf.unset("spark.graft.em.maxPatterns")
-    }),
+    // the SAME one-iteration M-step forced through the DISTRIBUTED path:
+    // the same fold runs per partition of the persisted pattern frame and
+    // its sums are tree-reduced, one job per iteration, under the same
+    // DuckDB replay as the driver path — both must round to identical
+    // 9-decimal parameters
+    "q_em_mstep_dist" -> ((s, dir) =>
+      Decide.forcing(Decide.Collect -> Decide.Collect.Distributed)(
+        emMstep(s, dir))),
 
     // the FULL training loop (`expectation_maximisation.py:225-311`):
     // three complete E/M iterations — pattern aggregate built once,

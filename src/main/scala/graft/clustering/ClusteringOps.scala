@@ -2,6 +2,7 @@ package graft.clustering
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.operators.Decide
 import graft.operators.Materialise.Ops
 import org.apache.spark.sql.expressions.Window
 
@@ -31,13 +32,13 @@ object ClusteringOps {
       maxRounds: Int = 10,
       smallGraphThreshold: Long = -1L)
       : DataFrame = {
-    val smallGate = ConnectedComponents.resolveSmallGate(smallGraphThreshold)
     var remaining = edges.select(col(srcCol).as("a"), col(dstCol).as("b"),
       col(probCol).as("p")).filter(col("a") =!= col("b")).breakLineage()
     // adaptive small-input fast path (same strategy pick as CC);
     // long ids only — other id types take the distributed loop
     if (remaining.schema("a").dataType == org.apache.spark.sql.types.LongType &&
-        remaining.count() <= smallGate)
+        Decide.collect("one_to_one.edges", remaining.count(),
+          Decide.GraphEdges, smallGraphThreshold) == Decide.Collect.Driver)
       return driverOneToOne(remaining, maxRounds)
     val matched = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var round = 0
@@ -179,7 +180,6 @@ object ClusteringOps {
       tiesMethod: String = "lowest_id",
       smallGraphThreshold: Long = -1L)
       : DataFrame = {
-    val smallGate = ConnectedComponents.resolveSmallGate(smallGraphThreshold)
     require(Seq("lowest_id", "drop").contains(tiesMethod),
       "ties_method must be one of 'drop', or 'lowest_id'")
     // materialise the caller's edge pipeline ONCE before tie handling:
@@ -196,10 +196,11 @@ object ClusteringOps {
     // only the duplicate-free datasets constrain merges
     // (`clustering.py:201-202`: "This can be a subset of all of the source
     // datasets"); other datasets may repeat inside a cluster freely
-    val constraining = broadcastIfModest(duplicateFreeDatasets match {
-      case Some(ds) => nodeDatasets.filter(col("source_dataset").isin(ds: _*))
-      case None => nodeDatasets
-    })
+    val constraining = broadcastIfFits("one_to_one.node_datasets",
+      duplicateFreeDatasets match {
+        case Some(ds) => nodeDatasets.filter(col("source_dataset").isin(ds: _*))
+        case None => nodeDatasets
+      })
     // adaptive small-input fast path (same strategy pick as CC/oneToOne):
     // the round loop costs ~6 scheduled actions per round distributed —
     // and the tie-drop another ~8 — while under the threshold the whole
@@ -209,19 +210,17 @@ object ClusteringOps {
       .forall(_.dataType == org.apache.spark.sql.types.LongType) &&
       e0raw.schema("p").dataType == org.apache.spark.sql.types.DoubleType
     val probedEdges = if (longIds) e0raw.count() else -1L
-    if (longIds && probedEdges <= smallGate)
+    if (longIds && Decide.collect("one_to_one_constrained.edges", probedEdges,
+        Decide.GraphEdges, smallGraphThreshold) == Decide.Collect.Driver)
       return driverOneToOneConstrained(e0raw, nodeDatasets,
         duplicateFreeDatasets, tiesMethod, maxRounds)
     // Count-based broadcast decision for frames sized BY the edge count
-    // (the tie-kept combos, the rank-1 self-join side): the gate probe
-    // already paid for an exact count, and the loop's checkpoints carry
-    // no optimizer stats. ~64B/row covers 3 columns plus hashed-relation
-    // overhead; the default 256MB ceiling admits the few-million-edge
-    // forced-distributed regime and keeps sort-merge at 10M+ edges.
-    val bcastLimit = edges.sparkSession.conf
-      .getOption("spark.graft.recordsBroadcastBytes")
-      .map(_.toLong).getOrElse(256L << 20)
-    val pairsBroadcastOk = probedEdges >= 0 && probedEdges * 64L <= bcastLimit
+    // (the tie-kept combos): the gate probe already paid for an exact
+    // count, and the loop's checkpoints carry no optimizer stats. Without
+    // a count (non-long ids) the side shuffles.
+    val pairsBroadcastOk = probedEdges >= 0 &&
+      Decide.broadcast(edges.sparkSession, "one_to_one_constrained.pairs",
+        probedEdges, Decide.PairRows) == Decide.Broadcast.Broadcasted
     // isDupFree as a Column predicate (shared by dropTies and the round-1
     // pair-level constraint below)
     val isDupFreeCol: Column => Column = duplicateFreeDatasets match {
@@ -397,11 +396,12 @@ object ClusteringOps {
         .breakLineage()
       // wide probe — see the comment on the mutual-best loop above; the
       // exact count doubles as the merge frame's own broadcast decision
-      // (2 ids/row) for the three endpoint-rewrite joins below
+      // for the three endpoint-rewrite joins below
       val mergeCount = merges.count()
       val anyMerge = mergeCount > 0
-      val mergesJ =
-        if (mergeCount * 48L <= bcastLimit) broadcast(merges) else merges
+      val mergesJ = if (Decide.broadcast(edges.sparkSession,
+          "one_to_one_constrained.merges", mergeCount, Decide.MergeRows) ==
+          Decide.Broadcast.Broadcasted) broadcast(merges) else merges
       // round 1's valid frame (eager or via the persisted rank frame) has
       // consumed the invalid-pair table by now; under "lowest_id" it is a
       // lazy plan and this is a no-op
@@ -620,6 +620,13 @@ object ClusteringOps {
         math.max(1, spark.sparkContext.defaultParallelism / 4)), schema)
   }
 
+  /** Broadcast wrap for the node-dataset table, by the record-side stats
+    * decision. The constraint joins pair a modest per-node table against
+    * edge frames that dwarf it in the 100M+-pairs regime — when the node
+    * table fits, the edge side must never shuffle. */
+  private def broadcastIfFits(what: String, df: DataFrame): DataFrame =
+    if (Decide.broadcastByStats(what, df)) broadcast(df) else df
+
   /** `ties_method = "drop"` (`one_to_one_clustering.py:14-100`): on the
     * symmetric neighbours frame, a link is TIED when its source node has
     * equal-probability links to more than one distinct record of a single
@@ -627,23 +634,6 @@ object ClusteringOps {
     * an undirected link drop together: the reference's tie_l/tie_r pair of
     * aggregates collapses, by the symmetry of the neighbours frame, to
     * "row (a,b) survives iff neither (a,b) nor (b,a) is tie_l-marked". */
-  /** Stats-decided broadcast wrap for the node-dataset table (same
-    * decision rule as the Linker's record-side broadcast: input-relation
-    * optimizer stats x4 for the compressed->unsafe-row expansion against
-    * `spark.graft.recordsBroadcastBytes`, default 256MB; unknown stats
-    * never broadcast). The constraint joins pair a modest per-node table
-    * against edge frames that dwarf it in the 100M+-pairs regime — when
-    * the node table fits, the edge side must never shuffle. */
-  private def broadcastIfModest(df: DataFrame): DataFrame = {
-    val limit = df.sparkSession.conf
-      .getOption("spark.graft.recordsBroadcastBytes")
-      .map(_.toLong).getOrElse(256L << 20)
-    val est =
-      try df.queryExecution.optimizedPlan.stats.sizeInBytes * 4
-      catch { case _: Exception => BigInt(Long.MaxValue) }
-    if (est <= limit) broadcast(df) else df
-  }
-
   private def dropTies(e0: DataFrame, nodeDatasets: DataFrame,
       isDupFree: Column => Column,
       broadcastKept: Boolean = false): (DataFrame, DataFrame) = {
@@ -651,7 +641,7 @@ object ClusteringOps {
     // them); filtering here also makes the documented behaviour true — an
     // edge whose endpoint has only a null dataset drops out of the inner
     // joins below exactly like a dataset-less endpoint
-    val nd = broadcastIfModest(
+    val nd = broadcastIfFits("drop_ties.node_datasets",
       nodeDatasets.select(col("node_id"), col("source_dataset"))
         .filter(col("source_dataset").isNotNull))
     // Dataset labels attach to the ORIENTED edges, BEFORE the symmetric

@@ -2,6 +2,7 @@ package graft.clustering
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.Decide
 import graft.operators.Materialise.Ops
 
 /**
@@ -28,42 +29,10 @@ import graft.operators.Materialise.Ops
  */
 object ConnectedComponents {
 
-  /** Edge-count ceiling below which the component solve runs on the
-    * driver (collect + union-find) instead of the iterative distributed
-    * loop: the distributed loop pays several shuffles of the full edge
-    * frame per round — measured 2-3x slower at this size even after
-    * co-partitioning the propagation join. Above the threshold (the
-    * 100TB regime, where per-round fixed costs amortise) the distributed
-    * loop runs. Same adaptive-execution idea as AQE: pick the physical
-    * strategy from the observed size.
-    *
-    * The DEFAULT gate is additionally clamped by driver heap: a collected
-    * edge costs ~150 bytes retained (GenericRow + boxed index tuple +
-    * union-find structures — an order of magnitude more than the raw
-    * longs), so the default never collects more than ~1/8 of
-    * `Runtime.maxMemory`. A 1 GB driver auto-shrinks to ~0.9M edges; this
-    * ceiling only applies on heaps above ~9.6 GB. An explicit caller
-    * argument is taken as-is — the operator trusts a human-set gate. */
-  val SmallGraphEdgeThreshold: Long = 8000000L
-
-  /** Retained driver bytes per collected symmetric edge (measured order:
-    * Row ~80B + HashMap entry + boxed pair + parent slot). */
-  private val BytesPerCollectedEdge = 150L
-
-  /** The heap-clamped default gate (see [[SmallGraphEdgeThreshold]]). */
-  def adaptiveSmallGraphGate: Long = math.min(SmallGraphEdgeThreshold,
-    Runtime.getRuntime.maxMemory() / (8 * BytesPerCollectedEdge))
-
-  /** Shared gate resolution for every driver-collect fast path (CC and
-    * the one-to-one clustering loops): explicit caller argument (>= 0)
-    * wins, else the heap-clamped default. */
-  def resolveSmallGate(explicit: Long): Long =
-    if (explicit >= 0) explicit else adaptiveSmallGraphGate
-
-  /** Node-frame size at or below which a closing pointer jump's lookup is
-    * semi-reduced by a broadcast key-set and itself broadcast (see the
-    * jump loop in [[run]]). */
-  val BroadcastJumpNodes: Long = 1000000L
+  /** Cap on pointer jumps per level. Each jump doubles the compressed
+    * pointer depth, so 40 covers trees 2^40 deep, unreachable from real
+    * data; exiting the loop with movers left fails loudly. */
+  val MaxJumps: Int = 40
 
   /**
    * @param edges frame with two node-id columns (self-loops and duplicates ok)
@@ -75,6 +44,9 @@ object ConnectedComponents {
    *        a violated promise only means duplicate edges flow through the
    *        solve (min-propagation, jumps and contraction are all
    *        duplicate-insensitive), never a wrong labelling.
+   * @param smallGraphThreshold symmetric-edge count up to which a level
+   *        is solved on the driver (collect + union-find); -1 leaves it to
+   *        [[graft.operators.Decide.collect]]'s heap-clamped default
    * @return DataFrame(node_id, cluster_id), one row per node that appears
    *         in any edge; cluster_id = min node id in the component.
    */
@@ -82,31 +54,31 @@ object ConnectedComponents {
       dstCol: String = "unique_id_r", maxIterations: Int = 60,
       eager: Boolean = false,
       smallGraphThreshold: Long = -1L,
-      assumeDistinctPairs: Boolean = false): DataFrame = {
-    // callers passing an explicit threshold (edges) keep it
-    val smallGate = resolveSmallGate(smallGraphThreshold)
+      assumeDistinctPairs: Boolean = false): DataFrame =
+    solve(edges, srcCol, dstCol, maxIterations, eager, smallGraphThreshold,
+      assumeDistinctPairs, MaxJumps)
 
+  private[graft] def solve(edges: DataFrame, srcCol: String, dstCol: String,
+      maxIterations: Int, eager: Boolean, smallGraphThreshold: Long,
+      assumeDistinctPairs: Boolean, maxJumps: Int): DataFrame = {
+    val spark = edges.sparkSession
     // Already-materialised input (checkpoint/local relation, optionally
-    // under cheap Project/Filter — the shape every caller that pre-persists
-    // its edge list produces): the small-graph gate and the driver collect
-    // can both re-read it for near-free, so the symmetric-explode /
-    // exchange / dedupe / checkpoint machinery below — whose job on small
-    // graphs is only to avoid re-running an expensive upstream pipeline —
-    // is pure overhead. Probe the raw count and, when under threshold,
-    // collect the raw pairs directly (union-find needs neither symmetry
-    // nor dedupe). Unmaterialised pipelines keep the original path: there
-    // the one-evaluation guarantee matters more than the extra exchange.
-    // the raw path collects both columns as-is, so it requires one shared
-    // id type (the symmetric path coerces mixed types via explode(array))
+    // under cheap Project/Filter): the count and the driver collect both
+    // re-read it for near-free, so the symmetric-explode / exchange /
+    // dedupe / checkpoint machinery below is pure overhead on small graphs
+    // (union-find needs neither symmetry nor dedupe). Unmaterialised
+    // pipelines keep the symmetric path, which evaluates them once. The
+    // raw path needs one shared id type (the symmetric path coerces mixed
+    // types via explode(array)).
     if (edges.schema(srcCol).dataType == edges.schema(dstCol).dataType &&
         isCheapToRescan(edges.queryExecution.optimizedPlan)) {
       val raw = edges.select(col(srcCol), col(dstCol))
       val rawCount = raw.count()
-      // symmetric+deduped count <= 2*raw count, so this gate only ever
-      // sends borderline graphs to the distributed loop — never a too-big
-      // graph to the driver
-      if (rawCount * 2 <= smallGate)
-        return driverUnionFindRaw(raw)
+      // symmetric+deduped count <= 2*raw count: never a too-big graph to
+      // the driver, at worst a borderline one to the distributed loop
+      if (Decide.collect("cc.raw_edges", rawCount * 2, Decide.GraphEdges,
+          smallGraphThreshold) == Decide.Collect.Driver)
+        return driverUnionFind(raw)
     }
 
     // Symmetric neighbour list (`connected_components.py:169-190`),
@@ -149,39 +121,21 @@ object ConnectedComponents {
     // single-orientation distinct input explodes to a duplicate-free
     // symmetric frame, so the in-place aggregate would be pure cost
     //
-    // ON-HEAP vs DISK_ONLY blocks — ADAPTIVE per level. On-heap is the
-    // right DEFAULT (r13, tried and reverted with numbers: DISK_ONLY for
-    // this frame + the jump-loop frames removed task GC almost entirely,
-    // 162-206s -> 7-70s at sf10, but the loop re-reads these frames every
-    // round so the serde bill exceeded it: q_cluster 39.4 -> 46.9s,
-    // q_multi_threshold 46.5 -> 53.5s isolated). But the default is only
-    // right while the level's live block set FITS: the r13 sf100 probe
-    // (135M edges, 270M-row symmetric frame, 20 GB JVM) saturated the
-    // unified pool with on-heap checkpoint blocks, and since storage
-    // never evicts below spark.memory.storageFraction, the propagation
-    // aggregate died with AGGREGATE_OUT_OF_MEMORY — a hard scale cliff,
-    // not a slowdown. When the estimated symmetric frame approaches the
-    // executors' aggregate storage capacity, every frame of this LEVEL
-    // (symmetric, pointer table, jump slices, contraction, compose) goes
-    // DISK_ONLY instead; recursion levels re-decide on their contracted
-    // size. The pre-count hint uses optimizer stats only when PLAUSIBLE —
-    // checkpoint inputs estimate sizeInBytes at defaultSizeInBytes
-    // (Long.MaxValue scale), which must not flip small re-solves to disk.
-    val storageBytes = edges.sparkSession.sparkContext
-      .getExecutorMemoryStatus.values.map(_._1).sum
-    val spillFraction = edges.sparkSession.conf
-      .getOption("spark.graft.cc.spillStorageFraction").map(_.toDouble)
-      .getOrElse(0.4)
-    val spillCapBytes = BigInt((storageBytes * spillFraction).toLong)
-    val statsPlausible = inputBytes > 0 && inputBytes < (BigInt(1) << 50)
-    var spillFrames = statsPlausible && inputBytes * 2 > spillCapBytes
+    // ON-HEAP vs DISK_ONLY blocks per level: the loop re-reads these
+    // frames every round, so on-heap measured faster (q_cluster 39.4 vs
+    // 46.9s at sf10) until the estimated symmetric frame (x2 the input)
+    // outgrows the spill budget; then every frame of this LEVEL goes
+    // DISK_ONLY, and recursion levels re-decide on their contracted size.
+    var spillFrames = Decide.spill(spark, "cc.symmetric_estimate",
+      inputBytes * 2) == Decide.Spill.DiskOnly
     def bl(df: DataFrame, e: Boolean): DataFrame =
       if (spillFrames) df.breakLineageSpilled(e) else df.breakLineage(e)
     var neighbours =
       bl(if (assumeDistinctPairs) keyed else keyed.dropDuplicates(), eager)
 
     val edgeCount = neighbours.count()
-    if (edgeCount <= smallGate) {
+    if (Decide.collect("cc.edges", edgeCount, Decide.GraphEdges,
+        smallGraphThreshold) == Decide.Collect.Driver) {
       val solved = driverUnionFind(neighbours)
       // the collect fully consumed the symmetric frame; the output is a
       // driver-parallelized RDD with no reference to it
@@ -197,23 +151,16 @@ object ConnectedComponents {
     // edges and the whole solve recurses on the contracted graph. Each
     // level merges every node with at least one neighbour, so the node
     // count at least halves per level (<= log2 N levels), and in practice
-    // one level shrinks the graph below the driver gate — the recursion
-    // then finishes at union-find speed. Versus the previous
-    // propagate-until-fixpoint loop (4 full-frame shuffles per round,
-    // O(log D) rounds over the FULL frame, measured 30x slower than the
-    // gated path at 1.35M edges), each level here pays ~2 full-frame
-    // shuffles and every later level runs on a geometrically smaller
-    // graph. Same algorithm family as arXiv:1802.09478's alternating
-    // contraction; the reference's loop
-    // (`connected_components.py:121-335`) is the fixpoint shape this
-    // replaces.
-    // exact post-count spill decision (~48B per symmetric row of two
-    // longs in block storage): catches huge CHECKPOINT-fed inputs whose
-    // stats were implausible (a multi-threshold re-solve at scale). The
-    // one-time re-break scans the existing on-heap checkpoint once,
-    // writes it DISK_ONLY, and frees the heap copy before the first
-    // aggregate needs the execution pool.
-    if (!spillFrames && BigInt(edgeCount) * 48 > spillCapBytes) {
+    // one level shrinks the graph below the driver gate. Each level pays
+    // ~2 full-frame shuffles (arXiv:1802.09478's alternating contraction;
+    // the reference's fixpoint loop, `connected_components.py:121-335`,
+    // pays 4 per round over the full frame).
+    // exact post-count spill decision (~48B per stored row of two longs):
+    // catches CHECKPOINT-fed inputs whose stats were unknown. The one-time
+    // re-break writes the on-heap checkpoint DISK_ONLY and frees the heap
+    // copy before the first aggregate needs the execution pool.
+    if (!spillFrames && Decide.spill(spark, "cc.edges",
+        BigInt(edgeCount) * 48) == Decide.Spill.DiskOnly) {
       spillFrames = true
       val offHeap = neighbours.breakLineageSpilled(eager = true)
       graft.operators.Materialise.releaseConsumed(neighbours)
@@ -222,14 +169,15 @@ object ConnectedComponents {
     // rep := min(self, neighbours). The rep pointers form a FOREST (each
     // pointer strictly decreases the id, so no cycles); roots are local
     // minima.
+    def level = if (spillFrames) org.apache.spark.storage.StorageLevel.DISK_ONLY
+      else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val reps0 = neighbours
       .groupBy("node_id")
       .agg(least(min(col("neighbour")), first(col("node_id"))).as("representative"))
       // the pointer-jump below joins this frame with ITSELF, and Spark
       // does not CSE across self-join branches — unpersisted, the groupBy
       // would run twice; released after the first jump materialises
-      .persist(if (spillFrames) org.apache.spark.storage.StorageLevel.DISK_ONLY
-        else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(level)
     // Pointer-jump to CLOSURE (rep := rep(rep) until fixpoint): each jump
     // doubles the compressed distance, so every node reaches its tree
     // root in O(log depth) jumps — one cheap node-frame self-join each.
@@ -259,36 +207,20 @@ object ConnectedComponents {
     // strong-released each jump.
     // The split pays its per-jump fixed costs (an extra job + fresh
     // codegen for the persist/split plans) only when the node frames are
-    // big enough for write-volume savings to dominate — below the 8M-edge
-    // line the simple whole-frame jump loop is ~2x faster wall. That
-    // regime is reached whenever the graph exceeds the driver gate, which
-    // is heap-clamped (about 1.8M edges on a 2 GB driver) or lowered by
-    // an explicit `smallGraphThreshold`.
-    val splitJumps = edgeCount > SmallGraphEdgeThreshold
-    // LATE-JUMP BROADCAST: a jump is a left join of `active` (shrinking
-    // geometrically under the split) against the full pointer table —
-    // sort-merge exchanges BOTH sides every jump, so the closing jumps
-    // (thousands of movers) still pay a full node-frame exchange + sort
-    // on the lookup side. When the frame entering a jump is small, the
-    // lookup only needs rows matching its (at most |active|) distinct
-    // rep targets: semi-reduce the pointer table with a broadcast
-    // key-set, then broadcast the reduced lookup — both join sides stay
-    // in place (the pointer table is SCANNED but never exchanged). A
-    // pure semi-join reduction: the left join matches exactly the same
-    // b-rows, so the result is bit-identical. The reduction pays TWO
-    // driver round-trips of ~|active| rows (key-set, then reduced
-    // lookup), so the ceiling must sit where collects are cheap —
-    // measured at 2.7M rows the round-trips cost MORE than the
-    // sort-merge they replace (4.9s vs 3.6s), at ~40k rows they win
-    // ~2x. 1M rows ~= 32MB hashed relation on the driver.
-    // SPLIT PATH ONLY: under the whole-frame loop `activeCount` is the
-    // constant node count (never a shrinking mover count), `active` IS
-    // the full pointer table, and the semi-reduce reduces nothing — it
-    // just adds two scheduled driver round-trips to every jump of a
-    // frame whose sort-merge join is already trivial at that size.
-    // Measured on the forced-distributed 150k-node sf0.1 graph: the
-    // ungated round-trips were ~2 extra jobs per jump, 707 vs 241 tasks
-    // for the same solve, ~+2.5s of pure per-jump fixed cost.
+    // big enough for write-volume savings to dominate (Decide.jumpSplit).
+    val splitJumps = Decide.jumpSplit("cc.jumps", edgeCount) ==
+      Decide.JumpSplit.Split
+    // LATE-JUMP BROADCAST: a jump is a left join of `active` against the
+    // full pointer table, so sort-merge exchanges the whole lookup side
+    // even on the closing jumps (thousands of movers). When few rows enter
+    // a jump (Decide.JumpLookupRows), the pointer table is semi-reduced by
+    // a broadcast key-set of their rep targets and the reduced lookup is
+    // itself broadcast: the same b-rows match, so the result is
+    // bit-identical and the pointer table is scanned but never exchanged.
+    // SPLIT PATH ONLY: under the whole-frame loop `active` IS the full
+    // pointer table, so the semi-reduce reduces nothing and only adds two
+    // driver round-trips per jump (measured 707 vs 241 tasks on the
+    // forced-distributed 150k-node sf0.1 graph).
     val settledSlices = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var active: DataFrame = reps0
     // rows entering the next jump: movers under the split (counted on the
@@ -297,14 +229,6 @@ object ConnectedComponents {
     var activeCount = if (splitJumps) -1L else reps0.count()
     def pointerTable: DataFrame =
       (settledSlices :+ active).reduce(_.unionByName(_))
-    // Safety valve: each jump doubles the compressed pointer depth, so the
-    // default cap of 40 covers trees 2^40 deep — unreachable from real
-    // data. If the loop ever DOES exit with movers left, the labelling is
-    // not at closure and silently returning it would hand the contraction
-    // (and the caller) non-canonical representatives, so the cap is a loud
-    // failure, not a fallback. Configurable for tests that exercise it.
-    val maxJumps = edges.sparkSession.conf
-      .getOption("spark.graft.cc.maxJumps").map(_.toInt).getOrElse(40)
     var jumping = true
     var jumps = 0
     var lastMovers = -1L
@@ -319,7 +243,9 @@ object ConnectedComponents {
       val lookupAll = pointerTable.select(col("node_id").as("rep_node"),
         col("representative").as("rep_rep"))
       val lookup =
-        if (splitJumps && activeCount >= 0 && activeCount <= BroadcastJumpNodes)
+        if (splitJumps && activeCount >= 0 &&
+            Decide.broadcast(spark, "cc.jump_lookup", activeCount,
+              Decide.JumpLookupRows) == Decide.Broadcast.Broadcasted)
           broadcast(lookupAll.join(
             broadcast(active.select(col("representative").as("rep_key"))
               .distinct()),
@@ -340,9 +266,7 @@ object ConnectedComponents {
         // flat checkpoints (settled slice + new active) and unpersisted:
         // two jobs, one join evaluation, write volume exactly the jump's
         // row count, and all later stages scan only clean slices.
-        val j = jPlan.persist(
-          if (spillFrames) org.apache.spark.storage.StorageLevel.DISK_ONLY
-          else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val j = jPlan.persist(level)
         settledSlices += bl(j
           .filter(col("representative") === col("__old_rep"))
           .select(col("node_id"), col("representative")), true)
@@ -372,12 +296,11 @@ object ConnectedComponents {
       lastMovers = movers
     }
     if (jumping)
-      // the loop exited at the cap, not at fixpoint: pointers are still
-      // moving, so the labels below would be non-canonical. Fail loudly —
-      // a clustering operator must never return wrong labels silently.
+      // the loop exited at the cap (MaxJumps), not at fixpoint: the labels
+      // below would be non-canonical, so fail loudly instead of returning
       throw new IllegalStateException(
         s"connected-components pointer-jump loop hit the jump cap " +
-          s"($maxJumps jumps, spark.graft.cc.maxJumps) with $lastMovers " +
+          s"($maxJumps jumps) with $lastMovers " +
           s"row(s) still moving: the labelling has not reached closure. " +
           s"The default cap covers pointer trees 2^40 deep; hitting it " +
           s"indicates either a forced low cap or corrupt input ids.")
@@ -423,8 +346,8 @@ object ConnectedComponents {
       // m a root; with no cross-tree edge the component's one root is m),
       // so reps is already the canonical labelling — return it directly.
       else {
-        val sub = run(contracted, "rep_l", "rep_r", maxIterations - 1,
-          eager, smallGraphThreshold)
+        val sub = solve(contracted, "rep_l", "rep_r", maxIterations - 1,
+          eager, smallGraphThreshold, false, maxJumps)
         // compose: final label = sub-solution of the node's rep; reps with
         // no cross-cluster edge never reach the contracted graph and keep
         // their (already canonical) label. The compose is MATERIALISED
@@ -490,27 +413,16 @@ object ConnectedComponents {
     }
   }
 
-  /** Driver fast path over a RAW (possibly asymmetric, duplicated,
-    * self-looped) edge list: union-find is direction- and
-    * duplicate-insensitive, and self-loops and null-endpoint rows are
-    * skipped entirely so a node with only such edges stays absent from the
-    * output — exactly the behaviour of the symmetric path, whose
-    * `node =!= neighbour` filter evaluates to null/false and drops both
-    * exploded directions before they reach the solver. */
-  private def driverUnionFindRaw(raw: DataFrame): DataFrame =
-    solveOnDriver(raw,
-      raw.collect().iterator.filter(r =>
-        !r.isNullAt(0) && !r.isNullAt(1) && r.get(0) != r.get(1)))
-
-  /** Small-graph fast path: collect the (symmetric, deduped) edge list and
-    * solve with path-compressed union-find on the driver. The node-id type
-    * is preserved by keeping the original column through a join back. */
-  private def driverUnionFind(neighbours: DataFrame): DataFrame =
-    solveOnDriver(neighbours, neighbours.collect().iterator)
-
-  private def solveOnDriver(source: DataFrame,
-      rows: Iterator[org.apache.spark.sql.Row]): DataFrame = {
+  /** Small-graph fast path: collect the two-column edge list (raw or
+    * symmetric) and solve with path-compressed union-find on the driver.
+    * Union-find is direction- and duplicate-insensitive; self-loops and
+    * null-endpoint rows are skipped so a node with only such edges stays
+    * absent from the output, exactly as the symmetric path's
+    * `node =!= neighbour` filter drops them. */
+  private def driverUnionFind(source: DataFrame): DataFrame = {
     val spark = source.sparkSession
+    val rows = source.collect().iterator.filter(r =>
+      !r.isNullAt(0) && !r.isNullAt(1) && r.get(0) != r.get(1))
     // union-find over an index space to support any node-id type
     val index = scala.collection.mutable.HashMap.empty[Any, Int]
     val values = scala.collection.mutable.ArrayBuffer.empty[Any]

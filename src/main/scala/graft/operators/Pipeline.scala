@@ -375,41 +375,6 @@ object ComparisonVectors {
     addGammas(
       pairsFromIds(idPairs, concatWithTf, settings, broadcastRecords),
       settings)
-
-  /** Parquet-compressed -> unsafe-row expansion factor applied to
-    * optimizer stats by [[recordsBroadcastOk]]. */
-  val RecordsBroadcastExpansion: Int = 4
-
-  /** The shared SIZE decision behind `broadcastRecords` (see
-    * [[pairsFromIdsTwoFrames]]): whether a record frame's expanded rows
-    * fit `spark.graft.recordsBroadcastBytes` (default 256MB). Optimizer
-    * stats are multiplied by [[RecordsBroadcastExpansion]] for the
-    * parquet-compressed -> unsafe-row expansion — string-heavy inputs
-    * that compress well past 4x should lower the byte ceiling, because
-    * an UNDERestimate here does not merely slow the join down: it drives
-    * a driver collect and one hashed relation per executor past their
-    * memory budgets (OOM, not a plan regression). Callers should measure
-    * the RAW input
-    * relation (file sources report real bytes) —
-    * persisted/checkpointed frames estimate unknown-HIGH and correctly
-    * decline, so a sampled/filtered derivative is covered by measuring
-    * its parent (fits ⇒ the subset fits). When the measured frame covers
-    * only ONE of two sides that will both broadcast (e.g.
-    * `predictBetween`'s role frames, measured separately), pass
-    * `sides = 2`: the ceiling is split across the sides so the combined
-    * executor footprint stays inside the single configured budget. The
-    * usual `concat` callers keep `sides = 1` — concat IS the union of
-    * every broadcast side, so it already measures the combined total. */
-  def recordsBroadcastOk(records: DataFrame, sides: Int = 1): Boolean = {
-    val limit = records.sparkSession.conf
-      .getOption("spark.graft.recordsBroadcastBytes")
-      .map(_.toLong).getOrElse(256L << 20) / math.max(1, sides)
-    val est =
-      try records.queryExecution.optimizedPlan.stats.sizeInBytes *
-        RecordsBroadcastExpansion
-      catch { case _: Exception => BigInt(Long.MaxValue) }
-    est <= limit
-  }
 }
 
 /**

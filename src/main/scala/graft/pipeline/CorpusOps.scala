@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.Decide
 import graft.operators.Materialise.Ops
 
 /**
@@ -125,10 +126,8 @@ object CorpusOps {
     // size (persist policy) does a one-scan stats query run, using
     // octet_length (UTF-8 bytes, not chars) + ~48B/row for Spark's
     // UnsafeRow+hashmap overhead so multi-byte vocabularies cannot
-    // underestimate the broadcast. Budget = 8x the session's
-    // autoBroadcastJoinThreshold (the forced hint exists because the
-    // LogicalRDD leaf has no stats for Catalyst to auto-broadcast on);
-    // a disabled threshold (<= 0) disables the forced hint too.
+    // underestimate the broadcast. The forced hint exists because the
+    // LogicalRDD leaf has no stats for Catalyst to auto-broadcast on.
     val estBytes = graft.operators.Materialise.materialisedSizeBytes(docFreqRaw)
       .map(_.toDouble)
       .getOrElse {
@@ -138,12 +137,9 @@ object CorpusOps {
         stats.getLong(0) *
           (Option(stats.get(1)).fold(0.0)(_.asInstanceOf[Double]) + 48.0)
       }
-    val rawThreshold =
-      df.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
-    val threshold = scala.util.Try(rawThreshold.trim.toLong).getOrElse(
-      org.apache.spark.network.util.JavaUtils.byteStringAsBytes(rawThreshold))
     val docFreq =
-      if (threshold > 0 && estBytes <= 8.0 * threshold) broadcast(docFreqRaw)
+      if (Decide.broadcast(df.sparkSession, "tfidf.vocabulary",
+          estBytes.toLong) == Decide.Broadcast.Broadcasted) broadcast(docFreqRaw)
       else docFreqRaw
     val total = df.agg(count(lit(1)).as("__n"))
     val w = Window.partitionBy(idCol)

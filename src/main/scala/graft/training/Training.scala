@@ -24,7 +24,7 @@ import graft.pipeline.TextOps
  * (`groupBy(gammas).count` — the agreement-pattern rewrite from
  * `expectation_maximisation.py:28-42`). EM's per-iteration work is one
  * fold over those patterns ([[emPass]]: E-step scores plus the M-step's
- * sufficient statistics). Up to `spark.graft.em.maxPatterns` patterns it
+ * sufficient statistics). Up to `Decide.Patterns` (heap-clamped) it
  * runs on the driver over the collected patterns, so iterations cost zero
  * Spark jobs; above the cap the same fold runs inside each partition of
  * the persisted pattern frame and the statistics are tree-reduced — one
@@ -89,7 +89,7 @@ object Training {
     // (file-source stats) covers it — fits ⇒ the sample fits. The pair
     // frame is a near-cartesian, so keeping it unshuffled matters most
     // of anywhere in the library.
-    val broadcastRecs = ComparisonVectors.recordsBroadcastOk(concat)
+    val broadcastRecs = Decide.broadcastByStats("estimate_u.records", concat)
     var k = 0
     while (k < numChunks && !(k > 0 && enough)) {
       val cv = ComparisonVectors.compute(
@@ -187,7 +187,7 @@ object Training {
     val pairs = Blocking.blockedIdPairs(concat, mSettings)
     val cv = ComparisonVectors.compute(pairs,
       TermFrequency.joinAll(concat, settings.tfColumns), mSettings,
-      broadcastRecords = ComparisonVectors.recordsBroadcastOk(concat))
+      broadcastRecords = Decide.broadcastByStats("training.records", concat))
     applyLevelProbabilities(settings, gammaCounts(cv, settings), setM = true,
       sessionDesc = s"estimate m from label column $labelColumn")
   }
@@ -206,7 +206,7 @@ object Training {
     val pairs = Labels.idPairs(labels, settings)
     val cv = ComparisonVectors.compute(pairs,
       TermFrequency.joinAll(concat, settings.tfColumns), settings,
-      broadcastRecords = ComparisonVectors.recordsBroadcastOk(concat))
+      broadcastRecords = Decide.broadcastByStats("training.records", concat))
     applyLevelProbabilities(settings, gammaCounts(cv, settings), setM = true,
       sessionDesc = "estimate m from pairwise labels")
   }
@@ -428,7 +428,7 @@ object Training {
   /**
    * EM over a persisted agreement-pattern frame: `nGammas` int gamma
    * columns, then one double TF-term column per `tfSpecs` entry (null
-   * reads as NaN), then the long pair count. Up to `maxPatterns` patterns
+   * reads as NaN), then the long pair count. Up to `Decide.Patterns`
    * the frame is collected and folded on the driver; above it (a TF
    * vocabulary too large to collect) [[emPass]] runs inside each partition
    * and the statistics are tree-reduced, one Spark job per iteration, so
@@ -438,15 +438,16 @@ object Training {
   private[graft] def emOverPatterns(patternDf: DataFrame, nGammas: Int,
       tfSpecs: Seq[TfSpec], mInit: Array[Map[Int, Double]],
       uInit: Array[Map[Int, Double]], lambdaInit: Double, fixU: Boolean,
-      maxIterations: Int, tolerance: Double, fixM: Boolean, fixLambda: Boolean,
-      maxPatterns: Long): (EMCore, Array[Array[Long]]) = {
+      maxIterations: Int, tolerance: Double, fixM: Boolean,
+      fixLambda: Boolean): (EMCore, Array[Array[Long]]) = {
     val nTf = tfSpecs.size
     val toPattern = (r: Row) => Pattern(Array.tabulate(nGammas)(r.getInt),
       r.getLong(nGammas + nTf),
       Array.tabulate(nTf)(j =>
         if (r.isNullAt(nGammas + j)) Double.NaN else r.getDouble(nGammas + j)))
     val pass: (Array[Map[Int, Double]], Array[Map[Int, Double]], Double) => EMStats =
-      if (patternDf.count() <= maxPatterns) {
+      if (Decide.collect("em.patterns", patternDf.count(),
+          Decide.Patterns) == Decide.Collect.Driver) {
         val local = patternDf.collect().map(toPattern).toSeq
         (m, u, lam) => emPass(local.iterator, m, u, lam, tfSpecs)
       } else {
@@ -532,7 +533,7 @@ object Training {
     // whose file-source stats are real; the sample filter only shrinks it)
     val cv = ComparisonVectors.compute(pairs,
       TermFrequency.joinAll(concat, settings.tfColumns), emSettings,
-      broadcastRecords = ComparisonVectors.recordsBroadcastOk(concat))
+      broadcastRecords = Decide.broadcastByStats("training.records", concat))
 
     // agreement-pattern shrink: |pairs| rows -> |patterns| rows. With term
     // frequencies (reference default) the key extends by each TF
@@ -550,12 +551,6 @@ object Training {
         c.tfTermColumn.as(s"__tft$j") }
     val patternDf = cv.groupBy(keyCols: _*)
       .agg(count(lit(1)).as("n")).persist()
-    // the pattern count is bounded by gamma-combination x TF-vocabulary
-    // cardinality; at 100 TB a high-cardinality TF column can push it past
-    // what the driver can hold, so above the cap the EM loop runs
-    // distributed and only per-level sums ever reach the driver
-    val maxPatterns = cv.sparkSession.conf
-      .get("spark.graft.em.maxPatterns", "2000000").toLong
 
     // driver-side parameter tables
     val mInit = active.map { c =>
@@ -574,7 +569,7 @@ object Training {
       1e-8), 1 - 1e-8)
     val (core, observed) =
       try emOverPatterns(patternDf, active.size, tfSpecs, mInit, uInit,
-        lambdaInit, fixU, maxIterations, tolerance, fixM, fixLambda, maxPatterns)
+        lambdaInit, fixU, maxIterations, tolerance, fixM, fixLambda)
       finally patternDf.unpersist()
 
     // a FIXED parameter family records no trained session — fixed values

@@ -97,6 +97,19 @@ class ArticulationSpec extends SparkSpec {
     assert(got(10L).contains(false) && got(11L).contains(false))
   }
 
+  test("a disconnected cluster frame fails loudly under distributeOversize") {
+    // nodes 1..4 labelled one cluster, but the edges connect only (1,2) and
+    // (3,4): the violated CC contract must throw, not hang or mislabel
+    val badClusters = Seq((1L, 1L), (2L, 1L), (3L, 1L), (4L, 1L))
+      .toDF("node_id", "cluster_id")
+    val splitEdges = Seq((1L, 2L), (3L, 4L)).toDF("unique_id_l", "unique_id_r")
+    val e = intercept[IllegalStateException] {
+      ClusteringOps.articulationPoints(badClusters, splitEdges,
+        maxClusterSize = 1, distributeOversize = true).count()
+    }
+    assert(e.getMessage.contains("not connected"))
+  }
+
   test("nodeMetrics surfaces is_cut_vertex when asked, unchanged otherwise") {
     val edges = Seq((1L, 2L), (2L, 3L)).toDF("unique_id_l", "unique_id_r")
     val clusters = ConnectedComponents.run(edges)

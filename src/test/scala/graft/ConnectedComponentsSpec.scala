@@ -1,6 +1,7 @@
 package graft
 
 import graft.clustering.ConnectedComponents
+import graft.operators.Decide
 import org.scalacheck.Gen
 import scala.util.Random
 
@@ -8,21 +9,6 @@ import scala.util.Random
   * reference `tests/test_cc_random_graphs.py:13-21`. */
 class ConnectedComponentsSpec extends SparkSpec {
   import spark.implicits._
-
-  def unionFind(n: Int, edges: Seq[(Long, Long)]): Map[Long, Long] = {
-    val parent = scala.collection.mutable.Map[Long, Long]()
-    def find(x: Long): Long = {
-      val p = parent.getOrElse(x, x)
-      if (p == x) x else { val r = find(p); parent(x) = r; r }
-    }
-    def union(a: Long, b: Long): Unit = {
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-    }
-    edges.foreach { case (a, b) => union(a, b) }
-    val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
-    nodes.map(x => x -> find(x)).toMap
-  }
 
   test("raw fast path: null endpoints dropped like the symmetric filter; " +
       "mixed id widths fall back to the coercing path") {
@@ -67,14 +53,13 @@ class ConnectedComponentsSpec extends SparkSpec {
     val n = 24
     val edges = (1 until n).map(i => (i.toLong, (i + 1).toLong))
       .toDF("unique_id_l", "unique_id_r")
-    spark.conf.set("spark.graft.cc.maxJumps", "1")
-    try {
-      val ex = intercept[IllegalStateException] {
-        ConnectedComponents.run(edges, smallGraphThreshold = 0L).collect()
-      }
-      assert(ex.getMessage.contains("jump cap"))
-      assert(ex.getMessage.contains("still moving"))
-    } finally spark.conf.unset("spark.graft.cc.maxJumps")
+    val ex = intercept[IllegalStateException] {
+      ConnectedComponents.solve(edges, "unique_id_l", "unique_id_r",
+        maxIterations = 60, eager = false, smallGraphThreshold = 0L,
+        assumeDistinctPairs = false, maxJumps = 1).collect()
+    }
+    assert(ex.getMessage.contains("jump cap"))
+    assert(ex.getMessage.contains("still moving"))
     // same graph under the default cap converges fine
     val got = ConnectedComponents.run(edges, smallGraphThreshold = 0L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -82,7 +67,7 @@ class ConnectedComponentsSpec extends SparkSpec {
   }
 
   test("forced DISK_ONLY spill mode: identical labels on the distributed path") {
-    // spillStorageFraction=0 makes every level's frames (symmetric,
+    // forcing the spill decision makes every level's frames (symmetric,
     // pointer table, jump slices, contraction, compose) DISK_ONLY — the
     // adaptive mode the sf100 probe showed is mandatory once the live
     // block set approaches storage capacity (on-heap checkpoints starved
@@ -94,14 +79,13 @@ class ConnectedComponentsSpec extends SparkSpec {
       (rng.nextInt(120).toLong, rng.nextInt(120).toLong))
       ++ (200 until 260).map(i => (i.toLong, (i + 1).toLong)))
       .filter(e => e._1 != e._2)
-    val expected = unionFind(320, edges)
-    spark.conf.set("spark.graft.cc.spillStorageFraction", "0.0")
-    try {
-      val got = ConnectedComponents
+    val expected = GraphOracle.components(edges)
+    val got = Decide.forcing(Decide.Spill -> Decide.Spill.DiskOnly) {
+      ConnectedComponents
         .run(edges.toDF("unique_id_l", "unique_id_r"), smallGraphThreshold = 0L)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == expected)
-    } finally spark.conf.unset("spark.graft.cc.spillStorageFraction")
+    }
+    assert(got == expected)
   }
 
   test("random graphs match union-find oracle (driver and distributed paths)") {
@@ -111,7 +95,7 @@ class ConnectedComponentsSpec extends SparkSpec {
       val m = n * 3 / 2
       val edges = (1 to m).map(_ =>
         (rng.nextInt(n).toLong, rng.nextInt(n).toLong)).filter(e => e._1 != e._2)
-      val expected = unionFind(n, edges)
+      val expected = GraphOracle.components(edges)
       // driver fast path (default threshold)
       val gotDriver = ConnectedComponents.run(edges.toDF("unique_id_l", "unique_id_r"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

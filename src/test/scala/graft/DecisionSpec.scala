@@ -1,0 +1,208 @@
+package graft
+
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.{LogEvent, Logger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.{Configurator, Property}
+import org.apache.spark.sql.DataFrame
+import graft.clustering.{ClusteringOps, ConnectedComponents}
+import graft.model._
+import graft.model.{LevelLibrary => ll}
+import graft.operators.Decide
+import graft.pipeline.CorpusOps
+import graft.training.Training
+
+/** Every decision kind of [[Decide]], forced each way on a tiny input,
+  * against a brute-force or independent oracle. A kind without a check
+  * fails the enumeration test. */
+class DecisionSpec extends SparkSpec {
+  import spark.implicits._
+
+  /** Runs `body` and returns the `graft` logger's DEBUG lines it caused. */
+  def events[T](body: => T): (T, Seq[String]) = {
+    val logger = LogManager.getLogger("graft").asInstanceOf[Logger]
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("decisions", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        seen.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val level = logger.getLevel
+    logger.addAppender(appender)
+    // through the configuration, so a context reload keeps the level
+    Configurator.setLevel("graft", Level.DEBUG)
+    try {
+      val out = body
+      (out, seen.toArray(Array.empty[String]).toSeq)
+    } finally {
+      logger.removeAppender(appender)
+      Configurator.setLevel("graft", level)
+      appender.stop()
+    }
+  }
+
+  /** Random multi-component graph plus a monotone path: the path needs
+    * several pointer jumps and a contraction level to reach closure. */
+  val graph: Seq[(Long, Long)] = {
+    val rng = new scala.util.Random(11)
+    ((1 to 120).map(_ => (rng.nextInt(60).toLong, rng.nextInt(60).toLong)) ++
+      (100 until 140).map(i => (i.toLong, (i + 1).toLong)))
+      .filter(e => e._1 != e._2)
+  }
+
+  /** CC labels of [[graph]], from a local relation (CC's raw-count entry)
+    * and from an exchanged frame (its symmetric-count entry). */
+  def ccLabels(): Seq[Map[Long, Long]] = {
+    val df = graph.toDF("unique_id_l", "unique_id_r")
+    Seq(df, df.repartition(3)).map(e => ConnectedComponents.run(e)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+  }
+
+  def assertCc(): Unit = {
+    val expected = GraphOracle.components(graph)
+    ccLabels().foreach(got => assert(got == expected))
+  }
+
+  def forcedDistributed[T](pins: (Decide.Kind, Decide.Path)*)(body: => T): T =
+    Decide.forcing((Decide.Collect -> Decide.Collect.Distributed) +: pins: _*)(
+      body)
+
+  /** Edges with coarse (tied) probabilities over nodes that carry one or
+    * two datasets: the tie-drop takes its multi-dataset branch. */
+  val o2oEdges: DataFrame = {
+    val rng = new scala.util.Random(5)
+    Seq.fill(70)((rng.nextInt(30).toLong, rng.nextInt(30).toLong,
+        (rng.nextInt(5) + 1) / 5.0))
+      .filter { case (a, b, _) => a != b }
+      .toDF("unique_id_l", "unique_id_r", "match_probability")
+  }
+  val o2oDatasets: DataFrame = (0 until 30).flatMap { i =>
+    Seq(i.toLong -> Seq("a", "b", "c")(i % 3)) ++
+      (if (i % 7 == 0) Seq(i.toLong -> "d") else Nil)
+  }.toDF("node_id", "source_dataset")
+
+  def oneToOneConstrained(): Map[Long, Long] =
+    ClusteringOps.oneToOneConstrained(o2oEdges, o2oDatasets,
+        duplicateFreeDatasets = Some(Seq("a", "b", "d")), tiesMethod = "drop")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  def oneToOne(): Seq[(Long, Long)] = ClusteringOps.oneToOne(o2oEdges)
+    .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+
+  /** Exact expected agreement-pattern counts of a planted model. */
+  val mTrue = Array(Map(1 -> 0.9, 0 -> 0.1), Map(1 -> 0.8, 0 -> 0.2))
+  val uTrue = Array(Map(1 -> 0.2, 0 -> 0.8), Map(1 -> 0.3, 0 -> 0.7))
+  val lambdaTrue = 0.3
+  def plantedPatterns: DataFrame = (for (g0 <- 0 to 1; g1 <- 0 to 1) yield {
+    val p = lambdaTrue * mTrue(0)(g0) * mTrue(1)(g1) +
+      (1 - lambdaTrue) * uTrue(0)(g0) * uTrue(1)(g1)
+    (g0, g1, math.round(p * 1000000L))
+  }).toDF("g0", "g1", "n").repartition(2)
+
+  def assertEmRecovers(): Unit = {
+    val mInit = Array(Map(1 -> 0.7, 0 -> 0.3), Map(1 -> 0.6, 0 -> 0.4))
+    val (core, _) = Training.emOverPatterns(plantedPatterns, 2, Nil, mInit,
+      uTrue, 0.1, fixU = true, maxIterations = 400, tolerance = 1e-7,
+      fixM = false, fixLambda = false)
+    assert(math.abs(core.lambda - lambdaTrue) < 1e-2, s"λ=${core.lambda}")
+    for (i <- 0 to 1)
+      assert(math.abs(core.m(i)(1) - mTrue(i)(1)) < 1e-2, s"m$i=${core.m(i)}")
+  }
+
+  def people: DataFrame = Seq(
+    (0L, "John", "Smith", "london"), (1L, "Jon", "Smith", "london"),
+    (2L, "Mary", "Jones", "leeds"), (3L, "Mary", "Jones", "york"),
+    (4L, "Mary", "Jones", "leeds"))
+    .toDF("unique_id", "first_name", "surname", "city")
+
+  def linkSettings: LinkSettings = LinkSettings(
+    blockingRules = Seq(BlockingRule.blockOn("surname")),
+    comparisons = Seq(
+      Comparison("first_name", Seq(ll.nullLevel("first_name"),
+        ll.exactMatch("first_name").withM(0.9).withU(0.1),
+        ll.jaroWinkler("first_name", 0.9).withM(0.05).withU(0.1),
+        ll.elseLevel.withM(0.05).withU(0.8))),
+      Comparison("city", Seq(ll.nullLevel("city"),
+        ll.exactMatch("city", tfAdjustment = true).withM(0.8).withU(0.2),
+        ll.elseLevel.withM(0.2).withU(0.8)))),
+    probabilityTwoRandomRecordsMatch = 0.01)
+
+  def predictRows(): Seq[String] = new Linker(people, linkSettings).predict()
+    .select("unique_id_l", "unique_id_r", "match_probability")
+    .collect().map(_.toString).sorted.toSeq
+
+  def tfidfRows(): Seq[String] = CorpusOps.tfidfTopK(
+      Seq((1L, "a b b c"), (2L, "b c d d d"), (3L, "e a a")).toDF("id", "text"),
+      "id", "text", 2)
+    .collect().map(_.toString).sorted.toSeq
+
+  /** One check per kind: runs the algorithms behind the kind with the
+    * decision forced to the given path, asserts they match an oracle, and
+    * returns event fragments that prove the path was exercised. */
+  val checks: Map[Decide.Kind, Decide.Path => Seq[String]] = Map(
+    Decide.Collect -> { p =>
+      Decide.forcing(Decide.Collect -> p)(assertCc())
+      val driver = Decide.forcing(Decide.Collect -> Decide.Collect.Driver) {
+        (oneToOne(), oneToOneConstrained()) }
+      Decide.forcing(Decide.Collect -> p) {
+        assert(oneToOne() == driver._1)
+        assert(oneToOneConstrained() == driver._2)
+        assertEmRecovers()
+      }
+      Seq("cc.raw_edges", "cc.edges", "one_to_one.edges",
+        "one_to_one_constrained.edges", "em.patterns")
+        .map(w => s"what=$w path=${p.name}")
+    },
+    Decide.Broadcast -> { p =>
+      val predicted = predictRows()
+      val tfidf = tfidfRows()
+      val driver = Decide.forcing(Decide.Collect -> Decide.Collect.Driver)(
+        oneToOneConstrained())
+      Decide.forcing(Decide.Broadcast -> p) {
+        assert(predictRows() == predicted)
+        assert(tfidfRows() == tfidf)
+      }
+      forcedDistributed(Decide.Broadcast -> p) {
+        assert(oneToOneConstrained() == driver)
+      }
+      // the split loop's semi-reduced lookup, broadcast or shuffled
+      forcedDistributed(Decide.Broadcast -> p,
+          Decide.JumpSplit -> Decide.JumpSplit.Split)(assertCc())
+      Seq("linker.records", "tfidf.vocabulary", "one_to_one_constrained.pairs",
+        "one_to_one_constrained.merges", "drop_ties.node_datasets",
+        "cc.jump_lookup").map(w => s"what=$w path=${p.name}")
+    },
+    Decide.Spill -> { p =>
+      forcedDistributed(Decide.Spill -> p)(assertCc())
+      Seq(s"what=cc.symmetric_estimate path=${p.name}")
+    },
+    Decide.JumpSplit -> { p =>
+      forcedDistributed(Decide.JumpSplit -> p)(assertCc())
+      Seq(s"what=cc.jumps path=${p.name}")
+    })
+
+  test("every decision kind has a check") {
+    assert(checks.keySet == Decide.kinds.toSet)
+  }
+
+  for (kind <- Decide.kinds; path <- kind.paths)
+    test(s"${kind.name} forced to ${path.name} matches its oracle") {
+      val check = checks.getOrElse(kind, fail(s"no check for $kind"))
+      val (expected, seen) = events(check(path))
+      expected.foreach(e => assert(seen.exists(s => s.contains(e) &&
+        s.contains(s"kind=${kind.name}") && s.endsWith("forced=true")),
+        s"no forced event '$e' among:\n${seen.mkString("\n")}"))
+    }
+
+  test("a decision is reported as one DEBUG event with kind and path") {
+    val edges = spark.range(1, 6).selectExpr("id AS unique_id_l",
+      "id + 1 AS unique_id_r")
+    val (_, seen) = events(ConnectedComponents.run(edges).collect())
+    val cc = seen.filter(_.contains("what=cc.edges"))
+    assert(cc.size == 1, seen.mkString("\n"))
+    assert(cc.head.startsWith("decision kind=collect what=cc.edges " +
+      "path=driver measured=10 "), cc.head)
+    assert(cc.head.endsWith("forced=false"))
+  }
+}

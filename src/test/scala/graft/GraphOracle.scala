@@ -20,6 +20,21 @@ object GraphOracle {
     vs.map(find).distinct.size
   }
 
+  /** Union-find component labels: each node of `edges` maps to the
+    * smallest node id of its component. */
+  def components(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElse(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    edges.flatMap(e => Seq(e._1, e._2)).distinct.map(x => x -> find(x)).toMap
+  }
+
   /** v is an articulation point iff removing it increases the number of
     * connected components among the remaining vertices. */
   def articulationPoints(edges: Seq[(Long, Long)]): Set[Long] = {

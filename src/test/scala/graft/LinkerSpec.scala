@@ -99,6 +99,15 @@ class LinkerSpec extends SparkSpec {
     assert(clusters(7L) == "7") // singleton keeps own id
   }
 
+  test("clustering with no edge at or above the threshold leaves every " +
+      "record a singleton") {
+    val linker = new Linker(people, settings)
+    val clusters = linker.clusterPairwisePredictionsAtThreshold(
+      linker.predict(), 1.1).select("unique_id", "cluster_id").collect()
+    assert(clusters.length == people.count())
+    assert(clusters.forall(r => r.getAs[Any](1).toString == r.getLong(0).toString))
+  }
+
   test("multi-rule blocking dedupes pairs across rules and tags match_key") {
     val s2 = settings.copy(blockingRules = Seq(
       BlockingRule.blockOn("surname"),

@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.model._
 import graft.model.{LevelLibrary => ll}
-import graft.clustering.{ClusteringOps, ConnectedComponents}
+import graft.clustering.ClusteringOps
+import graft.operators.Decide
 import graft.evaluation.Evaluation
 import graft.pipeline.{DedupOps, MultimodalOps, TextOps}
 
@@ -44,14 +45,14 @@ class OpsSpec extends SparkSpec {
       .toDF("unique_id_l", "unique_id_r", "match_probability")
     val edges2 = Seq((1L, 2L, 0.9), (2L, 3L, 0.8), (3L, 4L, 0.7))
       .toDF("unique_id_l", "unique_id_r", "match_probability")
-    for (threshold <- Seq(ConnectedComponents.SmallGraphEdgeThreshold, 0L)) {
-      val got = ClusteringOps.oneToOne(edges, smallGraphThreshold = threshold)
+    for (path <- Decide.Collect.paths) Decide.forcing(Decide.Collect -> path) {
+      val got = ClusteringOps.oneToOne(edges)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == Map(1L -> 1L, 2L -> 1L), s"threshold $threshold")
+      assert(got == Map(1L -> 1L, 2L -> 1L), s"path $path")
       // second round: after 1-2 merge, 3-4 mutual
-      val got2 = ClusteringOps.oneToOne(edges2, smallGraphThreshold = threshold)
+      val got2 = ClusteringOps.oneToOne(edges2)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got2 == Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 3L), s"threshold $threshold")
+      assert(got2 == Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 3L), s"path $path")
     }
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.SparkPlan
 import graft.model._
 import graft.model.{LevelLibrary => ll}
-import graft.operators.TermFrequency
+import graft.operators.{Decide, TermFrequency}
 
 /** Physical-plan assertions for the scale-design claims: broadcasts where
   * promised, whole-stage codegen over the scoring path, no UDF nodes,
@@ -51,39 +51,36 @@ class PlanSpec extends SparkSpec {
 
   test("pairs-to-records joins broadcast the record side by SIZE decision") {
     // the 100M+-pairs-from-modest-records regime: when the input frame's
-    // stats sit under spark.graft.recordsBroadcastBytes, BOTH record-side
-    // joins broadcast and the (much larger) pair frame never shuffles
+    // stats sit under the broadcast budget, BOTH record-side joins
+    // broadcast and the (much larger) pair frame never shuffles
     val s = planString(new Linker(people, settings).predict())
     val broadcasts = s.linesIterator.count(_.contains("BroadcastHashJoin"))
     assert(broadcasts >= 2, s"expected both record joins broadcast:\n$s")
-    // ... and the decision is a threshold, not a blanket hint: with the
-    // graft limit at zero AND the planner's own size threshold disabled
-    // (tiny test frames auto-broadcast under the 10MB default regardless
-    // of the hint), the same plan reverts to shuffle joins
-    spark.conf.set("spark.graft.recordsBroadcastBytes", "0")
+    // ... and the decision is a choice, not a blanket hint: with the
+    // decision forced to shuffle AND the planner's own size threshold
+    // disabled (tiny test frames auto-broadcast under the 10MB default
+    // regardless of the hint), the same plan reverts to shuffle joins
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val s0 = planString(new Linker(people, settings).predict())
+      val s0 = Decide.forcing(Decide.Broadcast -> Decide.Broadcast.Shuffled)(
+        planString(new Linker(people, settings).predict()))
       assert(s0.contains("SortMergeJoin") || s0.contains("ShuffledHashJoin"),
-        s"expected non-broadcast record joins under a 0 limit:\n$s0")
-    } finally {
-      spark.conf.unset("spark.graft.recordsBroadcastBytes")
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-    }
+        s"expected non-broadcast record joins when forced to shuffle:\n$s0")
+    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
-  test("recordsBroadcastOk: known-small fits, unknown stats decline, 0-limit declines") {
-    import graft.operators.ComparisonVectors
+  test("broadcastByStats: known-small fits, unknown stats decline, " +
+      "0-budget declines") {
     import graft.operators.Materialise.Ops
     // a tiny frame with real stats fits the 256MB default
-    assert(ComparisonVectors.recordsBroadcastOk(people))
+    assert(Decide.broadcastByStats("records", people))
     // a lineage-broken frame has its origin stats dropped (freshStats) —
     // unknown estimates high and must DECLINE, never broadcast blind
-    assert(!ComparisonVectors.recordsBroadcastOk(people.breakLineage(true)))
-    // the ceiling is live configuration
-    spark.conf.set("spark.graft.recordsBroadcastBytes", "0")
-    try assert(!ComparisonVectors.recordsBroadcastOk(people))
-    finally spark.conf.unset("spark.graft.recordsBroadcastBytes")
+    assert(!Decide.broadcastByStats("records", people.breakLineage(true)))
+    // Spark's own broadcast off switch turns graft's broadcasts off too
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try assert(!Decide.broadcastByStats("records", people))
+    finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
   test("distributed articulation verdict aggregates without an Expand") {

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.model._
 import graft.model.{LevelLibrary => ll}
+import graft.operators.Decide
 import graft.training.Training
 import graft.training.Training.Pattern
 
@@ -101,11 +102,12 @@ class TrainingSpec extends SparkSpec {
       (p.gammas(0), p.gammas(1), p.gammas(2), term, p.count)
     }
     val df = rows.toDF("g0", "g1", "g2", "t0", "n").repartition(4).persist()
-    def fit(maxPatterns: Long) = Training.emOverPatterns(df, 3, tfSpecs,
-      plantedMInit, plantedUInit, 0.1, fixU = false, maxIterations = 15,
-      tolerance = 0.0, fixM = false, fixLambda = false, maxPatterns)
-    val (driver, driverObs) = fit(Long.MaxValue)
-    val (dist, distObs) = fit(0L)
+    def fit(path: Decide.Path) = Decide.forcing(Decide.Collect -> path)(
+      Training.emOverPatterns(df, 3, tfSpecs,
+        plantedMInit, plantedUInit, 0.1, fixU = false, maxIterations = 15,
+        tolerance = 0.0, fixM = false, fixLambda = false))
+    val (driver, driverObs) = fit(Decide.Collect.Driver)
+    val (dist, distObs) = fit(Decide.Collect.Distributed)
     df.unpersist()
     assert(driver.iterations == 15 && dist.iterations == 15)
     driver.lambdaHistory.zip(dist.lambdaHistory).foreach { case (a, b) =>
@@ -284,9 +286,7 @@ class TrainingSpec extends SparkSpec {
       BlockingRule.blockOn("surname"), fixU = false, maxIterations = 6,
       tolerance = 0.0, withTermFrequencies = true)
     val driver = run()
-    spark.conf.set("spark.graft.em.maxPatterns", "1")
-    val dist =
-      try run() finally spark.conf.unset("spark.graft.em.maxPatterns")
+    val dist = Decide.forcing(Decide.Collect -> Decide.Collect.Distributed)(run())
     assert(driver.iterations == 6 && dist.iterations == 6)
     driver.lambdaHistory.zip(dist.lambdaHistory).foreach { case (a, b) =>
       assert(math.abs(a - b) < 1e-9, s"λ $a vs $b") }
