@@ -84,20 +84,24 @@ class Linker(val inputs: Seq[(String, DataFrame)], initialSettings: LinkSettings
     * from the (possibly changed) inputs (`table_management.py:142-166`
     * invalidate_cache + delete_tables_created_by_splink_from_db — Spark
     * lineage makes re-execution automatic once the persisted copies are
-    * released). */
+    * released).
+    *
+    * Like the reference, which deletes only the tables it created, this
+    * frees only what graft materialised: the copy
+    * [[computeBlockedPairsForPredict]] made has its blocks or scratch
+    * files dropped under every policy, while a frame the caller
+    * registered keeps its own cache (a registered frame that reads one
+    * of graft's lineage breaks through plain views has that break
+    * released). A computed pairs frame the caller still holds is dead
+    * afterwards: reading it fails loudly under the localCheckpoint and
+    * parquet policies, recomputes under persist and re-reads its
+    * checkpoint files under checkpoint. */
   def invalidateCache(): Unit = synchronized {
     concatWithTfCache.foreach { df =>
       try df.unpersist() catch { case _: Throwable => () }
     }
     concatWithTfCache = None
-    // release the materialised pairs copy, not just the reference: under
-    // persist/checkpoint Materialise policies the eager breakLineage in
-    // computeBlockedPairsForPredict holds storage the reference's
-    // delete_tables_created_by_splink_from_db would drop
-    registeredBlockedPairs.foreach { df =>
-      try Materialise.release(df) catch { case _: Throwable => () } // parquet
-      try df.unpersist() catch { case _: Throwable => () }          // persist
-    }
+    registeredBlockedPairs.foreach(Materialise.release)
     registeredBlockedPairs = None
     tfLookups.clear()
   }

@@ -3,6 +3,7 @@ package graft.clustering
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.operators.Decide
+import graft.operators.Materialise
 import graft.operators.Materialise.Ops
 import org.apache.spark.sql.expressions.Window
 
@@ -95,7 +96,7 @@ object ClusteringOps {
         // the count above materialised the successor frame — the
         // superseded round's blocks are strong-releasable (mutual frames
         // stay: the final union reads them)
-        graft.operators.Materialise.releaseConsumed(prevRemaining)
+        Materialise.release(prevRemaining)
       }
     }
     if (matched.isEmpty) {
@@ -126,7 +127,7 @@ object ClusteringOps {
         if (p.isNaN) Double.NegativeInfinity else p)
     }
     // the collect fully consumed the loop-owned materialised edge frame
-    graft.operators.Materialise.releaseConsumed(remaining)
+    Materialise.release(remaining)
     val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
     var round = 0
     var done = false
@@ -192,7 +193,7 @@ object ClusteringOps {
     // time) on the forced-distributed sf10 bench entry
     val e0raw = edges.select(col(srcCol).as("na"), col(dstCol).as("nb"),
       col(probCol).as("p")).filter(col("na") =!= col("nb"))
-      .breakLineageSpilled()
+      .breakLineage(spill = true)
     // only the duplicate-free datasets constrain merges
     // (`clustering.py:201-202`: "This can be a subset of all of the source
     // datasets"); other datasets may repeat inside a cluster freely
@@ -233,7 +234,7 @@ object ClusteringOps {
         // whose last distributed-path consumer it is — is strong-releasable
         val (d, iv) = dropTies(e0raw, nodeDatasets, isDupFreeCol,
           pairsBroadcastOk)
-        graft.operators.Materialise.releaseConsumed(e0raw)
+        Materialise.release(e0raw)
         (d, iv)
       case _ =>
         // round-1 invalid pairs (endpoints sharing a duplicate-free
@@ -325,7 +326,7 @@ object ClusteringOps {
           // two consumers while the loop continues (the eager valid
           // checkpoint and the rank aggregate); the final round's single
           // consumer chain streams instead
-          if (round < maxRounds) f.breakLineageSpilled() else f
+          if (round < maxRounds) f.breakLineage(spill = true) else f
         }
       val validPlan =
         if (round == 1)
@@ -340,7 +341,7 @@ object ClusteringOps {
       // rewrite re-reads it); on the final round its one consumer is the
       // persisted rank frame, which materialises it exactly once anyway
       val valid =
-        if (round < maxRounds) validPlan.breakLineageSpilled(eager = true)
+        if (round < maxRounds) validPlan.breakLineage(eager = true, spill = true)
         else validPlan
       // symmetric via one explode: a union would evaluate the input
       // twice. Round 1 explodes the FLAGGED frame (bad rows ride along
@@ -377,7 +378,7 @@ object ClusteringOps {
           .agg(min_by(struct(col("rb"), col("bad")),
             struct(col("bad"), rankP, col("rb"))).as("b"))
           .select(col("ra"), col("b.rb").as("rb"), col("b.bad").as("bad"))
-          .breakLineageSpilled()
+          .breakLineage(spill = true)
         else sym.groupBy(col("ra"))
           .agg(min_by(col("rb"), struct(rankP, col("rb"))).as("rb"))
       // mutuality as ONE aggregate on the unordered pair key (see
@@ -405,13 +406,13 @@ object ClusteringOps {
       // round 1's valid frame (eager or via the persisted rank frame) has
       // consumed the invalid-pair table by now; under "lowest_id" it is a
       // lazy plan and this is a no-op
-      if (round == 1) graft.operators.Materialise.releaseConsumed(invalid1)
+      if (round == 1) Materialise.release(invalid1)
       if (!anyMerge) {
         done = true
-        graft.operators.Materialise.releaseConsumed(valid)
+        Materialise.release(valid)
         if (round == 1) {
-          graft.operators.Materialise.releaseConsumed(best)
-          graft.operators.Materialise.releaseConsumed(flagged1)
+          Materialise.release(best)
+          Materialise.release(flagged1)
         }
       } else {
         // mutual-best merges never chain inside a round (each cluster has
@@ -436,9 +437,9 @@ object ClusteringOps {
           membership = upd
         } else {
         val prevMembership = membership
-        membership = upd.breakLineageSpilled(eager = true)
-        if (round == 1) graft.operators.Materialise.releaseConsumed(best)
-        else graft.operators.Materialise.releaseConsumed(prevMembership)
+        membership = upd.breakLineage(eager = true, spill = true)
+        if (round == 1) Materialise.release(best)
+        else Materialise.release(prevMembership)
         membershipMaterialised = true
         // the continuing loop's candidate state rolls forward; on the
         // final round the merge lands in the output membership alone.
@@ -453,7 +454,7 @@ object ClusteringOps {
             .groupBy(col("r"))
             .agg(array_distinct(flatten(collect_list(col("ds")))).as("ds"))
             .breakLineage(eager = true)
-          graft.operators.Materialise.releaseConsumed(prevSets)
+          Materialise.release(prevSets)
         }
         val prevCe = ce
         ce = valid.alias("e")
@@ -462,13 +463,13 @@ object ClusteringOps {
           .select(coalesce(col("ga.ka"), col("e.ra")).as("ra"),
             coalesce(col("gb.ka"), col("e.rb")).as("rb"), col("e.p"))
           .filter(col("ra") =!= col("rb"))
-          .breakLineageSpilled(eager = true)
+          .breakLineage(eager = true, spill = true)
         // round 1's ce is a projection of e0, not a materialised frame
         // of its own — e0 is torn down once at exit instead
-        if (round > 1) graft.operators.Materialise.releaseConsumed(prevCe)
-        graft.operators.Materialise.releaseConsumed(valid)
-        graft.operators.Materialise.releaseConsumed(merges)
-        if (round == 1) graft.operators.Materialise.releaseConsumed(flagged1)
+        if (round > 1) Materialise.release(prevCe)
+        Materialise.release(valid)
+        Materialise.release(merges)
+        if (round == 1) Materialise.release(flagged1)
         }
       }
     }
@@ -480,12 +481,12 @@ object ClusteringOps {
     // and the merge/best blocks were deliberately not released).
     // With NO merge round at all the output is the lazy identity plan
     // over e0 — the edge frame must then survive for the caller.
-    if (round > 1) graft.operators.Materialise.releaseConsumed(ce)
+    if (round > 1) Materialise.release(ce)
     if (clusterSets != null)
-      graft.operators.Materialise.releaseConsumed(clusterSets)
+      Materialise.release(clusterSets)
     if (membershipMaterialised) {
-      if (tiesMethod == "drop") graft.operators.Materialise.releaseConsumed(e0)
-      else graft.operators.Materialise.releaseConsumed(e0raw)
+      if (tiesMethod == "drop") Materialise.release(e0)
+      else Materialise.release(e0raw)
     }
     membership.select(col("node_id"), col("rep").as("cluster_id"))
   }
@@ -510,7 +511,7 @@ object ClusteringOps {
         if (p.isNaN) Double.NegativeInfinity else p)
     }
     // the collect fully consumed the loop-owned materialised edge frame
-    graft.operators.Materialise.releaseConsumed(e0raw)
+    Materialise.release(e0raw)
     val nodes0 = allEdges.flatMap(e => Seq(e._1, e._2)).distinct
     // fetch datasets only for nodes in play (the corpus can be far larger
     // than the edge set) — broadcast semi-join, then one small collect
@@ -656,7 +657,7 @@ object ClusteringOps {
       .join(nd.alias("dr"), col("s.nb") === col("dr.node_id"))
       .select(col("s.na"), col("s.nb"), col("s.p"),
         col("dl.source_dataset").as("sd_a"), col("dr.source_dataset").as("sd_b"))
-      .breakLineageSpilled()
+      .breakLineage(spill = true)
     // the symmetric view exists only for the tie AGGREGATE — a projection
     // explode over the checkpoint, no joins downstream of it
     val sym = withBoth.select(explode(array(
@@ -723,7 +724,7 @@ object ClusteringOps {
         e0.alias("e").join(keptBuild,
           col("e.na") === col("k.na") && col("e.nb") === col("k.nb") &&
             col("e.p") === col("k.p"), "left_semi")
-          .breakLineageSpilled(eager = true)
+          .breakLineage(eager = true, spill = true)
       }
     // round-1 invalid pairs for the caller's pair-level constraint, free
     // off the already-materialised combo frame: an edge between two
@@ -737,8 +738,8 @@ object ClusteringOps {
     // the fast path's lazy output still reads the combo/tie blocks —
     // only the semi-join branch (eager output) may drop them here
     if (!singlePerNode) {
-      graft.operators.Materialise.releaseConsumed(withBoth)
-      graft.operators.Materialise.releaseConsumed(tied)
+      Materialise.release(withBoth)
+      Materialise.release(tied)
     }
     (out, invalid1)
   }
@@ -788,7 +789,7 @@ object ClusteringOps {
       .run(e0.filter(col(probCol) >= sorted.head), srcCol, dstCol,
         assumeDistinctPairs = true)
     var cc = solved0.breakLineage(eager = true)
-    graft.operators.Materialise.releaseConsumedLeaves(solved0)
+    Materialise.release(solved0)
     val perThreshold = scala.collection.mutable.ArrayBuffer(sorted.head -> cc)
     sorted.sliding(2).foreach {
       case Seq(tPrev, t) =>
@@ -826,7 +827,7 @@ object ClusteringOps {
               srcCol, dstCol, assumeDistinctPairs = true)
             val copied = solved.breakLineage(eager = true)
             // the fresh solve's internal checkpoints are dead once copied
-            graft.operators.Materialise.releaseConsumedLeaves(solved)
+            Materialise.release(solved)
             copied
           } else {
             val unstableIds = minp.filter(col("__minp") < t)
@@ -846,7 +847,7 @@ object ClusteringOps {
             // release ONLY the sub-solve's leaves: the union's other
             // branch embeds the previous threshold's labelling, which is
             // itself part of the returned output and must stay live
-            graft.operators.Materialise.releaseConsumedLeaves(sub)
+            Materialise.release(sub)
             copied
           }
         minp.unpersist(blocking = false)
@@ -1110,7 +1111,7 @@ object ClusteringOps {
         "verdicts.")
     // the single-grain views go through a spilled checkpoint so callers
     // touching BOTH frames don't recompute the shared pass
-    val ck = stacked.breakLineageSpilled()
+    val ck = stacked.breakLineage(spill = true)
     GraphMetrics(edgeGrain(ck, srcCol, dstCol), nodeGrain(ck), stacked)
   }
 

@@ -2,7 +2,7 @@ package graft.clustering
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.Decide
+import graft.operators.{Decide, Materialise}
 import graft.operators.Materialise.Ops
 
 /**
@@ -62,8 +62,8 @@ object ConnectedComponents {
       maxIterations: Int, eager: Boolean, smallGraphThreshold: Long,
       assumeDistinctPairs: Boolean, maxJumps: Int): DataFrame = {
     val spark = edges.sparkSession
-    // Already-materialised input (checkpoint/local relation, optionally
-    // under cheap Project/Filter): the count and the driver collect both
+    // Already-materialised input (a lineage break or local relation under
+    // views, Materialise.isMaterialised): the count and the driver collect both
     // re-read it for near-free, so the symmetric-explode / exchange /
     // dedupe / checkpoint machinery below is pure overhead on small graphs
     // (union-find needs neither symmetry nor dedupe). Unmaterialised
@@ -71,7 +71,7 @@ object ConnectedComponents {
     // raw path needs one shared id type (the symmetric path coerces mixed
     // types via explode(array)).
     if (edges.schema(srcCol).dataType == edges.schema(dstCol).dataType &&
-        isCheapToRescan(edges.queryExecution.optimizedPlan)) {
+        Materialise.isMaterialised(edges)) {
       val raw = edges.select(col(srcCol), col(dstCol))
       val rawCount = raw.count()
       // symmetric+deduped count <= 2*raw count: never a too-big graph to
@@ -128,10 +128,8 @@ object ConnectedComponents {
     // DISK_ONLY, and recursion levels re-decide on their contracted size.
     var spillFrames = Decide.spill(spark, "cc.symmetric_estimate",
       inputBytes * 2) == Decide.Spill.DiskOnly
-    def bl(df: DataFrame, e: Boolean): DataFrame =
-      if (spillFrames) df.breakLineageSpilled(e) else df.breakLineage(e)
-    var neighbours =
-      bl(if (assumeDistinctPairs) keyed else keyed.dropDuplicates(), eager)
+    var neighbours = (if (assumeDistinctPairs) keyed else keyed.dropDuplicates())
+      .breakLineage(eager, spillFrames)
 
     val edgeCount = neighbours.count()
     if (Decide.collect("cc.edges", edgeCount, Decide.GraphEdges,
@@ -139,7 +137,7 @@ object ConnectedComponents {
       val solved = driverUnionFind(neighbours)
       // the collect fully consumed the symmetric frame; the output is a
       // driver-parallelized RDD with no reference to it
-      graft.operators.Materialise.releaseConsumed(neighbours)
+      Materialise.release(neighbours)
       return solved
     }
 
@@ -162,8 +160,8 @@ object ConnectedComponents {
     if (!spillFrames && Decide.spill(spark, "cc.edges",
         BigInt(edgeCount) * 48) == Decide.Spill.DiskOnly) {
       spillFrames = true
-      val offHeap = neighbours.breakLineageSpilled(eager = true)
-      graft.operators.Materialise.releaseConsumed(neighbours)
+      val offHeap = neighbours.breakLineage(eager = true, spill = true)
+      Materialise.release(neighbours)
       neighbours = offHeap
     }
     // rep := min(self, neighbours). The rep pointers form a FOREST (each
@@ -234,12 +232,13 @@ object ConnectedComponents {
     var lastMovers = -1L
     while (jumping && jumps < maxJumps) {
       jumps += 1
-      // Either path BREAKS LINEAGE into flat LogicalRDD plans, never
-      // persist alone: the next jump embeds the active plan in both join
-      // branches (immutable trees, no sharing), so with persist the
-      // ANALYZED plan doubles per jump and driver-side analysis goes
-      // exponential — measured on a 2M-node forest needing 9 jumps:
-      // 1.5s, ..., 5s, 18s, 58s per jump (2^9 x base analysis cost).
+      // Either path BREAKS LINEAGE into one flat plan leaf per frame,
+      // under every policy, never a cached copy of the plan: the next jump
+      // embeds the active plan in both join branches (immutable trees, no
+      // sharing), so with a Dataset.persist the ANALYZED plan would double
+      // per jump and driver-side analysis go exponential — measured on a
+      // 2M-node forest needing 9 jumps: 1.5s, ..., 5s, 18s, 58s per jump
+      // (2^9 x base analysis cost).
       val lookupAll = pointerTable.select(col("node_id").as("rep_node"),
         col("representative").as("rep_rep"))
       val lookup =
@@ -267,11 +266,13 @@ object ConnectedComponents {
         // two jobs, one join evaluation, write volume exactly the jump's
         // row count, and all later stages scan only clean slices.
         val j = jPlan.persist(level)
-        settledSlices += bl(j
+        settledSlices += j
           .filter(col("representative") === col("__old_rep"))
-          .select(col("node_id"), col("representative")), true)
-        active = bl(j.filter(col("representative") =!= col("__old_rep"))
-          .select(col("node_id"), col("representative")), true)
+          .select(col("node_id"), col("representative"))
+          .breakLineage(eager = true, spillFrames)
+        active = j.filter(col("representative") =!= col("__old_rep"))
+          .select(col("node_id"), col("representative"))
+          .breakLineage(eager = true, spillFrames)
         j.unpersist(blocking = false)
         // termination probe doubles as the next jump's size signal: a
         // WIDE count over the already-materialised active checkpoint
@@ -282,7 +283,7 @@ object ConnectedComponents {
         jumping = activeCount > 0
       } else {
         // whole-frame jump: one checkpoint + one count job per jump
-        val j = bl(jPlan, eager)
+        val j = jPlan.breakLineage(eager, spillFrames)
         val m = j.filter(col("representative") =!= col("__old_rep")).count()
         movers = m
         jumping = m > 0
@@ -292,7 +293,7 @@ object ConnectedComponents {
       // previous active checkpoint (jump 1: the persisted propagation
       // frame) is dead
       if (jumps == 1) reps0.unpersist()
-      else graft.operators.Materialise.releaseConsumed(prevActive)
+      else Materialise.release(prevActive)
       lastMovers = movers
     }
     if (jumping)
@@ -321,13 +322,14 @@ object ConnectedComponents {
     // outcome for path/tree-like graphs once jumps run to closure — can
     // skip the sub-solve AND the whole-node-frame compose join below
     // (measured ~40% of the level's wall time on 13.5M path edges).
-    val contracted = bl(
+    val contracted =
       neighbours.filter(col("node_id") < col("neighbour")).alias("e")
         .join(reps.alias("rl"), col("e.node_id") === col("rl.node_id"))
         .join(reps.alias("rr"), col("e.neighbour") === col("rr.node_id"))
         .filter(col("rl.representative") =!= col("rr.representative"))
         .select(col("rl.representative").as("rep_l"),
-          col("rr.representative").as("rep_r")), eager)
+          col("rr.representative").as("rep_r"))
+        .breakLineage(eager, spillFrames)
     // wide count(), not isEmpty: executeTake(1) would materialise the
     // just-checkpointed frame in serial 1/4/16-partition waves exactly in
     // the empty case (same fix as the jump probe above)
@@ -337,7 +339,7 @@ object ConnectedComponents {
     // (the jump frames are checkpoint-backed, so nothing recomputes
     // through neighbours); without this a long-lived cluster session
     // accumulates one ~2x-edge-list copy per solve per level
-    graft.operators.Materialise.releaseConsumed(neighbours)
+    Materialise.release(neighbours)
     val out =
       if (maxIterations <= 1) reps // safety valve, mirrors the old loop cap
       else if (contractedEmpty) reps
@@ -362,27 +364,26 @@ object ConnectedComponents {
         // with depth.
         // EAGER: the compose must be on disk/in blocks before the strong
         // releases below drop what it reads (reps + sub)
-        val composed = bl(reps.alias("r")
+        val composed = reps.alias("r")
           .join(sub.alias("s"), col("r.representative") === col("s.node_id"),
             "left")
           .select(col("r.node_id"),
             coalesce(col("s.cluster_id"), col("r.representative"))
-              .as("representative")), true)
+              .as("representative"))
+          .breakLineage(eager = true, spillFrames)
         // the compose supersedes the settled-slice and active checkpoints
         // (reps is their union), contracted, AND the recursion's returned
-        // labelling (sub — release strips its role-repartition wrapper);
-        // reclaim all of them now. In the empty/valve paths reps IS the
-        // output, so only this branch may release the slices.
-        settledSlices.foreach(graft.operators.Materialise.releaseConsumed)
-        graft.operators.Materialise.releaseConsumed(active)
-        graft.operators.Materialise.releaseConsumed(contracted)
-        graft.operators.Materialise.releaseConsumed(sub)
+        // labelling (sub — release reads through its role repartition and
+        // the union of its own slices); reclaim all of them now. In the
+        // empty/valve paths reps IS the output, so only this branch may
+        // release the slices.
+        Seq(reps, contracted, sub).foreach(Materialise.release)
         composed
       }
     // empty/valve paths never handed contracted to a consumer — the count
     // above fully evaluated it, so its scratch and blocks are reclaimable
     if (maxIterations <= 1 || contractedEmpty)
-      graft.operators.Materialise.releaseConsumed(contracted)
+      Materialise.release(contracted)
     // The role resize (`__splink__clusters_at_*` ÷10) collapses the join
     // partitioning to a sane count for the caller's write / re-join —
     // SIZE-FLOORED so a many-million-node labelling never squeezes into a
@@ -393,24 +394,6 @@ object ConnectedComponents {
     graft.operators.Repartition.sizedShrink(
       out.select(col("node_id"), col("representative").as("cluster_id")),
       graft.operators.Repartition.ClusteringOutput, 2 * edgeCount * 32)
-  }
-
-  /** True when re-scanning the plan costs ~a cached-block read: a
-    * checkpoint/local relation, possibly under driver-cheap Project/Filter
-    * (the shapes `edges.breakLineage(true).filter(...)` produces). */
-  private def isCheapToRescan(
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean = {
-    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, Project}
-    plan match {
-      case _: LocalRelation => true
-      case _: org.apache.spark.sql.execution.LogicalRDD => true
-      // parquet-policy breakLineage (the cluster default) yields a bare
-      // file relation — re-scanning it is one read, same as a checkpoint
-      case _: org.apache.spark.sql.execution.datasources.LogicalRelation => true
-      case p: Project => isCheapToRescan(p.child)
-      case f: Filter => isCheapToRescan(f.child)
-      case _ => false
-    }
   }
 
   /** Small-graph fast path: collect the two-column edge list (raw or

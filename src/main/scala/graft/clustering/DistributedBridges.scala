@@ -3,7 +3,7 @@ package graft.clustering
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.operators.Materialise.{Ops, releaseConsumed}
+import graft.operators.Materialise.{Ops, release}
 
 /**
  * Fully distributed bridges AND articulation (cut) vertices — the scale
@@ -67,16 +67,13 @@ object DistributedBridges {
 
   private def buildForest(edges: DataFrame, srcCol: String, dstCol: String,
       maxRounds: Int): Forest = {
-    val spark = edges.sparkSession
-    // materialise once, then rebuild from the RDD: the caller's lineage can
-    // carry join constraints referencing attributes pruned from this
-    // projection (localCheckpoint keeps them as originConstraints), and any
-    // such leaked constraint breaks Catalyst's Union constraint rewrite in
-    // the unions below. A fresh LogicalRDD has no constraints at all.
-    val checked = edges.select(col("cluster_id"),
+    // materialise once: the lineage break's fresh leaf carries none of the
+    // caller's join constraints, which (referencing attributes pruned from
+    // this projection) would break Catalyst's Union constraint rewrite in
+    // the unions below
+    val in = edges.select(col("cluster_id"),
         col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
       .breakLineage()
-    val in = spark.createDataFrame(checked.rdd, checked.schema)
 
     // NOTE (r12, tried and REVERTED with numbers): hash-partitioning the
     // whole pipeline once on cluster_id — every downstream shuffle here
@@ -157,7 +154,7 @@ object DistributedBridges {
     // nodes' consumers (the roots checkpoint and the termination counts)
     // have all materialised during the BFS above — drop its blocks now
     // instead of carrying a full node frame to the query's end
-    releaseConsumed(nodes)
+    release(nodes)
     Forest(in, pairs, visited, depth, levels.toSeq)
   }
 
@@ -187,12 +184,12 @@ object DistributedBridges {
     val forest = buildForest(edges, srcCol, dstCol, maxRounds)
     val in = forest.in
     val pairs = forest.pairs
-    def ck(df: DataFrame): DataFrame = df.breakLineageSpilled(eager = true)
+    def ck(df: DataFrame): DataFrame = df.breakLineage(eager = true, spill = true)
     // lazy variant for frames whose first consumer is itself checkpointed
     // (they compute exactly once either way — only the block home differs)
-    def ckLazy(df: DataFrame): DataFrame = df.breakLineageSpilled()
+    def ckLazy(df: DataFrame): DataFrame = df.breakLineage(spill = true)
     val visited = ck(forest.visited)
-    forest.levels.foreach(releaseConsumed)
+    forest.levels.foreach(release)
     val depth = forest.depth
     val peelCadence = math.max(8, math.ceil(depth / 12.0).toInt)
 
@@ -254,7 +251,7 @@ object DistributedBridges {
     val pre = ck(preByDepth.values.map(freshen).reduce(_.unionByName(_)))
     // the sibling-offset frame's only consumers are the preorder fold
     // rounds, all materialised by the eager pre checkpoint above
-    releaseConsumed(kids)
+    release(kids)
 
     // ---- fold 3 (bottom-up): low/high of non-tree-neighbour preorders -
     val ntAdj = nonTree.select(col("cluster_id"), explode(array(
@@ -299,7 +296,7 @@ object DistributedBridges {
         col("nd"), col("low"), col("high")))
     // lhInit's consumers are the byDepthLh filters, all folded into the
     // eager lowHigh checkpoint above
-    releaseConsumed(lhInit)
+    release(lhInit)
 
     // ---- aux graph links + component solve ---------------------------
     // rule B needs the PARENT's preorder interval next to each child
@@ -339,7 +336,7 @@ object DistributedBridges {
     // interval join feeding rule B) is inside that checkpoint, and the
     // bridge interval test reads pre/nd as columns carried on lowHigh,
     // never these frames
-    Seq(auxComp, nd, pre).foreach(releaseConsumed)
+    Seq(auxComp, nd, pre).foreach(release)
 
     // ---- verdicts ----------------------------------------------------
     val childComps = comp.select(col("cluster_id"),
@@ -398,9 +395,9 @@ object DistributedBridges {
     // lowHigh/nonTree/pairs/in; the node side only visited/comp): the
     // peak live block set never exceeds one verdict's inputs
     val bOut = ck(bridgesDf)
-    Seq(lowHigh, nonTree, pairs, in).foreach(releaseConsumed)
+    Seq(lowHigh, nonTree, pairs, in).foreach(release)
     val aOut = ck(articulation)
-    Seq(visited, comp).foreach(releaseConsumed)
+    Seq(visited, comp).foreach(release)
     (bOut, aOut)
   }
 }

@@ -3,6 +3,10 @@ package graft.operators
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation,
+  LogicalPlan, Project, Repartition, RepartitionByExpression, Union}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.storage.StorageLevel
 
 /**
@@ -15,26 +19,33 @@ import org.apache.spark.storage.StorageLevel
  * die with their executor and an executor loss mid-iteration then kills the
  * whole job unrecoverably).
  *
- * Policies, selected per-session via `spark.graft.breakLineage`:
+ * Every policy returns the same thing: a frame whose plan is ONE fresh
+ * leaf, so a loop that joins its previous rounds keeps a flat plan under
+ * any policy. Policies, selected per-session via `spark.graft.breakLineage`:
  *
- *  - `localCheckpoint` — truncates lineage into non-replicated local blocks.
- *    Fastest; safe on a single JVM (local[n], tests, benchmarks). NOT
- *    fault-tolerant on a multi-executor cluster. Default when the session
- *    master is local.
- *  - `persist` — MEMORY_AND_DISK cache. Keeps lineage (slow plans regrow
- *    over long loops, but a lost block recomputes instead of failing).
- *  - `checkpoint` — reliable checkpoint to the SparkContext checkpoint dir
- *    (set `spark.graft.scratchDir` or call `setCheckpointDir`); blocks
- *    survive executor loss when the dir is on shared storage (HDFS/S3).
- *  - `parquet` — write + read-back under `spark.graft.scratchDir`. The
- *    reference's cluster default: fully fault-tolerant, frames come back as
- *    plain file scans with accurate size stats. Default when the master is
- *    non-local.
+ *  - `localCheckpoint` — the rows persist in non-replicated blocks and
+ *    the RDD lineage is truncated. Fastest; safe on a single JVM
+ *    (local[n], tests, benchmarks). NOT fault-tolerant on a multi-executor
+ *    cluster. Default when the session master is local.
+ *  - `persist` — the same blocks, but the RDD keeps its lineage: a lost
+ *    block recomputes instead of failing.
+ *  - `checkpoint` — the same blocks, plus a reliable checkpoint to the
+ *    SparkContext checkpoint dir (set `spark.graft.scratchDir` or call
+ *    `setCheckpointDir`); survives executor loss when the dir is on shared
+ *    storage (HDFS/S3).
+ *  - `parquet` — write + read-back under `spark.graft.scratchDir`; the leaf
+ *    is a plain file scan with accurate size stats. The reference's cluster
+ *    default: fully fault-tolerant. Default when the master is non-local.
  *
- * Eagerness follows the call site: `breakLineage(true)` forces
- * materialisation now (parquet/checkpoint writes are inherently eager;
- * persist adds a count). All policies guarantee the frame is computed at
- * most once across its consumers — the invariant every caller relies on.
+ * The three block-backed policies share one construction
+ * (`GraftSqlBridge.rddLeaf`): a `LogicalRDD` over the frame's persisted
+ * row RDD, with the origin plan's statistics dropped. Eagerness follows
+ * the call site: `breakLineage(eager = true)` computes the frame now (a
+ * parquet write is always eager). Every policy computes the frame at most
+ * once across its consumers — the invariant every caller relies on.
+ *
+ * [[release]] is the one way to drop a materialisation before the JVM or
+ * the ContextCleaner does; see its safety contract.
  */
 object Materialise {
 
@@ -58,6 +69,13 @@ object Materialise {
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
       ownedDirs.forEach(d => deleteRecursively(new java.io.File(d)))))
   }
+  // every materialisation this JVM made and has not released: the block
+  // RDDs of LogicalRDD leaves (by application and RDD id, so the registry
+  // never keeps an RDD reachable from the ContextCleaner) and the scratch
+  // paths of parquet leaves
+  private val owned = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  private def rddKey(rdd: org.apache.spark.rdd.RDD[_]): String =
+    s"rdd:${rdd.context.applicationId}:${rdd.id}"
 
   def policy(spark: SparkSession): Policy = {
     val name = spark.conf.get(ConfKey,
@@ -68,181 +86,127 @@ object Materialise {
         all.map(_.name).mkString(", ")))
   }
 
-  /** Break lineage under the session's configured policy. */
-  def apply(df: DataFrame, eager: Boolean = false): DataFrame =
-    withPolicy(df, policy(df.sparkSession), eager)
-
-  def withPolicy(df: DataFrame, p: Policy, eager: Boolean): DataFrame = p match {
-    // (local)checkpoint results are rewrapped through
-    // GraftSqlBridge.freshStats: Spark 4 copies the origin plan's size
-    // estimate onto the checkpointed LogicalRDD, and in iterative loops
-    // that join previous checkpoints the carried estimate compounds
-    // exponentially until driver-side stats visits grind in BigInteger
-    // math (measured: a forced-distributed CC recursion pinned the driver
-    // for minutes at 135k edges). Fresh default stats per checkpoint keep
-    // every downstream plan's estimate bounded; AQE still broadcasts from
-    // actual runtime sizes.
-    case LocalCheckpointPolicy =>
-      org.apache.spark.sql.GraftSqlBridge.freshStats(df.localCheckpoint(eager))
-    case PersistPolicy =>
-      val out = df.persist(StorageLevel.MEMORY_AND_DISK)
-      if (eager) out.count()
+  private def breakLineage(df: DataFrame, eager: Boolean,
+      spill: Boolean): DataFrame = {
+    val spark = df.sparkSession
+    def blocks(mark: org.apache.spark.rdd.RDD[_] => Unit): DataFrame = {
+      // DISK_ONLY for passes that hold MANY large frames alive at once
+      // (the graph-metrics scaffold keeps ~8 frames of 35M+ rows live):
+      // on-heap blocks become old-generation garbage the collector
+      // re-walks every cycle (measured at sf10: 500s of task GC, 36% of
+      // the fused query's task time)
+      val level =
+        if (spill) StorageLevel.DISK_ONLY else StorageLevel.MEMORY_AND_DISK
+      val (out, rdd) = org.apache.spark.sql.GraftSqlBridge
+        .rddLeaf(df, level, mark, eager)
+      owned.add(rddKey(rdd))
       out
-    case CheckpointPolicy =>
-      val sc = df.sparkSession.sparkContext
-      if (sc.getCheckpointDir.isEmpty)
-        sc.setCheckpointDir(scratchDir(df.sparkSession) + "/checkpoints")
-      org.apache.spark.sql.GraftSqlBridge.freshStats(df.checkpoint(eager))
-    case ParquetPolicy =>
-      val spark = df.sparkSession
-      val path = scratchDir(spark) + f"/mat-${counter.incrementAndGet()}%06d"
-      df.write.mode("overwrite").parquet(path)
-      matPaths.add(path)
-      // explicit schema: an empty frame writes no part files, and schema
-      // inference over an empty directory would fail
-      spark.read.schema(df.schema).parquet(path)
-  }
-
-  /** Break lineage with the frame's blocks kept OFF-HEAP (DISK_ONLY).
-    *
-    * For a pass that must hold MANY large checkpoints alive at once —
-    * the fused graph-metrics scaffold keeps ~8 frames of 35M+ rows live
-    * until both verdict outputs materialise — on-heap localCheckpoint
-    * blocks become old-generation garbage the collector re-walks on
-    * every cycle (measured at sf10: 500s of task GC time, 36% of the
-    * fused query's task run time). DISK_ONLY trades a per-read
-    * deserialisation of small fixed-width rows for a heap that holds
-    * only the frames actually being computed. Policies that are already
-    * disk-backed (checkpoint, parquet) keep their normal behaviour.
-    */
-  def spilled(df: DataFrame, eager: Boolean): DataFrame =
-    policy(df.sparkSession) match {
-      case LocalCheckpointPolicy =>
-        org.apache.spark.sql.GraftSqlBridge.freshStats(
-          df.localCheckpoint(eager, StorageLevel.DISK_ONLY))
-      case PersistPolicy =>
-        val out = df.persist(StorageLevel.DISK_ONLY)
-        if (eager) out.count()
-        out
-      case other => withPolicy(df, other, eager)
     }
-
-  // parquet-policy scratch files this JVM wrote, releasable individually
-  private val matPaths =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** The plan node holding `df`'s materialisation: its optimized plan
-    * stripped of Project/Filter views and of the role repartition that
-    * run()-style outputs wrap their materialised frame in (the exchange
-    * is a pure view over the stored blocks or files). */
-  private def materialisedLeaf(df: DataFrame)
-      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
-    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan,
-      Project, Repartition, RepartitionByExpression}
-    @annotation.tailrec
-    def strip(p: LogicalPlan): LogicalPlan = p match {
-      case pr: Project => strip(pr.child)
-      case f: Filter => strip(f.child)
-      case r: Repartition => strip(r.child)
-      case r: RepartitionByExpression => strip(r.child)
-      case other => other
-    }
-    strip(df.queryExecution.optimizedPlan)
-  }
-
-  /** Reclaim a PARQUET-policy frame's scratch directory NOW instead of at
-    * JVM exit. ONLY for frames the caller can prove dead — an iterative
-    * loop's superseded working frame. Safe exactly because the parquet
-    * policy writes eagerly inside [[withPolicy]]: by the time the
-    * successor frame exists on disk, the predecessor's files have been
-    * fully consumed. Every other policy is a deliberate no-op — a
-    * localCheckpoint successor created lazily still READS the
-    * predecessor's blocks on first compute (unpersisting them would lose
-    * data with no lineage to recompute), and checkpoint blocks belong to
-    * the SparkContext. Without this, a long CC/bridges run under the
-    * cluster-default parquet policy accumulates one full frame copy per
-    * iteration in the scratch dir. */
-  def release(df: DataFrame): Unit = {
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    materialisedLeaf(df) match {
-      case rel: LogicalRelation => rel.relation match {
-        case fs: HadoopFsRelation =>
-          fs.location.rootPaths.map(_.toString).foreach { p =>
-            val local = p.stripPrefix("file:")
-            if (matPaths.remove(p) || matPaths.remove(local))
-              deleteRecursively(new java.io.File(local))
-          }
-        case _ =>
-      }
-      case _ =>
+    policy(spark) match {
+      case LocalCheckpointPolicy => blocks(_.localCheckpoint())
+      case PersistPolicy => blocks(_ => ())
+      case CheckpointPolicy =>
+        val sc = spark.sparkContext
+        if (sc.getCheckpointDir.isEmpty)
+          sc.setCheckpointDir(scratchDir(spark) + "/checkpoints")
+        blocks(_.checkpoint())
+      case ParquetPolicy =>
+        val path = scratchDir(spark) + f"/mat-${counter.incrementAndGet()}%06d"
+        df.write.mode("overwrite").parquet(path)
+        owned.add(path)
+        // explicit schema: an empty frame writes no part files, and schema
+        // inference over an empty directory would fail
+        spark.read.schema(df.schema).parquet(path)
     }
   }
 
-  /** Strong release for a frame whose EVERY consumer is already
-    * materialised: in addition to [[release]]'s parquet-scratch
-    * reclamation, (local)checkpoint-backed frames get their block-manager
-    * blocks dropped NOW instead of whenever the ContextCleaner's GC hook
-    * notices the dead RDD. Iterative loops need this determinism: a
-    * pointer-jump or mutual-best loop supersedes a full working frame per
-    * round, and under the localCheckpoint policy the superseded blocks
-    * (hundreds of MB each at scale) otherwise pile up in the unified
-    * memory region until storage eviction starts fighting the join/sort
-    * execution memory mid-loop — measured as 3-10x per-round time spikes
-    * in the CC jump loop at sf10.
+  /** The plan nodes holding `df`'s rows: its optimized plan with the views
+    * a materialisation is read through stripped — Project, Filter, a
+    * repartition (the stored rows, re-partitioned; with `throughShuffles`
+    * false only a coalesce) and Union (a frame stacked from several
+    * materialisations, e.g. ConnectedComponents' per-jump slices). Any
+    * other node (a join, an aggregate) ends the walk and is returned as it
+    * is. This is the one place that knows which plan shapes a
+    * materialisation produces. */
+  private def sources(df: DataFrame,
+      throughShuffles: Boolean = true): Seq[LogicalPlan] = {
+    def walk(p: LogicalPlan): Seq[LogicalPlan] = p match {
+      case v @ (_: Project | _: Filter) => walk(v.children.head)
+      case r: Repartition if throughShuffles || !r.shuffle => walk(r.child)
+      case r: RepartitionByExpression if throughShuffles => walk(r.child)
+      case u: Union => u.children.flatMap(walk)
+      case other => Seq(other)
+    }
+    walk(df.queryExecution.optimizedPlan)
+  }
+
+  /** True when re-reading `df` costs a block or file scan: stored rows
+    * under narrow views, never a recomputation of its pipeline or an
+    * exchange. */
+  def isMaterialised(df: DataFrame): Boolean =
+    sources(df, throughShuffles = false).forall {
+      case _: LogicalRDD | _: LogicalRelation | _: LocalRelation => true
+      case _ => false
+    }
+
+  /** Drop every materialisation graft made that `df` reads through views
+    * ([[sources]]): the blocks of the lineage-break RDDs and the scratch
+    * files of parquet leaves, NOW instead of whenever the ContextCleaner's
+    * GC hook or the JVM exit gets to them. Iterative loops need this: a
+    * pointer-jump or mutual-best round supersedes a full working frame,
+    * and under localCheckpoint the superseded blocks otherwise pile up in
+    * unified memory until storage eviction fights join execution mid-loop
+    * (measured as 3-10x per-round time spikes in the CC jump loop at
+    * sf10); under parquet they pile up as one frame copy per round on
+    * disk. Materialisations graft did not make — a user's cache, a file
+    * the user loaded, a driver-parallelized frame — are never touched,
+    * and nothing under a join or an aggregate is released.
     *
     * SAFETY CONTRACT (the caller's to uphold — MaterialiseSpec
-    * fault-injects the violation): a localCheckpoint has NO lineage to
-    * recompute from, so the frame must be provably dead — every successor
-    * frame derived from it must have finished materialising its own
-    * blocks (an eager breakLineage, or a count()/action that scanned all
-    * partitions). For a frame that a LAZY successor still references, use
-    * [[release]], which never drops blocks. */
-  def releaseConsumed(df: DataFrame): Unit = {
-    release(df)
-    rddUnpersistWarnSilenced
-    materialisedLeaf(df) match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false): Unit
-      case _ =>
-    }
-    // persist-policy frames: unpersist is correctness-neutral (lineage
-    // intact, a late reader recomputes), and a no-op when df isn't cached
-    df.unpersist(blocking = false): Unit
-  }
-
-  /** [[releaseConsumed]] for a frame whose plan holds SEVERAL dead
-    * materialisations: releases every (local)checkpoint-backed LogicalRDD
-    * leaf and every owned parquet-scratch relation under `df`'s plan, not
-    * just the single stripped leaf. For a frame that has just been COPIED
-    * into a fresh eager checkpoint — e.g. a ConnectedComponents labelling
-    * (whose empty-contraction path returns a UNION of per-jump slice
-    * checkpoints) re-checkpointed by an iterative caller — the union shape
-    * puts multiple dead checkpoints under one plan that releaseConsumed's
-    * strip cannot reach.
-    *
-    * SAFETY CONTRACT (stronger than [[releaseConsumed]]'s, because it
-    * applies to every leaf): the caller must have materialised a full
-    * independent copy of `df` (an eager breakLineage), and NO other live
-    * frame may share any checkpoint under this plan. Never call it on a
-    * frame whose plan still embeds another caller-visible frame (e.g. a
-    * union with a previous iteration's output that is itself returned). */
-  def releaseConsumedLeaves(df: DataFrame): Unit = {
-    rddUnpersistWarnSilenced
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    df.queryExecution.optimizedPlan.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
+    * fault-injects the violation): everything released must be DEAD.
+    * Every frame derived from it that is still to be read must already
+    * hold its own blocks or files (an eager breakLineage, or an action
+    * that scanned all partitions), and no live frame may share a released
+    * leaf — mind a Union, which releases every branch. After release a
+    * localCheckpoint or parquet frame fails loudly on any read, a persist
+    * frame recomputes from its lineage, a checkpoint frame re-reads its
+    * checkpoint files. */
+  def release(df: DataFrame): Unit =
+    sources(df).foreach {
+      case l: LogicalRDD if owned.remove(rddKey(l.rdd)) =>
+        rddUnpersistWarnSilenced
         l.rdd.unpersist(blocking = false): Unit
       case rel: LogicalRelation => rel.relation match {
         case fs: HadoopFsRelation =>
           fs.location.rootPaths.map(_.toString).foreach { p =>
             val local = p.stripPrefix("file:")
-            if (matPaths.remove(p) || matPaths.remove(local))
+            if (owned.remove(p) || owned.remove(local))
               deleteRecursively(new java.io.File(local))
           }
         case _ =>
       }
-      case _ => ()
+      case _ =>
     }
+
+  /** Exact byte size of an already-materialised frame, read WITHOUT running
+    * a Spark job: cached block sizes for block-backed leaves
+    * (memSize + diskSize of UnsafeRow blocks is the real row-byte
+    * footprint), optimizer file stats for parquet leaves, summed over a
+    * stacked frame's leaves. `None` when some leaf's size cannot be read
+    * off its materialisation (a lazy break whose blocks are not all
+    * computed yet, or a frame that is not materialised). */
+  def materialisedSizeBytes(df: DataFrame): Option[Long] = {
+    val sizes = sources(df).map {
+      case l: LogicalRDD =>
+        df.sparkSession.sparkContext.getRDDStorageInfo
+          .find(_.id == l.rdd.id)
+          .filter(i => i.numCachedPartitions == i.numPartitions)
+          .map(i => i.memSize + i.diskSize)
+      case rel: LogicalRelation =>
+        Some(rel.stats.sizeInBytes.min(BigInt(Long.MaxValue)).toLong)
+      case _ => None
+    }
+    if (sizes.forall(_.isDefined)) Some(sizes.flatten.sum) else None
   }
 
   /** Unpersisting a locally-checkpointed RDD makes Spark WARN that the
@@ -297,34 +261,6 @@ object Materialise {
     }
   }
 
-  /** Exact byte size of an already-materialised frame, read WITHOUT running
-    * a Spark job: cached block sizes for checkpoint-backed frames
-    * (`LogicalRDD` leaf — localCheckpoint blocks hold UnsafeRows, so
-    * memSize+diskSize is the real row-byte footprint), optimizer file stats
-    * for parquet-policy frames (bare relation leaf). `None` when the size
-    * cannot be read off the materialisation (persist policy keeps the full
-    * plan; a lazy checkpoint has no cached blocks yet) — callers fall back
-    * to an explicit stats query. */
-  def materialisedSizeBytes(df: DataFrame): Option[Long] = {
-    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
-    @annotation.tailrec
-    def strip(p: LogicalPlan): LogicalPlan = p match {
-      case pr: Project => strip(pr.child)
-      case f: Filter => strip(f.child)
-      case other => other
-    }
-    strip(df.queryExecution.optimizedPlan) match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        df.sparkSession.sparkContext.getRDDStorageInfo
-          .find(_.id == l.rdd.id)
-          .filter(i => i.numCachedPartitions == i.numPartitions)
-          .map(i => i.memSize + i.diskSize)
-      case rel: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        Some(rel.stats.sizeInBytes.min(BigInt(Long.MaxValue)).toLong)
-      case _ => None
-    }
-  }
-
   private def scratchDir(spark: SparkSession): String =
     spark.conf.getOption(ScratchDirKey).getOrElse {
       val d = System.getProperty("java.io.tmpdir") + "/graft-scratch-" +
@@ -338,12 +274,12 @@ object Materialise {
     f.delete(): Unit
   }
 
-  /** `df.breakLineage(eager)` — drop-in replacement for the previous
-    * hardcoded `df.localCheckpoint(eager)` call sites. */
+  /** `df.breakLineage(eager, spill)`: the one lineage break, under the
+    * session's policy. `spill` keeps block-backed policies' blocks
+    * DISK_ONLY (checkpoint files and parquet are on disk anyway). */
   implicit class Ops(private val df: DataFrame) extends AnyVal {
-    def breakLineage(eager: Boolean = false): DataFrame = Materialise(df, eager)
-    /** [[Materialise.spilled]] — lineage break whose blocks stay off-heap. */
-    def breakLineageSpilled(eager: Boolean = false): DataFrame =
-      Materialise.spilled(df, eager)
+    def breakLineage(eager: Boolean = false,
+        spill: Boolean = false): DataFrame =
+      Materialise.breakLineage(df, eager, spill)
   }
 }

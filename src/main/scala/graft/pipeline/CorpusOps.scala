@@ -122,24 +122,15 @@ object CorpusOps {
     // vocabulary of long terms must not OOM the driver just because its
     // row count looks modest. The estimate reads the ALREADY-MATERIALISED
     // frame's real byte size (cached UnsafeRow blocks / parquet file stats)
-    // — zero extra Spark jobs; only when the materialisation exposes no
-    // size (persist policy) does a one-scan stats query run, using
-    // octet_length (UTF-8 bytes, not chars) + ~48B/row for Spark's
-    // UnsafeRow+hashmap overhead so multi-byte vocabularies cannot
-    // underestimate the broadcast. The forced hint exists because the
-    // LogicalRDD leaf has no stats for Catalyst to auto-broadcast on.
+    // — zero extra Spark jobs, under every policy; a size that cannot be
+    // read (blocks lost since the eager break) counts as too big. The
+    // forced hint exists because the LogicalRDD leaf has no stats for
+    // Catalyst to auto-broadcast on.
     val estBytes = graft.operators.Materialise.materialisedSizeBytes(docFreqRaw)
-      .map(_.toDouble)
-      .getOrElse {
-        val stats = docFreqRaw
-          .agg(count(lit(1)).as("n"), avg(octet_length(col("term"))).as("len"))
-          .head()
-        stats.getLong(0) *
-          (Option(stats.get(1)).fold(0.0)(_.asInstanceOf[Double]) + 48.0)
-      }
+      .getOrElse(Long.MaxValue)
     val docFreq =
       if (Decide.broadcast(df.sparkSession, "tfidf.vocabulary",
-          estBytes.toLong) == Decide.Broadcast.Broadcasted) broadcast(docFreqRaw)
+          estBytes) == Decide.Broadcast.Broadcasted) broadcast(docFreqRaw)
       else docFreqRaw
     val total = df.agg(count(lit(1)).as("__n"))
     val w = Window.partitionBy(idCol)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
  * Minimal bridge into `private[sql]` Spark internals needed to build
  * `Column`s from raw Catalyst `Expression`s (the supported extension path
  * for libraries shipping custom expressions on Spark 4's split sql/api
- * modules).
+ * modules) and to build a frame over a `LogicalRDD` plan leaf.
  */
 object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -25,33 +25,44 @@ object GraftSqlBridge {
   def parseExpression(sql: String): Expression =
     classic.SparkSession.active.sessionState.sqlParser.parseExpression(sql)
 
-  /** Rewrap a frame's physical RDD in a fresh `LogicalRDD` WITHOUT the
-    * origin plan's statistics or constraints (no Row re-encoding — the
-    * InternalRow RDD is reused as-is).
+  /** Compute `df` into an RDD of rows persisted at `level` and return it
+    * with a frame over it whose plan is one fresh `LogicalRDD` leaf:
+    * the one construction behind every block-backed lineage break
+    * (`graft.operators.Materialise`). `mark` runs on the persisted RDD
+    * before anything computes it (`localCheckpoint()`, `checkpoint()`,
+    * or nothing); `eager` computes every partition now with one job.
     *
-    * Why: Spark 4's `Dataset.checkpoint`/`localCheckpoint` copy the
-    * origin plan's size estimate onto the new `LogicalRDD`
-    * (`LogicalRDD.rewriteStatsAndConstraints`). Catalyst's size-only join
-    * estimate MULTIPLIES child sizes, so an iterative loop whose
-    * per-round plan joins previous checkpoints compounds the carried
-    * estimate exponentially — after a dozen rounds the BigInt size has
-    * millions of digits and every subsequent stats visit pins the driver
-    * in BigInteger multiplication. Dropping the carried stats resets each
-    * round to the (finite) default size estimate; runtime broadcast
-    * decisions are unaffected because AQE re-plans from ACTUAL sizes. */
-  def freshStats(df: DataFrame): DataFrame = {
+    * The leaf keeps the executed plan's output partitioning and ordering,
+    * so joins and aggregates on the same keys stay exchange-free, and it
+    * carries NO statistics or constraints from the origin plan. Spark's
+    * own `Dataset.checkpoint` copies the origin's size estimate onto its
+    * leaf, and Catalyst's size-only join estimate MULTIPLIES child sizes:
+    * a loop whose rounds join earlier checkpoints compounds the carried
+    * estimate until every stats visit pins the driver in BigInteger
+    * multiplication. A leaf with default stats keeps each round's
+    * estimate bounded; AQE still re-plans from actual sizes. */
+  def rddLeaf(df: DataFrame, level: org.apache.spark.storage.StorageLevel,
+      mark: org.apache.spark.rdd.RDD[catalyst.InternalRow] => Unit,
+      eager: Boolean)
+      : (DataFrame, org.apache.spark.rdd.RDD[catalyst.InternalRow]) = {
+    import catalyst.plans.physical.{Partitioning, PartitioningCollection}
+    @annotation.tailrec
+    def firstLeaf(p: Partitioning): Partitioning = p match {
+      case c: PartitioningCollection => firstLeaf(c.partitionings.head)
+      case other => other
+    }
     val c = df.asInstanceOf[classic.Dataset[Row]]
-    c.queryExecution.logical match {
-      // checkpointed frames: rebuild the SAME LogicalRDD minus the origin
-      // stats/constraints — crucially KEEPING outputPartitioning and
-      // ordering, so downstream joins/aggregates on the checkpoint key
-      // stay exchange-free
-      case l: execution.LogicalRDD =>
-        classic.Dataset.ofRows(c.sparkSession,
-          execution.LogicalRDD(l.output, l.rdd, l.outputPartitioning,
-            l.outputOrdering, l.isStreaming, l.stream)(c.sparkSession))
-      case _ =>
-        c.sparkSession.internalCreateDataFrame(c.queryExecution.toRdd, c.schema)
+    val qe = c.queryExecution
+    execution.SQLExecution.withNewExecutionId(qe, Some("breakLineage")) {
+      val plan = qe.executedPlan
+      val rdd = plan.execute().map(_.copy())
+      rdd.persist(level)
+      mark(rdd)
+      if (eager) rdd.count()
+      val leaf = execution.LogicalRDD(c.logicalPlan.output, rdd,
+        firstLeaf(plan.outputPartitioning), plan.outputOrdering,
+        c.isStreaming)(c.sparkSession)
+      (classic.Dataset.ofRows(c.sparkSession, leaf), rdd)
     }
   }
 }

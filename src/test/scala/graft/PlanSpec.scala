@@ -74,7 +74,7 @@ class PlanSpec extends SparkSpec {
     import graft.operators.Materialise.Ops
     // a tiny frame with real stats fits the 256MB default
     assert(Decide.broadcastByStats("records", people))
-    // a lineage-broken frame has its origin stats dropped (freshStats) —
+    // a lineage-broken frame is a fresh leaf without the origin stats —
     // unknown estimates high and must DECLINE, never broadcast blind
     assert(!Decide.broadcastByStats("records", people.breakLineage(true)))
     // Spark's own broadcast off switch turns graft's broadcasts off too

@@ -1,15 +1,39 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.model._
 import graft.model.{LevelLibrary => ll}
+import graft.operators.Materialise
 
 /** Cache / table-management surface (`linker_components/table_management.py`,
   * `inference.py:124-158`): pre-computed blocked pairs drive predict,
   * cache invalidation recomputes, query_sql exposes named intermediates. */
 class TableManagementSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Cached partitions of a block-backed lineage break's leaf RDD. */
+  private def cachedPartitions(df: DataFrame): Int = {
+    val rdd = df.queryExecution.optimizedPlan match {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+      case other => fail(s"expected a LogicalRDD leaf, got:\n$other")
+    }
+    spark.sparkContext.getRDDStorageInfo.find(_.id == rdd.id)
+      .fold(0)(_.numCachedPartitions)
+  }
+
+  /** Scratch directories under a parquet lineage break. */
+  private def scratchFiles(df: DataFrame): Seq[java.io.File] =
+    df.queryExecution.optimizedPlan.collectLeaves().collect {
+      case rel: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        rel.relation match {
+          case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+            fs.location.rootPaths.map(p => new java.io.File(p.toUri.getPath))
+          case _ => Nil
+        }
+    }.flatten
 
   private def records = Seq(
     (0L, "John", "London"), (1L, "John", "Leeds"), (2L, "John", "London"),
@@ -62,18 +86,51 @@ class TableManagementSpec extends SparkSpec {
 
   test("invalidateCache releases the materialised blocked-pairs copy " +
       "(persist policy: storage freed, not just the reference dropped)") {
-    import graft.operators.Materialise
     Materialise.withSessionPolicy(spark, Materialise.PersistPolicy) {
       val linker = new Linker(records, settings)
       val pairs = linker.computeBlockedPairsForPredict()
-      assert(pairs.storageLevel.useMemory || pairs.storageLevel.useDisk,
-        "compute should have persisted the pairs frame")
+      assert(cachedPartitions(pairs) > 0,
+        "compute should have persisted the pairs frame's blocks")
       linker.invalidateCache()
-      assert(pairs.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
-        "invalidateCache must unpersist the materialised pairs copy")
+      assert(cachedPartitions(pairs) == 0,
+        "invalidateCache must drop the materialised pairs copy's blocks")
+      // persist keeps lineage: a held copy recomputes
+      assert(pairs.count() == 4)
       // and predict still works from scratch afterwards
       assert(linker.predict().count() == 4)
     }
+  }
+
+  test("invalidateCache frees only graft's copies, under every other policy") {
+    Seq(Materialise.LocalCheckpointPolicy, Materialise.CheckpointPolicy,
+        Materialise.ParquetPolicy).foreach { p =>
+      Materialise.withSessionPolicy(spark, p) {
+        val linker = new Linker(records, settings)
+        val pairs = linker.computeBlockedPairsForPredict()
+        val scratch = scratchFiles(pairs)
+        if (p == Materialise.ParquetPolicy) assert(scratch.exists(_.exists))
+        else assert(cachedPartitions(pairs) > 0, s"blocks under ${p.name}")
+        linker.invalidateCache()
+        if (p == Materialise.ParquetPolicy)
+          assert(!scratch.exists(_.exists), "scratch files must be deleted")
+        else assert(cachedPartitions(pairs) == 0, s"blocks under ${p.name}")
+        // a held copy is dead: without lineage it fails loudly; a reliable
+        // checkpoint re-reads its files
+        if (p == Materialise.CheckpointPolicy) assert(pairs.count() == 4)
+        else intercept[Exception](pairs.count())
+        assert(linker.predict().count() == 4, s"predict under ${p.name}")
+      }
+    }
+    // a frame the caller registered is the caller's: its cache survives
+    val linker = new Linker(records, settings)
+    val mine = Seq(("0", 0L, 2L)).toDF("match_key", "join_key_l", "join_key_r")
+      .cache()
+    assert(mine.count() == 1)
+    linker.registerBlockedPairsForPredict(mine)
+    linker.invalidateCache()
+    assert(mine.storageLevel != StorageLevel.NONE,
+      "invalidateCache must not unpersist a caller's frame")
+    mine.unpersist()
   }
 
   test("registerBlockedPairsForPredict validates the frame's columns") {
