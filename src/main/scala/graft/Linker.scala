@@ -117,24 +117,6 @@ class Linker(val inputs: Seq[(String, DataFrame)], initialSettings: LinkSettings
     spark.sql(sql)
   }
 
-  /** Opt-in (`spark.graft.autoSalt=true`): run the [[SaltAdvisor]]'s
-    * one-aggregate probe on each plain equi-blocking rule and salt the
-    * ones whose largest block exceeds an even per-task share, so a hot
-    * key cannot concentrate a quadratic pair blow-up on one task at
-    * predict time. Rules already salted by hand, non-equi rules, and
-    * exploding rules pass through untouched; the salted join is
-    * output-identical to the unsalted one (the sub-joins partition the
-    * left side by hash). */
-  private def maybeAutoSalt(rules: Seq[BlockingRule]): Seq[BlockingRule] =
-    if (!spark.conf.get("spark.graft.autoSalt", "false").toBoolean) rules
-    else rules.map {
-      case r: BlockingRule.BlockOnRule
-          if r.salts <= 1 && r.arraysToExplode.isEmpty =>
-        val a = SaltAdvisor.advise(concat, r)
-        if (a.recommendedSalts > 1) a.applied else r
-      case other => other
-    }
-
   /** Suggest blocking rules for this model's own comparison columns under
     * a comparison budget ([[graft.operators.BlockingAdvisor]]): the
     * candidate lattice is the model's comparison output columns (the
@@ -170,9 +152,7 @@ class Linker(val inputs: Seq[(String, DataFrame)], initialSettings: LinkSettings
         val sorted = inputs.map(_._1).zip(withSd).sortBy(_._1)
         Some((sorted.head._2, sorted.last._2))
       } else None
-    val effective = settings.copy(
-      blockingRules = maybeAutoSalt(settings.blockingRules))
-    Blocking.blockedIdPairs(concat, effective, twoFrames)
+    Blocking.blockedIdPairs(concat, settings, twoFrames)
   }
 
   /** Whether the record frame BROADCASTS into the pairs-to-records joins

@@ -254,29 +254,6 @@ object SparkEntry {
           col("join_key_r").cast("bigint").as("uid_r"))
     }),
 
-    // AUTO-salted blocking through the full Linker path
-    // (`spark.graft.autoSalt=true`): c_mktsegment has 5 values, so the
-    // largest block far exceeds an even per-task share and the advisor
-    // salts the rule at plan time. The oracle is the PLAIN unsalted join —
-    // auto-salting is a physical rewrite only
-    "q_autosalt_pairs" -> ((s, dir) => {
-      val c = pq(s, dir, "customer").filter(col("c_custkey") % 20 === 0)
-        .select(col("c_custkey").as("unique_id"), col("c_mktsegment"))
-      val settings = LinkSettings(linkType = LinkType.DedupeOnly,
-        blockingRules = Seq(BlockingRule.blockOn("c_mktsegment")),
-        comparisons = Seq(Comparison("c_mktsegment", Seq(
-          ll.nullLevel("c_mktsegment"),
-          ll.exactMatch("c_mktsegment").withM(0.9).withU(0.2),
-          ll.elseLevel.withM(0.1).withU(0.8)))))
-      s.conf.set("spark.graft.autoSalt", "true")
-      try {
-        // blockedIdPairs probes + rewrites the rules eagerly at call time
-        new Linker(c, settings).blockedIdPairs()
-          .select(col("join_key_l").cast("bigint").as("uid_l"),
-            col("join_key_r").cast("bigint").as("uid_r"))
-      } finally s.conf.unset("spark.graft.autoSalt")
-    }),
-
     // §2.3 multi-rule dedupe with match_key
     "q_multi_rule_pairs" -> ((s, dir) => {
       Blocking.blockedIdPairs(customers(s, dir), customerSettings)
@@ -557,12 +534,15 @@ object SparkEntry {
     }),
 
     // the SAME component solve FORCED through the fully distributed
-    // min-label + pointer-jumping loop (smallGraphThreshold = 0 disables
-    // the driver union-find fast path) — the 100 TB path, under the same
-    // oracle, and on the bench's sf1 scale point for a measured slope
+    // min-label + pointer-jumping loop (the collect decision pinned to
+    // distributed skips the driver union-find) — the 100 TB path, under
+    // the same oracle, and on the bench's sf1 scale point for a measured
+    // slope
     "q_cluster_dist" -> ((s, dir) => {
-      ConnectedComponents.run(orderPathEdges(s, dir), smallGraphThreshold = 0L,
-        assumeDistinctPairs = true)
+      Decide.forcing(Decide.Collect -> Decide.Collect.Distributed) {
+        ConnectedComponents.run(orderPathEdges(s, dir),
+          assumeDistinctPairs = true)
+      }
     }),
 
     // §2.5 window functions: cluster sizes + rank of node within cluster
@@ -1004,13 +984,15 @@ object SparkEntry {
     }),
 
     // the SAME constrained single round FORCED through the distributed
-    // mutual-best loop (smallGraphThreshold = 0 disables the gated driver
-    // fast path) — same oracle, and on the bench's sf1 scale point
+    // mutual-best loop (the collect decision pinned to distributed skips
+    // the driver solve) — same oracle, and on the bench's sf1 scale point
     "q_one_to_one_dist" -> ((s, dir) => {
       val (edges, nodeDs) = constrainedOneToOneInputs(s, dir)
-      ClusteringOps.oneToOneConstrained(edges, nodeDs, maxRounds = 1,
-        duplicateFreeDatasets = Some(Seq("ds0", "ds1")), tiesMethod = "drop",
-        smallGraphThreshold = 0L)
+      Decide.forcing(Decide.Collect -> Decide.Collect.Distributed) {
+        ClusteringOps.oneToOneConstrained(edges, nodeDs, maxRounds = 1,
+          duplicateFreeDatasets = Some(Seq("ds0", "ds1")),
+          tiesMethod = "drop")
+      }
     }),
 
     // multimodal: opaque binary payload + codegen'd metadata triage
@@ -2069,14 +2051,6 @@ object SparkEntry {
     // salted-blocking replay: salting is a physical rewrite only, so the
     // oracle is simply the unsalted hot-key join
     "q_salted_pairs" ->
-      """SELECT l.c_custkey AS uid_l, r.c_custkey AS uid_r
-        |FROM customer l JOIN customer r
-        |  ON l.c_mktsegment = r.c_mktsegment AND l.c_custkey < r.c_custkey
-        |WHERE l.c_custkey % 20 = 0 AND r.c_custkey % 20 = 0""".stripMargin,
-
-    // auto-salt replay: identical — the advisor-driven rewrite must not
-    // change the pair set either
-    "q_autosalt_pairs" ->
       """SELECT l.c_custkey AS uid_l, r.c_custkey AS uid_r
         |FROM customer l JOIN customer r
         |  ON l.c_mktsegment = r.c_mktsegment AND l.c_custkey < r.c_custkey

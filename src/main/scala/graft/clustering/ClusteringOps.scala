@@ -30,8 +30,7 @@ object ClusteringOps {
   def oneToOne(edges: DataFrame, srcCol: String = "unique_id_l",
       dstCol: String = "unique_id_r",
       probCol: String = "match_probability",
-      maxRounds: Int = 10,
-      smallGraphThreshold: Long = -1L)
+      maxRounds: Int = 10)
       : DataFrame = {
     var remaining = edges.select(col(srcCol).as("a"), col(dstCol).as("b"),
       col(probCol).as("p")).filter(col("a") =!= col("b")).breakLineage()
@@ -39,7 +38,7 @@ object ClusteringOps {
     // long ids only — other id types take the distributed loop
     if (remaining.schema("a").dataType == org.apache.spark.sql.types.LongType &&
         Decide.collect("one_to_one.edges", remaining.count(),
-          Decide.GraphEdges, smallGraphThreshold) == Decide.Collect.Driver)
+          Decide.GraphEdges) == Decide.Collect.Driver)
       return driverOneToOne(remaining, maxRounds)
     val matched = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var round = 0
@@ -178,8 +177,7 @@ object ClusteringOps {
       srcCol: String = "unique_id_l", dstCol: String = "unique_id_r",
       probCol: String = "match_probability", maxRounds: Int = 10,
       duplicateFreeDatasets: Option[Seq[String]] = None,
-      tiesMethod: String = "lowest_id",
-      smallGraphThreshold: Long = -1L)
+      tiesMethod: String = "lowest_id")
       : DataFrame = {
     require(Seq("lowest_id", "drop").contains(tiesMethod),
       "ties_method must be one of 'drop', or 'lowest_id'")
@@ -212,7 +210,7 @@ object ClusteringOps {
       e0raw.schema("p").dataType == org.apache.spark.sql.types.DoubleType
     val probedEdges = if (longIds) e0raw.count() else -1L
     if (longIds && Decide.collect("one_to_one_constrained.edges", probedEdges,
-        Decide.GraphEdges, smallGraphThreshold) == Decide.Collect.Driver)
+        Decide.GraphEdges) == Decide.Collect.Driver)
       return driverOneToOneConstrained(e0raw, nodeDatasets,
         duplicateFreeDatasets, tiesMethod, maxRounds)
     // Count-based broadcast decision for frames sized BY the edge count

@@ -2,6 +2,7 @@ package graft.clustering
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.ArrayType
 import graft.operators.{Decide, Materialise}
 import graft.operators.Materialise.Ops
 
@@ -20,12 +21,20 @@ import graft.operators.Materialise.Ops
  * a closed cluster shares one representative r, node r itself is a member
  * and r is the component minimum, so labels are canonical.
  *
+ * One entry: the raw two-column edge list, in one id type, goes behind one
+ * lazy lineage break and is counted once — that count computes every block,
+ * so the caller's pipeline runs once — and one [[Decide.collect]] on the
+ * count picks the path. A graph under the driver budget is collected from
+ * that leaf and solved by union-find; a larger one runs distributed
+ * contraction levels, each sized from the bytes its input leaf measurably
+ * holds, never from an optimizer estimate.
+ *
  * Every iteration breaks lineage via [[graft.operators.Materialise]]
  * (policy-selectable: localCheckpoint locally, parquet/checkpoint on a
  * cluster) — without lineage breaks the plan
  * doubles per round (the reference persists each iteration for the same
  * reason, `spark/database_api.py:292-311`). The exit condition costs one
- * `isEmpty` action per round, mirroring the reference's count query.
+ * count per round, mirroring the reference's count query.
  */
 object ConnectedComponents {
 
@@ -34,8 +43,15 @@ object ConnectedComponents {
     * data; exiting the loop with movers left fails loudly. */
   val MaxJumps: Int = 40
 
+  /** Cap on distributed contraction levels. Each level merges every node
+    * that has a neighbour, so the node count at least halves per level and
+    * 40 levels cover 2^40 nodes; a graph still contracting past the cap
+    * fails loudly instead of returning unmerged labels. */
+  val MaxLevels: Int = 40
+
   /**
-   * @param edges frame with two node-id columns (self-loops and duplicates ok)
+   * @param edges frame with two node-id columns (self-loops and duplicates
+   *        ok); both are coerced to one common id type
    * @param assumeDistinctPairs caller-declared hint that `edges` holds
    *        each undirected pair at most once, in one orientation (true
    *        for predict outputs — blocking emits `id_l < id_r` pairs once —
@@ -44,126 +60,106 @@ object ConnectedComponents {
    *        a violated promise only means duplicate edges flow through the
    *        solve (min-propagation, jumps and contraction are all
    *        duplicate-insensitive), never a wrong labelling.
-   * @param smallGraphThreshold symmetric-edge count up to which a level
-   *        is solved on the driver (collect + union-find); -1 leaves it to
-   *        [[graft.operators.Decide.collect]]'s heap-clamped default
    * @return DataFrame(node_id, cluster_id), one row per node that appears
    *         in any edge; cluster_id = min node id in the component.
    */
   def run(edges: DataFrame, srcCol: String = "unique_id_l",
-      dstCol: String = "unique_id_r", maxIterations: Int = 60,
-      eager: Boolean = false,
-      smallGraphThreshold: Long = -1L,
+      dstCol: String = "unique_id_r",
       assumeDistinctPairs: Boolean = false): DataFrame =
-    solve(edges, srcCol, dstCol, maxIterations, eager, smallGraphThreshold,
-      assumeDistinctPairs, MaxJumps)
+    solve(edges, srcCol, dstCol, assumeDistinctPairs)
 
   private[graft] def solve(edges: DataFrame, srcCol: String, dstCol: String,
-      maxIterations: Int, eager: Boolean, smallGraphThreshold: Long,
-      assumeDistinctPairs: Boolean, maxJumps: Int): DataFrame = {
-    val spark = edges.sparkSession
-    // Already-materialised input (a lineage break or local relation under
-    // views, Materialise.isMaterialised): the count and the driver collect both
-    // re-read it for near-free, so the symmetric-explode / exchange /
-    // dedupe / checkpoint machinery below is pure overhead on small graphs
-    // (union-find needs neither symmetry nor dedupe). Unmaterialised
-    // pipelines keep the symmetric path, which evaluates them once. The
-    // raw path needs one shared id type (the symmetric path coerces mixed
-    // types via explode(array)).
-    if (edges.schema(srcCol).dataType == edges.schema(dstCol).dataType &&
-        Materialise.isMaterialised(edges)) {
-      val raw = edges.select(col(srcCol), col(dstCol))
-      val rawCount = raw.count()
-      // symmetric+deduped count <= 2*raw count: never a too-big graph to
-      // the driver, at worst a borderline one to the distributed loop
-      if (Decide.collect("cc.raw_edges", rawCount * 2, Decide.GraphEdges,
-          smallGraphThreshold) == Decide.Collect.Driver)
-        return driverUnionFind(raw)
-    }
+      assumeDistinctPairs: Boolean, maxJumps: Int = MaxJumps,
+      maxLevels: Int = MaxLevels): DataFrame = {
+    val leaf = edgeList(edges, srcCol, dstCol)
+    // the one count computes every block of the leaf, so the caller's
+    // pipeline runs exactly once whichever path the count picks
+    solveLeaf(leaf, leaf.count(), assumeDistinctPairs, maxJumps, 1,
+      maxLevels)
+  }
 
-    // Symmetric neighbour list (`connected_components.py:169-190`),
-    // hash-partitioned on node_id to the Neighbours role count
-    // (`spark/database_api.py:261`, `__splink__df_neighbours` ÷4) before
-    // the checkpoint: the loop re-joins this frame on node_id every round,
-    // so the one exchange buys both even materialised partitions and
-    // co-location for those joins.
-    // One exchange does both: HashPartitioning(node_id) satisfies the
-    // dedupe's clustered distribution (all copies of a pair share node_id),
-    // so the distinct runs in-place on the role-partitioned frame.
-    // Both directions come from ONE explode over a single scan — a
-    // `fwd UNION ALL bwd` plan evaluates the upstream edge plan twice
-    // (Spark does not CSE across union branches), which doubles the cost
-    // of every caller whose edges are an unmaterialised join pipeline
-    // (minhash-LSH candidates, predict output).
-    val symmetric = edges
-      .select(explode(array(
-        struct(col(srcCol).as("node_id"), col(dstCol).as("neighbour")),
-        struct(col(dstCol).as("node_id"), col(srcCol).as("neighbour")))).as("e"))
-      .select(col("e.node_id"), col("e.neighbour"))
-      .filter(col("node_id") =!= col("neighbour"))
-    // SIZE-FLOORED key exchange: the Neighbours role (÷4) alone collapses
-    // to 4 partitions at 32 shuffle partitions, and since the whole loop
-    // (propagation groupBy, contraction's node-keyed join) inherits this
-    // partitioning exchange-free, an under-sized exchange serialises the
-    // heaviest aggregates onto a few cores. The optimizer's size estimate
-    // of the INPUT plan is the signal — x2 for the symmetric explode and
-    // x4 because file-source stats are COMPRESSED bytes while the
-    // exchange moves decompressed unsafe rows (encoded parquet
-    // longs/strings expand ~4x into row format). Unknown-size checkpoint
-    // inputs estimate high and simply keep the session's parallelism.
-    val inputBytes =
-      try edges.queryExecution.optimizedPlan.stats.sizeInBytes * 8
-      catch { case _: Exception => BigInt(0) }
-    val keyed = graft.operators.Repartition
-      .sizedByKeys(symmetric, graft.operators.Repartition.Neighbours,
-        inputBytes, col("node_id"))
-    // dedupe is skippable under the caller's distinct-pairs promise: a
-    // single-orientation distinct input explodes to a duplicate-free
-    // symmetric frame, so the in-place aggregate would be pure cost
-    //
-    // ON-HEAP vs DISK_ONLY blocks per level: the loop re-reads these
-    // frames every round, so on-heap measured faster (q_cluster 39.4 vs
-    // 46.9s at sf10) until the estimated symmetric frame (x2 the input)
-    // outgrows the spill budget; then every frame of this LEVEL goes
-    // DISK_ONLY, and recursion levels re-decide on their contracted size.
-    var spillFrames = Decide.spill(spark, "cc.symmetric_estimate",
-      inputBytes * 2) == Decide.Spill.DiskOnly
-    var neighbours = (if (assumeDistinctPairs) keyed else keyed.dropDuplicates())
-      .breakLineage(eager, spillFrames)
+  /** The raw two-column edge list `(src, dst)`, both columns cast to the
+    * type `array(src, dst)` coerces them to, behind one lazy lineage
+    * break. */
+  private[graft] def edgeList(edges: DataFrame, srcCol: String,
+      dstCol: String): DataFrame = {
+    val ids = edges.select(array(col(srcCol), col(dstCol))).schema.head
+      .dataType.asInstanceOf[ArrayType].elementType
+    edges.select(col(srcCol).cast(ids).as("src"),
+      col(dstCol).cast(ids).as("dst")).breakLineage()
+  }
 
-    val edgeCount = neighbours.count()
-    if (Decide.collect("cc.edges", edgeCount, Decide.GraphEdges,
-        smallGraphThreshold) == Decide.Collect.Driver) {
-      val solved = driverUnionFind(neighbours)
-      // the collect fully consumed the symmetric frame; the output is a
+  /** Solves a counted `(src, dst)` lineage break of `count` rows, which
+    * this call owns and releases once it is consumed. The driver path
+    * needs neither symmetry nor dedupe (union-find is direction- and
+    * duplicate-insensitive); the symmetric frame the distributed level
+    * builds holds at most `2 * count` edges. */
+  private def solveLeaf(edges: DataFrame, count: Long,
+      assumeDistinctPairs: Boolean, maxJumps: Int, depth: Int,
+      maxLevels: Int): DataFrame = {
+    if (Decide.collect("cc.edges", 2 * count, Decide.GraphEdges) ==
+        Decide.Collect.Driver) {
+      val solved = driverUnionFind(edges)
+      // the collect fully consumed the leaf; the output is a
       // driver-parallelized RDD with no reference to it
-      Materialise.release(neighbours)
+      Materialise.release(edges)
       return solved
     }
+    if (depth > maxLevels)
+      throw new IllegalStateException(
+        s"connected-components contraction hit the level cap ($maxLevels " +
+          s"levels) with $count edge(s) still between clusters: the " +
+          s"labelling has not merged every component. The default cap " +
+          s"covers 2^40 nodes; hitting it indicates either a forced low " +
+          s"cap or corrupt input ids.")
+    val spark = edges.sparkSession
 
     // DISTRIBUTED level: recursive contraction. One propagation round
     // (each node takes the min over itself and its neighbours — an
-    // exchange-free groupBy, the checkpointed neighbours frame already
-    // carries hash(node_id) partitioning) plus one pointer jump
-    // (rep := min(rep, rep(rep))), then the graph CONTRACTS to rep-level
-    // edges and the whole solve recurses on the contracted graph. Each
-    // level merges every node with at least one neighbour, so the node
-    // count at least halves per level (<= log2 N levels), and in practice
-    // one level shrinks the graph below the driver gate. Each level pays
-    // ~2 full-frame shuffles (arXiv:1802.09478's alternating contraction;
-    // the reference's fixpoint loop, `connected_components.py:121-335`,
-    // pays 4 per round over the full frame).
-    // exact post-count spill decision (~48B per stored row of two longs):
-    // catches CHECKPOINT-fed inputs whose stats were unknown. The one-time
-    // re-break writes the on-heap checkpoint DISK_ONLY and frees the heap
-    // copy before the first aggregate needs the execution pool.
-    if (!spillFrames && Decide.spill(spark, "cc.edges",
-        BigInt(edgeCount) * 48) == Decide.Spill.DiskOnly) {
-      spillFrames = true
-      val offHeap = neighbours.breakLineage(eager = true, spill = true)
-      Materialise.release(neighbours)
-      neighbours = offHeap
-    }
+    // exchange-free groupBy, the neighbours frame carries hash(node_id)
+    // partitioning) plus pointer jumps to closure, then the graph
+    // CONTRACTS to rep-level edges and the solve recurses on the
+    // contracted graph. Each level merges every node with at least one
+    // neighbour, so the node count at least halves per level, and in
+    // practice one level shrinks the graph below the driver gate. Each
+    // level pays ~2 full-frame shuffles (arXiv:1802.09478's alternating
+    // contraction; the reference's fixpoint loop,
+    // `connected_components.py:121-335`, pays 4 per round over the full
+    // frame).
+    //
+    // Symmetric neighbour list (`connected_components.py:169-190`), both
+    // directions from ONE explode over the leaf, hash-partitioned on
+    // node_id: the loop re-joins this frame on node_id every round, so the
+    // one exchange buys even partitions and co-location for those joins,
+    // and it satisfies the dedupe's clustered distribution (all copies of
+    // a pair share node_id), so the distinct runs in place.
+    val symmetric = edges
+      .select(explode(array(
+        struct(col("src").as("node_id"), col("dst").as("neighbour")),
+        struct(col("dst").as("node_id"), col("src").as("neighbour")))).as("e"))
+      .select(col("e.node_id"), col("e.neighbour"))
+      .filter(col("node_id") =!= col("neighbour"))
+    // MEASURED size: the counted leaf's block (or file) bytes, doubled by
+    // the explode. It floors the exchange's partition count — the
+    // Neighbours role (÷4) alone collapses to 4 partitions at 32 shuffle
+    // partitions, and the whole loop inherits this partitioning — and
+    // decides whether this level's frames stay on-heap (the loop re-reads
+    // them every round; on-heap measured faster, q_cluster 39.4 vs 46.9s
+    // at sf10) or go DISK_ONLY once they outgrow the spill budget.
+    // Recursion levels re-decide on their contracted size. A leaf with no
+    // cached block (an empty frame) has no readable size and reads 0.
+    val symmetricBytes =
+      BigInt(Materialise.materialisedSizeBytes(edges).getOrElse(0L)) * 2
+    val keyed = graft.operators.Repartition.sizedByKeys(symmetric,
+      graft.operators.Repartition.Neighbours, symmetricBytes, col("node_id"))
+    val spillFrames = Decide.spill(spark, "cc.neighbours", symmetricBytes) ==
+      Decide.Spill.DiskOnly
+    // dedupe is skippable under the caller's distinct-pairs promise: a
+    // single-orientation distinct input explodes to a duplicate-free
+    // symmetric frame. EAGER, so the leaf it reads is dead at once.
+    val neighbours = (if (assumeDistinctPairs) keyed else keyed.dropDuplicates())
+      .breakLineage(eager = true, spillFrames)
+    Materialise.release(edges)
     // rep := min(self, neighbours). The rep pointers form a FOREST (each
     // pointer strictly decreases the id, so no cycles); roots are local
     // minima.
@@ -205,8 +201,9 @@ object ConnectedComponents {
     // strong-released each jump.
     // The split pays its per-jump fixed costs (an extra job + fresh
     // codegen for the persist/split plans) only when the node frames are
-    // big enough for write-volume savings to dominate (Decide.jumpSplit).
-    val splitJumps = Decide.jumpSplit("cc.jumps", edgeCount) ==
+    // big enough for write-volume savings to dominate (Decide.jumpSplit),
+    // sized by the symmetric edge bound.
+    val splitJumps = Decide.jumpSplit("cc.jumps", 2 * count) ==
       Decide.JumpSplit.Split
     // LATE-JUMP BROADCAST: a jump is a left join of `active` against the
     // full pointer table, so sort-merge exchanges the whole lookup side
@@ -283,7 +280,7 @@ object ConnectedComponents {
         jumping = activeCount > 0
       } else {
         // whole-frame jump: one checkpoint + one count job per jump
-        val j = jPlan.breakLineage(eager, spillFrames)
+        val j = jPlan.breakLineage(spill = spillFrames)
         val m = j.filter(col("representative") =!= col("__old_rep")).count()
         movers = m
         jumping = m > 0
@@ -315,25 +312,25 @@ object ConnectedComponents {
     // halves the symmetric frame through both joins; the recursive call's
     // own explode re-symmetrises). First join is co-located on node_id;
     // the neighbour-keyed join is the level's one unavoidable reshuffle.
-    // MATERIALISED here: the recursion would evaluate this pipeline anyway
-    // (its own symmetric+count), a flat frame lets the non-empty case hit
-    // the raw driver-gate probe directly, and the EMPTY case — every edge
-    // internal to one pointer tree, i.e. components == trees, the common
-    // outcome for path/tree-like graphs once jumps run to closure — can
-    // skip the sub-solve AND the whole-node-frame compose join below
-    // (measured ~40% of the level's wall time on 13.5M path edges).
+    // MATERIALISED and counted here: the count is the recursion's edge
+    // count, so the next level neither breaks nor counts it again, and the
+    // EMPTY case — every edge internal to one pointer tree, i.e.
+    // components == trees, the common outcome for path/tree-like graphs
+    // once jumps run to closure — skips the sub-solve AND the
+    // whole-node-frame compose join below (measured ~40% of the level's
+    // wall time on 13.5M path edges).
     val contracted =
       neighbours.filter(col("node_id") < col("neighbour")).alias("e")
         .join(reps.alias("rl"), col("e.node_id") === col("rl.node_id"))
         .join(reps.alias("rr"), col("e.neighbour") === col("rr.node_id"))
         .filter(col("rl.representative") =!= col("rr.representative"))
-        .select(col("rl.representative").as("rep_l"),
-          col("rr.representative").as("rep_r"))
-        .breakLineage(eager, spillFrames)
+        .select(col("rl.representative").as("src"),
+          col("rr.representative").as("dst"))
+        .breakLineage(spill = spillFrames)
     // wide count(), not isEmpty: executeTake(1) would materialise the
     // just-checkpointed frame in serial 1/4/16-partition waves exactly in
     // the empty case (same fix as the jump probe above)
-    val contractedEmpty = contracted.count() == 0
+    val contractedCount = contracted.count()
     // the contraction is on disk/cache now, so the symmetric neighbour
     // frame is fully consumed — reclaim its scratch AND blocks immediately
     // (the jump frames are checkpoint-backed, so nothing recomputes
@@ -341,15 +338,17 @@ object ConnectedComponents {
     // accumulates one ~2x-edge-list copy per solve per level
     Materialise.release(neighbours)
     val out =
-      if (maxIterations <= 1) reps // safety valve, mirrors the old loop cap
-      else if (contractedEmpty) reps
       // single tree per component: the root IS the component minimum (the
       // min m of a component has no smaller neighbour, so rep(m)=m makes
       // m a root; with no cross-tree edge the component's one root is m),
       // so reps is already the canonical labelling — return it directly.
-      else {
-        val sub = solve(contracted, "rep_l", "rep_r", maxIterations - 1,
-          eager, smallGraphThreshold, false, maxJumps)
+      if (contractedCount == 0) {
+        Materialise.release(contracted)
+        reps
+      } else {
+        // the sub-solve owns contracted and releases it once consumed
+        val sub = solveLeaf(contracted, contractedCount, false, maxJumps,
+          depth + 1, maxLevels)
         // compose: final label = sub-solution of the node's rep; reps with
         // no cross-cluster edge never reach the contracted graph and keep
         // their (already canonical) label. The compose is MATERIALISED
@@ -372,35 +371,29 @@ object ConnectedComponents {
               .as("representative"))
           .breakLineage(eager = true, spillFrames)
         // the compose supersedes the settled-slice and active checkpoints
-        // (reps is their union), contracted, AND the recursion's returned
-        // labelling (sub — release reads through its role repartition and
-        // the union of its own slices); reclaim all of them now. In the
-        // empty/valve paths reps IS the output, so only this branch may
-        // release the slices.
-        Seq(reps, contracted, sub).foreach(Materialise.release)
+        // (reps is their union) AND the recursion's returned labelling
+        // (sub — release reads through its role repartition and the union
+        // of its own slices); reclaim them now. In the empty path reps IS
+        // the output, so only this branch may release the slices.
+        Seq(reps, sub).foreach(Materialise.release)
         composed
       }
-    // empty/valve paths never handed contracted to a consumer — the count
-    // above fully evaluated it, so its scratch and blocks are reclaimable
-    if (maxIterations <= 1 || contractedEmpty)
-      Materialise.release(contracted)
     // The role resize (`__splink__clusters_at_*` ÷10) collapses the join
     // partitioning to a sane count for the caller's write / re-join —
     // SIZE-FLOORED so a many-million-node labelling never squeezes into a
-    // couple of tasks (output rows <= 2 x edgeCount, ~32B per unsafe row
-    // of two longs), and via COALESCE when it only shrinks: `out` is a
+    // couple of tasks (output rows <= 2 x count, ~32B per unsafe row of
+    // two longs), and via COALESCE when it only shrinks: `out` is a
     // materialised checkpoint, so the narrow dependency replaces a
     // full-frame round-robin exchange.
     graft.operators.Repartition.sizedShrink(
       out.select(col("node_id"), col("representative").as("cluster_id")),
-      graft.operators.Repartition.ClusteringOutput, 2 * edgeCount * 32)
+      graft.operators.Repartition.ClusteringOutput, 2 * count * 32)
   }
 
-  /** Small-graph fast path: collect the two-column edge list (raw or
-    * symmetric) and solve with path-compressed union-find on the driver.
-    * Union-find is direction- and duplicate-insensitive; self-loops and
+  /** Small-graph path: collect the two-column edge list and solve with
+    * path-compressed union-find on the driver. Self-loops and
     * null-endpoint rows are skipped so a node with only such edges stays
-    * absent from the output, exactly as the symmetric path's
+    * absent from the output, exactly as the distributed level's
     * `node =!= neighbour` filter drops them. */
   private def driverUnionFind(source: DataFrame): DataFrame = {
     val spark = source.sparkSession

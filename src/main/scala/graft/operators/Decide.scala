@@ -70,14 +70,9 @@ object Decide {
     * off; below it the whole-frame loop measured ~2x faster. */
   val SplitJumpEdges: Long = 8000000L
 
-  /** An explicit caller `gate >= 0` (`smallGraphThreshold`) is taken
-    * as-is. */
-  def collect(what: String, rows: Long, budget: Budget,
-      gate: Long = -1L): Path = {
-    val limit = if (gate >= 0) gate else budget.rows
-    decide(Collect, what, rows, limit,
-      if (rows <= limit) Collect.Driver else Collect.Distributed)
-  }
+  def collect(what: String, rows: Long, budget: Budget): Path =
+    decide(Collect, what, rows, budget.rows,
+      if (rows <= budget.rows) Collect.Driver else Collect.Distributed)
 
   /** The budget is 0 when `spark.sql.autoBroadcastJoinThreshold <= 0`,
     * Spark's own broadcast off switch. */
@@ -105,15 +100,14 @@ object Decide {
     broadcast(df.sparkSession, what, est * sides) == Broadcast.Broadcasted
   }
 
-  /** Estimates outside (0, 2^50) bytes are unknown (checkpoint inputs read
-    * at Long.MaxValue scale) and stay on-heap. */
+  /** `bytes` is measured off materialised blocks or files, never an
+    * optimizer estimate. */
   def spill(spark: SparkSession, what: String, bytes: BigInt): Path = {
     val storage =
       spark.sparkContext.getExecutorMemoryStatus.values.map(_._1).sum
     val limit = BigInt((storage * SpillStorageFraction).toLong)
     decide(Spill, what, bytes, limit,
-      if (bytes > limit && bytes < (BigInt(1) << 50)) Spill.DiskOnly
-      else Spill.OnHeap)
+      if (bytes > limit) Spill.DiskOnly else Spill.OnHeap)
   }
 
   def jumpSplit(what: String, edges: Long): Path =

@@ -3,8 +3,8 @@ package graft.operators
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation,
-  LogicalPlan, Project, Repartition, RepartitionByExpression, Union}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan,
+  Project, Repartition, RepartitionByExpression, Union}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.storage.StorageLevel
@@ -122,32 +122,20 @@ object Materialise {
 
   /** The plan nodes holding `df`'s rows: its optimized plan with the views
     * a materialisation is read through stripped — Project, Filter, a
-    * repartition (the stored rows, re-partitioned; with `throughShuffles`
-    * false only a coalesce) and Union (a frame stacked from several
-    * materialisations, e.g. ConnectedComponents' per-jump slices). Any
-    * other node (a join, an aggregate) ends the walk and is returned as it
-    * is. This is the one place that knows which plan shapes a
-    * materialisation produces. */
-  private def sources(df: DataFrame,
-      throughShuffles: Boolean = true): Seq[LogicalPlan] = {
+    * repartition (the stored rows, re-partitioned) and Union (a frame
+    * stacked from several materialisations, e.g. ConnectedComponents'
+    * per-jump slices). Any other node (a join, an aggregate) ends the walk
+    * and is returned as it is. This is the one place that knows which plan
+    * shapes a materialisation produces. */
+  private def sources(df: DataFrame): Seq[LogicalPlan] = {
     def walk(p: LogicalPlan): Seq[LogicalPlan] = p match {
-      case v @ (_: Project | _: Filter) => walk(v.children.head)
-      case r: Repartition if throughShuffles || !r.shuffle => walk(r.child)
-      case r: RepartitionByExpression if throughShuffles => walk(r.child)
+      case v @ (_: Project | _: Filter | _: Repartition |
+          _: RepartitionByExpression) => walk(v.children.head)
       case u: Union => u.children.flatMap(walk)
       case other => Seq(other)
     }
     walk(df.queryExecution.optimizedPlan)
   }
-
-  /** True when re-reading `df` costs a block or file scan: stored rows
-    * under narrow views, never a recomputation of its pipeline or an
-    * exchange. */
-  def isMaterialised(df: DataFrame): Boolean =
-    sources(df, throughShuffles = false).forall {
-      case _: LogicalRDD | _: LogicalRelation | _: LocalRelation => true
-      case _ => false
-    }
 
   /** Drop every materialisation graft made that `df` reads through views
     * ([[sources]]): the blocks of the lineage-break RDDs and the scratch

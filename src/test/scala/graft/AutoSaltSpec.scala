@@ -1,14 +1,11 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.model._
-import graft.model.{LevelLibrary => ll}
+import graft.model.BlockingRule
 import graft.operators.SaltAdvisor
 
-/** Opt-in auto-salting of predict's blocking joins
-  * (`spark.graft.autoSalt`): the advisory sizes the salt from the hot
-  * block, the salted plan splits that block across sub-joins, and the
-  * output is identical to the unsalted run. */
+/** The salting advisory ([[SaltAdvisor]]): it sizes a rule's salt count
+  * from the hot block, so the salted sub-joins split that block. */
 class AutoSaltSpec extends SparkSpec {
   import spark.implicits._
 
@@ -20,16 +17,6 @@ class AutoSaltSpec extends SparkSpec {
       (i.toLong, s"name${i % 50}", city)
     }.toDF("unique_id", "first_name", "city")
   }
-
-  private def settings = LinkSettings(
-    linkType = LinkType.DedupeOnly,
-    blockingRules = Seq(BlockingRule.blockOn("city")),
-    comparisons = Seq(
-      Comparison("first_name", Seq(
-        ll.nullLevel("first_name"),
-        ll.exactMatch("first_name").withM(0.9).withU(0.05),
-        ll.elseLevel.withM(0.1).withU(0.95)))),
-    probabilityTwoRandomRecordsMatch = 0.01)
 
   test("advisory sizes the salt from the hot block against the per-task share") {
     val a = SaltAdvisor.advise(records,
@@ -46,40 +33,10 @@ class AutoSaltSpec extends SparkSpec {
       .agg(count(lit(1)).as("n")).collect().map(_.getLong(1))
     assert(buckets.sum == 200)
     assert(buckets.max < 200, s"a bucket still holds the whole block")
-  }
-
-  test("autoSalt=true: salted predict output equals unsalted, plan splits") {
-    val unsalted = new Linker(records, settings).predict()
-    def key(df: org.apache.spark.sql.DataFrame) = df
-      .select(col("unique_id_l"), col("unique_id_r"),
-        round(col("match_probability"), 9).as("p"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val expected = key(unsalted)
-    spark.conf.set("spark.graft.autoSalt", "true")
-    try {
-      val linker = new Linker(records, settings)
-      val pairs = linker.blockedIdPairs()
-      // the salted plan is a union of per-bucket joins: more than one join
-      val joins = "(?i)(sortmergejoin|broadcasthashjoin|shuffledhashjoin)".r
-        .findAllIn(pairs.queryExecution.executedPlan.toString).size
-      assert(joins >= 2, s"expected a salted union of joins, saw $joins")
-      assert(key(linker.predict()) == expected)
-    } finally spark.conf.unset("spark.graft.autoSalt")
-  }
-
-  test("autoSalt leaves uniform keys, manual salts and custom rules alone") {
+    // uniform keys need no salt: 5-row blocks against an even share of 50
     val uniform = (0 until 200).map(i => (i.toLong, s"n$i", s"c${i % 40}"))
       .toDF("unique_id", "first_name", "city")
-    val a = SaltAdvisor.advise(uniform,
-      BlockingRule.blockOn("city").asInstanceOf[BlockingRule.BlockOnRule])
-    assert(a.recommendedSalts == 1) // 5-row blocks, even share 50
-    spark.conf.set("spark.graft.autoSalt", "true")
-    try {
-      val linker = new Linker(uniform, settings)
-      val joins = "(?i)(sortmergejoin|broadcasthashjoin|shuffledhashjoin)".r
-        .findAllIn(linker.blockedIdPairs().queryExecution.executedPlan.toString)
-        .size
-      assert(joins == 1, s"uniform keys must not be salted, saw $joins joins")
-    } finally spark.conf.unset("spark.graft.autoSalt")
+    assert(SaltAdvisor.advise(uniform, BlockingRule.blockOn("city")
+      .asInstanceOf[BlockingRule.BlockOnRule]).recommendedSalts == 1)
   }
 }

@@ -51,18 +51,10 @@ class DecisionSpec extends SparkSpec {
       .filter(e => e._1 != e._2)
   }
 
-  /** CC labels of [[graph]], from a local relation (CC's raw-count entry)
-    * and from an exchanged frame (its symmetric-count entry). */
-  def ccLabels(): Seq[Map[Long, Long]] = {
-    val df = graph.toDF("unique_id_l", "unique_id_r")
-    Seq(df, df.repartition(3)).map(e => ConnectedComponents.run(e)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
-  }
-
-  def assertCc(): Unit = {
-    val expected = GraphOracle.components(graph)
-    ccLabels().foreach(got => assert(got == expected))
-  }
+  def assertCc(): Unit =
+    assert(ConnectedComponents.run(graph.toDF("unique_id_l", "unique_id_r"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      GraphOracle.components(graph))
 
   def forcedDistributed[T](pins: (Decide.Kind, Decide.Path)*)(body: => T): T =
     Decide.forcing((Decide.Collect -> Decide.Collect.Distributed) +: pins: _*)(
@@ -150,7 +142,7 @@ class DecisionSpec extends SparkSpec {
         assert(oneToOneConstrained() == driver._2)
         assertEmRecovers()
       }
-      Seq("cc.raw_edges", "cc.edges", "one_to_one.edges",
+      Seq("cc.edges", "one_to_one.edges",
         "one_to_one_constrained.edges", "em.patterns")
         .map(w => s"what=$w path=${p.name}")
     },
@@ -175,7 +167,7 @@ class DecisionSpec extends SparkSpec {
     },
     Decide.Spill -> { p =>
       forcedDistributed(Decide.Spill -> p)(assertCc())
-      Seq(s"what=cc.symmetric_estimate path=${p.name}")
+      Seq(s"what=cc.neighbours path=${p.name}")
     },
     Decide.JumpSplit -> { p =>
       forcedDistributed(Decide.JumpSplit -> p)(assertCc())
@@ -198,11 +190,44 @@ class DecisionSpec extends SparkSpec {
   test("a decision is reported as one DEBUG event with kind and path") {
     val edges = spark.range(1, 6).selectExpr("id AS unique_id_l",
       "id + 1 AS unique_id_r")
+    // the driver path reports exactly one decision: the collect
     val (_, seen) = events(ConnectedComponents.run(edges).collect())
-    val cc = seen.filter(_.contains("what=cc.edges"))
-    assert(cc.size == 1, seen.mkString("\n"))
-    assert(cc.head.startsWith("decision kind=collect what=cc.edges " +
-      "path=driver measured=10 "), cc.head)
-    assert(cc.head.endsWith("forced=false"))
+    assert(seen.size == 1, seen.mkString("\n"))
+    assert(seen.head.startsWith("decision kind=collect what=cc.edges " +
+      "path=driver measured=10 "), seen.head)
+    assert(seen.head.endsWith("forced=false"))
+  }
+
+  test("CC's spill decision reads the edge leaf's measured bytes") {
+    // MinHash candidate pairs: a self-join pipeline whose optimizer size
+    // estimate is astronomically high; the spill decision must read the
+    // bytes the counted edge leaf holds instead
+    val docs = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog again and again"),
+      (2L, "the quick brown fox jumps over the lazy dog again and again!"),
+      (3L, "entirely different text about spark catalyst optimizer rules"),
+      (4L, "entirely different text about spark catalyst optimizer rules"),
+      (5L, "nothing like the others at all, a unique snowflake document"))
+      .toDF("doc_id", "text")
+    val (kept, seen) = events(forcedDistributed() {
+      graft.pipeline.DedupOps.dedupeByMinhash(docs, "doc_id", "text",
+        threshold = 0.5).collect()
+    })
+    assert(kept.map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 3L, 5L -> 5L))
+    val spill = seen.filter(_.contains("what=cc.neighbours"))
+    assert(spill.size == 1, seen.mkString("\n"))
+    val measured = BigInt("measured=(\\d+)".r
+      .findFirstMatchIn(spill.head).get.group(1))
+    val leaf = ConnectedComponents.edgeList(graft.pipeline.DedupOps
+      .minhashDedupPairs(docs, "doc_id", "text", threshold = 0.5),
+      "id_l", "id_r")
+    leaf.count()
+    val leafBytes = graft.operators.Materialise.materialisedSizeBytes(leaf)
+      .getOrElse(fail("the counted leaf has no readable size"))
+    graft.operators.Materialise.release(leaf)
+    assert(leafBytes > 0)
+    assert(measured == BigInt(leafBytes) * 2, spill.head)
+    assert(measured < (BigInt(1) << 50), spill.head)
   }
 }

@@ -1,10 +1,16 @@
 package graft
 
 import graft.clustering.ClusteringOps
+import graft.operators.Decide
 import graft.training.Training
 
 class OneToOneConstrainedSpec extends SparkSpec {
   import spark.implicits._
+
+  private val driver = Decide.Collect.Driver
+  private val distributed = Decide.Collect.Distributed
+  private def onPath[T](p: Decide.Path)(body: => T): T =
+    Decide.forcing(Decide.Collect -> p)(body)
 
   test("constrained one-to-one chains across three duplicate-free datasets") {
     // a1-b1 (0.9), b1-c1 (0.8): cluster should grow to {a1,b1,c1}
@@ -138,11 +144,12 @@ class OneToOneConstrainedSpec extends SparkSpec {
       .toDF("node_id", "source_dataset")
     for (ties <- Seq("lowest_id", "drop");
          dup <- Seq(None, Some(Seq("d0", "d1")))) {
-      def solve(threshold: Long) = ClusteringOps.oneToOneConstrained(
-        edges, ds, tiesMethod = ties, duplicateFreeDatasets = dup,
-        smallGraphThreshold = threshold)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-      assert(solve(Long.MaxValue) == solve(0L),
+      def solve(p: Decide.Path) = onPath(p) {
+        ClusteringOps.oneToOneConstrained(
+          edges, ds, tiesMethod = ties, duplicateFreeDatasets = dup)
+          .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+      }
+      assert(solve(driver) == solve(distributed),
         s"paths diverged for ties=$ties dup=$dup")
     }
   }
@@ -181,19 +188,20 @@ class OneToOneConstrainedSpec extends SparkSpec {
         case _ => Some(Seq(allDs(rng.nextInt(allDs.size))))
       }
       val ties = if (trial % 2 == 0) "drop" else "lowest_id"
-      def solve(gate: Long) = ClusteringOps.oneToOneConstrained(
-          edges, ds, duplicateFreeDatasets = dupFree, tiesMethod = ties,
-          smallGraphThreshold = gate)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val driver = solve(Long.MaxValue) // driver fast path
-      val dist = solve(0L) // forced fully-distributed loop
-      assert(driver == dist,
+      def solve(p: Decide.Path) = onPath(p) {
+        ClusteringOps.oneToOneConstrained(
+            edges, ds, duplicateFreeDatasets = dupFree, tiesMethod = ties)
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      }
+      val onDriver = solve(driver) // driver fast path
+      val dist = solve(distributed) // forced fully-distributed loop
+      assert(onDriver == dist,
         s"trial $trial (dupFree=$dupFree ties=$ties): driver/distributed " +
-          s"diverged\ndriver=$driver\ndist=$dist")
+          s"diverged\ndriver=$onDriver\ndist=$dist")
       // the planted path proves multi-round depth: its four pairs all end
       // up matched (each in its own round) whenever unconstrained by the
       // dataset draw — at minimum nodes 1 and 2 pair up in round 1
-      assert(driver.nonEmpty)
+      assert(onDriver.nonEmpty)
     }
   }
 
@@ -237,16 +245,17 @@ class OneToOneConstrainedSpec extends SparkSpec {
       .toDF("unique_id_l", "unique_id_r", "match_probability")
     val ds = Seq((1L, "a"), (2L, "b"), (3L, "c"))
       .toDF("node_id", "source_dataset")
-    def run(threshold: Long) =
-      ClusteringOps.oneToOneConstrained(edges, ds,
-          smallGraphThreshold = threshold)
+    def run(p: Decide.Path) = onPath(p) {
+      ClusteringOps.oneToOneConstrained(edges, ds)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val driver = run(Long.MaxValue)
-    val dist = run(0L)
-    assert(driver == dist, s"driver $driver vs distributed $dist")
+    }
+    val onDriver = run(driver)
+    val dist = run(distributed)
+    assert(onDriver == dist, s"driver $onDriver vs distributed $dist")
     // round 1 merges the mutual-best real edge {2,3}; the null edge then
     // chains 1 in (no dataset conflict) — one cluster either way
-    assert(driver.values.toSet.size == 1 && driver.keySet == Set(1L, 2L, 3L))
+    assert(onDriver.values.toSet.size == 1 &&
+      onDriver.keySet == Set(1L, 2L, 3L))
   }
 
   test("ties_method drop discards null-probability edges on both paths") {
@@ -255,12 +264,12 @@ class OneToOneConstrainedSpec extends SparkSpec {
     val edges = Seq[(Long, Long, Option[Double])]((1L, 2L, None))
       .toDF("unique_id_l", "unique_id_r", "match_probability")
     val ds = Seq((1L, "a"), (2L, "b")).toDF("node_id", "source_dataset")
-    def run(threshold: Long) =
-      ClusteringOps.oneToOneConstrained(edges, ds, tiesMethod = "drop",
-          smallGraphThreshold = threshold)
+    def run(p: Decide.Path) = onPath(p) {
+      ClusteringOps.oneToOneConstrained(edges, ds, tiesMethod = "drop")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(run(Long.MaxValue) == Map.empty, "driver replay kept a null edge")
-    assert(run(0L) == Map.empty, "distributed path kept a null edge")
+    }
+    assert(run(driver) == Map.empty, "driver replay kept a null edge")
+    assert(run(distributed) == Map.empty, "distributed path kept a null edge")
   }
 
   test("a null source_dataset never constrains, on both paths") {
@@ -272,15 +281,15 @@ class OneToOneConstrainedSpec extends SparkSpec {
       .toDF("unique_id_l", "unique_id_r", "match_probability")
     val ds = Seq((1L, Some("a")), (2L, None), (3L, Some("c")))
       .toDF("node_id", "source_dataset")
-    def run(threshold: Long) =
-      ClusteringOps.oneToOneConstrained(edges, ds,
-          smallGraphThreshold = threshold)
+    def run(p: Decide.Path) = onPath(p) {
+      ClusteringOps.oneToOneConstrained(edges, ds)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val driver = run(Long.MaxValue)
-    val dist = run(0L)
-    assert(driver == dist, s"driver $driver vs distributed $dist")
+    }
+    val onDriver = run(driver)
+    val dist = run(distributed)
+    assert(onDriver == dist, s"driver $onDriver vs distributed $dist")
     // round 1 merges mutual-best {1,2}; 3 chains in round 2 (no 'c' yet in
     // the cluster) — the null dataset never blocks either merge
-    assert(driver == Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
+    assert(onDriver == Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
   }
 }

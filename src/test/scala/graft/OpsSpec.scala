@@ -65,10 +65,12 @@ class OpsSpec extends SparkSpec {
         else Some((rng.nextInt(6) + 1) / 6.0)))
       .filter { case (a, b, _) => a != b }
       .toDF("unique_id_l", "unique_id_r", "match_probability")
-    def solve(t: Long) = ClusteringOps.oneToOne(edges, smallGraphThreshold = t)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    val driver = solve(Long.MaxValue)
-    val dist = solve(0L)
+    def solve(p: Decide.Path) = Decide.forcing(Decide.Collect -> p) {
+      ClusteringOps.oneToOne(edges)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    }
+    val driver = solve(Decide.Collect.Driver)
+    val dist = solve(Decide.Collect.Distributed)
     assert(driver == dist, s"paths diverged:\n$driver\nvs\n$dist")
     assert(driver.nonEmpty)
   }
@@ -78,7 +80,8 @@ class OpsSpec extends SparkSpec {
     // the INPUT id type (string), not a hardcoded long
     val edges = Seq(("a", "a", 0.9))
       .toDF("unique_id_l", "unique_id_r", "match_probability")
-    val got = ClusteringOps.oneToOne(edges, smallGraphThreshold = 0L)
+    val got = Decide.forcing(Decide.Collect -> Decide.Collect.Distributed)(
+      ClusteringOps.oneToOne(edges))
     assert(got.schema("node_id").dataType ==
       org.apache.spark.sql.types.StringType)
     assert(got.count() == 0)
