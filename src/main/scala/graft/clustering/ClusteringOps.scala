@@ -1,7 +1,8 @@
 package graft.clustering
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 import graft.operators.Decide
 import graft.operators.Materialise
 import graft.operators.Materialise.Ops
@@ -17,148 +18,35 @@ import org.apache.spark.sql.expressions.Window
 object ClusteringOps {
 
   /**
-   * One-to-one clustering: iteratively merge links that are the highest-
-   * probability link for BOTH endpoints (`one_to_one_clustering.py:229-234`
-   * uses the same rank-1-both-sides window). Ties break on lowest
-   * neighbour id. Each round removes matched nodes and repeats, so a node
-   * never lands in two pairs; remaining nodes stay singletons.
-   *
-   * (The reference additionally enforces at-most-one-record-per-
-   * duplicate-free-dataset inside a cluster; with two datasets the mutual
-   * rank-1 rule implies it.)
+   * One-to-one clustering with no dataset constraint: each round links
+   * every pair of nodes that are each other's highest-probability
+   * neighbour (`one_to_one_clustering.py:229-234`'s rank-1-both-sides
+   * rule), ties broken toward the lowest neighbour id, and a matched node
+   * takes no further link. This is the one-to-one solver under the
+   * [[Singletons]] merge rule. Only matched nodes are returned, each pair
+   * labelled by its lower id, with the input's id type.
    */
   def oneToOne(edges: DataFrame, srcCol: String = "unique_id_l",
       dstCol: String = "unique_id_r",
       probCol: String = "match_probability",
       maxRounds: Int = 10)
       : DataFrame = {
-    var remaining = edges.select(col(srcCol).as("a"), col(dstCol).as("b"),
-      col(probCol).as("p")).filter(col("a") =!= col("b")).breakLineage()
-    // adaptive small-input fast path (same strategy pick as CC);
-    // long ids only — other id types take the distributed loop
-    if (remaining.schema("a").dataType == org.apache.spark.sql.types.LongType &&
-        Decide.collect("one_to_one.edges", remaining.count(),
-          Decide.GraphEdges) == Decide.Collect.Driver)
-      return driverOneToOne(remaining, maxRounds)
-    val matched = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var round = 0
-    var done = false
-    while (round < maxRounds && !done) {
-      round += 1
-      val sym = remaining.unionByName(
-        remaining.select(col("b").as("a"), col("a").as("b"), col("p")))
-      // best neighbour per node as a HASH AGGREGATE, not a sort window:
-      // min_by over struct(-p, b) is ORDER BY p DESC, b ASC rank-1
-      // (lexicographic min = largest p then smallest id, generic over the
-      // id type; null AND NaN p coalesced to -Inf — both mean "no usable
-      // probability" and rank last; nanvl keeps the aggregate's ordering
-      // aligned with the driver path, where a raw desc() window would
-      // instead rank NaN greatest). Partial aggregation combines map-side
-      // so the exchange carries one row per node, and the full-frame sort
-      // disappears.
-      val best = sym.groupBy(col("a"))
-        .agg(min_by(col("b"), struct(
-          -coalesce(nanvl(col("p"), lit(Double.NegativeInfinity)),
-            lit(Double.NegativeInfinity)),
-          col("b"))).as("b"))
-      // mutual: (a -> b) and (b -> a) both rank-1 — as ONE aggregate on
-      // the unordered pair key, not a self-join: best has exactly one row
-      // per node, so the only rows a group {u, v} can hold are (u -> v)
-      // and (v -> u), and count = 2 is precisely mutuality. Replaces the
-      // sort-merge self-join (two exchanges + a persist of the rank
-      // frame) with a single exchange of one row per node.
-      val mutual = best
-        .groupBy(least(col("a"), col("b")).as("ka"),
-          greatest(col("a"), col("b")).as("kb"))
-        .agg(count(lit(1)).as("cnt"))
-        .filter(col("cnt") === 2)
-        .select(col("ka").as("a"), col("kb").as("b"))
-        .breakLineage()
-      // wide count() probes, not isEmpty: executeTake(1) materialises a
-      // just-checkpointed frame in incremental 1/4/16-partition waves —
-      // serial exactly on the closing round where the frame IS empty and
-      // every partition must be evaluated (see ConnectedComponents' jump
-      // loop). Both frames get fully consumed when non-empty, so the
-      // count is never wasted work.
-      val anyMutual = mutual.count() > 0
-      if (!anyMutual) done = true
-      else {
-        matched += mutual
-        val used = mutual.select(col("a").as("n"))
-          .unionByName(mutual.select(col("b").as("n")))
-        val prevRemaining = remaining
-        remaining = remaining
-          .join(used.withColumnRenamed("n", "__a"), col("a") === col("__a"), "left_anti")
-          .join(used.withColumnRenamed("n", "__b"), col("b") === col("__b"), "left_anti")
-          .breakLineage()
-        if (remaining.count() == 0) done = true
-        // the count above materialised the successor frame — the
-        // superseded round's blocks are strong-releasable (mutual frames
-        // stay: the final union reads them)
-        Materialise.release(prevRemaining)
-      }
-    }
-    if (matched.isEmpty) {
-      // empty frame typed from the INPUT id type (string/int ids must not
-      // come back as long — downstream unions would fail)
-      val idType = remaining.schema("a").dataType
-      edges.sparkSession.emptyDataFrame
-        .withColumn("node_id", lit(null).cast(idType))
-        .withColumn("cluster_id", lit(null).cast(idType))
-        .limit(0)
-    } else {
-      val pairs = matched.reduce(_.unionByName(_))
-      pairs.select(col("a").as("node_id"), col("a").as("cluster_id"))
-        .unionByName(pairs.select(col("b").as("node_id"), col("a").as("cluster_id")))
-    }
-  }
-
-  /** Driver-side mutual-best matching, identical round semantics to the
-    * distributed loop (rank by p desc then lowest id; drop matched nodes;
-    * repeat). */
-  private def driverOneToOne(remaining: DataFrame, maxRounds: Int): DataFrame = {
-    val spark = remaining.sparkSession
-    // null/NaN probability ranks LAST under the distributed aggregate
-    // (both coalesced to -Inf there) — mirror it here, don't NPE
-    var edges = remaining.collect().map { r =>
-      val p = if (r.isNullAt(2)) Double.NaN else r.getDouble(2)
-      (r.getLong(0), r.getLong(1),
-        if (p.isNaN) Double.NegativeInfinity else p)
-    }
-    // the collect fully consumed the loop-owned materialised edge frame
-    Materialise.release(remaining)
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    var round = 0
-    var done = false
-    while (round < maxRounds && !done && edges.nonEmpty) {
-      round += 1
-      val sym = edges ++ edges.map { case (a, b, p) => (b, a, p) }
-      val best = sym.groupBy(_._1).map { case (a, es) =>
-        a -> es.minBy(e => (-e._3, e._2))._2
-      }
-      val mutual = best.collect {
-        case (a, b) if a < b && best.get(b).contains(a) => (a, b)
-      }.toSeq
-      if (mutual.isEmpty) done = true
-      else {
-        out ++= mutual
-        val used = mutual.flatMap(m => Seq(m._1, m._2)).toSet
-        edges = edges.filterNot(e => used(e._1) || used(e._2))
-      }
-    }
-    val rows = out.flatMap { case (a, b) => Seq((a, a), (b, a)) }
-    import spark.implicits._
-    rows.toSeq.toDF("node_id", "cluster_id")
+    val clusters = solve(edgeFrame(edges, srcCol, dstCol, probCol),
+      Singletons, maxRounds)
+    // a Singletons cluster is one node or a matched pair labelled by its
+    // lower id: the pairs are the rows whose node is not its own label,
+    // plus those labels
+    val pairs = clusters.filter(col("node_id") =!= col("cluster_id"))
+    pairs.unionByName(
+      pairs.select(col("cluster_id").as("node_id"), col("cluster_id")))
   }
 
   /**
    * One-to-one clustering with the duplicate-free-dataset constraint
-   * (`one_to_one_clustering.py:103-336`): clusters grow by merging the
-   * mutually-best linked cluster pair each round, but only when the two
-   * clusters contain no records from a common source dataset — so a
-   * cluster never holds two records of any dataset listed as
-   * duplicate-free. Needed for >2 datasets; for two datasets
-   * [[oneToOne]] is equivalent and cheaper.
+   * (`one_to_one_clustering.py:103-336`): the one-to-one solver under the
+   * [[DatasetDisjoint]] merge rule, so a cluster never holds two records
+   * of a dataset listed as duplicate-free. Every node with an edge is
+   * labelled; unmerged nodes are their own cluster.
    *
    * Ties are handled per the reference's `ties_method`
    * (`linker_components/clustering.py:186-236`): `"lowest_id"` (default)
@@ -171,7 +59,6 @@ object ClusteringOps {
    * @param nodeDatasets frame (node_id, source_dataset)
    * @param duplicateFreeDatasets datasets that must stay duplicate-free
    *        inside a cluster; None = every dataset in `nodeDatasets`
-   *        (the pre-existing behaviour)
    */
   def oneToOneConstrained(edges: DataFrame, nodeDatasets: DataFrame,
       srcCol: String = "unique_id_l", dstCol: String = "unique_id_r",
@@ -181,395 +68,138 @@ object ClusteringOps {
       : DataFrame = {
     require(Seq("lowest_id", "drop").contains(tiesMethod),
       "ties_method must be one of 'drop', or 'lowest_id'")
-    // materialise the caller's edge pipeline ONCE before tie handling:
-    // dropTies reads its input several times (symmetric explode, tie
-    // aggregate, the final semi-join), and each read of an unmaterialised
-    // predict pipeline would re-run the whole scoring job
-    // spilled: the edge frame (and every other full-width checkpoint in
-    // this loop) stays alive across several joins/aggregates — on-heap
-    // blocks at 13M+ rows were measured as 462s of task GC (46% of run
-    // time) on the forced-distributed sf10 bench entry
-    val e0raw = edges.select(col(srcCol).as("na"), col(dstCol).as("nb"),
-      col(probCol).as("p")).filter(col("na") =!= col("nb"))
-      .breakLineage(spill = true)
-    // only the duplicate-free datasets constrain merges
-    // (`clustering.py:201-202`: "This can be a subset of all of the source
-    // datasets"); other datasets may repeat inside a cluster freely
-    val constraining = broadcastIfFits("one_to_one.node_datasets",
-      duplicateFreeDatasets match {
-        case Some(ds) => nodeDatasets.filter(col("source_dataset").isin(ds: _*))
-        case None => nodeDatasets
-      })
-    // adaptive small-input fast path (same strategy pick as CC/oneToOne):
-    // the round loop costs ~6 scheduled actions per round distributed —
-    // and the tie-drop another ~8 — while under the threshold the whole
-    // solve (tie-drop included) fits driver memory
-    val longIds = Seq(e0raw.schema("na"), e0raw.schema("nb"),
-        nodeDatasets.schema("node_id"))
-      .forall(_.dataType == org.apache.spark.sql.types.LongType) &&
-      e0raw.schema("p").dataType == org.apache.spark.sql.types.DoubleType
-    val probedEdges = if (longIds) e0raw.count() else -1L
-    if (longIds && Decide.collect("one_to_one_constrained.edges", probedEdges,
-        Decide.GraphEdges) == Decide.Collect.Driver)
-      return driverOneToOneConstrained(e0raw, nodeDatasets,
-        duplicateFreeDatasets, tiesMethod, maxRounds)
-    // Count-based broadcast decision for frames sized BY the edge count
-    // (the tie-kept combos): the gate probe already paid for an exact
-    // count, and the loop's checkpoints carry no optimizer stats. Without
-    // a count (non-long ids) the side shuffles.
-    val pairsBroadcastOk = probedEdges >= 0 &&
-      Decide.broadcast(edges.sparkSession, "one_to_one_constrained.pairs",
-        probedEdges, Decide.PairRows) == Decide.Broadcast.Broadcasted
-    // isDupFree as a Column predicate (shared by dropTies and the round-1
-    // pair-level constraint below)
-    val isDupFreeCol: Column => Column = duplicateFreeDatasets match {
-      case Some(ds) => c => c.isin(ds: _*)
-      case None => _ => lit(true)
-    }
-    val (e0, invalid1) = tiesMethod match {
-      case "drop" =>
-        // dropTies materialises its own outputs, so the raw edge frame —
-        // whose last distributed-path consumer it is — is strong-releasable
-        val (d, iv) = dropTies(e0raw, nodeDatasets, isDupFreeCol,
-          pairsBroadcastOk)
-        Materialise.release(e0raw)
-        (d, iv)
-      case _ =>
-        // round-1 invalid pairs (endpoints sharing a duplicate-free
-        // dataset) straight from the constraining table; single lazy
-        // consumer, so no materialisation
-        val iv = e0raw.alias("s")
-          .join(constraining.alias("dl"), col("s.na") === col("dl.node_id"))
-          .join(constraining.alias("dr"), col("s.nb") === col("dr.node_id"))
-          .filter(col("dl.source_dataset") === col("dr.source_dataset"))
-          .select(col("s.na"), col("s.nb"))
-        (e0raw, iv)
-    }
-    // LAZY: the initial identity membership is only ever read as the
-    // final output when NO merge round lands — a merge round derives the
-    // node universe from the rank aggregate instead (one row per node by
-    // construction, so the full-width union+distinct here never runs)
-    var membership = e0.select(col("na").as("node_id"))
-      .unionByName(e0.select(col("nb").as("node_id")))
-      .distinct()
-      .withColumn("rep", col("node_id"))
-    // Cluster-level dataset sets, maintained INCREMENTALLY from round 2
-    // on: built once from the post-round-1 membership, then each accepted
-    // merge re-keys the absorbed cluster's row to the absorber and unions
-    // the two arrays — a cluster-count-sized aggregate per round instead
-    // of a corpus-sized join (the driver fast path keeps the same
-    // invariant in its index arrays). Round 1 needs no sets at all: its
-    // clusters are single nodes, so the constraint collapses to the
-    // pair-level invalid1 anti-join below — a one-round run (common for
-    // the reference's default) never pays a set build.
-    var clusterSets: DataFrame = null
-    // Cluster-level candidate edges, ALSO maintained incrementally: round
-    // 1 starts from the node-level edges verbatim (initial membership is
-    // the identity, so the reference's membership re-join would be an
-    // identity join); each later round rewrites the surviving edges'
-    // endpoints through the merge map. Dropping an edge is PERMANENT and
-    // sound because cluster dataset sets only ever grow: an edge whose
-    // endpoint sets overlap at round k overlaps at every later round
-    // (both clusters' sets are supersets by then), and an intra-cluster
-    // edge stays intra-cluster — so re-deriving candidates from the full
-    // node-level frame every round (the from-scratch formulation) yields
-    // exactly this surviving multiset.
-    var ce: DataFrame =
-      e0.select(col("na").as("ra"), col("nb").as("rb"), col("p"))
-    var round = 0
-    var done = false
-    // true once membership is a loop-owned checkpoint (>= 1 merge round):
-    // only then is the output independent of e0 and the exit releases safe
-    var membershipMaterialised = false
-    while (round < maxRounds && !done) {
-      round += 1
-      // the dataset-disjointness constraint applies BEFORE best-rank
-      // selection: an invalid merge does not consume a cluster's "best
-      // link" — the next-best valid cluster can still win (reference
-      // filters invalid merges out of the candidate set,
-      // `one_to_one_clustering.py:203-246`).
-      if (round >= 2 && clusterSets == null) {
-        // deferred init (see the declaration comment): membership is the
-        // post-round-1 checkpoint here, so the sets carry round 1's merges
-        clusterSets = membership.alias("m")
-          .join(constraining.alias("d"), col("m.node_id") === col("d.node_id"))
-          .groupBy(col("m.rep").as("r"))
-          .agg(collect_set(col("d.source_dataset")).as("ds"))
-          .breakLineage(eager = true)
+    val rule = DatasetDisjoint(nodeDatasets, duplicateFreeDatasets)
+    val e0 = edgeFrame(edges, srcCol, dstCol, probCol)
+    val candidates =
+      if (tiesMethod == "lowest_id") e0
+      else {
+        // dropTies materialises its output, so the edge frame is dead
+        val kept = dropTies(e0, rule)
+        Materialise.release(e0)
+        kept
       }
-      // Round 1: single-node clusters — the constraint is exactly "the
-      // endpoints share no duplicate-free dataset", a pair-level lookup
-      // against the precomputed invalid pairs (no set arrays involved).
-      // Kept as a LEFT join with a `bad` flag rather than an anti-join:
-      // the round-1 rank aggregate doubles as the output's node
-      // UNIVERSE, and a node whose EVERY edge is invalid still owns an
-      // output row (singleton) — it must reach the aggregate. Flagged
-      // edges rank after every valid edge (boolean false < true leads
-      // the min_by key) and are filtered out of merge candidacy, so
-      // merge semantics are untouched. Duplicate invalid-combo rows
-      // only ever duplicate `bad` rows, which neither the rank, the
-      // merge filter, nor the groupBy universe can observe.
-      // Later rounds: left joins + empty-set default — a cluster
-      // holding no record from any duplicate-free dataset constrains
-      // nothing (universe = the maintained membership there).
-      val noDs = array().cast("array<string>")
-      val flagged1: DataFrame =
-        if (round != 1) null
-        else {
-          val f = ce.alias("e").join(invalid1.alias("iv"),
-              col("e.ra") === col("iv.na") && col("e.rb") === col("iv.nb"),
-              "left")
-            .select(col("e.ra"), col("e.rb"), col("e.p"),
-              col("iv.na").isNotNull.as("bad"))
-          // two consumers while the loop continues (the eager valid
-          // checkpoint and the rank aggregate); the final round's single
-          // consumer chain streams instead
-          if (round < maxRounds) f.breakLineage(spill = true) else f
-        }
-      val validPlan =
-        if (round == 1)
-          flagged1.filter(!col("bad")).select(col("ra"), col("rb"), col("p"))
-        else ce.alias("e")
-          .join(clusterSets.alias("sa"), col("e.ra") === col("sa.r"), "left")
-          .join(clusterSets.alias("sb"), col("e.rb") === col("sb.r"), "left")
-          .filter(!arrays_overlap(coalesce(col("sa.ds"), noDs),
-            coalesce(col("sb.ds"), noDs)))
-          .select(col("e.ra"), col("e.rb"), col("e.p"))
-      // eager ONLY while the loop continues (the post-merge endpoint
-      // rewrite re-reads it); on the final round its one consumer is the
-      // persisted rank frame, which materialises it exactly once anyway
-      val valid =
-        if (round < maxRounds) validPlan.breakLineage(eager = true, spill = true)
-        else validPlan
-      // symmetric via one explode: a union would evaluate the input
-      // twice. Round 1 explodes the FLAGGED frame (bad rows ride along
-      // so their nodes reach the universe); later rounds the valid one.
-      val sym =
-        if (round == 1) flagged1.select(explode(array(
-            struct(col("ra"), col("rb"), col("p"), col("bad")),
-            struct(col("rb").as("ra"), col("ra").as("rb"), col("p"),
-              col("bad")))).as("e"))
-          .select(col("e.ra"), col("e.rb"), col("e.p"), col("e.bad"))
-        else valid.select(explode(array(
-            struct(col("ra"), col("rb"), col("p")),
-            struct(col("rb").as("ra"), col("ra").as("rb"), col("p")))).as("e"))
-          .select(col("e.ra"), col("e.rb"), col("e.p"))
-      // best neighbour per cluster as a HASH AGGREGATE, not a sort window:
-      // min_by over struct(-p, rb) reproduces ORDER BY p DESC, rb ASC
-      // rank-1 exactly (lexicographic min = largest p, then smallest id;
-      // null AND NaN p coalesced to -Inf — missing probability ranks
-      // last, and nanvl keeps this aggregate consistent with the driver
-      // path). The partial aggregate combines map-side, so the
-      // exchange carries one row per cluster instead of the whole
-      // symmetric edge frame, and the full-frame sort disappears.
-      val rankP = -coalesce(nanvl(col("p"), lit(Double.NegativeInfinity)),
-        lit(Double.NegativeInfinity))
-      // Round 1 only: the rank output doubles as the NODE UNIVERSE for
-      // the membership update (exactly one row per node by groupBy
-      // construction), so it goes through a checkpoint both consumers
-      // read — this is what lets round 1 skip a full-width
-      // union+distinct over the edge frame entirely. Later rounds'
-      // universe is the maintained membership; their rank frame has one
-      // consumer and stays a streaming plan.
-      val best =
-        if (round == 1) sym.groupBy(col("ra"))
-          .agg(min_by(struct(col("rb"), col("bad")),
-            struct(col("bad"), rankP, col("rb"))).as("b"))
-          .select(col("ra"), col("b.rb").as("rb"), col("b.bad").as("bad"))
-          .breakLineage(spill = true)
-        else sym.groupBy(col("ra"))
-          .agg(min_by(col("rb"), struct(rankP, col("rb"))).as("rb"))
-      // mutuality as ONE aggregate on the unordered pair key (see
-      // oneToOne above): best is one row per cluster, so a {u, v} group
-      // holds at most the two directed rows and count = 2 is exactly
-      // "both rank-1". One exchange of one row per cluster replaces the
-      // self-join's two exchanges (or its broadcast build) + persist.
-      val merges =
-        (if (round == 1) best.filter(!col("bad")).select(col("ra"), col("rb"))
-         else best)
-        .groupBy(least(col("ra"), col("rb")).as("ka"),
-          greatest(col("ra"), col("rb")).as("kb"))
-        .agg(count(lit(1)).as("cnt"))
-        .filter(col("cnt") === 2)
-        .select(col("ka"), col("kb"))
-        .breakLineage()
-      // wide probe — see the comment on the mutual-best loop above; the
-      // exact count doubles as the merge frame's own broadcast decision
-      // for the three endpoint-rewrite joins below
-      val mergeCount = merges.count()
-      val anyMerge = mergeCount > 0
-      val mergesJ = if (Decide.broadcast(edges.sparkSession,
-          "one_to_one_constrained.merges", mergeCount, Decide.MergeRows) ==
-          Decide.Broadcast.Broadcasted) broadcast(merges) else merges
-      // round 1's valid frame (eager or via the persisted rank frame) has
-      // consumed the invalid-pair table by now; under "lowest_id" it is a
-      // lazy plan and this is a no-op
-      if (round == 1) Materialise.release(invalid1)
-      if (!anyMerge) {
-        done = true
-        Materialise.release(valid)
-        if (round == 1) {
-          Materialise.release(best)
-          Materialise.release(flagged1)
-        }
-      } else {
-        // mutual-best merges never chain inside a round (each cluster has
-        // exactly one rank-1 neighbour), so a single-step kb -> ka rewrite
-        // is the full round update for all three maintained frames. Every
-        // successor is eagerly materialised before its predecessor's
-        // blocks are strong-released — EXCEPT on the final executed
-        // round, where the updated membership's only consumer is the
-        // caller's action: it stays a streaming plan over the (already
-        // materialised) universe + merge blocks, which then must survive
-        // to that read (no releases on that exit path).
-        val finalRound = round == maxRounds
-        val base =
-          if (round == 1)
-            best.select(col("ra").as("node_id"), col("ra").as("rep"))
-          else membership
-        val upd = base.alias("m")
-          .join(mergesJ.alias("g"), col("m.rep") === col("g.kb"), "left")
-          .select(col("m.node_id"),
-            coalesce(col("g.ka"), col("m.rep")).as("rep"))
-        if (finalRound) {
-          membership = upd
-        } else {
-        val prevMembership = membership
-        membership = upd.breakLineage(eager = true, spill = true)
-        if (round == 1) Materialise.release(best)
-        else Materialise.release(prevMembership)
-        membershipMaterialised = true
-        // the continuing loop's candidate state rolls forward; on the
-        // final round the merge lands in the output membership alone.
-        // clusterSets is null until its deferred round-2 init — which
-        // absorbs this round's merges via membership, so there is
-        // nothing to roll yet.
-        if (clusterSets != null) {
-          val prevSets = clusterSets
-          clusterSets = clusterSets.alias("s")
-            .join(mergesJ.alias("g"), col("s.r") === col("g.kb"), "left")
-            .select(coalesce(col("g.ka"), col("s.r")).as("r"), col("s.ds"))
-            .groupBy(col("r"))
-            .agg(array_distinct(flatten(collect_list(col("ds")))).as("ds"))
-            .breakLineage(eager = true)
-          Materialise.release(prevSets)
-        }
-        val prevCe = ce
-        ce = valid.alias("e")
-          .join(mergesJ.alias("ga"), col("e.ra") === col("ga.kb"), "left")
-          .join(mergesJ.alias("gb"), col("e.rb") === col("gb.kb"), "left")
-          .select(coalesce(col("ga.ka"), col("e.ra")).as("ra"),
-            coalesce(col("gb.ka"), col("e.rb")).as("rb"), col("e.p"))
-          .filter(col("ra") =!= col("rb"))
-          .breakLineage(eager = true, spill = true)
-        // round 1's ce is a projection of e0, not a materialised frame
-        // of its own — e0 is torn down once at exit instead
-        if (round > 1) Materialise.release(prevCe)
-        Materialise.release(valid)
-        Materialise.release(merges)
-        if (round == 1) Materialise.release(flagged1)
-        }
-      }
-    }
-    // everything the loop owned besides the output membership is dead
-    // when the loop CLOSED ITSELF (no-merge round): the last eager
-    // frames consumed ce/e0 fully. When the final round merged, the
-    // output is a streaming plan over its universe + merge blocks —
-    // those stay alive (membershipMaterialised gates the e0 teardown,
-    // and the merge/best blocks were deliberately not released).
-    // With NO merge round at all the output is the lazy identity plan
-    // over e0 — the edge frame must then survive for the caller.
-    if (round > 1) Materialise.release(ce)
-    if (clusterSets != null)
-      Materialise.release(clusterSets)
-    if (membershipMaterialised) {
-      if (tiesMethod == "drop") Materialise.release(e0)
-      else Materialise.release(e0raw)
-    }
-    membership.select(col("node_id"), col("rep").as("cluster_id"))
+    solve(candidates, rule, maxRounds)
   }
 
-  /** Driver-side constrained mutual-best rounds, identical semantics to
-    * the distributed loop (cluster-level candidates under the
-    * dataset-disjointness constraint; best per cluster by p desc then
-    * lowest rep node id; simultaneous mutual merges per round).
-    * Index-array state with INCREMENTALLY merged cluster-dataset sets —
-    * no per-round group-by materialisation, so rounds cost O(E). */
-  private def driverOneToOneConstrained(e0raw: DataFrame,
-      nodeDatasets: DataFrame, duplicateFreeDatasets: Option[Seq[String]],
-      tiesMethod: String, maxRounds: Int): DataFrame = {
-    val spark = e0raw.sparkSession
+  /** The loop-owned edge frame (na, nb, p) the solver reads, self-loops
+    * dropped. Spilled: it stays alive across several joins and
+    * aggregates, and on-heap blocks at 13M+ rows were measured as 462s of
+    * task GC (46% of run time) on the forced-distributed sf10 entry. */
+  private def edgeFrame(edges: DataFrame, srcCol: String, dstCol: String,
+      probCol: String): DataFrame =
+    edges.select(col(srcCol).as("na"), col(dstCol).as("nb"),
+        col(probCol).cast("double").as("p"))
+      .filter(col("na") =!= col("nb"))
+      .breakLineage(spill = true)
+
+  /** Which two clusters a mutual-best round may merge. A rule keeps one
+    * state per cluster: `states` builds it for single nodes, `merged`
+    * aggregates the states of the clusters one merge joins, and `allowed`
+    * says whether two states may merge. Both rules are monotone — a state
+    * only grows, and two clusters that may not merge never may later —
+    * which is what lets the distributed loop drop a disallowed candidate
+    * edge for good. The driver solver reads the same states through
+    * `state`, `combine` and `allows`. */
+  private[clustering] sealed trait MergeRule {
+    /** (r, s): one state per node of `nodes` (node_id). */
+    def states(nodes: DataFrame): DataFrame
+    def merged(s: Column): Column
+    def allowed(a: Column, b: Column): Column
+    type S
+    def state(row: Row): S
+    def combine(a: S, b: S): S
+    def allows(a: S, b: S): Boolean
+  }
+
+  /** Both clusters are single nodes: a matched node takes no further link
+    * (the state is the cluster size). */
+  private[clustering] case object Singletons extends MergeRule {
+    def states(nodes: DataFrame): DataFrame =
+      nodes.select(col("node_id").as("r"), lit(1L).as("s"))
+    def merged(s: Column): Column = sum(s)
+    def allowed(a: Column, b: Column): Column = a === 1L && b === 1L
+    type S = Long
+    def state(row: Row): Long = row.getLong(1)
+    def combine(a: Long, b: Long): Long = a + b
+    def allows(a: Long, b: Long): Boolean = a == 1L && b == 1L
+  }
+
+  /** The two clusters hold no record of a common duplicate-free dataset
+    * (the state is the cluster's set of duplicate-free datasets). A null
+    * `source_dataset` constrains nothing. */
+  private[clustering] final case class DatasetDisjoint(
+      nodeDatasets: DataFrame, duplicateFreeDatasets: Option[Seq[String]])
+      extends MergeRule {
+    def duplicateFree(dataset: Column): Column = duplicateFreeDatasets match {
+      case Some(ds) => dataset.isin(ds: _*)
+      case None => lit(true)
+    }
+    def states(nodes: DataFrame): DataFrame = {
+      // the node table is modest next to the edge frames in the
+      // 100M+-pairs regime: when it fits, the node side never shuffles
+      val constraining = broadcastIfFits("one_to_one.node_datasets",
+        nodeDatasets.select(col("node_id"), col("source_dataset"))
+          .filter(col("source_dataset").isNotNull &&
+            duplicateFree(col("source_dataset"))))
+      nodes.alias("n")
+        .join(constraining.alias("d"), col("n.node_id") === col("d.node_id"),
+          "left")
+        .groupBy(col("n.node_id").as("r"))
+        .agg(collect_set(col("d.source_dataset")).as("s"))
+    }
+    def merged(s: Column): Column = array_distinct(flatten(collect_list(s)))
+    def allowed(a: Column, b: Column): Column = !arrays_overlap(a, b)
+    type S = Set[String]
+    def state(row: Row): Set[String] = row.getSeq[String](1).toSet
+    def combine(a: Set[String], b: Set[String]): Set[String] = a ++ b
+    def allows(a: Set[String], b: Set[String]): Boolean = !a.exists(b)
+  }
+
+  /** The one-to-one solver: rounds of mutual-best merges under `rule` over
+    * the loop-owned edge frame `e0` (na, nb, p), labelling every node of
+    * `e0` (node_id, cluster_id) with the lowest node id of its cluster.
+    * Each round, every cluster picks its best neighbour cluster among the
+    * merges `rule` allows — the rule filters candidates BEFORE the rank
+    * (`one_to_one_clustering.py:203-246`), so a disallowed merge does not
+    * use up a cluster's best link — by p desc, then lowest id, with null
+    * and NaN p ranking last; mutual picks merge. Long ids within the
+    * collect budget solve on the driver. */
+  private def solve(e0: DataFrame, rule: MergeRule, maxRounds: Int)
+      : DataFrame = {
+    val longIds = Seq("na", "nb").forall(c => e0.schema(c).dataType == LongType)
+    if (longIds && Decide.collect("one_to_one.edges", e0.count(),
+        Decide.GraphEdges) == Decide.Collect.Driver)
+      driverSolve(e0, rule, maxRounds)
+    else distributedSolve(e0, rule, maxRounds)
+  }
+
+  /** [[solve]] on the driver: index arrays with incrementally combined
+    * cluster states, so a round costs O(E). */
+  private def driverSolve(e0: DataFrame, rule: MergeRule, maxRounds: Int)
+      : DataFrame = {
+    val spark = e0.sparkSession
     import spark.implicits._
-    // null/NaN probability = -Inf, matching the distributed aggregate
-    // (both coalesced there) instead of a data-dependent NPE or an
-    // inconsistent NaN ordering
-    val allEdges = e0raw.collect().map { r =>
+    // null/NaN probability = -Inf, as the distributed rank coalesces them
+    val edges = e0.collect().map { r =>
       val p = if (r.isNullAt(2)) Double.NaN else r.getDouble(2)
-      (r.getLong(0), r.getLong(1),
-        if (p.isNaN) Double.NegativeInfinity else p)
+      (r.getLong(0), r.getLong(1), if (p.isNaN) Double.NegativeInfinity else p)
     }
-    // the collect fully consumed the loop-owned materialised edge frame
-    Materialise.release(e0raw)
-    val nodes0 = allEdges.flatMap(e => Seq(e._1, e._2)).distinct
-    // fetch datasets only for nodes in play (the corpus can be far larger
-    // than the edge set) — broadcast semi-join, then one small collect
-    val nodesDf = nodes0.toSeq.toDF("__node")
-    // a null source_dataset never constrains: the distributed loop's
-    // collect_set drops nulls and dropTies joins a null-filtered dataset
-    // table — the driver replay must see exactly the same rows
-    val dsPairs = nodeDatasets
-      .select(col("node_id"), col("source_dataset"))
-      .filter(col("source_dataset").isNotNull)
-      .join(broadcast(nodesDf), col("node_id") === col("__node"), "left_semi")
-      .collect().map(r => (r.getLong(0), r.getString(1)))
-    val dsOf: Map[Long, Seq[String]] =
-      dsPairs.groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
-        .withDefaultValue(Nil)
-    val isDupFree: String => Boolean = duplicateFreeDatasets match {
-      case Some(ds) => ds.toSet
-      case None => _ => true
-    }
-    // ties_method="drop" replayed in memory, same semantics as [[dropTies]]
-    // (inner joins to the dataset table: an edge with a dataset-less
-    // endpoint yields no joined row and is dropped; otherwise it drops
-    // only when EVERY (sd_l, sd_r) combination is tied in one direction
-    // or the other)
-    // under "drop" the distributed path's final semi-join equates on p, so
-    // a null-probability edge (here -Inf) never matches and is dropped —
-    // replay that before the tie logic
-    val tiesInput =
-      if (tiesMethod == "drop") allEdges.filter(_._3 != Double.NegativeInfinity)
-      else allEdges
-    val edges = if (tiesMethod != "drop") allEdges else {
-      val tieCount = scala.collection.mutable.Map.empty[(Long, String, String, Double), scala.collection.mutable.Set[Long]]
-      def note(a: Long, b: Long, p: Double): Unit =
-        for (sa <- dsOf(a); sb <- dsOf(b))
-          tieCount.getOrElseUpdate((a, sa, sb, p),
-            scala.collection.mutable.Set.empty[Long]) += b
-      allEdges.foreach { case (a, b, p) => note(a, b, p); note(b, a, p) }
-      def tied(a: Long, sa: String, sb: String, p: Double): Boolean =
-        isDupFree(sb) && tieCount.get((a, sa, sb, p)).exists(_.size > 1)
-      tiesInput.filter { case (a, b, p) =>
-        val combos = for (sa <- dsOf(a); sb <- dsOf(b)) yield (sa, sb)
-        combos.nonEmpty && combos.exists { case (sa, sb) =>
-          !tied(a, sa, sb, p) && !tied(b, sb, sa, p) }
-      }
-    }
+    // the collect fully consumed the loop-owned edge frame
+    Materialise.release(e0)
     val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
     val idx = nodes.zipWithIndex.toMap
     val n = nodes.length
+    val byNode = rule.states(nodes.toSeq.toDF("node_id")).collect()
+      .map(r => r.getLong(0) -> rule.state(r)).toMap
+    val state = nodes.iterator.map(byNode).toBuffer
     val rep = Array.tabulate(n)(identity) // node index -> rep node index
-    val clusterDs = Array.fill(n)(Set.empty[String])
-    dsPairs.foreach { case (node, d) =>
-      if (isDupFree(d))
-        idx.get(node).foreach(i => clusterDs(i) = clusterDs(i) + d) }
     val eIdx = edges.map { case (a, b, p) => (idx(a), idx(b), p) }
     var round = 0
     var done = false
     while (round < maxRounds && !done) {
       round += 1
-      // best valid neighbour cluster per cluster: p desc, then lowest rep
-      // node id (the distributed window's ORDER BY p DESC, rb ASC)
+      // best allowed neighbour cluster per cluster: p desc, then lowest
+      // rep node id (the distributed rank's ORDER BY p DESC, rb ASC)
       val best = scala.collection.mutable.LongMap.empty[(Double, Int)]
       def offer(ra: Int, rb: Int, p: Double): Unit = best.get(ra.toLong) match {
         case Some((bp, bi)) =>
@@ -579,7 +209,7 @@ object ClusteringOps {
       }
       eIdx.foreach { case (ai, bi, p) =>
         val (ra, rb) = (rep(ai), rep(bi))
-        if (ra != rb && !clusterDs(ra).exists(clusterDs(rb))) {
+        if (ra != rb && rule.allows(state(ra), state(rb))) {
           offer(ra, rb, p); offer(rb, ra, p)
         }
       }
@@ -594,7 +224,7 @@ object ClusteringOps {
         val m = scala.collection.mutable.LongMap.empty[Int]
         merges.foreach { case (ka, kb) =>
           m(kb.toLong) = ka
-          clusterDs(ka) = clusterDs(ka) ++ clusterDs(kb)
+          state(ka) = rule.combine(state(ka), state(kb))
         }
         var i = 0
         while (i < n) {
@@ -604,25 +234,122 @@ object ClusteringOps {
         }
       }
     }
-    // parallelized RDD, not a LocalRelation (same rationale as the CC
-    // driver path: a LocalRelation this size re-pays driver conversion
-    // per downstream action)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("cluster_id",
-        org.apache.spark.sql.types.LongType)))
-    val out = nodes.indices.map(i =>
-      org.apache.spark.sql.Row(nodes(i), nodes(rep(i))))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(out,
-        math.max(1, spark.sparkContext.defaultParallelism / 4)), schema)
+    ConnectedComponents.driverLabels(spark,
+      nodes.indices.map(i => Row(nodes(i), nodes(rep(i)))), LongType)
   }
 
-  /** Broadcast wrap for the node-dataset table, by the record-side stats
-    * decision. The constraint joins pair a modest per-node table against
-    * edge frames that dwarf it in the 100M+-pairs regime — when the node
-    * table fits, the edge side must never shuffle. */
+  /** [[solve]] distributed. The labelling (node_id, rep), the per-cluster
+    * states (r, s) and the candidate edges between clusters (ra, rb, p)
+    * are built once and rolled forward by each round's merges. */
+  private def distributedSolve(e0: DataFrame, rule: MergeRule,
+      maxRounds: Int): DataFrame = {
+    var membership = e0.select(col("na").as("node_id"))
+      .unionByName(e0.select(col("nb").as("node_id")))
+      .distinct()
+      .withColumn("rep", col("node_id"))
+      .breakLineage(eager = true, spill = true)
+    var states = rule.states(membership.select(col("node_id")))
+      .breakLineage(eager = true)
+    // Each round keeps the candidates its rule allows and rewrites their
+    // endpoints through the merges. Dropping a disallowed edge is
+    // permanent and sound because the rules are monotone, and an
+    // intra-cluster edge stays one — so re-deriving candidates from the
+    // node-level edges every round (the from-scratch formulation) yields
+    // exactly this surviving multiset.
+    var ce = e0.select(col("na").as("ra"), col("nb").as("rb"), col("p"))
+    var round = 0
+    var done = false
+    while (round < maxRounds && !done) {
+      round += 1
+      val lastRound = round == maxRounds
+      val allowed = ce.alias("e")
+        .join(states.alias("sa"), col("e.ra") === col("sa.r"))
+        .join(states.alias("sb"), col("e.rb") === col("sb.r"))
+        .filter(rule.allowed(col("sa.s"), col("sb.s")))
+        .select(col("e.ra"), col("e.rb"), col("e.p"))
+      // eager while the loop continues (the endpoint rewrite re-reads it);
+      // on the last round its one consumer is the merge count
+      val valid =
+        if (lastRound) allowed
+        else allowed.breakLineage(eager = true, spill = true)
+      // symmetric via one explode: a union would evaluate the input twice
+      val sym = valid.select(explode(array(
+          struct(col("ra"), col("rb"), col("p")),
+          struct(col("rb").as("ra"), col("ra").as("rb"), col("p")))).as("e"))
+        .select(col("e.ra"), col("e.rb"), col("e.p"))
+      // best neighbour per cluster as a HASH AGGREGATE, not a sort window:
+      // min_by over struct(-p, rb) reproduces ORDER BY p DESC, rb ASC
+      // rank-1 exactly (lexicographic min = largest p, then smallest id;
+      // null AND NaN p coalesced to -Inf — missing probability ranks
+      // last, and nanvl keeps this aggregate consistent with the driver
+      // solver, where a raw desc() would rank NaN greatest). The partial
+      // aggregate combines map-side, so the exchange carries one row per
+      // cluster instead of the whole symmetric edge frame.
+      val rankP = -coalesce(nanvl(col("p"), lit(Double.NegativeInfinity)),
+        lit(Double.NegativeInfinity))
+      val best = sym.groupBy(col("ra"))
+        .agg(min_by(col("rb"), struct(rankP, col("rb"))).as("rb"))
+      // mutuality as ONE aggregate on the unordered pair key, not a
+      // self-join: best is one row per cluster, so a {u, v} group holds at
+      // most the two directed rows and count = 2 is exactly "both rank-1".
+      // The lower id absorbs the other.
+      val merges = best
+        .groupBy(least(col("ra"), col("rb")).as("ka"),
+          greatest(col("ra"), col("rb")).as("kb"))
+        .agg(count(lit(1)).as("cnt"))
+        .filter(col("cnt") === 2)
+        .select(col("ka"), col("kb"))
+        .breakLineage()
+      // a wide count() probe, not isEmpty: executeTake(1) materialises a
+      // just-checkpointed frame in incremental 1/4/16-partition waves —
+      // serial exactly on the closing round where the frame IS empty (see
+      // ConnectedComponents' jump loop). The exact count doubles as the
+      // merge frame's broadcast decision for the rewrite joins below.
+      val mergeCount = merges.count()
+      lazy val step = {
+        val g = merges.select(col("ka").as("__ka"), col("kb").as("__kb"))
+        if (Decide.broadcast(e0.sparkSession, "one_to_one.merges", mergeCount,
+            Decide.MergeRows) == Decide.Broadcast.Broadcasted) broadcast(g)
+        else g
+      }
+      // mutual-best merges never chain inside a round (each cluster has
+      // one rank-1 neighbour), so one kb -> ka rewrite is the full update
+      def relabel(df: DataFrame, c: String): DataFrame =
+        df.join(step, col(c) === col("__kb"), "left")
+          .withColumn(c, coalesce(col("__ka"), col(c)))
+          .drop("__ka", "__kb")
+      if (mergeCount == 0) {
+        done = true
+        Materialise.release(valid)
+        Materialise.release(merges)
+      } else if (lastRound) {
+        // the merges land in the output labelling alone: a streaming plan
+        // over the labelling and merge blocks, which stay alive for the
+        // caller's read
+        membership = relabel(membership, "rep")
+      } else {
+        val dead = Seq(membership, states, ce, valid, merges)
+        membership = relabel(membership, "rep")
+          .breakLineage(eager = true, spill = true)
+        states = relabel(states, "r").groupBy(col("r"))
+          .agg(rule.merged(col("s")).as("s"))
+          .breakLineage(eager = true)
+        ce = relabel(relabel(valid, "ra"), "rb")
+          .filter(col("ra") =!= col("rb"))
+          .breakLineage(eager = true, spill = true)
+        // every successor is materialised; round 1's ce is a view of e0,
+        // so this also drops the edge frame
+        dead.foreach(Materialise.release)
+      }
+    }
+    // the output reads the labelling (and a last round's merges) only
+    Materialise.release(ce)
+    Materialise.release(states)
+    membership.select(col("node_id"), col("rep").as("cluster_id"))
+  }
+
+  /** Broadcast wrap for a node-dataset table, by the record-side stats
+    * decision. */
   private def broadcastIfFits(what: String, df: DataFrame): DataFrame =
     if (Decide.broadcastByStats(what, df)) broadcast(df) else df
 
@@ -632,16 +359,15 @@ object ClusteringOps {
     * duplicate-free dataset; every such link is dropped. Both directions of
     * an undirected link drop together: the reference's tie_l/tie_r pair of
     * aggregates collapses, by the symmetry of the neighbours frame, to
-    * "row (a,b) survives iff neither (a,b) nor (b,a) is tie_l-marked". */
-  private def dropTies(e0: DataFrame, nodeDatasets: DataFrame,
-      isDupFree: Column => Column,
-      broadcastKept: Boolean = false): (DataFrame, DataFrame) = {
-    // null datasets constrain nothing (collect_set in the round loop drops
-    // them); filtering here also makes the documented behaviour true — an
-    // edge whose endpoint has only a null dataset drops out of the inner
-    // joins below exactly like a dataset-less endpoint
+    * "row (a,b) survives iff neither (a,b) nor (b,a) is tie_l-marked".
+    * An edge with a dataset-less endpoint, or a null probability, is
+    * dropped too. Returns a materialised edge frame. */
+  private def dropTies(e0: DataFrame, rule: DatasetDisjoint): DataFrame = {
+    // null datasets constrain nothing; filtering here makes an edge whose
+    // endpoint has only a null dataset drop out of the inner joins below
+    // exactly like a dataset-less endpoint
     val nd = broadcastIfFits("drop_ties.node_datasets",
-      nodeDatasets.select(col("node_id"), col("source_dataset"))
+      rule.nodeDatasets.select(col("node_id"), col("source_dataset"))
         .filter(col("source_dataset").isNotNull))
     // Dataset labels attach to the ORIENTED edges, BEFORE the symmetric
     // explode: joining the exploded frame instead would run both
@@ -670,7 +396,7 @@ object ClusteringOps {
     // aggregation costs
     val tied = sym.groupBy("na", "sd_l", "sd_r", "p")
       .agg(min(col("nb")).as("mn"), max(col("nb")).as("mx"))
-      .filter(col("mn") =!= col("mx") && isDupFree(col("sd_r")))
+      .filter(col("mn") =!= col("mx") && rule.duplicateFree(col("sd_r")))
       .select(col("na"), col("sd_l"), col("sd_r"), col("p"))
       .breakLineage()
     // a (sd_a, sd_b) combination survives when NEITHER direction of the
@@ -701,45 +427,28 @@ object ClusteringOps {
       if (singlePerNode)
         // p IS NOT NULL mirrors the semi-join branch exactly: its join
         // equates on p, so a null-probability edge never matches a kept
-        // row — the documented (and spec-pinned) drop-path behaviour.
-        // LAZY: the caller consumes this through a single streaming
-        // chain (the round-1 flagged frame), so an eager 13M-row
-        // write+read here is pure overhead; the combo/tie blocks it
-        // reads are disk-backed and survive until the caller's action
-        // (they are NOT released below on this branch).
+        // row
         kept.select(col("na"), col("nb"), col("p"))
           .filter(col("p").isNotNull)
       else {
         // duplicate edges in, duplicate edges out: the semi-join restores
-        // e0's exact row multiset. Output materialised HERE so the working
-        // frames above can be strong-released before returning — callers
-        // receive a flat checkpoint-backed frame.
-        // under the caller's probed edge-count ceiling the kept-combo frame
-        // (bounded by edges x dataset-combinations) broadcasts, so the edge
-        // frame streams through the semi-join without an exchange
+        // e0's exact row multiset. Under the edge-count budget the
+        // kept-combo frame (bounded by edges x dataset-combinations)
+        // broadcasts, so the edge frame streams through without an
+        // exchange.
         val keptBuild =
-          if (broadcastKept) broadcast(kept.alias("k")) else kept.alias("k")
+          if (Decide.broadcast(e0.sparkSession, "one_to_one.pairs",
+              e0.count(), Decide.PairRows) == Decide.Broadcast.Broadcasted)
+            broadcast(kept.alias("k"))
+          else kept.alias("k")
         e0.alias("e").join(keptBuild,
           col("e.na") === col("k.na") && col("e.nb") === col("k.nb") &&
             col("e.p") === col("k.p"), "left_semi")
-          .breakLineage(eager = true, spill = true)
       }
-    // round-1 invalid pairs for the caller's pair-level constraint, free
-    // off the already-materialised combo frame: an edge between two
-    // single-node clusters is invalid exactly when some combination pairs
-    // the same duplicate-free dataset on both ends. Materialised (tiny)
-    // BEFORE withBoth's blocks are dropped.
-    val invalid1 = withBoth
-      .filter(col("sd_a") === col("sd_b") && isDupFree(col("sd_a")))
-      .select(col("na"), col("nb"))
-      .breakLineage(eager = true)
-    // the fast path's lazy output still reads the combo/tie blocks —
-    // only the semi-join branch (eager output) may drop them here
-    if (!singlePerNode) {
-      Materialise.release(withBoth)
-      Materialise.release(tied)
-    }
-    (out, invalid1)
+    val dropped = out.breakLineage(eager = true, spill = true)
+    Materialise.release(withBoth)
+    Materialise.release(tied)
+    dropped
   }
 
   /**

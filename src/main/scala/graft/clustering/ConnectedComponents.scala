@@ -1,8 +1,9 @@
 package graft.clustering
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.ArrayType
+import org.apache.spark.sql.types.{ArrayType, DataType, StructField,
+  StructType}
 import graft.operators.{Decide, Materialise}
 import graft.operators.Materialise.Ops
 
@@ -433,20 +434,22 @@ object ConnectedComponents {
       val v = values(i)
       if (!byRoot.contains(root) || lt(v, byRoot(root))) byRoot(root) = v
     }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node_id",
-        source.schema.head.dataType),
-      org.apache.spark.sql.types.StructField("cluster_id",
-        source.schema.head.dataType)))
-    val out = values.indices.map(i =>
-      org.apache.spark.sql.Row(values(i), byRoot(find(i))))
-    // Parallelized RDD, not a LocalRelation: a LocalRelation this size
-    // embeds every row in the plan, scans single-partition, and re-pays
-    // driver-side conversion per action — measured 2.4x slower downstream
-    // than letting the cluster-metrics joins shuffle the distributed frame.
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(out.toSeq,
-        math.max(1, spark.sparkContext.defaultParallelism / 4)), schema)
+    driverLabels(spark, values.indices.map(i =>
+      Row(values(i), byRoot(find(i)))),
+      source.schema.head.dataType)
+  }
+
+  /** A labelling solved on the driver, as a (node_id, cluster_id) frame.
+    * A parallelized RDD, not a LocalRelation: a LocalRelation this size
+    * embeds every row in the plan, scans single-partition, and re-pays
+    * driver-side conversion per action — measured 2.4x slower downstream
+    * than letting the cluster-metrics joins shuffle the distributed frame. */
+  private[clustering] def driverLabels(spark: SparkSession,
+      rows: Seq[Row], idType: DataType): DataFrame = {
+    val schema = StructType(Seq(StructField("node_id", idType),
+      StructField("cluster_id", idType)))
+    spark.createDataFrame(spark.sparkContext.parallelize(rows,
+      math.max(1, spark.sparkContext.defaultParallelism / 4)), schema)
   }
 
   /** Cluster nodes at a match-probability threshold and join assignments

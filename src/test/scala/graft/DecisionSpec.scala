@@ -22,8 +22,9 @@ class DecisionSpec extends SparkSpec {
   def events[T](body: => T): (T, Seq[String]) = {
     val logger = LogManager.getLogger("graft").asInstanceOf[Logger]
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val appender = new AbstractAppender("decisions", null, null, true,
-        Property.EMPTY_ARRAY) {
+    // a unique name: loggers key appenders by name, and calls nest
+    val appender = new AbstractAppender(s"decisions-${System.nanoTime}",
+        null, null, true, Property.EMPTY_ARRAY) {
       override def append(e: LogEvent): Unit =
         seen.add(e.getMessage.getFormattedMessage)
     }
@@ -62,25 +63,43 @@ class DecisionSpec extends SparkSpec {
 
   /** Edges with coarse (tied) probabilities over nodes that carry one or
     * two datasets: the tie-drop takes its multi-dataset branch. */
-  val o2oEdges: DataFrame = {
+  val o2oRaw: Seq[(Long, Long, Option[Double])] = {
     val rng = new scala.util.Random(5)
     Seq.fill(70)((rng.nextInt(30).toLong, rng.nextInt(30).toLong,
-        (rng.nextInt(5) + 1) / 5.0))
+        Option((rng.nextInt(5) + 1) / 5.0)))
       .filter { case (a, b, _) => a != b }
-      .toDF("unique_id_l", "unique_id_r", "match_probability")
   }
-  val o2oDatasets: DataFrame = (0 until 30).flatMap { i =>
-    Seq(i.toLong -> Seq("a", "b", "c")(i % 3)) ++
-      (if (i % 7 == 0) Seq(i.toLong -> "d") else Nil)
-  }.toDF("node_id", "source_dataset")
+  val o2oEdges: DataFrame =
+    o2oRaw.toDF("unique_id_l", "unique_id_r", "match_probability")
+  val o2oDatasetRows: Seq[(Long, Option[String])] = (0 until 30).flatMap { i =>
+    Seq(i.toLong -> Option(Seq("a", "b", "c")(i % 3))) ++
+      (if (i % 7 == 0) Seq(i.toLong -> Option("d")) else Nil)
+  }
+  val o2oDatasets: DataFrame = o2oDatasetRows.toDF("node_id", "source_dataset")
+  val o2oDuplicateFree = Seq("a", "b", "d")
 
   def oneToOneConstrained(): Map[Long, Long] =
     ClusteringOps.oneToOneConstrained(o2oEdges, o2oDatasets,
-        duplicateFreeDatasets = Some(Seq("a", "b", "d")), tiesMethod = "drop")
+        duplicateFreeDatasets = Some(o2oDuplicateFree), tiesMethod = "drop")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
-  def oneToOne(): Seq[(Long, Long)] = ClusteringOps.oneToOne(o2oEdges)
-    .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+  def oneToOne(): Map[Long, Long] = ClusteringOps.oneToOne(o2oEdges)
+    .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  /** Runs one-to-one under both merge rules against the round simulator,
+    * asserting each run reported a forced `what` decision. */
+  def assertOneToOne(what: String): Unit = {
+    val rules = Seq(
+      (GraphOracle.Singletons, () => oneToOne()),
+      (GraphOracle.DatasetDisjoint(o2oDatasetRows, Some(o2oDuplicateFree),
+        dropTies = true), () => oneToOneConstrained()))
+    rules.foreach { case (rule, solve) =>
+      val (got, seen) = events(solve())
+      assert(got == GraphOracle.oneToOne(o2oRaw, rule, 10), s"under $rule")
+      assert(seen.exists(s => s.contains(what) && s.endsWith("forced=true")),
+        s"$rule reported no forced '$what' among:\n${seen.mkString("\n")}")
+    }
+  }
 
   /** Exact expected agreement-pattern counts of a planted model. */
   val mTrue = Array(Map(1 -> 0.9, 0 -> 0.1), Map(1 -> 0.8, 0 -> 0.2))
@@ -134,36 +153,31 @@ class DecisionSpec extends SparkSpec {
     * returns event fragments that prove the path was exercised. */
   val checks: Map[Decide.Kind, Decide.Path => Seq[String]] = Map(
     Decide.Collect -> { p =>
-      Decide.forcing(Decide.Collect -> p)(assertCc())
-      val driver = Decide.forcing(Decide.Collect -> Decide.Collect.Driver) {
-        (oneToOne(), oneToOneConstrained()) }
       Decide.forcing(Decide.Collect -> p) {
-        assert(oneToOne() == driver._1)
-        assert(oneToOneConstrained() == driver._2)
+        assertCc()
+        assertOneToOne(s"what=one_to_one.edges path=${p.name}")
         assertEmRecovers()
       }
-      Seq("cc.edges", "one_to_one.edges",
-        "one_to_one_constrained.edges", "em.patterns")
+      Seq("cc.edges", "one_to_one.edges", "em.patterns")
         .map(w => s"what=$w path=${p.name}")
     },
     Decide.Broadcast -> { p =>
       val predicted = predictRows()
       val tfidf = tfidfRows()
-      val driver = Decide.forcing(Decide.Collect -> Decide.Collect.Driver)(
-        oneToOneConstrained())
       Decide.forcing(Decide.Broadcast -> p) {
         assert(predictRows() == predicted)
         assert(tfidfRows() == tfidf)
       }
       forcedDistributed(Decide.Broadcast -> p) {
-        assert(oneToOneConstrained() == driver)
+        assertOneToOne(s"what=one_to_one.merges path=${p.name}")
       }
       // the split loop's semi-reduced lookup, broadcast or shuffled
       forcedDistributed(Decide.Broadcast -> p,
           Decide.JumpSplit -> Decide.JumpSplit.Split)(assertCc())
-      Seq("linker.records", "tfidf.vocabulary", "one_to_one_constrained.pairs",
-        "one_to_one_constrained.merges", "drop_ties.node_datasets",
-        "cc.jump_lookup").map(w => s"what=$w path=${p.name}")
+      Seq("linker.records", "tfidf.vocabulary", "one_to_one.pairs",
+        "one_to_one.merges", "one_to_one.node_datasets",
+        "drop_ties.node_datasets", "cc.jump_lookup")
+        .map(w => s"what=$w path=${p.name}")
     },
     Decide.Spill -> { p =>
       forcedDistributed(Decide.Spill -> p)(assertCc())

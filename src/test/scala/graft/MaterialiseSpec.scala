@@ -102,26 +102,26 @@ class MaterialiseSpec extends SparkSpec {
   }
 
   test("policy matrix: one-to-one and constrained one-to-one, both paths") {
-    val chain = Seq((1L, 2L, 0.9), (2L, 3L, 0.8), (3L, 4L, 0.95))
-      .toDF("unique_id_l", "unique_id_r", "match_probability")
     val rng = new scala.util.Random(5)
-    val edges = Seq.fill(30)((rng.nextInt(14).toLong, rng.nextInt(14).toLong,
-        (rng.nextInt(5) + 1) / 5.0))
+    val raw = Seq.fill(30)((rng.nextInt(14).toLong, rng.nextInt(14).toLong,
+        Option((rng.nextInt(5) + 1) / 5.0)))
       .filter { case (a, b, _) => a != b }
-      .toDF("unique_id_l", "unique_id_r", "match_probability")
+    val edges = raw.toDF("unique_id_l", "unique_id_r", "match_probability")
     // node 0 carries two datasets: the tie drop takes its semi-join branch
-    val datasets = ((0 until 14).map(i => i.toLong -> Seq("a", "b", "c")(i % 3)) :+
-        (0L -> "d")).toDF("node_id", "source_dataset")
-    def solve() = (labels(ClusteringOps.oneToOne(chain)),
+    val dsRows = (0 until 14).map(i =>
+      i.toLong -> Option(Seq("a", "b", "c")(i % 3))) :+ (0L -> Option("d"))
+    val datasets = dsRows.toDF("node_id", "source_dataset")
+    val dupFree = Seq("a", "b", "d")
+    val expect = (GraphOracle.oneToOne(raw, GraphOracle.Singletons, 10),
+      GraphOracle.oneToOne(raw, GraphOracle.DatasetDisjoint(dsRows,
+        Some(dupFree), dropTies = true), 10))
+    matrix((labels(ClusteringOps.oneToOne(edges)),
       labels(ClusteringOps.oneToOneConstrained(edges, datasets,
-        duplicateFreeDatasets = Some(Seq("a", "b", "d")), tiesMethod = "drop")))
-    val (_, expectConstrained) = solve()
-    matrix(solve()).foreach { case (cell, (o2o, constrained)) =>
-      assert(o2o == Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 3L),
-        s"one-to-one under $cell")
-      assert(constrained == expectConstrained,
-        s"constrained one-to-one under $cell")
-    }
+        duplicateFreeDatasets = Some(dupFree), tiesMethod = "drop"))))
+      .foreach { case (cell, (o2o, constrained)) =>
+        assert(o2o == expect._1, s"one-to-one under $cell")
+        assert(constrained == expect._2, s"constrained one-to-one under $cell")
+      }
   }
 
   test("policy matrix: multi-threshold clustering, both paths") {

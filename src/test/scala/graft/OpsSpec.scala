@@ -58,21 +58,28 @@ class OpsSpec extends SparkSpec {
 
   test("one-to-one random-graph parity across paths (nulls and ties)") {
     // coarse probabilities manufacture ties (broken by lowest id on both
-    // paths); ~10% null probabilities must sort last, not NPE
+    // paths); ~10% null and ~10% NaN probabilities must rank last, not NPE
     val rng = new scala.util.Random(123)
-    val edges = Seq.fill(80)((rng.nextInt(30).toLong, rng.nextInt(30).toLong,
-        if (rng.nextInt(10) == 0) None
-        else Some((rng.nextInt(6) + 1) / 6.0)))
+    val raw = Seq.fill(80)((rng.nextInt(30).toLong, rng.nextInt(30).toLong,
+        rng.nextInt(10) match {
+          case 0 => None
+          case 1 => Some(Double.NaN)
+          case _ => Some((rng.nextInt(6) + 1) / 6.0)
+        }))
       .filter { case (a, b, _) => a != b }
-      .toDF("unique_id_l", "unique_id_r", "match_probability")
-    def solve(p: Decide.Path) = Decide.forcing(Decide.Collect -> p) {
-      ClusteringOps.oneToOne(edges)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    val edges = raw.toDF("unique_id_l", "unique_id_r", "match_probability")
+    // one and two rounds cut the rounds off before the fixpoint
+    for (rounds <- Seq(1, 2, 10)) {
+      val expect = GraphOracle.oneToOne(raw, GraphOracle.Singletons, rounds)
+      assert(expect.nonEmpty)
+      for (path <- Decide.Collect.paths) {
+        val got = Decide.forcing(Decide.Collect -> path) {
+          ClusteringOps.oneToOne(edges, maxRounds = rounds)
+            .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        }
+        assert(got == expect, s"path $path, maxRounds $rounds")
+      }
     }
-    val driver = solve(Decide.Collect.Driver)
-    val dist = solve(Decide.Collect.Distributed)
-    assert(driver == dist, s"paths diverged:\n$driver\nvs\n$dist")
-    assert(driver.nonEmpty)
   }
 
   test("one-to-one with string ids and no mutual pairs keeps the id type") {

@@ -359,6 +359,7 @@ class SplinkParitySpec extends SparkSpec {
     // discovered at runtime, so new files in the reference repo are swept
     // automatically; each one is the reference's own in-the-wild surface
     val dir = new java.io.File("/root/reference/docs/demos/demo_settings")
+    assert(dir.isDirectory, s"reference settings directory $dir is missing")
     val files = dir.listFiles().filter(_.getName.endsWith(".json"))
       .map(_.getAbsolutePath).sorted
     assert(files.length >= 3, s"expected the known model files, got " +
