@@ -33,19 +33,16 @@ class Linker(val inputs: Seq[(String, DataFrame)], initialSettings: LinkSettings
   /** `__splink__df_concat` (`vertically_concatenate.py:23-71`). */
   lazy val concat: DataFrame = VerticalConcat(inputs, settings)
 
-  /** `__splink__df_concat_with_tf` (`vertically_concatenate.py:74-81`).
-    * Repartitioned to the role's policy count before the persist
-    * (`spark/database_api.py:229-287`) so the cached per-record frame has
-    * even, predictable partitions regardless of input file layout.
-    * Computed once and cached until [[invalidateCache]]. */
+  /** `__splink__df_concat_with_tf` (`vertically_concatenate.py:74-81`),
+    * persisted as the TF joins leave it: it is the record side of the
+    * pair joins, not the side pair expansion runs on, so its partition
+    * count is not chosen here. Computed once and cached until
+    * [[invalidateCache]]. */
   @volatile private var concatWithTfCache: Option[DataFrame] = None
   def concatWithTf: DataFrame = concatWithTfCache.getOrElse(synchronized {
     concatWithTfCache.getOrElse {
       val base = TermFrequency.joinAll(concat, settings.tfColumns)
-      val df =
-        if (settings.tfColumns.nonEmpty)
-          Repartition(base, Repartition.ConcatWithTf).persist()
-        else base
+      val df = if (settings.tfColumns.nonEmpty) base.persist() else base
       concatWithTfCache = Some(df)
       df
     }
@@ -97,9 +94,7 @@ class Linker(val inputs: Seq[(String, DataFrame)], initialSettings: LinkSettings
     * parquet policies, recomputes under persist and re-reads its
     * checkpoint files under checkpoint. */
   def invalidateCache(): Unit = synchronized {
-    concatWithTfCache.foreach { df =>
-      try df.unpersist() catch { case _: Throwable => () }
-    }
+    concatWithTfCache.foreach(_.unpersist())
     concatWithTfCache = None
     registeredBlockedPairs.foreach(Materialise.release)
     registeredBlockedPairs = None
@@ -223,12 +218,8 @@ class Linker(val inputs: Seq[(String, DataFrame)], initialSettings: LinkSettings
       .join(concatWithTf, joinCols, "left")
     // block on same-cluster membership under the standard link-type pair
     // ordering (`l._cluster_id = r._cluster_id` rule in the reference)
-    val narrow = Repartition.ensureMinParallel(clustered.select(
-      Blocking.joinKeyCol(settings).as("__join_key") +: col("_cluster_id") +:
-        (if (multiFrame) Seq(col(sd)) else Nil): _*))
-    val pairs = Blocking.pairsUnderRules(narrow, narrow,
-      Seq(BlockingRule.blockOn("_cluster_id")),
-      Some(Blocking.linkTypeFilter(settings)))
+    val pairs = Blocking.blockedIdPairs(clustered, settings.copy(
+      blockingRules = Seq(BlockingRule.blockOn("_cluster_id"))))
     // drop pairs already present in the supplied edges frame: both frames
     // use the same uid_l < uid_r ordering convention, so a directional
     // (join_key_l, join_key_r) anti-join is exact
@@ -385,11 +376,9 @@ class Linker(val inputs: Seq[(String, DataFrame)], initialSettings: LinkSettings
         "registered with registerBlockedPairsForPredict / " +
         "computeBlockedPairsForPredict; call predict() to score the " +
         "registered table, or invalidateCache() first")
-    // materialise the blocked pairs ONCE (role-partitioned, reference
-    // `__splink__blocked_id_pairs` ÷6): a lazy frame here would re-run the
-    // whole blocking join for every chunk's filter
-    val pairs = Repartition(blockedIdPairs(), Repartition.BlockedIdPairs)
-      .persist()
+    // materialise the blocked pairs ONCE: a lazy frame here would re-run
+    // the whole blocking join for every chunk's filter
+    val pairs = blockedIdPairs().persist()
     val chunkCol = pmod(hash(col("join_key_l")), lit(numChunks))
     // eager per-chunk checkpoints = chunks score one after another, which
     // is the entire point of chunking (bound peak shuffle/memory); lazy
@@ -444,21 +433,12 @@ class Linker(val inputs: Seq[(String, DataFrame)], initialSettings: LinkSettings
     * (`find_matches_to_new_records.py:14-51`). */
   def findMatchesToNewRecords(newRecords: DataFrame,
       thresholdMatchProbability: Option[Double] = None): DataFrame = {
-    val rules = if (settings.blockingRules.nonEmpty) settings.blockingRules
-      else Seq(BlockingRule.CustomBlockingRule("1=1"))
-    val needed = (rules.flatMap(Blocking.ruleColumns) :+ settings.uniqueIdColumn)
-      .distinct.filter(concat.columns.contains)
-    val key = Blocking.joinKeyCol(settings)
-    def narrow(df: DataFrame) = df.select(
-      (key.as("__join_key") +: needed.filterNot(_ == "__join_key").map(col)): _*)
-    // l = existing corpus, r = new records; no uid-ordering filter
-    val idPairs = Blocking.pairsUnderRules(narrow(concat), narrow(newRecords),
-      rules, None)
-    // no static broadcast hint: corpus-derived TF tables are unbounded at
-    // scale (see TermFrequency.joinAll) — the planner broadcasts by size
-    val newWithTf = settings.tfColumns.foldLeft(newRecords) { (df, c) =>
-      df.join(TermFrequency.table(concat, c), Seq(c), "left")
-    }
+    // l = existing corpus, r = new records (a request batch, never
+    // widened); no uid-ordering filter
+    val idPairs = Blocking.pairsUnderRules(
+      Blocking.narrow(concat, settings).widened("find_matches.corpus"),
+      Blocking.narrow(newRecords, settings), Blocking.rules(settings), None)
+    val newWithTf = withTfValues(newRecords)
     // both sides must fit: the corpus by the linker's own decision, the
     // caller-supplied new-records frame measured directly (external frames
     // with unknown stats estimate high and correctly decline)
@@ -795,15 +775,6 @@ class Linker(val inputs: Seq[(String, DataFrame)], initialSettings: LinkSettings
     val s2 = overridden(linkTypeOverride, blockingRulesOverride)
     val lc = VerticalConcat(left, s2)
     val rc = VerticalConcat(right, s2)
-    val rules = if (s2.blockingRules.nonEmpty) s2.blockingRules
-      else Seq(BlockingRule.CustomBlockingRule("1=1"))
-    val needed = (rules.flatMap(Blocking.ruleColumns) ++
-      (if (s2.linkType != LinkType.DedupeOnly) Seq(s2.sourceDatasetColumn)
-       else Nil)).distinct
-    val key = Blocking.joinKeyCol(s2)
-    def narrow(df: DataFrame) = Repartition.ensureMinParallel(df.select(
-      (key.as("__join_key") +:
-        needed.filter(df.columns.contains).map(col)): _*))
     // the reference's two_dataset_link_only trick: an inner join BETWEEN
     // the role tables generates no within-side pairs by construction; the
     // link_only source condition is then the only extra filter needed
@@ -813,8 +784,10 @@ class Linker(val inputs: Seq[(String, DataFrame)], initialSettings: LinkSettings
           col(s"r.${s2.sourceDatasetColumn}"))
       case _ => None
     }
-    val idPairs = Blocking.pairsUnderRules(narrow(lc), narrow(rc), rules,
-      extraFilter)
+    val idPairs = Blocking.pairsUnderRules(
+      Blocking.narrow(lc, s2).widened("predict_between.left"),
+      Blocking.narrow(rc, s2).widened("predict_between.right"),
+      Blocking.rules(s2), extraFilter)
     val pairsDf = ComparisonVectors.pairsFromIdsTwoFrames(idPairs,
       withRequiredTf(lc, s2), withRequiredTf(rc, s2), s2,
       broadcastRecords =

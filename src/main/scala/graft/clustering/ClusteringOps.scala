@@ -234,7 +234,7 @@ object ClusteringOps {
         }
       }
     }
-    ConnectedComponents.driverLabels(spark,
+    ConnectedComponents.driverLabels(spark, "one_to_one.labels",
       nodes.indices.map(i => Row(nodes(i), nodes(rep(i)))), LongType)
   }
 

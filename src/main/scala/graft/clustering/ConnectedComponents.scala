@@ -27,8 +27,8 @@ import graft.operators.Materialise.Ops
  * so the caller's pipeline runs once — and one [[Decide.collect]] on the
  * count picks the path. A graph under the driver budget is collected from
  * that leaf and solved by union-find; a larger one runs distributed
- * contraction levels, each sized from the bytes its input leaf measurably
- * holds, never from an optimizer estimate.
+ * contraction levels, each sized from what its input leaf measurably holds
+ * (its partitions and bytes), never from an optimizer estimate.
  *
  * Every iteration breaks lineage via [[graft.operators.Materialise]]
  * (policy-selectable: localCheckpoint locally, parquet/checkpoint on a
@@ -140,19 +140,21 @@ object ConnectedComponents {
         struct(col("dst").as("node_id"), col("src").as("neighbour")))).as("e"))
       .select(col("e.node_id"), col("e.neighbour"))
       .filter(col("node_id") =!= col("neighbour"))
+    // The whole loop inherits this exchange's partitioning: the edge
+    // leaf's own task count, or the session's parallelism when fewer
+    // tasks than cores would work on it.
+    val leafTasks = math.max(1, Materialise.scanTasks(edges).toInt)
+    val keyed = symmetric.repartition(Decide.widen(spark, "cc.partitions",
+      leafTasks).getOrElse(leafTasks), col("node_id"))
     // MEASURED size: the counted leaf's block (or file) bytes, doubled by
-    // the explode. It floors the exchange's partition count — the
-    // Neighbours role (÷4) alone collapses to 4 partitions at 32 shuffle
-    // partitions, and the whole loop inherits this partitioning — and
-    // decides whether this level's frames stay on-heap (the loop re-reads
-    // them every round; on-heap measured faster, q_cluster 39.4 vs 46.9s
-    // at sf10) or go DISK_ONLY once they outgrow the spill budget.
-    // Recursion levels re-decide on their contracted size. A leaf with no
-    // cached block (an empty frame) has no readable size and reads 0.
+    // the explode. It decides whether this level's frames stay on-heap
+    // (the loop re-reads them every round; on-heap measured faster,
+    // q_cluster 39.4 vs 46.9s at sf10) or go DISK_ONLY once they outgrow
+    // the spill budget. Recursion levels re-decide on their contracted
+    // size. A leaf with no cached block (an empty frame) has no readable
+    // size and reads 0.
     val symmetricBytes =
       BigInt(Materialise.materialisedSizeBytes(edges).getOrElse(0L)) * 2
-    val keyed = graft.operators.Repartition.sizedByKeys(symmetric,
-      graft.operators.Repartition.Neighbours, symmetricBytes, col("node_id"))
     val spillFrames = Decide.spill(spark, "cc.neighbours", symmetricBytes) ==
       Decide.Spill.DiskOnly
     // dedupe is skippable under the caller's distinct-pairs promise: a
@@ -373,22 +375,13 @@ object ConnectedComponents {
           .breakLineage(eager = true, spillFrames)
         // the compose supersedes the settled-slice and active checkpoints
         // (reps is their union) AND the recursion's returned labelling
-        // (sub — release reads through its role repartition and the union
-        // of its own slices); reclaim them now. In the empty path reps IS
+        // (sub — release reads through its projection and the union of its
+        // own slices); reclaim them now. In the empty path reps IS
         // the output, so only this branch may release the slices.
         Seq(reps, sub).foreach(Materialise.release)
         composed
       }
-    // The role resize (`__splink__clusters_at_*` ÷10) collapses the join
-    // partitioning to a sane count for the caller's write / re-join —
-    // SIZE-FLOORED so a many-million-node labelling never squeezes into a
-    // couple of tasks (output rows <= 2 x count, ~32B per unsafe row of
-    // two longs), and via COALESCE when it only shrinks: `out` is a
-    // materialised checkpoint, so the narrow dependency replaces a
-    // full-frame round-robin exchange.
-    graft.operators.Repartition.sizedShrink(
-      out.select(col("node_id"), col("representative").as("cluster_id")),
-      graft.operators.Repartition.ClusteringOutput, 2 * count * 32)
+    out.select(col("node_id"), col("representative").as("cluster_id"))
   }
 
   /** Small-graph path: collect the two-column edge list and solve with
@@ -434,22 +427,24 @@ object ConnectedComponents {
       val v = values(i)
       if (!byRoot.contains(root) || lt(v, byRoot(root))) byRoot(root) = v
     }
-    driverLabels(spark, values.indices.map(i =>
+    driverLabels(spark, "cc.labels", values.indices.map(i =>
       Row(values(i), byRoot(find(i)))),
       source.schema.head.dataType)
   }
 
-  /** A labelling solved on the driver, as a (node_id, cluster_id) frame.
-    * A parallelized RDD, not a LocalRelation: a LocalRelation this size
+  /** A labelling solved on the driver, as a (node_id, cluster_id) frame:
+    * a parallelized RDD, not a LocalRelation. A LocalRelation this size
     * embeds every row in the plan, scans single-partition, and re-pays
     * driver-side conversion per action — measured 2.4x slower downstream
-    * than letting the cluster-metrics joins shuffle the distributed frame. */
-  private[clustering] def driverLabels(spark: SparkSession,
+    * than letting the cluster-metrics joins shuffle the distributed frame.
+    * Driver-held rows are one task as they stand, so [[Decide.widen]]
+    * (`what`) spreads them over the session's parallelism. */
+  private[clustering] def driverLabels(spark: SparkSession, what: String,
       rows: Seq[Row], idType: DataType): DataFrame = {
     val schema = StructType(Seq(StructField("node_id", idType),
       StructField("cluster_id", idType)))
     spark.createDataFrame(spark.sparkContext.parallelize(rows,
-      math.max(1, spark.sparkContext.defaultParallelism / 4)), schema)
+      Decide.widen(spark, what, 1).getOrElse(1)), schema)
   }
 
   /** Cluster nodes at a match-probability threshold and join assignments

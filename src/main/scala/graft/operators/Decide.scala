@@ -5,7 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /**
  * Every data-dependent physical-path choice graft makes itself, one
  * function per decision kind, each taking the numbers its caller measured
- * (the way Spark's AQE picks strategies from observed sizes). Driver-held
+ * (the way Spark's AQE picks strategies from observed sizes), partition
+ * counts included. Driver-held
  * amounts, collected rows or broadcast bytes, follow one budget rule:
  * `min(cap, Runtime.maxMemory / (8 * bytesPerRow))`, so no path pulls more
  * than ~1/8 of the driver heap. Each decision is one DEBUG line on the
@@ -36,7 +37,12 @@ object Decide {
   object JumpSplit extends Kind("jump_split", "whole_frame", "split") {
     def WholeFrame: Path = paths(0); def Split: Path = paths(1)
   }
-  val kinds: Seq[Kind] = Seq(Collect, Broadcast, Spill, JumpSplit)
+  /** Keep a frame's partitioning, or repartition it before row-multiplying
+    * or kernel-heavy work. */
+  object Widen extends Kind("widen", "keep", "repartition") {
+    def Keep: Path = paths(0); def Repartition: Path = paths(1)
+  }
+  val kinds: Seq[Kind] = Seq(Collect, Broadcast, Spill, JumpSplit, Widen)
 
   final case class Budget(bytesPerRow: Long, cap: Long) {
     def rows: Long =
@@ -113,6 +119,24 @@ object Decide {
   def jumpSplit(what: String, edges: Long): Path =
     decide(JumpSplit, what, edges, SplitJumpEdges,
       if (edges > SplitJumpEdges) JumpSplit.Split else JumpSplit.WholeFrame)
+
+  /** The session's parallelism, `spark.sql.shuffle.partitions`: the
+    * partition count a widened frame gets. */
+  def parallelism(spark: SparkSession): Int =
+    spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
+
+  /** Whether a frame on which `tasks` tasks would work is repartitioned
+    * to [[parallelism]] before pair expansion or a per-row kernel:
+    * `Some(n)` when fewer tasks than the cluster has cores would work,
+    * `None` (keep the frame as it is; later exchanges are AQE's)
+    * otherwise. `tasks` is read without a job and never from an optimizer
+    * estimate: see `Materialise.scanTasks`. */
+  def widen(spark: SparkSession, what: String, tasks: Long): Option[Int] = {
+    val cores = spark.sparkContext.defaultParallelism
+    val path = decide(Widen, what, tasks, cores,
+      if (tasks >= cores) Widen.Keep else Widen.Repartition)
+    if (path == Widen.Repartition) Some(parallelism(spark)) else None
+  }
 
   private val forced = new scala.util.DynamicVariable(Map.empty[Kind, Path])
 

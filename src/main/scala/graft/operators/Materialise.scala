@@ -197,6 +197,37 @@ object Materialise {
     if (sizes.forall(_.isDefined)) Some(sizes.flatten.sum) else None
   }
 
+  /** How many tasks would do work scanning `df`, read WITHOUT running a
+    * Spark job, through Project, Filter and Union: a block-backed leaf's
+    * partition count, and for a file leaf the partitions its scan plans,
+    * but at most one per parquet row group. A byte range of a file is not
+    * a task that works: a row group is read by the one task holding its
+    * midpoint, so a one-row-group file is one task however many splits
+    * the scan cuts it into (a lone file of a few MB is cut into one per
+    * core). Row groups are counted at `parquet.block.size`, the parquet
+    * writer's row-group size. Any other
+    * source (a join, an aggregate, a cache, local rows) cannot be read
+    * without a job and counts 0, so [[Decide.widen]] widens it. */
+  def scanTasks(df: DataFrame): Long = {
+    val spark = df.sparkSession
+    val rowGroup = spark.sparkContext.hadoopConfiguration
+      .getLong("parquet.block.size", 128L << 20)
+    def walk(p: LogicalPlan): Long = p match {
+      case v @ (_: Project | _: Filter) => walk(v.children.head)
+      case u: Union => u.children.map(walk).sum
+      case r: Repartition => r.numPartitions
+      case r: RepartitionByExpression => r.optNumPartitions.fold(0L)(_.toLong)
+      case l: LogicalRDD => l.rdd.getNumPartitions
+      case l @ LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
+        val rowGroups = fs.location.listFiles(Nil, Nil).flatMap(_.files)
+          .map(f => math.max(1L, (f.getLen + rowGroup - 1) / rowGroup)).sum
+        math.min(rowGroups,
+          org.apache.spark.sql.GraftSqlBridge.scanPartitions(spark, l))
+      case _ => 0L
+    }
+    walk(df.queryExecution.optimizedPlan)
+  }
+
   /** Unpersisting a locally-checkpointed RDD makes Spark WARN that the
     * truncated lineage "cannot be recomputed after unpersisting" — which
     * is exactly this operator's documented contract (the caller proved
@@ -264,10 +295,21 @@ object Materialise {
 
   /** `df.breakLineage(eager, spill)`: the one lineage break, under the
     * session's policy. `spill` keeps block-backed policies' blocks
-    * DISK_ONLY (checkpoint files and parquet are on disk anyway). */
+    * DISK_ONLY (checkpoint files and parquet are on disk anyway).
+    * `df.widened(what)`: the one partitioning decision applied. */
   implicit class Ops(private val df: DataFrame) extends AnyVal {
     def breakLineage(eager: Boolean = false,
         spill: Boolean = false): DataFrame =
       Materialise.breakLineage(df, eager, spill)
+
+    /** `df`, or when [[Decide.widen]] says so for its [[scanTasks]], `df`
+      * round-robin repartitioned as a one-leaf frame over one shuffle
+      * (`GraftSqlBridge.shuffledLeaf`) that any number of consumers share.
+      * For a frame feeding row-multiplying or per-row kernel work, which
+      * must not run on a small file's one task; never for a frame that is
+      * only broadcast. */
+    def widened(what: String): DataFrame =
+      Decide.widen(df.sparkSession, what, scanTasks(df)).fold(df)(n =>
+        org.apache.spark.sql.GraftSqlBridge.shuffledLeaf(df, n))
   }
 }

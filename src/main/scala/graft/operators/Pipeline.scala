@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.GraftSqlBridge
 import graft.model._
+import Materialise.Ops
 
 /**
  * Vertical concatenation of input frames (reference:
@@ -115,27 +116,21 @@ object Blocking {
     }
   }
 
-  /** Shared prelude of the blocked-pair entry points: registers the kernel
-    * functions custom rules may reference by SQL name (idempotent, for
-    * Linker-less callers), defaults an empty rule list to `1=1`, and
-    * builds the projection that narrows a side to `__join_key` plus the
-    * columns the rules need. Narrowing also widens before the self-join:
-    * pair expansion is quadratic per block and must not run on a tiny
-    * scan's task count (no-op at scale). */
-  private def rulesAndNarrow(spark: SparkSession, settings: LinkSettings)
-      : (Seq[BlockingRule], DataFrame => DataFrame) = {
-    graft.functions.funcs.registerAll(spark)
-    val rules = if (settings.blockingRules.nonEmpty) settings.blockingRules
-      else Seq(CustomBlockingRule("1=1"))
-    val neededCols = (rules.flatMap(ruleColumns) ++
+  /** The model's blocking rules; an empty list blocks nothing out (`1=1`). */
+  def rules(settings: LinkSettings): Seq[BlockingRule] =
+    if (settings.blockingRules.nonEmpty) settings.blockingRules
+    else Seq(CustomBlockingRule("1=1"))
+
+  /** The one side projection of every blocked-pair join: `__join_key` plus
+    * the columns the rules (and, across datasets, the link type) read, so
+    * the pair expansion moves only those. */
+  def narrow(df: DataFrame, settings: LinkSettings): DataFrame = {
+    val needed = (rules(settings).flatMap(ruleColumns) ++
       (settings.linkType match {
         case LinkType.DedupeOnly => Seq.empty
         case _ => Seq(settings.sourceDatasetColumn)
-      })).distinct
-    def narrow(df: DataFrame) = Repartition.ensureMinParallel(df.select(
-      (joinKeyCol(settings).as("__join_key") +:
-        neededCols.filter(df.columns.contains).map(col)): _*))
-    (rules, narrow)
+      })).distinct.filter(df.columns.contains)
+    df.select(joinKeyCol(settings).as("__join_key") +: needed.map(col): _*)
   }
 
   /**
@@ -147,19 +142,23 @@ object Blocking {
    * of self-joining the concat — half the join input, no source-dataset
    * inequality filter.
    *
+   * Each side is narrowed and then widened once, before the rule fan-out
+   * ([[Materialise.Ops.widened]]): pair expansion is quadratic per block
+   * and must not run on a small file's one task.
+   *
    * @return DataFrame(match_key: string, join_key_l, join_key_r)
    */
   def blockedIdPairs(concat: DataFrame, settings: LinkSettings,
-      twoFrames: Option[(DataFrame, DataFrame)] = None): DataFrame = {
-    val (rules, narrow) = rulesAndNarrow(concat.sparkSession, settings)
+      twoFrames: Option[(DataFrame, DataFrame)] = None): DataFrame =
     (settings.linkType, twoFrames) match {
       case (LinkType.LinkOnly, Some((left, right))) =>
-        pairsUnderRules(narrow(left), narrow(right), rules, None)
+        pairsUnderRules(narrow(left, settings).widened("blocking.left"),
+          narrow(right, settings).widened("blocking.right"),
+          rules(settings), None)
       case _ =>
-        val n = narrow(concat)
-        pairsUnderRules(n, n, rules, Some(linkTypeFilter(settings)))
+        val n = narrow(concat, settings).widened("blocking.records")
+        pairsUnderRules(n, n, rules(settings), Some(linkTypeFilter(settings)))
     }
-  }
 
   /** Blocked pairs BETWEEN two record subsets under the standard
     * link-type ordering — the reference's per-chunk blocking
@@ -168,15 +167,14 @@ object Blocking {
     * not the corpus. The uid-ordering filter still applies, so a pair
     * lands in exactly one (left-chunk, right-chunk) combination. */
   def blockedIdPairsBetween(left: DataFrame, right: DataFrame,
-      settings: LinkSettings): DataFrame = {
-    val (rules, narrow) = rulesAndNarrow(left.sparkSession, settings)
-    pairsUnderRules(narrow(left), narrow(right), rules,
+      settings: LinkSettings): DataFrame =
+    pairsUnderRules(narrow(left, settings).widened("blocking.left"),
+      narrow(right, settings).widened("blocking.right"), rules(settings),
       Some(linkTypeFilter(settings)))
-  }
 
   /**
    * Per-rule join with NOT-previous dedupe and match_key union, over
-   * already-projected l/r frames carrying `__join_key`. `extraFilter` is
+   * [[narrow]] l/r frames. `extraFilter` is
    * the link-type WHERE clause (None when joining two distinct frames,
    * e.g. find-matches-to-new-records, `blocking.py:698-744`).
    *
@@ -189,6 +187,9 @@ object Blocking {
    */
   def pairsUnderRules(left: DataFrame, right: DataFrame,
       rules: Seq[BlockingRule], extraFilter: Option[Column]): DataFrame = {
+    // custom rules may call the kernel functions by SQL name (idempotent,
+    // for Linker-less callers)
+    graft.functions.funcs.registerAll(left.sparkSession)
     val anyExplodes = rules.exists(_.arraysToExplode.nonEmpty)
     val perRule = rules.zipWithIndex.map { case (rule, i) =>
       // NOT-previous is only exact against NON-exploding earlier rules: an

@@ -18,7 +18,7 @@ import org.apache.spark.sql.expressions.Window
 object AnnOps {
 
   import DedupOps.cosine
-  import graft.operators.Repartition.ensureMinParallel
+  import graft.operators.Materialise.Ops
 
   /** Exact top-k by cosine: queries × corpus. The query side is broadcast —
     * corpus never shuffles. */
@@ -28,8 +28,8 @@ object AnnOps {
     val q = queries.select(col(queryIdCol).as("query_id"), col(vecCol).as("qv"))
     // widen the streamed corpus side: the per-pair cosine re-rank must not
     // inherit a single-row-group scan's one-task parallelism (no-op at scale)
-    val c = ensureMinParallel(
-      corpus.select(col(corpusIdCol).as("neighbour_id"), col(vecCol).as("cv")))
+    val c = corpus.select(col(corpusIdCol).as("neighbour_id"), col(vecCol).as("cv"))
+      .widened("ann.corpus")
     val scored = c.crossJoin(broadcast(q))
       .filter(col("query_id") =!= col("neighbour_id"))
       .select(col("query_id"), col("neighbour_id"),
@@ -184,8 +184,8 @@ object AnnOps {
     val centroids = trainCentroids(corpus, vecCol, nCells, seed = seed,
       idCol = corpusIdCol)
     // widen BEFORE cell assignment so the kernel scan parallelises too
-    val craw = ensureMinParallel(
-      corpus.select(col(corpusIdCol).as("neighbour_id"), col(vecCol).as("cv")))
+    val craw = corpus.select(col(corpusIdCol).as("neighbour_id"), col(vecCol).as("cv"))
+      .widened("ann.corpus")
     val c = craw.select(col("neighbour_id"), col("cv"),
       cellAssignment(col("cv"), centroids).as("cell"))
     val q = queries.select(col(queryIdCol).as("query_id"), col(vecCol).as("qv"),
@@ -224,8 +224,8 @@ object AnnOps {
       vecCol: String = "embedding"): DataFrame = {
     val q = queries.select(col(queryIdCol).as("query_id"),
       quantizeInt8(col(vecCol)).as("qq"))
-    val c = ensureMinParallel(
-      corpus.select(col(corpusIdCol).as("neighbour_id"), col(vecCol).as("cv")))
+    val c = corpus.select(col(corpusIdCol).as("neighbour_id"), col(vecCol).as("cv"))
+      .widened("ann.corpus")
       .select(col("neighbour_id"), quantizeInt8(col("cv")).as("cq"))
     // int values are exact in the double kernel up to 2^53 — the sum is a
     // lossless integer for any realistic dim
@@ -263,8 +263,8 @@ object AnnOps {
     val q = queries.select(col(queryIdCol).as("query_id"), col(vecCol).as("qv"),
       posexplode(sigs(col(vecCol))).as(Seq("t", "sig")))
     // widen BEFORE the signature explode so the kernel scan parallelises
-    val craw = ensureMinParallel(
-      corpus.select(col(corpusIdCol).as("neighbour_id"), col(vecCol).as("cv")))
+    val craw = corpus.select(col(corpusIdCol).as("neighbour_id"), col(vecCol).as("cv"))
+      .widened("ann.corpus")
     val c = craw.select(col("neighbour_id"), col("cv"),
       posexplode(sigs(col("cv"))).as(Seq("t", "sig")))
     val scored = c.join(broadcast(q), Seq("t", "sig"))

@@ -57,23 +57,23 @@ object CorpusOps {
     // grams travel as xxhash64 longs, not strings: the exploded corpus side
     // is the big relation, and 8-byte keys shrink its shuffle/aggregation
     // footprint several-fold (collisions ~grams²/2^64 — negligible)
-    // widen BOTH sides before the n-gram kernels: a single-row-group
+    // widen the corpus side before the n-gram kernel: a single-row-group
     // parquet scan would otherwise serialise the explode (and the
     // per-doc aggregation it feeds) onto a handful of cores — at sf0.1
-    // this was the single slowest query in the suite (8 tasks, ~15s)
+    // this was the single slowest query in the suite (8 tasks, ~15s).
+    // The probe side is only broadcast, so it is never widened.
     // gram hashing is the native one-pass word_ngram_hashes kernel (r13):
     // the tokens -> arrays_zip -> concat_ws -> xxhash64 chain allocated a
     // token array, n sliced arrays, a struct per position and an n-gram
     // STRING per gram just to produce a long — the kernel FNV-hashes each
     // gram's contiguous span of the normalised text in place. Both sides
     // MUST share the kernel (the hash is the join key).
-    val probeGrams = graft.operators.Repartition.ensureMinParallel(
-        probes.select(col(probeTextCol)))
+    val probeGrams = probes
       .select(explode(graft.functions.funcs
         .word_ngram_hashes(col(probeTextCol), n)).as("gram"))
       .distinct()
-    val corpusGrams = graft.operators.Repartition.ensureMinParallel(
-        corpus.select(col(idCol), col(textCol)))
+    val corpusGrams = corpus.select(col(idCol), col(textCol))
+      .widened("contamination.corpus")
       .select(col(idCol),
         explode(graft.functions.funcs
           .word_ngram_hashes(col(textCol), n)).as("gram"))

@@ -21,13 +21,14 @@ object DedupOps {
   def tokenSet(text: Column): Column =
     array_distinct(TextOps.tokens(lower(text)))
 
-  /** Narrow raw projection, widened to session parallelism BEFORE the
-    * per-document shingle/signature kernels run: a single-row-group input
-    * file must not serialise the kernel scan (and the quadratic bucket
-    * joins fed by it) onto one core. No-op at scale — see
-    * [[graft.operators.Repartition.ensureMinParallel]]. */
+  /** Narrow raw projection, widened BEFORE the per-document
+    * shingle/signature kernels run when too few tasks would scan it: a
+    * single-row-group input file must not serialise the kernel scan (and
+    * the quadratic bucket joins fed by it) onto one core. One
+    * `Decide.widen` event, `what=dedup.docs` — see
+    * [[graft.operators.Materialise.Ops.widened]]. */
   private def widened(df: DataFrame, cols: Seq[Column]): DataFrame =
-    graft.operators.Repartition.ensureMinParallel(df.select(cols: _*))
+    df.select(cols: _*).widened("dedup.docs")
 
   // ---------------------------------------------------------------- exact
 

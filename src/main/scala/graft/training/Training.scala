@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model._
 import graft.operators._
+import graft.operators.Materialise.Ops
 import graft.pipeline.TextOps
 
 /**
@@ -63,14 +64,11 @@ object Training {
         col(settings.uniqueIdColumn).cast("string"), lit(s.toString))
       case None => col(settings.uniqueIdColumn).cast("string")
     }
-    // repartition-to-role before the persist (`spark/database_api.py:263`,
-    // `__splink__df_concat_with_tf_sample` ÷4): the filter keeps input
-    // partitioning, so a sparse sample would otherwise cache as many
-    // near-empty partitions feeding the cartesian below
-    val sampled = Repartition(
-      if (needed >= total) concat
-      else concat.filter(TextOps.hashSample(sampleKey, needed.toDouble / total)),
-      Repartition.ConcatWithTfSample).persist()
+    // materialised once, so the blocking below widens the cartesian's side
+    // from the sample's own partition count
+    val sampled = (if (needed >= total) concat
+      else concat.filter(TextOps.hashSample(sampleKey, needed.toDouble / total))
+      ).breakLineage(eager = true)
     val uSettings = settings.copy(
       blockingRules = Seq(BlockingRule.CustomBlockingRule("1=1")))
     val pairs = Blocking.blockedIdPairs(sampled, uSettings)
@@ -102,7 +100,7 @@ object Training {
       }
       k += 1
     }
-    sampled.unpersist()
+    Materialise.release(sampled)
     applyLevelProbabilities(settings, merged.toMap, setM = false,
       sessionDesc = "estimate u by random sampling")
   }

@@ -65,4 +65,36 @@ object GraftSqlBridge {
       (classic.Dataset.ofRows(c.sparkSession, leaf), rdd)
     }
   }
+
+  /** The partitions a scan of `leaf` alone plans: physical planning of
+    * one leaf, no job. */
+  def scanPartitions(spark: SparkSession,
+      leaf: catalyst.plans.logical.LogicalPlan): Int =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], leaf)
+      .queryExecution.sparkPlan.collectFirst {
+        case s: execution.FileSourceScanExec => s.inputRDD.getNumPartitions
+      }.getOrElse(0)
+
+  /** `df` round-robin repartitioned into `n` partitions, as a frame whose
+    * plan is one `LogicalRDD` leaf over ONE shuffle. Every consumer of the
+    * leaf reads the same map output: a fan-out into k joins shuffles once,
+    * where k consumers of `df.repartition(n)` each plan an exchange of
+    * their own (the optimizer pushes each consumer's filters below it). No
+    * job runs here unless `df`'s own plan holds an exchange, which AQE
+    * runs while the leaf is built. The leaf carries `df`'s size estimate,
+    * so join planning over it is the same as over `df`. */
+  def shuffledLeaf(df: DataFrame, n: Int): DataFrame = {
+    val c = df.asInstanceOf[classic.Dataset[Row]]
+    val qe = c.queryExecution
+    execution.SQLExecution.withNewExecutionId(qe, Some("widen")) {
+      val rdd = execution.exchange.ShuffleExchangeExec(
+        catalyst.plans.physical.RoundRobinPartitioning(n), qe.executedPlan,
+        execution.exchange.REPARTITION_BY_NUM).execute()
+      val leaf = execution.LogicalRDD(c.logicalPlan.output, rdd,
+        catalyst.plans.physical.UnknownPartitioning(n), Nil, c.isStreaming)(
+        c.sparkSession, Some(catalyst.plans.logical.Statistics(
+          qe.optimizedPlan.stats.sizeInBytes)))
+      classic.Dataset.ofRows(c.sparkSession, leaf)
+    }
+  }
 }

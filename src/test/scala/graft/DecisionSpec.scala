@@ -121,11 +121,20 @@ class DecisionSpec extends SparkSpec {
       assert(math.abs(core.m(i)(1) - mTrue(i)(1)) < 1e-2, s"m$i=${core.m(i)}")
   }
 
-  def people: DataFrame = Seq(
+  val peopleRows: Seq[(Long, String, String, String)] = Seq(
     (0L, "John", "Smith", "london"), (1L, "Jon", "Smith", "london"),
     (2L, "Mary", "Jones", "leeds"), (3L, "Mary", "Jones", "york"),
     (4L, "Mary", "Jones", "leeds"))
-    .toDF("unique_id", "first_name", "surname", "city")
+  def people: DataFrame =
+    peopleRows.toDF("unique_id", "first_name", "surname", "city")
+
+  /** Blocked pairs on surname, against every same-surname pair. */
+  def assertBlockedPairs(): Unit = {
+    val got = graft.operators.Blocking.blockedIdPairs(people, linkSettings)
+      .select("join_key_l", "join_key_r").as[(Long, Long)].collect().toSet
+    assert(got == (for (a <- peopleRows; b <- peopleRows
+      if a._1 < b._1 && a._3 == b._3) yield (a._1, b._1)).toSet)
+  }
 
   def linkSettings: LinkSettings = LinkSettings(
     blockingRules = Seq(BlockingRule.blockOn("surname")),
@@ -186,6 +195,19 @@ class DecisionSpec extends SparkSpec {
     Decide.JumpSplit -> { p =>
       forcedDistributed(Decide.JumpSplit -> p)(assertCc())
       Seq(s"what=cc.jumps path=${p.name}")
+    },
+    Decide.Widen -> { p =>
+      val predicted = predictRows()
+      Decide.forcing(Decide.Widen -> p) {
+        assertBlockedPairs()
+        assert(predictRows() == predicted)
+      }
+      // CC's driver-held labels, and its loop frame, widened or at the
+      // edge leaf's own count
+      Decide.forcing(Decide.Widen -> p)(assertCc())
+      forcedDistributed(Decide.Widen -> p)(assertCc())
+      Seq("blocking.records", "cc.labels", "cc.partitions")
+        .map(w => s"what=$w path=${p.name}")
     })
 
   test("every decision kind has a check") {
@@ -204,12 +226,15 @@ class DecisionSpec extends SparkSpec {
   test("a decision is reported as one DEBUG event with kind and path") {
     val edges = spark.range(1, 6).selectExpr("id AS unique_id_l",
       "id + 1 AS unique_id_r")
-    // the driver path reports exactly one decision: the collect
+    // the driver path reports exactly two decisions: the collect, and
+    // the partitioning of the driver-held labels
     val (_, seen) = events(ConnectedComponents.run(edges).collect())
-    assert(seen.size == 1, seen.mkString("\n"))
+    assert(seen.size == 2, seen.mkString("\n"))
     assert(seen.head.startsWith("decision kind=collect what=cc.edges " +
       "path=driver measured=10 "), seen.head)
-    assert(seen.head.endsWith("forced=false"))
+    assert(seen(1).startsWith("decision kind=widen what=cc.labels " +
+      "path=repartition measured=1 "), seen(1))
+    assert(seen.forall(_.endsWith("forced=false")))
   }
 
   test("CC's spill decision reads the edge leaf's measured bytes") {

@@ -66,6 +66,27 @@ class InferenceSpec extends SparkSpec {
     assert(Set(0L, 1L).contains(best.getAs[Long]("unique_id_l")))
   }
 
+  test("find matches to new records scores with the tf values they carry") {
+    val tfSettings = settings.copy(comparisons = settings.comparisons :+
+      Comparison("surname", Seq(ll.nullLevel("surname"),
+        ll.exactMatch("surname", tfAdjustment = true).withM(0.9).withU(0.1),
+        ll.elseLevel.withM(0.1).withU(0.9))))
+    val linker = new Linker(people, tfSettings)
+    def scored(tf: Double) = {
+      val newRec = Seq((100L, "Johnn", "Smith", "1990-01-01", tf))
+        .toDF("unique_id", "first_name", "surname", "dob", "tf_surname")
+      val found = linker.findMatchesToNewRecords(newRec).collect()
+        .map(key).toSet
+      // the supplied tf_surname wins over the corpus table, as in scorePairs
+      val oracle = linker.scorePairs(people, newRec)
+        .filter(col("surname_l") === col("surname_r"))
+        .collect().map(key).toSet
+      assert(found == oracle && found.size == 3)
+      found
+    }
+    assert(scored(0.6) != scored(0.9))
+  }
+
   test("salted blocking yields identical pairs") {
     val plain = new Linker(people, settings).blockedIdPairs()
       .select("join_key_l", "join_key_r").collect()

@@ -1,13 +1,19 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import graft.model._
-import graft.model.{LevelLibrary => ll}
-import graft.operators.Repartition
+import graft.operators.{Blocking, Decide, Materialise}
+import graft.operators.Materialise.Ops
 
-/** Repartition-by-table-role policy (reference
-  * `spark/database_api.py:220-287`): role divisors over the base
-  * parallelism, and its application at the engine's persist points. */
+/** Partitioning: salted blocking's smaller max task, and the one
+  * partitioning decision ([[Decide.widen]]): what it measures, the case it
+  * exists for (pair expansion over a one-row-group file), and that it
+  * neither widens a frame already split wide enough nor runs a job. */
 class RepartitionSpec extends SparkSpec {
   import spark.implicits._
 
@@ -18,35 +24,33 @@ class RepartitionSpec extends SparkSpec {
     try body finally spark.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
-  test("role divisors follow the reference policy over base = ceil(p/2)") {
-    withShufflePartitions(32) {
-      val df = Seq(1, 2, 3).toDF("x")
-      assert(Repartition.base(df) === 16)
-      assert(Repartition.numPartitions(df, Repartition.Predict) === 16)
-      assert(Repartition.numPartitions(df, Repartition.ConcatWithTf) === 4)
-      assert(Repartition.numPartitions(df, Repartition.ConcatWithTfSample) === 4)
-      assert(Repartition.numPartitions(df, Repartition.Neighbours) === 4)
-      assert(Repartition.numPartitions(df, Repartition.BlockedIdPairs) === 3)
-      assert(Repartition.numPartitions(df, Repartition.Representatives) === 3)
-      assert(Repartition.numPartitions(df, Repartition.ClusteringOutput) === 2)
-      assert(Repartition(df, Repartition.ConcatWithTf).rdd.getNumPartitions === 4)
-    }
+  /** 240 people over few surnames, cities and birth years: every rule of
+    * [[fourRules]] blocks many pairs. */
+  val people: Seq[(Long, String, String, String, Int)] = (0 until 240).map(i =>
+    (i.toLong, s"f${i % 13}", s"s${i % 9}", s"c${i % 7}", 1950 + i % 11))
+
+  val fourRules = LinkSettings(linkType = LinkType.DedupeOnly,
+    blockingRules = Seq(BlockingRule.blockOn("surname"),
+      BlockingRule.blockOn("first_name", "city"),
+      BlockingRule.blockOn("city", "yob"),
+      BlockingRule.blockOn("first_name", "yob")))
+
+  /** Brute force: every id pair (l < r) that any rule catches. */
+  val bruteForcePairs: Long = (for {
+    a <- people; b <- people if a._1 < b._1
+    if a._3 == b._3 || (a._2 == b._2 && a._4 == b._4) ||
+      (a._4 == b._4 && a._5 == b._5) || (a._2 == b._2 && a._5 == b._5)
+  } yield 1L).sum
+
+  /** `people` written as `files` parquet files (one row group each). */
+  def parquet(files: Int): DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-widen").toString
+    people.toDF("unique_id", "first_name", "surname", "city", "yob")
+      .repartition(files).write.mode("overwrite").parquet(dir + "/p")
+    spark.read.parquet(dir + "/p")
   }
 
-  test("concat-with-tf persists with the role's partition count") {
-    val df = (1 to 200).map(i => (i.toLong, s"n${i % 7}")).toDF("unique_id", "name")
-    val settings = LinkSettings(
-      linkType = LinkType.DedupeOnly,
-      blockingRules = Seq(BlockingRule.blockOn("name")),
-      comparisons = Seq(Comparison("name", Seq(
-        ll.nullLevel("name"),
-        ll.exactMatch("name", tfAdjustment = true).withM(0.8).withU(0.01),
-        ll.elseLevel.withM(0.2).withU(0.99)))))
-    val linker = new Linker(df, settings)
-    assert(linker.concatWithTf.rdd.getNumPartitions ===
-      Repartition.numPartitions(df, Repartition.ConcatWithTf))
-    linker.concatWithTf.unpersist()
-  }
+  def planString(df: DataFrame): String = df.queryExecution.executedPlan.toString
 
   test("salted hot-key blocking: identical pair set, smaller max task") {
     withShufflePartitions(8) {
@@ -123,41 +127,91 @@ class RepartitionSpec extends SparkSpec {
     }
   }
 
-  test("ensureMinParallel widens a narrow localCheckpoint'd frame (no stats)") {
+  test("widen repartitions a narrow localCheckpoint'd frame (no stats)") {
     withShufflePartitions(16) {
-      // a LogicalRDD leaf has no size stats (defaultSizeInBytes =
-      // Long.MaxValue) — the byte probe alone would always claim "wide
-      // enough"; the partition count must come off the materialised RDD
+      // a LogicalRDD leaf has no size stats; its task count comes off the
+      // materialised RDD
       val narrow = Seq.tabulate(64)(i => (i.toLong, s"d$i")).toDF("id", "t")
         .repartition(2).localCheckpoint()
-      assert(narrow.rdd.getNumPartitions === 2)
-      val widened = Repartition.ensureMinParallel(narrow)
-      assert(widened.rdd.getNumPartitions === 16,
+      assert(Materialise.scanTasks(narrow) === 2)
+      assert(narrow.widened("test.narrow").rdd.getNumPartitions === 16,
         "kernel-heavy callers must never inherit a tiny checkpoint's task count")
       // an already-wide checkpoint is left alone (no pointless exchange)
       val wide = Seq.tabulate(64)(i => (i.toLong, s"d$i")).toDF("id", "t")
         .repartition(16).localCheckpoint()
-      assert(Repartition.ensureMinParallel(wide) eq wide)
-      // derived (non-leaf) plans over the checkpoint still probe the leaf
+      assert(wide.widened("test.wide") eq wide)
+      // derived (non-leaf) plans over the checkpoint still read the leaf
       val derived = narrow.filter(col("id") >= 0).select(col("id"))
-      assert(Repartition.ensureMinParallel(derived).rdd.getNumPartitions === 16)
+      assert(derived.widened("test.derived").rdd.getNumPartitions === 16)
     }
   }
 
-  test("keyed role exchange satisfies a downstream dedupe without a second shuffle") {
-    withShufflePartitions(32) {
-      val edges = (1 to 100).flatMap(i => Seq((i.toLong, (i + 1).toLong)))
-        .toDF("node_id", "neighbour")
-      val deduped = Repartition
-        .byKeys(edges, Repartition.Neighbours, col("node_id"))
-        .dropDuplicates()
-      // hash(node_id) clusters every copy of a (node_id, neighbour) pair,
-      // so the dedupe aggregate needs no exchange of its own
-      val plan = deduped.queryExecution.executedPlan.toString
-      assert(plan.split("Exchange hashpartitioning").length - 1 === 1,
-        s"expected the role exchange to be the only shuffle:\n$plan")
-      assert(deduped.rdd.getNumPartitions ===
-        Repartition.numPartitions(edges, Repartition.Neighbours))
+  test("a one-row-group file still expands pairs on every shuffle partition, " +
+      "through one widening shuffle") {
+    val target = Decide.parallelism(spark)
+    val input = parquet(1)
+    assert(Materialise.scanTasks(input) === 1)
+    val pairs = Blocking.blockedIdPairs(input, fourRules)
+    assert(pairs.count() === bruteForcePairs)
+    // each rule's pairs come out of every widened partition, not one task
+    val spread = pairs.select(col(Cols.MatchKey), spark_partition_id())
+      .as[(String, Int)].collect().distinct.groupBy(_._1)
+      .map { case (k, ps) => k -> ps.length }
+    assert(spread.keySet == Set("0", "1", "2", "3"), spread)
+    spread.values.foreach(t => assert(t >= target, spread))
+    // one shuffle serves all four rules and both sides: every branch reads
+    // the same widened leaf, and no rule plans a round-robin exchange
+    val leaves = pairs.queryExecution.optimizedPlan.collect {
+      case l: LogicalRDD => l.rdd.id
+    }
+    assert(leaves.size >= 4 && leaves.distinct.size == 1, leaves)
+    assert(!planString(pairs).contains("RoundRobinPartitioning"),
+      planString(pairs))
+  }
+
+  test("an input already scanned on every core is not widened") {
+    val input = parquet(Decide.parallelism(spark))
+    // the scan packs small files, so it plans fewer tasks than files; each
+    // task it plans works, and there are as many as cores
+    assert(Materialise.scanTasks(input) === input.rdd.getNumPartitions)
+    assert(Materialise.scanTasks(input) >=
+      spark.sparkContext.defaultParallelism)
+    val pairs = Blocking.blockedIdPairs(input, fourRules)
+    assert(pairs.count() === bruteForcePairs)
+    assert(pairs.queryExecution.optimizedPlan.collect {
+      case l: LogicalRDD => l }.isEmpty)
+    assert(!planString(pairs).contains("RoundRobinPartitioning"),
+      planString(pairs))
+  }
+
+  test("the widening decision runs no Spark job") {
+    val input = parquet(1)
+    val group = s"widen-${System.nanoTime}"
+    val started = new AtomicInteger
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => started.incrementAndGet()
+          case Some(g) if g == group + "-marker" => marker.countDown()
+          case _ =>
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup(group, "widen decision")
+      val widened = Blocking.narrow(input, fourRules).widened("test.no_job")
+      assert(widened.queryExecution.optimizedPlan.isInstanceOf[LogicalRDD])
+      Blocking.blockedIdPairs(input, fourRules)
+      // listener events arrive in order: once the marker job is seen,
+      // any job the decision started has been counted
+      spark.sparkContext.setJobGroup(group + "-marker", "marker")
+      spark.range(1).count()
+      assert(marker.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      assert(started.get === 0)
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(listener)
     }
   }
 }
