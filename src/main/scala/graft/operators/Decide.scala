@@ -157,6 +157,13 @@ object Decide {
 
   private val log = org.apache.logging.log4j.LogManager.getLogger("graft")
 
+  /** An event that reports rather than decides, such as the recall a band
+    * join guarantees: `<event> what=<what> <fields>` at DEBUG on the same
+    * logger, built only when someone listens. */
+  private[graft] def report(event: String, what: String,
+      fields: => String): Unit =
+    if (log.isDebugEnabled) log.debug(s"$event what=$what $fields")
+
   /** The one decision event, free unless someone listens at DEBUG. */
   private def decided(kind: Kind, what: String, path: Path,
       measured: BigInt, budget: BigInt, isForced: Boolean): Unit =

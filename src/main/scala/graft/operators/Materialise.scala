@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan,
   Project, Repartition, RepartitionByExpression, Union}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.storage.StorageLevel
 
@@ -205,8 +206,9 @@ object Materialise {
     * midpoint, so a one-row-group file is one task however many splits
     * the scan cuts it into (a lone file of a few MB is cut into one per
     * core). Row groups are counted at `parquet.block.size`, the parquet
-    * writer's row-group size. Any other
-    * source (a join, an aggregate, a cache, local rows) cannot be read
+    * writer's row-group size. A persisted frame counts its cache's
+    * partitions once every block is built; an unbuilt cache, like any
+    * other source (a join, an aggregate, local rows), cannot be read
     * without a job and counts 0, so [[Decide.widen]] widens it. */
   def scanTasks(df: DataFrame): Long = {
     val spark = df.sparkSession
@@ -218,6 +220,8 @@ object Materialise {
       case r: Repartition => r.numPartitions
       case r: RepartitionByExpression => r.optNumPartitions.fold(0L)(_.toLong)
       case l: LogicalRDD => l.rdd.getNumPartitions
+      case m: InMemoryRelation if m.cacheBuilder.isCachedColumnBuffersLoaded =>
+        m.cacheBuilder.cachedColumnBuffers.getNumPartitions
       case l @ LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
         val rowGroups = fs.location.listFiles(Nil, Nil).flatMap(_.files)
           .map(f => math.max(1L, (f.getLen + rowGroup - 1) / rowGroup)).sum

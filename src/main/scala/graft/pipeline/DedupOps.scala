@@ -2,6 +2,8 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.funcs
+import graft.operators.Decide
 import graft.operators.Materialise.Ops
 
 /**
@@ -10,16 +12,15 @@ import graft.operators.Materialise.Ops
  * join (never all-pairs), verification runs only inside candidate buckets.
  *
  *  - exact: hash-groupBy on normalised content
- *  - MinHash + LSH: shingle -> minhash signature -> banded bucket join
- *  - SimHash: 64-bit signature -> band join -> hamming verify
- *  - token-Jaccard: blocked self-join + set overlap
+ *  - set pairs (token / n-gram Jaccard, containment): one blocked set-join
+ *    ([[blockedSetPairs]]), each operator adding only its verify step
+ *  - MinHash + LSH and SimHash / image hashes: one band join
+ *    ([[bandJoin]]) for the self and the probe-vs-corpus shapes, which
+ *    reports the recall its bands guarantee
  *  - embedding cosine: bucketed pairs above a similarity threshold
+ *  - near-dup clusters: one CC closure to a canonical id ([[canonicalKeep]])
  */
 object DedupOps {
-
-  /** Normalised token set of a text column. */
-  def tokenSet(text: Column): Column =
-    array_distinct(TextOps.tokens(lower(text)))
 
   /** Narrow raw projection, widened BEFORE the per-document
     * shingle/signature kernels run when too few tasks would scan it: a
@@ -30,6 +31,15 @@ object DedupOps {
   private def widened(df: DataFrame, cols: Seq[Column]): DataFrame =
     df.select(cols: _*).widened("dedup.docs")
 
+  /** The widened `(id, __text, bk0, bk1, ...)` projection of the blocked
+    * operators, and the names of its key columns. */
+  private def keyedText(df: DataFrame, idCol: String, textCol: String,
+      blockKeys: Seq[Column]): (DataFrame, Seq[String]) = {
+    val keys = blockKeys.indices.map(i => s"bk$i")
+    (widened(df, col(idCol).as("id") +: col(textCol).as("__text") +:
+      blockKeys.zip(keys).map { case (k, n) => k.as(n) }), keys)
+  }
+
   // ---------------------------------------------------------------- exact
 
   /** One representative (min id) per exact normalised text. */
@@ -37,77 +47,72 @@ object DedupOps {
     df.groupBy(TextOps.fingerprint(col(textCol)).as("fingerprint"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_copies"))
 
-  /** EXACT set-size prune shared by every jaccard-thresholded pair
-    * generator: J(A,B) >= t forces |A∩B| >= t*|A∪B| >= t*max(|A|,|B|),
-    * and |A∩B| <= min(|A|,|B|) — so min >= t*max or the pair can never
-    * verify. Zero false negatives (round-to-nearest of t*max can never
-    * overshoot the representable integer min). ONE definition: the four
-    * band/blocked joins that prune on it must never diverge. */
+  /** EXACT set-size prune of every jaccard-thresholded pair: J(A,B) >= t
+    * forces |A∩B| >= t*|A∪B| >= t*max(|A|,|B|), and |A∩B| <= min(|A|,|B|)
+    * — so min >= t*max or the pair can never verify. Zero false negatives
+    * (round-to-nearest of t*max can never overshoot the representable
+    * integer min). ONE definition, applied in the jaccard verify step
+    * ([[jaccardVerified]]) and in the MinHash band join, before the
+    * candidate `distinct` and before any shingle array is fetched. */
   private def sizeRatioOk(nl: Column, nr: Column, threshold: Double): Column =
     least(nl, nr).cast("double") >= lit(threshold) * greatest(nl, nr)
 
-  // -------------------------------------------------------- token jaccard
-
-  /** Candidate pairs from equality blocking, verified by token-set Jaccard
-    * >= threshold. blockKeys must be cheap, low-ish-cardinality columns.
-    *
-    * Shuffle rows carry SORTED HASHED tokens (array<long>), never the raw
-    * `array<string>` token sets: an order of magnitude fewer shuffle bytes
-    * for prose, and verification is a linear merge over sorted longs
-    * instead of an interpreted string array_intersect. Jaccard over 64-bit
-    * token hashes equals true Jaccard up to ~1e-19 collision probability. */
-  def tokenJaccardPairs(df: DataFrame, idCol: String, textCol: String,
-      blockKeys: Seq[Column], threshold: Double): DataFrame = {
-    val raw = widened(df, col(idCol).as("id") +: col(textCol).as("__text") +:
-      blockKeys.zipWithIndex.map { case (k, i) => k.as(s"bk$i") })
-    val withTok = raw.select(
-      (col("id") +:
-        graft.functions.funcs.hashed_tokens(col("__text")).as("toks") +:
-        blockKeys.indices.map(i => col(s"bk$i"))): _*)
-    val keys = blockKeys.indices.map(i => s"bk$i")
-    val l = withTok.alias("l")
-    val r = withTok.alias("r")
-    val joinCond = keys.map(k => col(s"l.$k") === col(s"r.$k"))
-      .reduce(_ && _) && col("l.id") < col("r.id")
-    val jac = graft.functions.funcs.jaccard_sorted_longs(col("l.toks"), col("r.toks"))
-    // filter on the UNROUNDED jaccard (round only in the projection) so the
-    // threshold semantics match an oracle that filters the raw ratio.
-    // The set-size check runs FIRST (And short-circuits in codegen): a
-    // pruned pair skips the linear merge entirely — see [[sizeRatioOk]].
-    val sizeOk =
-      sizeRatioOk(size(col("l.toks")), size(col("r.toks")), threshold)
-    l.join(r, joinCond)
-      .filter(sizeOk && jac >= threshold)
-      .select(col("l.id").as("id_l"), col("r.id").as("id_r"),
+  /** `(names, jaccard)` of pairs whose `l` and `r` sides carry `id` and
+    * sorted hashed `toks`, at jaccard >= threshold: filtered UNROUNDED (as
+    * an oracle filters the raw ratio), rounded in the projection; the
+    * size check short-circuits the linear merge of a pruned pair. */
+  private def jaccardVerified(pairs: DataFrame, threshold: Double,
+      names: (String, String) = ("id_l", "id_r")): DataFrame = {
+    val jac = funcs.jaccard_sorted_longs(col("l.toks"), col("r.toks"))
+    pairs.filter(sizeRatioOk(size(col("l.toks")), size(col("r.toks")),
+        threshold) && jac >= threshold)
+      .select(col("l.id").as(names._1), col("r.id").as(names._2),
         round(jac, 9).as("jaccard"))
   }
+
+  // ------------------------------------------------------------ set pairs
+
+  /** The one blocked set-join: every pair `l.id < r.id` that agrees on all
+    * `blockKeys` (cheap, low-ish-cardinality columns), each side carrying
+    * `toks = kernel(text)`. Each set-pair operator adds only its verify.
+    *
+    * Shuffle rows carry SORTED HASHED sets (array<long>), never raw
+    * `array<string>` sets: an order of magnitude fewer shuffle bytes for
+    * prose, and verification is a native linear merge over sorted longs.
+    * Jaccard over 64-bit hashes equals true Jaccard up to ~1e-19
+    * collision probability. */
+  private def blockedSetPairs(df: DataFrame, idCol: String, textCol: String,
+      blockKeys: Seq[Column], kernel: Column => Column): DataFrame = {
+    require(blockKeys.nonEmpty, "a blocked set-join needs at least one key")
+    val (raw, keys) = keyedText(df, idCol, textCol, blockKeys)
+    val sets = raw.select(
+      col("id") +: kernel(col("__text")).as("toks") +: keys.map(col): _*)
+    sets.alias("l").join(sets.alias("r"),
+      (keys.map(k => col(s"l.$k") === col(s"r.$k")) :+
+        (col("l.id") < col("r.id"))).reduce(_ && _))
+  }
+
+  /** Token-set Jaccard pairs within equality blocks, at jaccard >=
+    * threshold: (id_l, id_r, jaccard). */
+  def tokenJaccardPairs(df: DataFrame, idCol: String, textCol: String,
+      blockKeys: Seq[Column], threshold: Double): DataFrame =
+    jaccardVerified(blockedSetPairs(df, idCol, textCol, blockKeys,
+      funcs.hashed_tokens), threshold)
 
   /** Asymmetric containment pairs: containment(A⊂B) = |A∩B| / |A| — the
     * boilerplate/quotation detector Jaccard cannot express (a short doc
     * fully contained in a long one has low Jaccard but containment 1).
-    * Same blocked-join shape as [[tokenJaccardPairs]] (hashed sorted
-    * longs, one native linear-merge intersection per candidate pair);
-    * emits a pair when EITHER direction clears the threshold, with both
-    * directions reported. Empty-token docs never qualify. */
+    * Token sets through [[blockedSetPairs]], one native linear-merge
+    * intersection per candidate pair; emits a pair when EITHER direction
+    * clears the threshold, with both directions reported. Empty-token
+    * docs never qualify. */
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
       blockKeys: Seq[Column], threshold: Double): DataFrame = {
-    val raw = widened(df, col(idCol).as("id") +: col(textCol).as("__text") +:
-      blockKeys.zipWithIndex.map { case (k, i) => k.as(s"bk$i") })
-    val withTok = raw.select(
-      (col("id") +:
-        graft.functions.funcs.hashed_tokens(col("__text")).as("toks") +:
-        blockKeys.indices.map(i => col(s"bk$i"))): _*)
-    val keys = blockKeys.indices.map(i => s"bk$i")
-    val l = withTok.alias("l")
-    val r = withTok.alias("r")
-    val joinCond = keys.map(k => col(s"l.$k") === col(s"r.$k"))
-      .reduce(_ && _) && col("l.id") < col("r.id")
-    val inter = graft.functions.funcs
-      .intersect_sorted_longs(col("l.toks"), col("r.toks"))
+    val inter = funcs.intersect_sorted_longs(col("l.toks"), col("r.toks"))
     val nl = size(col("l.toks")).cast("double")
     val nr = size(col("r.toks")).cast("double")
-    // unrounded filter, rounded projection — see tokenJaccardPairs
-    l.join(r, joinCond)
+    // unrounded filter, rounded projection — see jaccardVerified
+    blockedSetPairs(df, idCol, textCol, blockKeys, funcs.hashed_tokens)
       .withColumn("__inter", inter)
       .filter(col("__inter") > 0 &&
         (col("__inter") / nl >= threshold || col("__inter") / nr >= threshold))
@@ -116,32 +121,53 @@ object DedupOps {
         round(col("__inter") / nr, 9).as("containment_r_in_l"))
   }
 
-  /** Character n-gram Jaccard pairs: same blocked-join shape as
-    * [[tokenJaccardPairs]] but over shingle sets (hashed + sorted, linear-
-    * merge verify) — catches near-dups that word-level sets miss
-    * (reorderings, joined/split words). */
+  /** Character n-gram Jaccard pairs: [[tokenJaccardPairs]] over q-shingle
+    * sets — catches near-dups that word-level sets miss (reorderings,
+    * joined/split words). */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
-      blockKeys: Seq[Column], threshold: Double, q: Int = 5): DataFrame = {
-    val raw = widened(df, col(idCol).as("id") +: col(textCol).as("__text") +:
-      blockKeys.zipWithIndex.map { case (k, i) => k.as(s"bk$i") })
-    val withTok = raw.select(
-      (col("id") +:
-        graft.functions.funcs.hashed_shingles(col("__text"), q).as("toks") +:
-        blockKeys.indices.map(i => col(s"bk$i"))): _*)
-    val keys = blockKeys.indices.map(i => s"bk$i")
-    val l = withTok.alias("l")
-    val r = withTok.alias("r")
-    val joinCond = keys.map(k => col(s"l.$k") === col(s"r.$k"))
-      .reduce(_ && _) && col("l.id") < col("r.id")
-    val jac = graft.functions.funcs.jaccard_sorted_longs(col("l.toks"), col("r.toks"))
-    // unrounded filter, rounded projection; [[sizeRatioOk]] short-circuits
-    // the linear merge for pairs that cannot reach the threshold
-    val sizeOk =
-      sizeRatioOk(size(col("l.toks")), size(col("r.toks")), threshold)
-    l.join(r, joinCond)
-      .filter(sizeOk && jac >= threshold)
-      .select(col("l.id").as("id_l"), col("r.id").as("id_r"),
-        round(jac, 9).as("jaccard"))
+      blockKeys: Seq[Column], threshold: Double, q: Int = 5): DataFrame =
+    jaccardVerified(blockedSetPairs(df, idCol, textCol, blockKeys,
+      funcs.hashed_shingles(_, q)), threshold)
+
+  // ----------------------------------------------------------- band join
+
+  /** The bands a [[bandJoin]] matches on, the prune their rows allow, and
+    * the recall they guarantee. */
+  private sealed abstract class Banding(val key: String) {
+    def prune: Seq[Column] = Nil
+    def recall: String
+  }
+
+  /** [[lshBands]] rows with set size `n`: a pair at jaccard t shares one
+    * of the k / rows bands with probability 1 - (1 - t^rows)^bands. */
+  private final case class MinhashBanding(k: Int, rows: Int, t: Double)
+      extends Banding("band_hash") {
+    override def prune: Seq[Column] =
+      Seq(sizeRatioOk(col("l.n"), col("r.n"), t))
+    def recall: String = s"b=${k / rows} r=$rows t=$t " +
+      s"recall=${1 - math.pow(1 - math.pow(t, rows), k / rows)}"
+  }
+
+  /** [[bands64]] rows: complete below hamming distance 4 (pigeonhole over
+    * 4 disjoint slices), approximate above it. */
+  private final case class HammingBanding(maxHamming: Int)
+      extends Banding("band_val") {
+    def recall: String = s"max_hamming=$maxHamming complete=${maxHamming < 4}"
+  }
+
+  /** The one band join: `left` against itself (`l.id < r.id`) or against
+    * `right`, on (`band`, band key) and `extra`, the left side aliased `l`
+    * and the right `r`. Banded rows carry only scalars, so only scalars
+    * cross the band exchange. Reports one `recall what=<what> ...` event
+    * on the `graft` logger. */
+  private def bandJoin(what: String, banding: Banding, left: DataFrame,
+      right: Option[DataFrame] = None, extra: Seq[Column] = Nil): DataFrame = {
+    Decide.report("recall", what, banding.recall)
+    val order = if (right.isEmpty) Seq(col("l.id") < col("r.id")) else Nil
+    left.alias("l").join(right.getOrElse(left).alias("r"),
+      (Seq(col("l.band") === col("r.band"),
+        col(s"l.${banding.key}") === col(s"r.${banding.key}")) ++ order ++
+        banding.prune ++ extra).reduce(_ && _))
   }
 
   // ------------------------------------------------------- minhash + LSH
@@ -150,13 +176,13 @@ object DedupOps {
     * ([[graft.functions.CharShingles]]); the pure-Column equivalent
     * (transform over sequence + substr) is O(n^2) per document. */
   def shingles(text: Column, q: Int = 5): Column =
-    graft.functions.funcs.char_shingles(text, q)
+    funcs.char_shingles(text, q)
 
   /** MinHash signature of a text column (native one-pass expression; see
     * [[graft.functions.MinHashSig]] — Column-level `a*h+b` arithmetic would
     * throw under Spark 4's default ANSI mode on the intended wrap-around). */
   def minhashSignature(text: Column, q: Int, k: Int): Column =
-    graft.functions.funcs.minhash_sig(text, q, k)
+    funcs.minhash_sig(text, q, k)
 
   /** LSH band signatures: k minhashes split into bands of `rowsPerBand`,
     * each band hashed to one value. Returns array of (bandIdx, bandHash)
@@ -189,35 +215,25 @@ object DedupOps {
         shiftright(sig, b * 16).bitwiseAND(lit(0xFFFFL)).as(valName))
     }: _*)
 
-  /** Shingle -> signature -> band prep shared by the MinHash-LSH dedupe
-    * operators. Returns the checkpointed `(id, toks)` shingle sets and the
-    * banded `(id, n, band, band_hash)` frame built from the same scan.
+  /** Shingle -> signature -> band prep of one MinHash side: the
+    * checkpointed `(id, toks)` shingle sets and the banded `(id, n, band,
+    * band_hash)` frame built from the same scan.
     *
     * Char shingles, not word tokens: small-vocabulary corpora make word
     * sets near-identical across documents, which melts LSH buckets into
     * one giant quadratic bucket; shingles keep signatures diverse.
-    * Shingle sets travel as SORTED HASHED longs, not strings (smaller
-    * rows, linear-merge intersection; jaccard over 64-bit hashes equals
-    * true jaccard up to ~1e-19 collision probability), and come from ONE
-    * fused text pass with the signature (bit-identical to the separate
-    * hashed_shingles / minhash_sig kernels).
-    * One checkpointed scan feeds both phases — the banded frame carries
-    * ONLY scalars (id, band, hash), never the shingle arrays: exploding
-    * the arrays x(bands) through the bucket shuffle would move 8x the
-    * bytes of the whole corpus. Candidates dedupe as scalar pairs, then
-    * two id-keyed joins fetch the shingle sets once for verification.
-    * Set-size `n` travels with the band rows (one extra int per scalar
-    * row) to power an EXACT prune inside the bucket join: J(A,B) >= t
-    * forces |A intersect B| >= t*|A union B| >= t*max(|A|,|B|), and the
-    * intersection is at most min(|A|,|B|) — so min >= t*max or the pair
-    * can never verify. Pruning there (before the distinct and before any
-    * shingle array is fetched) cuts both the candidate-dedupe shuffle and
-    * the verification joins with zero false negatives. */
+    * Shingle sets travel as SORTED HASHED longs and come from ONE fused
+    * text pass with the signature (bit-identical to the separate
+    * hashed_shingles / minhash_sig kernels). The banded frame carries ONLY
+    * scalars, never the shingle arrays: exploding the arrays x(bands)
+    * through the bucket shuffle would move 8x the bytes of the whole
+    * corpus. Set size `n` rides along (one int per row) for the band
+    * join's exact [[sizeRatioOk]] prune. */
   private def minhashBands(df: DataFrame, idCol: String, textCol: String,
       k: Int, rowsPerBand: Int, shingleQ: Int): (DataFrame, DataFrame) = {
     val base = widened(df, Seq(col(idCol).as("id"), col(textCol).as("__text")))
       .select(col("id"),
-        graft.functions.funcs.shingles_minhash(col("__text"), shingleQ, k).as("sm"))
+        funcs.shingles_minhash(col("__text"), shingleQ, k).as("sm"))
       .select(col("id"), col("sm.toks").as("toks"), col("sm.sig").as("sig"))
       .filter(size(col("toks")) > 0)
       .breakLineage()
@@ -228,6 +244,27 @@ object DedupOps {
     (base.select(col("id"), col("toks")), banded)
   }
 
+  /** MinHash-LSH pairs of `left` with itself, or with `right`, verified
+    * with exact jaccard. Candidates dedupe as scalar id pairs; then two
+    * id-keyed joins fetch the shingle sets once for verification. */
+  private def minhashPairs(left: DataFrame, right: Option[DataFrame],
+      names: (String, String), idCol: String, textCol: String, k: Int,
+      rowsPerBand: Int, threshold: Double, shingleQ: Int): DataFrame = {
+    def prep(df: DataFrame) =
+      minhashBands(df, idCol, textCol, k, rowsPerBand, shingleQ)
+    val (lToks, lBands) = prep(left)
+    val (rToks, rBands) = right.fold((lToks, lBands))(prep)
+    val (idL, idR) = names
+    val cands = bandJoin("dedup.minhash",
+        MinhashBanding(k, rowsPerBand, threshold), lBands,
+        right.map(_ => rBands))
+      .select(col("l.id").as(idL), col("r.id").as(idR))
+      .distinct()
+    jaccardVerified(cands
+      .join(lToks.alias("l"), col(idL) === col("l.id"))
+      .join(rToks.alias("r"), col(idR) === col("r.id")), threshold, names)
+  }
+
   /**
    * MinHash-LSH near-duplicate candidate pairs, verified with true token
    * Jaccard. Scale shape: explode to (band, band_hash) — the shuffle key —
@@ -235,23 +272,9 @@ object DedupOps {
    */
   def minhashDedupPairs(df: DataFrame, idCol: String, textCol: String,
       k: Int = 32, rowsPerBand: Int = 4, threshold: Double = 0.7,
-      shingleQ: Int = 8): DataFrame = {
-    val (toks, banded) = minhashBands(df, idCol, textCol, k, rowsPerBand,
-      shingleQ)
-    val cands = banded.alias("l").join(banded.alias("r"),
-        col("l.band") === col("r.band") &&
-        col("l.band_hash") === col("r.band_hash") &&
-        col("l.id") < col("r.id") &&
-        sizeRatioOk(col("l.n"), col("r.n"), threshold))
-      .select(col("l.id").as("id_l"), col("r.id").as("id_r"))
-      .distinct()
-    val jac = graft.functions.funcs
-      .jaccard_sorted_longs(col("lt.toks"), col("rt.toks"))
-    cands.join(toks.alias("lt"), col("id_l") === col("lt.id"))
-      .join(toks.alias("rt"), col("id_r") === col("rt.id"))
-      .filter(jac >= threshold) // unrounded filter, rounded projection
-      .select(col("id_l"), col("id_r"), round(jac, 9).as("jaccard"))
-  }
+      shingleQ: Int = 8): DataFrame =
+    minhashPairs(df, None, ("id_l", "id_r"), idCol, textCol, k, rowsPerBand,
+      threshold, shingleQ)
 
   /**
    * Incremental near-duplicate detection: every near-dup of a `probe`
@@ -267,26 +290,9 @@ object DedupOps {
    */
   def minhashNearDuplicates(corpus: DataFrame, probe: DataFrame,
       idCol: String, textCol: String, k: Int = 32, rowsPerBand: Int = 4,
-      threshold: Double = 0.7, shingleQ: Int = 8): DataFrame = {
-    def prep(df: DataFrame) =
-      minhashBands(df, idCol, textCol, k, rowsPerBand, shingleQ)
-    val (corpusToks, corpusBands) = prep(corpus)
-    val (probeToks, probeBands) = prep(probe)
-    // exact set-size prune (see minhashBands): min >= t*max or the
-    // jaccard can never reach the threshold
-    val cands = probeBands.alias("p").join(corpusBands.alias("c"),
-        col("p.band") === col("c.band") &&
-        col("p.band_hash") === col("c.band_hash") &&
-        sizeRatioOk(col("p.n"), col("c.n"), threshold))
-      .select(col("p.id").as("probe_id"), col("c.id").as("corpus_id"))
-      .distinct()
-    val jac = graft.functions.funcs
-      .jaccard_sorted_longs(col("pt.toks"), col("ct.toks"))
-    cands.join(probeToks.alias("pt"), col("probe_id") === col("pt.id"))
-      .join(corpusToks.alias("ct"), col("corpus_id") === col("ct.id"))
-      .filter(jac >= threshold)
-      .select(col("probe_id"), col("corpus_id"), round(jac, 9).as("jaccard"))
-  }
+      threshold: Double = 0.7, shingleQ: Int = 8): DataFrame =
+    minhashPairs(probe, Some(corpus), ("probe_id", "corpus_id"), idCol,
+      textCol, k, rowsPerBand, threshold, shingleQ)
 
   /**
    * End-to-end near-duplicate dedupe: MinHash-LSH candidate pairs ->
@@ -306,21 +312,20 @@ object DedupOps {
       k: Int = 32, rowsPerBand: Int = 4, threshold: Double = 0.7,
       shingleQ: Int = 8): DataFrame =
     canonicalKeep(df, idCol, minhashDedupPairs(df, idCol, textCol, k,
-      rowsPerBand, threshold, shingleQ))
+      rowsPerBand, threshold, shingleQ), "doc_id")
 
-  /** CC closure over `(id_l, id_r)` near-dup pairs -> `(doc_id,
+  /** The one CC closure over `(id_l, id_r)` near-dup pairs -> `(outCol,
     * canonical_id, keep)` for every document of `df`: canonical = min id
     * of the near-dup cluster (itself for singletons), keep = 1 on the
     * canonical document. */
-  private def canonicalKeep(df: DataFrame, idCol: String, pairs: DataFrame)
-      : DataFrame = {
+  private def canonicalKeep(df: DataFrame, idCol: String, pairs: DataFrame,
+      outCol: String): DataFrame = {
     val cc = graft.clustering.ConnectedComponents.run(pairs, "id_l", "id_r")
-    df.select(col(idCol).as("doc_id"))
-      .join(cc.withColumnRenamed("node_id", "doc_id"), Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("cluster_id"), col("doc_id")).as("canonical_id"))
-      .withColumn("keep",
-        (col("doc_id") === col("canonical_id")).cast("int"))
+    df.select(col(idCol).as(outCol))
+      .join(cc.withColumnRenamed("node_id", outCol), Seq(outCol), "left")
+      .select(col(outCol),
+        coalesce(col("cluster_id"), col(outCol)).as("canonical_id"))
+      .withColumn("keep", (col(outCol) === col("canonical_id")).cast("int"))
   }
 
   /** End-to-end SimHash dedupe — the simhash twin of [[dedupeByMinhash]]:
@@ -330,13 +335,28 @@ object DedupOps {
       maxHamming: Int = 3, shingleQ: Int = 8,
       blockKeys: Seq[Column] = Nil): DataFrame =
     canonicalKeep(df, idCol, simhashDedupPairs(df, idCol, textCol,
-      maxHamming, shingleQ, blockKeys))
+      maxHamming, shingleQ, blockKeys), "doc_id")
 
   // ------------------------------------------------------------- simhash
 
   /** 64-bit SimHash from a token array (native expression, see
     * [[graft.functions.SimHash64]]). */
-  def simhash(tokens: Column): Column = graft.functions.funcs.simhash64(tokens)
+  def simhash(tokens: Column): Column = funcs.simhash64(tokens)
+
+  /** Pairs of `(id, sh, keys...)` rows whose 64-bit hashes `sh` lie within
+    * `maxHamming` bits, through the [[bands64]] band join (any equal band
+    * and equal keys -> candidate): (id_l, id_r, hamming), id_l < id_r. */
+  private def hammingPairs(what: String, hashed: DataFrame, keys: Seq[String],
+      maxHamming: Int): DataFrame = {
+    val banded = hashed.select(col("*"), explode(bands64(col("sh"))).as("b"))
+      .select(hashed.columns.toSeq.map(col) :+ col("b.band") :+ col("b.band_val"): _*)
+    bandJoin(what, HammingBanding(maxHamming), banded,
+      extra = keys.map(k => col(s"l.$k") === col(s"r.$k")))
+      .select(col("l.id").as("id_l"), col("r.id").as("id_r"),
+        bit_count(col("l.sh").bitwiseXOR(col("r.sh"))).as("hamming"))
+      .filter(col("hamming") <= maxHamming)
+      .distinct()
+  }
 
   /** SimHash near-dup pairs: 4x16-bit band blocking (any equal band ->
     * candidate; hamming distance <= maxHamming verifies). A pair within
@@ -350,27 +370,10 @@ object DedupOps {
   def simhashDedupPairs(df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3, shingleQ: Int = 8,
       blockKeys: Seq[Column] = Nil): DataFrame = {
-    val raw = widened(df, col(idCol).as("id") +: col(textCol).as("__text") +:
-      blockKeys.zipWithIndex.map { case (k, i) => k.as(s"bk$i") })
-    val base = raw.select(
-      (col("id") +: simhash(shingles(col("__text"), shingleQ)).as("sh") +:
-        blockKeys.indices.map(i => col(s"bk$i"))): _*)
-    val keyCols = blockKeys.indices.map(i => s"bk$i")
-    val banded = base.select(
-      (col("id") +: col("sh") +: keyCols.map(col) :+
-        explode(bands64(col("sh"))).as("b")): _*)
-      .select((col("id") +: col("sh") +: keyCols.map(col) :+
-        col("b.band") :+ col("b.band_val")): _*)
-    val l = banded.alias("l")
-    val r = banded.alias("r")
-    val joinCond = (Seq(col("l.band") === col("r.band"),
-      col("l.band_val") === col("r.band_val"), col("l.id") < col("r.id")) ++
-      keyCols.map(k => col(s"l.$k") === col(s"r.$k"))).reduce(_ && _)
-    l.join(r, joinCond)
-      .select(col("l.id").as("id_l"), col("r.id").as("id_r"),
-        bit_count(col("l.sh").bitwiseXOR(col("r.sh"))).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
+    val (raw, keys) = keyedText(df, idCol, textCol, blockKeys)
+    hammingPairs("dedup.simhash", raw.select(col("id") +:
+      simhash(shingles(col("__text"), shingleQ)).as("sh") +: keys.map(col): _*),
+      keys, maxHamming)
   }
 
   /**
@@ -393,22 +396,11 @@ object DedupOps {
     // the codegen'd native expression keeps the decode inside the columnar
     // plan — no RDD boundary, payload column prunable upstream
     val hash =
-      if (useDHash) graft.functions.funcs.dhash64(col("payload"))
-      else graft.functions.funcs.ahash64(col("payload"))
-    val base = media
+      if (useDHash) funcs.dhash64(col("payload"))
+      else funcs.ahash64(col("payload"))
+    hammingPairs("dedup.image", media
       .select(col("media_id").as("id"), hash.as("sh"))
-      .filter(col("sh").isNotNull)
-    val banded = base.select(col("id"), col("sh"),
-        explode(bands64(col("sh"))).as("b"))
-      .select(col("id"), col("sh"), col("b.band"), col("b.band_val"))
-    banded.alias("l").join(banded.alias("r"),
-        col("l.band") === col("r.band") &&
-          col("l.band_val") === col("r.band_val") &&
-          col("l.id") < col("r.id"))
-      .select(col("l.id").as("id_l"), col("r.id").as("id_r"),
-        bit_count(col("l.sh").bitwiseXOR(col("r.sh"))).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
+      .filter(col("sh").isNotNull), Nil, maxHamming)
   }
 
   // --------------------------------------------------- embedding cosine
@@ -473,25 +465,10 @@ object DedupOps {
       nCells: Int, threshold: Double): DataFrame = {
     val seeds = seedCentroids(df, idCol, vecCol, nCells)
     // null/empty vectors can't be assigned a cell — they fall out of the
-    // pair stage and come back as their own singleton via the final join
-    val base = widened(df, Seq(col(idCol).as("id"), col(vecCol).as("vec")))
-      .filter(col("vec").isNotNull && size(col("vec")) > 0)
-      .select(col("id"), col("vec"), cellByCosine(col("vec"), seeds).as("cell"))
-    val l = base.alias("l")
-    val r = base.alias("r")
-    // cosine filtered on the ROUNDED value (float math; see embeddingDupPairs)
-    val pairs = l.join(r,
-        col("l.cell") === col("r.cell") && col("l.id") < col("r.id"))
-      .select(col("l.id").as("id_l"), col("r.id").as("id_r"),
-        round(cosine(col("l.vec"), col("r.vec")), 9).as("cosine"))
-      .filter(col("cosine") >= threshold)
-    val cc = graft.clustering.ConnectedComponents.run(pairs, "id_l", "id_r")
-    df.select(col(idCol))
-      .join(cc.withColumnRenamed("node_id", idCol), Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("cluster_id"), col(idCol)).as("canonical_id"))
-      .withColumn("keep",
-        (col(idCol) === col("canonical_id")).cast("int"))
+    // pair stage and come back as their own singleton via canonicalKeep
+    val assignable = df.filter(col(vecCol).isNotNull && size(col(vecCol)) > 0)
+    canonicalKeep(df, idCol, embeddingDupPairs(assignable, idCol, vecCol,
+      cellByCosine(col(vecCol), seeds), threshold), idCol)
   }
 
   /** Embedding near-dup pairs above a cosine threshold, within blocking

@@ -269,4 +269,38 @@ class DecisionSpec extends SparkSpec {
     assert(measured == BigInt(leafBytes) * 2, spill.head)
     assert(measured < (BigInt(1) << 50), spill.head)
   }
+
+  test("band joins report the recall their bands guarantee") {
+    import graft.pipeline.DedupOps
+    val docs = Seq((1L, "the quick brown fox jumps over the lazy dog again"),
+      (2L, "the quick brown fox jumps over the lazy dog again!"))
+      .toDF("doc_id", "text")
+    def recalls(body: => DataFrame): Seq[String] =
+      events(body)._2.filter(_.startsWith("recall "))
+    // MinHash at the defaults: 8 bands of 4 rows find a pair at jaccard
+    // 0.7 with probability 1 - (1 - 0.7^4)^8, in both join shapes
+    val minhash = recalls(DedupOps.minhashDedupPairs(docs, "doc_id", "text"))
+    assert(minhash == Seq("recall what=dedup.minhash b=8 r=4 t=0.7 " +
+      s"recall=${1 - math.pow(1 - math.pow(0.7, 4), 8)}"), minhash)
+    val reported = "recall=([0-9.]+)".r.findFirstMatchIn(minhash.head).get
+      .group(1).toDouble
+    assert(math.abs(reported - 0.889) < 1e-3, minhash)
+    assert(recalls(DedupOps.minhashNearDuplicates(docs, docs, "doc_id",
+      "text", k = 16, rowsPerBand = 2, threshold = 0.5)) ==
+      Seq(s"recall what=dedup.minhash b=8 r=2 t=0.5 " +
+        s"recall=${1 - math.pow(1 - math.pow(0.5, 2), 8)}"))
+    // the 64-bit bands are complete below hamming distance 4 only
+    assert(recalls(DedupOps.simhashDedupPairs(docs, "doc_id", "text")) ==
+      Seq("recall what=dedup.simhash max_hamming=3 complete=true"))
+    assert(recalls(DedupOps.simhashDedupPairs(docs, "doc_id", "text",
+      maxHamming = 6)) ==
+      Seq("recall what=dedup.simhash max_hamming=6 complete=false"))
+    val media = Seq.empty[(Long, Array[Byte])].toDF("media_id", "payload")
+    assert(recalls(DedupOps.imageNearDuplicates(media, maxHamming = 4)) ==
+      Seq("recall what=dedup.image max_hamming=4 complete=false"))
+    // with no one listening at DEBUG, the fields are never built
+    var built = false
+    Decide.report("recall", "test", { built = true; "" })
+    assert(!built)
+  }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.model._
 import graft.model.{LevelLibrary => ll}
@@ -175,6 +176,43 @@ class OpsSpec extends SparkSpec {
     assert(decoded.map(_.toString).sorted.sameElements(again.map(_.toString).sorted))
   }
 
+  /** Near-duplicate texts spread over two block keys: some near-dup pairs
+    * share both keys, others only one. */
+  def twoKeyDocs = Seq(
+    (1L, "the quick brown fox jumps over the lazy dog", "en", 1),
+    (2L, "the quick brown fox jumped over the lazy dog", "en", 1),
+    (3L, "the quick brown fox jumps over the lazy dog", "en", 2),
+    (4L, "the quick brown fox jumps over the lazy dog", "de", 1),
+    (5L, "quick the brown fox jumps over the dog lazy", "en", 2),
+    (6L, "the quick brown fox", "en", 1),
+    (7L, "the lazy dog sleeps", "de", 1),
+    (8L, "completely unrelated text about query planning", "en", 1))
+  val twoKeys = Seq(col("k1"), col("k2"))
+
+  /** Brute force: every id pair (a < b) of [[twoKeyDocs]] sharing both
+    * keys, with `sets` of both texts. */
+  def sameBlockPairs[A](sets: String => Set[A]): Seq[((Long, Long), Set[A], Set[A])] =
+    for {
+      (a, ta, a1, a2) <- twoKeyDocs; (b, tb, b1, b2) <- twoKeyDocs
+      if a < b && a1 == b1 && a2 == b2
+    } yield ((a, b), sets(ta), sets(tb))
+
+  def jaccard[A](a: Set[A], b: Set[A]): Double =
+    a.intersect(b).size.toDouble / a.union(b).size
+
+  def words(s: String): Set[String] = s.toLowerCase.split("\\s+").toSet
+
+  def qgrams(s: String): Set[String] =
+    s.trim.toLowerCase.replaceAll("\\s+", " ").sliding(5).toSet
+
+  /** Asserts `got` holds exactly `expected`'s pairs, each value within
+    * the 9dp rounding. */
+  def assertPairs(got: Map[(Long, Long), Double],
+      expected: Map[(Long, Long), Double]): Unit = {
+    assert(got.keySet == expected.keySet)
+    expected.foreach { case (k, v) => assert(math.abs(got(k) - v) < 1e-6, k) }
+  }
+
   test("ngram jaccard pairs find reordered near-dups that token sets also find") {
     val docs = Seq(
       (1L, "the quick brown fox jumps over the lazy dog"),
@@ -196,6 +234,14 @@ class OpsSpec extends SparkSpec {
       a.intersect(b).size.toDouble / a.union(b).size
     }
     assert(math.abs(pairs((1L, 2L)) - expected) < 1e-6)
+    // two key columns: exactly the pairs sharing both keys
+    val keyed = DedupOps.ngramJaccardPairs(twoKeyDocs.toDF("doc_id", "text",
+        "k1", "k2"), "doc_id", "text", twoKeys, threshold = 0.4, q = 5)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    val brute = sameBlockPairs(qgrams).map { case (k, a, b) => k -> jaccard(a, b) }
+      .filter(_._2 >= 0.4).toMap
+    assertPairs(keyed, brute)
+    assert(brute.nonEmpty)
   }
 
   test("token jaccard over hashed longs equals brute-force string sets") {
@@ -216,9 +262,16 @@ class OpsSpec extends SparkSpec {
       j = all(a).intersect(all(b)).size.toDouble / all(a).union(all(b)).size
       if j >= 0.3
     } yield (a, b) -> j).toMap
-    assert(got.keySet == expected.keySet)
-    expected.foreach { case (k, v) => assert(math.abs(got(k) - v) < 1e-6, k) }
+    assertPairs(got, expected)
     assert(got((1L, 4L)) == 1.0) // reordering invisible to token sets
+    // two key columns: exactly the pairs sharing both keys
+    val keyed = DedupOps.tokenJaccardPairs(twoKeyDocs.toDF("doc_id", "text",
+        "k1", "k2"), "doc_id", "text", twoKeys, threshold = 0.3)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    val brute = sameBlockPairs(words).map { case (k, a, b) => k -> jaccard(a, b) }
+      .filter(_._2 >= 0.3).toMap
+    assertPairs(keyed, brute)
+    assert(brute.keySet == Set((1L, 2L), (1L, 6L), (2L, 6L), (3L, 5L), (4L, 7L)))
     // scale shape: the join input carries hashed longs, not strings
     val plan = DedupOps.tokenJaccardPairs(docs, "doc_id", "text",
       Seq(lit(1)), 0.3).queryExecution.analyzed.toString
@@ -286,36 +339,51 @@ class OpsSpec extends SparkSpec {
       (6L, prefix * 2),                               // ratio ~1/2 vs 1
       (7L, "entirely unrelated content that shares nothing with the rest"))
       .toDF("doc_id", "text")
+    // reference: same kernels, band-collision candidates WITHOUT the
+    // size prefilter, verified with the same exact jaccard; `right` = None
+    // is the self-join (l.id < r.id), else probe `left` x corpus `right`
+    def unpruned(left: DataFrame, right: Option[DataFrame], t: Double) = {
+      def prep(d: DataFrame) = {
+        val base = d.select(col("doc_id").as("id"),
+            graft.functions.funcs.shingles_minhash(col("text"), 8, 32).as("sm"))
+          .select(col("id"), col("sm.toks").as("toks"), col("sm.sig").as("sig"))
+        (base.select(col("id"), col("toks")), base.select(col("id"),
+            explode(DedupOps.lshBands(col("sig"), 32, 4)).as("b"))
+          .select(col("id"), col("b.band"), col("b.band_hash")))
+      }
+      val (lt, lb) = prep(left)
+      val (rt, rb) = right.fold((lt, lb))(prep)
+      val cands = lb.alias("l").join(rb.alias("r"),
+          col("l.band") === col("r.band") &&
+          col("l.band_hash") === col("r.band_hash") &&
+          (if (right.isEmpty) col("l.id") < col("r.id") else lit(true)))
+        .select(col("l.id").as("id_l"), col("r.id").as("id_r")).distinct()
+      val jac = graft.functions.funcs
+        .jaccard_sorted_longs(col("lt.toks"), col("rt.toks"))
+      cands.join(lt.alias("lt"), col("id_l") === col("lt.id"))
+        .join(rt.alias("rt"), col("id_r") === col("rt.id"))
+        .filter(jac >= t)
+        .select(col("id_l"), col("id_r"), round(jac, 9).as("jaccard"))
+        .as[(Long, Long, Double)].collect().toSet
+    }
+    val probe = docs.filter(col("doc_id") % 2 === 0)
+    val corpus = docs.filter(col("doc_id") % 2 =!= 0)
     for (t <- Seq(0.3, 0.5, 0.7)) {
       val pruned = DedupOps.minhashDedupPairs(docs, "doc_id", "text",
           threshold = t)
         .select("id_l", "id_r", "jaccard")
         .as[(Long, Long, Double)].collect().toSet
-      // reference: same kernels, band-collision candidates WITHOUT the
-      // size prefilter, verified with the same exact jaccard
-      val base = docs.select(col("doc_id").as("id"),
-          graft.functions.funcs.shingles_minhash(col("text"), 8, 32).as("sm"))
-        .select(col("id"), col("sm.toks").as("toks"), col("sm.sig").as("sig"))
-      val banded = base.select(col("id"),
-          explode(DedupOps.lshBands(col("sig"), 32, 4)).as("b"))
-        .select(col("id"), col("b.band"), col("b.band_hash"))
-      val cands = banded.alias("l").join(banded.alias("r"),
-          col("l.band") === col("r.band") &&
-          col("l.band_hash") === col("r.band_hash") &&
-          col("l.id") < col("r.id"))
-        .select(col("l.id").as("id_l"), col("r.id").as("id_r")).distinct()
-      val jac = graft.functions.funcs
-        .jaccard_sorted_longs(col("lt.toks"), col("rt.toks"))
-      val ref = cands
-        .join(base.select(col("id"), col("toks")).alias("lt"),
-          col("id_l") === col("lt.id"))
-        .join(base.select(col("id"), col("toks")).alias("rt"),
-          col("id_r") === col("rt.id"))
-        .filter(jac >= t)
-        .select(col("id_l"), col("id_r"), round(jac, 9).as("jaccard"))
-        .as[(Long, Long, Double)].collect().toSet
+      val ref = unpruned(docs, None, t)
       assert(pruned == ref, s"threshold $t")
       assert(ref.nonEmpty, s"threshold $t: fixture must exercise the boundary")
+      // the probe-vs-corpus shape prunes inside the same band join
+      val probed = DedupOps.minhashNearDuplicates(corpus, probe, "doc_id",
+          "text", threshold = t)
+        .select("probe_id", "corpus_id", "jaccard")
+        .as[(Long, Long, Double)].collect().toSet
+      val probeRef = unpruned(probe, Some(corpus), t)
+      assert(probed == probeRef, s"probe shape, threshold $t")
+      assert(probeRef.nonEmpty, s"probe shape, threshold $t: empty fixture")
     }
   }
 
@@ -338,6 +406,20 @@ class OpsSpec extends SparkSpec {
     assert(out((1L, 4L)) == ((0.3, 1.0)))
     assert(out((2L, 4L)) == ((1.0, 1.0)))
     assert(!out.contains((1L, 3L)) && !out.contains((2L, 3L)))
+    // two key columns: exactly the pairs sharing both keys
+    val keyed = DedupOps.containmentPairs(twoKeyDocs.toDF("doc_id", "text",
+        "k1", "k2"), "doc_id", "text", twoKeys, threshold = 0.9)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) ->
+        ((r.getDouble(2), r.getDouble(3)))).toMap
+    val brute = sameBlockPairs(words).flatMap { case (k, a, b) =>
+      val inter = a.intersect(b).size.toDouble
+      val (lr, rl) = (inter / a.size, inter / b.size)
+      if (inter > 0 && (lr >= 0.9 || rl >= 0.9)) Some(k -> ((lr, rl))) else None
+    }.toMap
+    assert(keyed.keySet == brute.keySet && brute.contains((1L, 6L)))
+    brute.foreach { case (k, (lr, rl)) =>
+      assert(math.abs(keyed(k)._1 - lr) < 1e-6 && math.abs(keyed(k)._2 - rl) < 1e-6, k)
+    }
   }
 
   test("BPE-ish token counting: contraction splits, digit runs, punctuation") {

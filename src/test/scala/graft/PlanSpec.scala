@@ -351,4 +351,59 @@ class PlanSpec extends SparkSpec {
       .count(_ == "BroadcastNestedLoopJoin")
     assert(nl(s) <= nl(finalPlanString(predictions)), s)
   }
+
+  test("near-dup band joins: scalars cross the minhash band exchange, the " +
+      "self and probe shapes plan alike, simhash never goes cartesian") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.exchange.{Exchange,
+      ReusedExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.types.ArrayType
+    import graft.pipeline.DedupOps
+    val docs = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog again and again"),
+      (2L, "the quick brown fox jumps over the lazy dog again and again!"),
+      (3L, "entirely different text about spark catalyst optimizer rules"),
+      (4L, "entirely different text about spark catalyst optimizer rule"))
+      .toDF("doc_id", "text")
+    // a self-join plans each shared exchange once and reuses it
+    def exchanges(p: SparkPlan) = p.collect {
+      case e @ (_: Exchange | _: ReusedExchangeExec) => e
+    }
+    def keyNames(e: SparkPlan) = e.outputPartitioning match {
+      case h: HashPartitioning => h.expressions.collect { case a: Attribute => a.name }
+      case _ => Nil
+    }
+    // the static plan with every join shuffled, so the band exchange is
+    // planned even for tiny inputs
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val self = DedupOps.minhashDedupPairs(docs, "doc_id", "text")
+        .queryExecution.executedPlan
+      val probe = DedupOps.minhashNearDuplicates(
+          docs.filter(col("doc_id") % 2 === 1),
+          docs.filter(col("doc_id") % 2 === 0), "doc_id", "text")
+        .queryExecution.executedPlan
+      val band = exchanges(self).collect {
+        case s: ShuffleExchangeExec if keyNames(s) == Seq("band", "band_hash") => s
+      }
+      assert(band.nonEmpty, self.toString)
+      band.foreach(e => assert(
+        !e.child.output.exists(_.dataType.isInstanceOf[ArrayType]), e.toString))
+      assert(exchanges(self).size == exchanges(probe).size,
+        s"self:\n$self\nprobe:\n$probe")
+      val simhash = DedupOps.simhashDedupPairs(docs, "doc_id", "text",
+        blockKeys = Seq(length(col("text")) / 50)).queryExecution.executedPlan
+      assert(!simhash.toString.contains("CartesianProduct"), simhash.toString)
+    } finally {
+      spark.conf.unset("spark.sql.adaptive.enabled")
+      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    }
+    val simhash = DedupOps.simhashDedupPairs(docs, "doc_id", "text")
+    simhash.collect()
+    val s = finalPlanString(simhash)
+    assert(!s.contains("CartesianProduct") &&
+      !s.contains("BroadcastNestedLoopJoin"), s)
+  }
 }

@@ -184,8 +184,8 @@ class RepartitionSpec extends SparkSpec {
       planString(pairs))
   }
 
-  test("the widening decision runs no Spark job") {
-    val input = parquet(1)
+  /** `body`'s result and the number of Spark jobs it started. */
+  def jobsDuring[T](body: => T): (T, Int) = {
     val group = s"widen-${System.nanoTime}"
     val started = new AtomicInteger
     val marker = new java.util.concurrent.CountDownLatch(1)
@@ -200,18 +200,42 @@ class RepartitionSpec extends SparkSpec {
     spark.sparkContext.addSparkListener(listener)
     try {
       spark.sparkContext.setJobGroup(group, "widen decision")
-      val widened = Blocking.narrow(input, fourRules).widened("test.no_job")
-      assert(widened.queryExecution.optimizedPlan.isInstanceOf[LogicalRDD])
-      Blocking.blockedIdPairs(input, fourRules)
+      val out = body
       // listener events arrive in order: once the marker job is seen,
-      // any job the decision started has been counted
+      // any job `body` started has been counted
       spark.sparkContext.setJobGroup(group + "-marker", "marker")
       spark.range(1).count()
       assert(marker.await(30, java.util.concurrent.TimeUnit.SECONDS))
-      assert(started.get === 0)
+      (out, started.get)
     } finally {
       spark.sparkContext.clearJobGroup()
       spark.sparkContext.removeSparkListener(listener)
     }
+  }
+
+  test("the widening decision runs no Spark job") {
+    val input = parquet(1)
+    val (_, jobs) = jobsDuring {
+      val widened = Blocking.narrow(input, fourRules).widened("test.no_job")
+      assert(widened.queryExecution.optimizedPlan.isInstanceOf[LogicalRDD])
+      Blocking.blockedIdPairs(input, fourRules)
+    }
+    assert(jobs === 0)
+  }
+
+  test("a persisted frame counts its built cache's partitions; an unbuilt " +
+      "cache is widened") {
+    assert(spark.sparkContext.defaultParallelism === 4)
+    val cached = spark.range(0, 10000, 1, 8).toDF("id").persist()
+    try {
+      // nothing is read off a cache whose blocks are not built yet
+      assert(Materialise.scanTasks(cached) === 0)
+      assert(!(cached.widened("test.unbuilt") eq cached))
+      assert(cached.count() === 10000)
+      val (kept, jobs) = jobsDuring(cached.widened("test.built"))
+      assert(kept eq cached, "8 built partitions at 4 cores are kept")
+      assert(jobs === 0)
+      assert(Materialise.scanTasks(cached.filter(col("id") > 5)) === 8)
+    } finally cached.unpersist()
   }
 }
